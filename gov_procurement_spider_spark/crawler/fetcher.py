@@ -30,6 +30,7 @@ from __future__ import annotations
 
 import time
 from collections.abc import Iterator
+from urllib.parse import urlsplit
 
 import pyarrow as pa
 
@@ -41,7 +42,7 @@ from ..sources.site_model import SiteSpec
 FETCH_OUT_SCHEMA = (
     "row_type string, fetch_epoch int, priority int, disc_epoch int,"
     " seed_idx int, page_idx int, pos int, kind string, url string,"
-    " host string, route string,"
+    " host string,"
     " image_id string, bytes binary, w int, h int, fmt string, caption string,"
     " phash long,"
     " urls_fetched long, links_discovered long, payload_bytes long, wall_ms long"
@@ -49,7 +50,7 @@ FETCH_OUT_SCHEMA = (
 
 COLS = [
     "row_type", "fetch_epoch", "priority", "disc_epoch", "seed_idx",
-    "page_idx", "pos", "kind", "url", "host", "route", "image_id", "bytes",
+    "page_idx", "pos", "kind", "url", "host", "image_id", "bytes",
     "w", "h", "fmt", "caption", "phash",
     "urls_fetched", "links_discovered", "payload_bytes", "wall_ms",
 ]
@@ -61,7 +62,7 @@ _PA_TYPES = {
     "priority": pa.int32(), "disc_epoch": pa.int32(),
     "seed_idx": pa.int32(), "page_idx": pa.int32(), "pos": pa.int32(),
     "kind": pa.string(), "url": pa.string(), "host": pa.string(),
-    "route": pa.string(), "image_id": pa.string(), "bytes": pa.binary(),
+    "image_id": pa.string(), "bytes": pa.binary(),
     "w": pa.int32(), "h": pa.int32(), "fmt": pa.string(),
     "caption": pa.string(), "phash": pa.int64(),
     "urls_fetched": pa.int64(), "links_discovered": pa.int64(),
@@ -72,8 +73,7 @@ PA_SCHEMA = pa.schema([(c, _PA_TYPES[c]) for c in COLS])
 # per-row-varying columns of each section; everything else is a constant or
 # null for that row_type and is filled column-wise in _batch
 _LINK_DYNAMIC = [
-    "priority", "disc_epoch", "seed_idx", "page_idx", "pos", "kind", "url",
-    "host", "route",
+    "priority", "disc_epoch", "seed_idx", "page_idx", "pos", "kind", "url", "host",
 ]
 _PAYLOAD_DYNAMIC = [
     "priority", "disc_epoch", "seed_idx", "page_idx", "pos", "url", "host",
@@ -96,12 +96,26 @@ def _batch(dynamic: dict, constants: dict, n: int) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(arrays, schema=PA_SCHEMA)
 
 
-def make_fetcher(spec: SiteSpec, epoch: int, validate: bool = True, links_acc=None):
+def _allowed(url: str, disallowed: tuple) -> bool:
+    """robots (T3): the URL path matches none of the host's disallowed
+    prefixes."""
+    return not disallowed or not (urlsplit(url).path or "/").startswith(disallowed)
+
+
+def make_fetcher(
+    spec: SiteSpec, epoch: int, robots: dict, validate: bool = True, links_acc=None
+):
     """Returns the mapInArrow function over selected frontier rows
     (priority, disc_epoch, seed_idx, page_idx, pos, kind, url, host).
 
+    Discovered links are filtered where they are generated, so link rows
+    are admission candidates: a detail link with an unknown route is
+    skipped (P5, ref main.py:119-122) and so is any link whose path a
+    prefix in ``robots`` (host → tuple of disallowed path prefixes)
+    disallows. The metric row still counts every discovered link.
+
     ``links_acc`` (optional Spark accumulator) receives the per-batch
-    discovered-link count, letting the epoch skip a whole probe job over the
+    candidate-link count, letting the epoch skip a whole probe job over the
     metric rows. Accumulators in transformations can over-count on task
     retry, never under-count — and the epoch only branches on ``== 0``, so a
     retry inflating the count merely takes the (correct, slightly slower)
@@ -112,7 +126,7 @@ def make_fetcher(spec: SiteSpec, epoch: int, validate: bool = True, links_acc=No
             t0 = time.perf_counter()
             col = {name: rb.column(i).to_pylist() for i, name in enumerate(rb.schema.names)}
             link: dict = {c: [] for c in _LINK_DYNAMIC}
-            failed: dict = {c: [] for c in _LINK_DYNAMIC if c != "route"}
+            failed: dict = {c: [] for c in _LINK_DYNAMIC}
             pay: dict = {c: [] for c in _PAYLOAD_DYNAMIC}
             n_links = n_bytes = 0
             for prio, de, seed_idx, page_idx, pos, kind, url, host in zip(
@@ -121,32 +135,29 @@ def make_fetcher(spec: SiteSpec, epoch: int, validate: bool = True, links_acc=No
                 col["host"],
             ):
                 if kind == "list":
-                    # pagination: admit next list page before this page's details
+                    disallowed = robots.get(host, ())
+                    # pagination: the next list page before this page's details
+                    found = []
                     if page_idx < sm.n_list_pages(spec, seed_idx):
-                        link["priority"].append(prio)
-                        link["disc_epoch"].append(-1)
-                        link["seed_idx"].append(seed_idx)
-                        link["page_idx"].append(page_idx + 1)
-                        link["pos"].append(-1)
-                        link["kind"].append("list")
-                        link["url"].append(
-                            sm.list_page_url(spec, seed_idx, page_idx + 1)
-                        )
-                        link["host"].append(host)
-                        link["route"].append(None)
-                        n_links += 1
+                        found.append((
+                            page_idx + 1, -1, "list",
+                            sm.list_page_url(spec, seed_idx, page_idx + 1), None,
+                        ))
                     for p2 in range(sm.n_links(spec, seed_idx, page_idx)):
                         child, route = sm.child_detail(spec, seed_idx, page_idx, p2)
+                        found.append((page_idx, p2, "detail", child, route))
+                    n_links += len(found)
+                    for pg, p2, lkind, lurl, route in found:
+                        if route == sm.ROUTE_UNKNOWN or not _allowed(lurl, disallowed):
+                            continue
                         link["priority"].append(prio)
                         link["disc_epoch"].append(-1)
                         link["seed_idx"].append(seed_idx)
-                        link["page_idx"].append(page_idx)
+                        link["page_idx"].append(pg)
                         link["pos"].append(p2)
-                        link["kind"].append("detail")
-                        link["url"].append(child)
+                        link["kind"].append(lkind)
+                        link["url"].append(lurl)
                         link["host"].append(host)
-                        link["route"].append(route)
-                        n_links += 1
                 elif sm.fetch_fails(spec, url):
                     # failed fetch: consumed its politeness slot, recorded
                     # for lineage, no payload (ref main.py:124-127 skips)
@@ -204,7 +215,7 @@ def make_fetcher(spec: SiteSpec, epoch: int, validate: bool = True, links_acc=No
                     pay["phash"].append(phash)
                     n_bytes += len(data)
             if links_acc is not None:
-                links_acc.add(n_links)
+                links_acc.add(len(link["url"]))
             # payload rows first, then links, failed, and the metric row —
             # the order the mapInPandas version concatenated them in
             if pay["url"]:

@@ -2,8 +2,7 @@
 
 The 60-bit URL hash here is bit-identical to site_model.h64 (sha256 hex
 prefix) so driver-side Python (refsim, bloom build) and executor-side Spark
-columns agree. Canonicalization mirrors the reference's link handling
-(search_parser.py:23 absolutize; main.py:90 null-href filter).
+columns agree.
 """
 
 from __future__ import annotations
@@ -16,18 +15,3 @@ def url_hash64(col: Column | str) -> Column:
     """= site_model.h64: int(sha256(url).hexdigest()[:15], 16), as a column."""
     c = F.col(col) if isinstance(col, str) else col
     return F.conv(F.substring(F.sha2(c, 256), 1, 15), 16, 10).cast("long")
-
-
-def url_host(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.parse_url(c, F.lit("HOST"))
-
-
-def url_path(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.coalesce(F.parse_url(c, F.lit("PATH")), F.lit("/"))
-
-
-def absolutize(href: Column, base: str) -> Column:
-    """F12 (ref search_parser.py:23): relative → absolute."""
-    return F.when(href.startswith("http"), href).otherwise(F.concat(F.lit(base), href))

@@ -3,14 +3,27 @@ partitioned URL frontier (BASELINE.json north_rule).
 
 Replaces the reference's strictly sequential fetch loop (main.py:69-140, one
 in-flight request, fresh Chrome per URL, no persistence) with per-epoch
-DataFrame dataflow:
+DataFrame dataflow, one path for every epoch:
 
-  frontier ─ join politeness budgets ─ top-k per host (O2) ─► selected
-  selected ─ mapInPandas fetch (S3, Arrow-vectorized) ─► payloads + links
-  links ─ route filter (P5) ─ robots anti-filter (T3) ─ keep-first window
-        ─ seen-filter prefilter + exact anti-join vs seen (D1) ─► admitted
-  commit: frontier' / politeness' / seen+ / fetched+ / crawl_log+ / metrics+
-          / seen-filter, one manifest per epoch (T5)
+  plan    host_counts ⟗ politeness ─ _host_plan ─► per-host taken, refill
+  select  frontier ─ top-taken per host (O2, salted) ─► selected / remaining
+  fetch   selected ─ mapInArrow fetch (S3) ─► payloads + candidate links
+          (route filter P5 and robots T3 applied where links are generated)
+  admit   links ─ keep-first window ─ seen-filter prefilter + exact
+          anti-join vs seen (D1) ─► admitted
+  commit  frontier' / host_counts' / politeness' / seen+ / crawl_log /
+          seen-filter, one manifest per epoch (T5) — `_commit`
+
+A tick epoch (no budget anywhere) skips fetch and admit; a link-free epoch
+skips admit. Each table is materialised on the driver (pyarrow, one sorted
+parquet file) when its size — known before it is built — is under the local
+caps, otherwise by Spark jobs; the semantics have one implementation either
+way. The host-sized state (plan scalars, per-host taken, token refill,
+host_counts carry) is the pyarrow pair `_host_plan` / `_host_carry`, called
+directly on the driver or through mapInArrow over the host-keyed join.
+Keep-first and the exact seen anti-join run in Spark for big link batches
+and in pyarrow for small ones (tests/test_crawl_dual_path.py pins the two
+byte for byte).
 
 The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
 filter (crawler/cuckoo.py) when per-key deletion is needed: expire_seen
@@ -40,17 +53,23 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
+from functools import partial
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..crawler.bloom import BloomFilter
 from ..crawler.cuckoo import CuckooFilter
 from ..crawler.fetcher import FETCH_OUT_SCHEMA, make_fetcher
-from ..functions.urls import url_hash64, url_path
+from ..functions.urls import url_hash64
 from ..operators.skew import with_salt
 from ..sources import site_model as sm
 from ..sources.site_model import SiteSpec
@@ -237,118 +256,212 @@ def _seed_frontier(spark: SparkSession, spec: SiteSpec) -> DataFrame:
     )
 
 
-def _init_state_driver(spec: SiteSpec, ckpt: str, filter_kind: str) -> None:
-    """Epoch-0 state generated driver-side for SMALL seed sets (≤ the
-    driver-commit gate): the distributed init cost ~6 Spark jobs (~1.5-2 s
-    of fixed latency) to materialize a few hundred deterministic rows that
-    pure Python produces in microseconds from the same site_model
-    functions. Value-identical: same seed tuples, same keep-first dedup
-    (min (priority, disc_epoch, seed_idx, page_idx, pos) per url — the
-    window the distributed path ranks by), same tables and types."""
-    import pyarrow as pa
+# Arrow types of the driver-written epoch tables: exactly what the Spark
+# writers produce (int32 frontier keys), or cross-epoch unions break
+_FRONTIER_PA = pa.schema(
+    [(c, pa.int32() if c in ORDER_KEY else pa.string()) for c in FRONTIER_COLS]
+)
+# a driver-written table is one parquet file in this row order: same rows →
+# same bytes, so resume replay stays byte-identical
+_SORT_KEY = {
+    "frontier": "url", "crawl_log": "url", "seen_new": "url",
+    "host_counts": "host", "politeness": "host", "robots": "host",
+}
 
+
+def _cols(t, cols: list):
+    return t.select(*cols) if isinstance(t, DataFrame) else t.select(cols)
+
+
+def _to_df(spark: SparkSession, t) -> DataFrame:
+    return t if isinstance(t, DataFrame) else spark.createDataFrame(t)
+
+
+def _count_by_host(t, name: str):
+    """(host, `name`): rows per host."""
+    if isinstance(t, DataFrame):
+        return t.groupBy("host").agg(F.count(F.lit(1)).alias(name))
+    out = t.group_by("host").aggregate([("url", "count")])
+    return pa.table({"host": out.column("host"), name: out.column("url_count")})
+
+
+def _seen_new(t, epoch: int):
+    """The seen_new rows (url, url_hash, admit_epoch) of admitted rows."""
+    if isinstance(t, DataFrame):
+        return t.select("url", "url_hash", F.lit(epoch).alias("admit_epoch"))
+    return pa.table(
+        {
+            "url": t.column("url"),
+            "url_hash": t.column("url_hash"),
+            "admit_epoch": pa.array(np.full(t.num_rows, epoch, np.int32)),
+        }
+    )
+
+
+def _write_all(ckpt: str, epoch: int, tables: dict) -> None:
+    """Write an epoch's tables: driver-held ones as one sorted parquet file
+    each (`_SORT_KEY`), Spark ones from one thread each so their fixed
+    job-submission latencies overlap (Spark schedules concurrent jobs from
+    one session; the writes target distinct dirs)."""
+    jobs = []
+    for name, t in tables.items():
+        if isinstance(t, DataFrame):
+            jobs.append((t, name))
+        else:
+            ck.write_table_local(ckpt, epoch, name, t.sort_by(_SORT_KEY[name]))
+    if jobs:
+        with ThreadPoolExecutor(len(jobs)) as ex:
+            for f in [ex.submit(ck.write_table, t, ckpt, epoch, n) for t, n in jobs]:
+                f.result()
+
+
+def _seed_frontier_local(spec: SiteSpec) -> pa.Table:
+    """`_seed_frontier` on the driver, for seed sets under the local cap:
+    the same seed tuples and keep-first (the smallest ORDER_KEY per url),
+    without ~6 Spark jobs (~1.5-2 s of fixed latency) for a few hundred
+    deterministic rows."""
     best: dict = {}
     for i in range(spec.n_seeds):
         key = (sm.seed_priority(spec, i), 0, i, 1, -1)
         url = sm.seed_url(spec, i)
         if key < best.get(url, (2**31, 0, 0, 0, 0)):
             best[url] = key
-    rows = [
-        {
-            "priority": k[0], "disc_epoch": k[1], "seed_idx": k[2],
-            "page_idx": k[3], "pos": k[4], "kind": "list", "url": u,
-            "host": sm.seed_host(spec, k[2]), "url_hash": sm.h64(u),
-        }
-        for u, k in sorted(best.items())
-    ]
-    _write_frontier_tables_local(ckpt, 0, rows, write_seen_new=True)
-    hosts = sorted({r["host"] for r in rows})
-    politeness = pa.Table.from_arrays(
+    return pa.Table.from_pylist(
         [
-            pa.array(hosts, type=pa.string()),
-            pa.array([float(spec.burst)] * len(hosts), type=pa.float64()),
+            dict(zip(ORDER_KEY, k), kind="list", url=u, host=sm.seed_host(spec, k[2]))
+            for u, k in best.items()
         ],
-        names=["host", "tokens"],
+        schema=_FRONTIER_PA,
     )
-    ck.write_table_local(ckpt, 0, "politeness", politeness)
-    robots = pa.Table.from_arrays(
+
+
+_NEW_HOST_PA = pa.schema(
+    [("host", pa.string()), ("tokens", pa.float64()),
+     ("disallow_prefixes", pa.list_(pa.string()))]
+)
+
+
+def _new_hosts(hosts: pa.RecordBatch, spec: SiteSpec) -> pa.RecordBatch:
+    """Epoch-0 state of a batch of seed hosts: a full politeness bucket and
+    the host's robots rules."""
+    names = hosts.column("host").to_pylist()
+    return pa.RecordBatch.from_arrays(
         [
-            pa.array(hosts, type=pa.string()),
+            pa.array(names, pa.string()),
+            pa.array([float(spec.burst)] * len(names), pa.float64()),
             pa.array(
-                [sm.robots_disallows(spec, h) for h in hosts],
-                type=pa.list_(pa.string()),
+                [sm.robots_disallows(spec, h) for h in names], pa.list_(pa.string())
             ),
         ],
-        names=["host", "disallow_prefixes"],
+        schema=_NEW_HOST_PA,
     )
-    ck.write_table_local(ckpt, 0, "robots", robots)
-    bf = _make_seen_filter(filter_kind, _bloom_expected(spec))
-    bf.add_many(
-        np.fromiter((r["url_hash"] for r in rows), dtype=np.int64, count=len(rows))
-    )
-    bf.save(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
-    ck.commit_epoch(ckpt, 0, {"n_seeds": len(rows), "kind": "init"})
 
 
 def init_state(
     spark: SparkSession, spec: SiteSpec, ckpt: str, filter_kind: str = "bloom"
 ) -> None:
     """Epoch-0 state: seed frontier, seen=seeds, politeness=burst, robots,
-    seen-filter seeded with the seed URLs. Small seed sets commit
-    driver-side (`_init_state_driver`); larger ones as Spark jobs."""
+    seen-filter seeded with the seed URLs — generated on the driver when
+    the seed set is under the local cap, else by Spark."""
     if spec.n_seeds <= _DRIVER_COMMIT_MAX_ROWS:
-        _init_state_driver(spec, ckpt, filter_kind)
-        return
-    frontier = _seed_frontier(spark, spec)
-    ck.write_table(frontier.select(*FRONTIER_COLS), ckpt, 0, "frontier")
-    ck.write_table(
-        frontier.groupBy("host").agg(F.count(F.lit(1)).alias("n_pending")),
+        frontier = _seed_frontier_local(spec)
+        frontier = frontier.append_column(
+            "url_hash",
+            pa.array([sm.h64(u) for u in frontier.column("url").to_pylist()], pa.int64()),
+        )
+        hosts = pa.table({"host": pc.unique(frontier.column("host"))})
+    else:
+        frontier = _seed_frontier(spark, spec).withColumn("url_hash", url_hash64("url"))
+        hosts = frontier.select("host").distinct()
+    new_hosts = _map_hosts(partial(_new_hosts, spec=spec), hosts, _NEW_HOST_PA)
+    _write_all(
         ckpt,
         0,
-        "host_counts",
+        {
+            "frontier": _cols(frontier, FRONTIER_COLS),
+            "seen_new": _seen_new(frontier, 0),
+            "host_counts": _count_by_host(frontier, "n_pending"),
+            "politeness": _cols(new_hosts, ["host", "tokens"]),
+            "robots": _cols(new_hosts, ["host", "disallow_prefixes"]),
+        },
     )
-
-    seen = frontier.select(
-        "url", url_hash64("url").alias("url_hash"), F.lit(0).alias("admit_epoch")
-    )
-    ck.write_table(seen, ckpt, 0, "seen_new")
-
-    hosts = frontier.select("host").distinct()
-    ck.write_table(
-        hosts.withColumn("tokens", F.lit(float(spec.burst))), ckpt, 0, "politeness"
-    )
-
-    def gen_robots(batches):
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "host": pdf["host"],
-                    "disallow_prefixes": [
-                        sm.robots_disallows(spec, h) for h in pdf["host"]
-                    ],
-                }
-            )
-
-    robots = hosts.mapInPandas(
-        gen_robots, schema="host string, disallow_prefixes array<string>"
-    )
-    ck.write_table(robots, ckpt, 0, "robots")
-
+    n_seeds = ck.table_num_rows(ckpt, 0, "seen_new")
     bf = _make_seen_filter(filter_kind, _bloom_expected(spec))
-    _filter_add_from_df(bf, seen.select("url_hash"), n_rows=spec.n_seeds)
-    bf.save(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
-    ck.commit_epoch(ckpt, 0, {"n_seeds": frontier.count(), "kind": "init"})
+    _filter_add_after_write(bf, ckpt, 0, _cols(frontier, ["url_hash"]), n_seeds)
+    bf.save(_filter_path(ckpt, 0))
+    ck.commit_epoch(ckpt, 0, {"n_seeds": n_seeds, "kind": "init"})
 
 
-# Fetch-task sizing floor: at ~2 ms of codec work per URL and ~10 ms of
-# fixed per-task cost (schedule + Arrow round-trip + commit), a task below
-# ~32 URLs spends more on overhead than fetching — the round-6 A/B read the
-# small-site crawl at 10.3 s with floor 4 vs 7.3 s with floor 32 (fetch
-# phase 4.8 → 2.3 s). The 2×-slots cap above still binds at scale, so the
-# big-epoch plan is unchanged.
-_MIN_URLS_PER_FETCH_TASK = 32
+# ---- host-sized state: one pyarrow implementation, on the driver or in
+# Spark. Both functions map one batch of a host-keyed join to one batch.
 
+_HOST_PLAN_PA = pa.schema(
+    [("host", pa.string()), ("n_pending", pa.int64()), ("n_taken", pa.int64()),
+     ("tokens", pa.float64())]
+)
+_HOST_COUNTS_PA = pa.schema([("host", pa.string()), ("n_pending", pa.int64())])
 _HOST_COUNTS_SCHEMA = "host string, n_pending bigint"
+
+
+def _host_plan(hosts: pa.RecordBatch, burst: float, refill: float) -> pa.RecordBatch:
+    """The per-host politeness step (T2, the spec shared with refsim) over
+    a batch of host_counts ⟗ politeness (host, n_pending, tokens). A host
+    the politeness table has never seen (first discovered this run) starts
+    with a full bucket; a host absent from host_counts is idle.
+
+      n_taken = min(n_pending, floor(tokens))   this epoch's fetches
+      tokens' = min(burst, tokens − n_taken + refill)   for active hosts;
+                idle hosts keep their stale tokens, as refsim does
+
+    The plan scalars are its sums: Σ n_pending is the frontier size and
+    Σ n_taken the selected-set size — known before selection, and the
+    selection is budget-bound exactly when they differ."""
+    pending = hosts.column("n_pending")
+    tokens = pc.fill_null(hosts.column("tokens"), burst)
+    taken = pc.min_element_wise(
+        pc.fill_null(pending, 0), pc.cast(pc.floor(tokens), pa.int64())
+    )
+    refilled = pc.min_element_wise(pc.add(pc.subtract(tokens, taken), refill), burst)
+    return pa.RecordBatch.from_arrays(
+        [
+            pc.cast(hosts.column("host"), pa.string()),
+            pc.fill_null(pending, 0),
+            taken,
+            pc.if_else(pc.is_valid(pending), refilled, tokens),
+        ],
+        schema=_HOST_PLAN_PA,
+    )
+
+
+def _host_carry(hosts: pa.RecordBatch) -> pa.RecordBatch:
+    """Next epoch's host_counts from a batch of the plan (host, n_pending,
+    n_taken) ⟗ this epoch's admissions by host (host, n_admitted, absent
+    when nothing was admitted): pending − taken + admitted, hosts at zero
+    dropped — what a groupBy over the next frontier returns, without
+    scanning it (tests/test_host_counts_carry.py pins the two equal)."""
+    names = hosts.schema.names
+    n = pc.subtract(
+        pc.fill_null(hosts.column("n_pending"), 0),
+        pc.fill_null(hosts.column("n_taken"), 0),
+    )
+    if "n_admitted" in names:
+        n = pc.add(n, pc.fill_null(hosts.column("n_admitted"), 0))
+    out = pa.RecordBatch.from_arrays(
+        [pc.cast(hosts.column("host"), pa.string()), n], schema=_HOST_COUNTS_PA
+    )
+    return out.filter(pc.greater(n, 0))
+
+
+def _map_hosts(fn, hosts, schema: pa.Schema):
+    """`fn` over every batch of a host table: directly on a driver-held
+    pyarrow table, through mapInArrow on a DataFrame."""
+    if isinstance(hosts, DataFrame):
+        return hosts.mapInArrow(
+            lambda batches: map(fn, batches), from_arrow_schema(schema)
+        )
+    return pa.Table.from_batches(
+        [fn(b) for b in hosts.combine_chunks().to_batches()], schema=schema
+    )
 
 
 def _read_host_counts(spark: SparkSession, ckpt: str, epoch: int) -> DataFrame | None:
@@ -361,92 +474,106 @@ def _read_host_counts(spark: SparkSession, ckpt: str, epoch: int) -> DataFrame |
     return spark.read.schema(_HOST_COUNTS_SCHEMA).parquet(path)
 
 
-def _pending_stats_local(
-    ckpt: str, epoch: int, default_budget: int
-) -> tuple[int, int, int] | None:
-    """Driver-side (n_frontier, constrained, n_selected) for small host
-    sets — the same three scalars the Spark aggregate below computes, read
-    straight from the carried host_counts + politeness parquet when both
-    fit the bounded-local-read cap. Removes the one Spark job of the plan
-    phase (~0.3-0.5 s fixed latency per epoch, the dominant plan-phase
-    term after the round-5 count carry). Returns None when either table
-    exceeds the cap (10^6+ hosts at full scale) — callers then run the
-    distributed aggregate, whose semantics this mirrors exactly:
-    budget = floor(tokens) per politeness row, default for absent hosts;
-    n_selected = Σ min(n_pending, budget)."""
-    for t in ("host_counts", "politeness"):
-        path = ck.table_path(ckpt, epoch, t)
-        if not os.path.isdir(path):
-            return None
-        if ck.table_num_rows(ckpt, epoch, t) > _DRIVER_ADD_MAX_ROWS:
-            return None
-    hc = ck.read_columns_local(
-        ckpt, epoch, "host_counts", ["host", "n_pending"], _DRIVER_ADD_MAX_ROWS
-    )
-    pol = ck.read_columns_local(
-        ckpt, epoch, "politeness", ["host", "tokens"], _DRIVER_ADD_MAX_ROWS
-    )
-    budget_by_host = {
-        h: int(np.floor(t)) for h, t in zip(pol["host"], pol["tokens"])
-    }
-    pending = hc["n_pending"].astype(np.int64)
-    budgets = np.fromiter(
-        (budget_by_host.get(h, default_budget) for h in hc["host"]),
-        dtype=np.int64,
-        count=len(pending),
-    )
-    n_frontier = int(pending.sum())
-    constrained = int(bool((pending > budgets).any()))
-    n_selected = int(np.minimum(pending, budgets).sum())
-    return n_frontier, constrained, n_selected
+@dataclass
+class _Hosts:
+    plan: object  # _host_plan output: pa.Table on the driver, else DataFrame
+    n_frontier: int
+    n_selected: int
 
 
-def _next_host_counts(
-    host_counts: DataFrame, taken: DataFrame, admitted: DataFrame | None
-) -> DataFrame:
-    """Next epoch's per-host pending counts, incrementally:
-    pending − taken (+ admitted-by-host), hosts at zero dropped (matching
-    what a fresh frontier groupBy would produce). All inputs are tiny
-    (|hosts| rows) or already persisted (admitted), so this adds one small
-    overlapped write, not a frontier scan."""
-    nxt = host_counts.join(taken, "host", "left").select(
-        "host",
-        (
-            F.col("n_pending") - F.coalesce(F.col("n_taken"), F.lit(0))
-        ).alias("n_pending"),
+def _plan_hosts(
+    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int,
+    frontier: DataFrame, cached: list,
+) -> _Hosts:
+    """Run `_host_plan` over the epoch's host tables. Both are |hosts| rows:
+    the carried host_counts (round 5 — the plan phase aggregates |hosts|
+    rows instead of re-shuffling the frontier; recomputed from the frontier
+    when absent) and politeness. Under the local cap they are read and
+    planned on the driver with no Spark job; above it through mapInArrow
+    over their full outer join, persisted for selection and the commit."""
+    fn = partial(
+        _host_plan, burst=float(spec.burst),
+        refill=float(spec.rate_per_sec * spec.epoch_seconds),
     )
-    if admitted is not None:
-        adm = admitted.groupBy("host").agg(F.count(F.lit(1)).alias("_n_adm"))
-        nxt = (
-            nxt.join(adm, "host", "full")
-            .select(
-                "host",
-                (
-                    F.coalesce(F.col("n_pending"), F.lit(0))
-                    + F.coalesce(F.col("_n_adm"), F.lit(0))
-                ).alias("n_pending"),
+    if os.path.isdir(ck.table_path(ckpt, epoch, "host_counts")) and all(
+        ck.table_num_rows(ckpt, epoch, t) <= _DRIVER_ADD_MAX_ROWS
+        for t in ("host_counts", "politeness")
+    ):
+        hosts = ck.read_table_local(
+            ckpt, epoch, "host_counts", ["host", "n_pending"], _DRIVER_ADD_MAX_ROWS
+        ).join(
+            ck.read_table_local(
+                ckpt, epoch, "politeness", ["host", "tokens"], _DRIVER_ADD_MAX_ROWS
+            ),
+            "host",
+            join_type="full outer",
+        )
+        plan = _map_hosts(fn, hosts, _HOST_PLAN_PA)
+        return _Hosts(
+            plan,
+            pc.sum(plan.column("n_pending")).as_py() or 0,
+            pc.sum(plan.column("n_taken")).as_py() or 0,
+        )
+    host_counts = _read_host_counts(spark, ckpt, epoch)
+    if host_counts is None:
+        host_counts = _count_by_host(frontier, "n_pending")
+    # explicit schema: a schema-less read eagerly lists the dir and reads a
+    # footer for inference (~50-60 ms of py4j/JVM latency per table)
+    politeness = spark.read.schema("host string, tokens double").parquet(
+        ck.table_path(ckpt, epoch, "politeness")
+    )
+    plan = _map_hosts(
+        fn, host_counts.join(politeness, "host", "full"), _HOST_PLAN_PA
+    ).persist()
+    cached.append(plan)
+    row = plan.agg(F.sum("n_pending"), F.sum("n_taken")).first()
+    return _Hosts(plan, int(row[0] or 0), int(row[1] or 0))
+
+
+def _carry_host_counts(spark: SparkSession, plan, admitted):
+    """`_host_carry` over plan ⟗ admissions-by-host — on the driver when
+    both are driver-held, else through mapInArrow."""
+    hosts = _cols(plan, ["host", "n_pending", "n_taken"])
+    by_host = None if admitted is None else _count_by_host(admitted, "n_admitted")
+    if isinstance(hosts, DataFrame) or isinstance(by_host, DataFrame):
+        hosts = _to_df(spark, hosts)
+        if by_host is not None:
+            hosts = hosts.join(_to_df(spark, by_host), "host", "full")
+    elif by_host is not None:
+        hosts = hosts.join(by_host, "host", join_type="full outer")
+    return _map_hosts(_host_carry, hosts, _HOST_COUNTS_PA)
+
+
+# The local caps. An epoch table whose row count — known before it is built
+# — is at most its cap is materialised on the driver with pyarrow (a ~1 ms
+# parquet write instead of a Spark job of ~0.3 s fixed latency; the r6 phase
+# profile put such jobs at ~2 s of a ~2.9 s small-site epoch). Larger ones
+# stay Spark jobs, so at 10^8-row epochs nothing collects.
+# Full frontier/link rows (~200 B each, ≤50 MB at the cap): a budget-bound
+# epoch's selection, a discovered-link batch, the seed set at init.
+_DRIVER_COMMIT_MAX_ROWS = 1 << 18
+# Narrow rows: the host tables, the seen view's urls, url_hash columns
+# (≤8 MB of int64 hashes — the same bound as expire_seen's chunks).
+_DRIVER_ADD_MAX_ROWS = 1 << 20
+
+
+def _filter_add_after_write(
+    flt, ckpt: str, epoch: int, hashes_df: DataFrame, n_rows: int
+) -> None:
+    """Add an admission batch whose hashes are ALREADY persisted as the
+    epoch's seen_new table: small batches read the column driver-side (no
+    Spark job — the distributed build is one full job of fixed ~0.5 s
+    latency to hash a few hundred rows), large ones go distributed.
+    Replay-deterministic either way (sorted part files / deterministic
+    coalesce), so resume stays byte-identical."""
+    if n_rows <= _DRIVER_ADD_MAX_ROWS:
+        flt.add_many(
+            ck.read_column_local(
+                ckpt, epoch, "seen_new", "url_hash", max_rows=_DRIVER_ADD_MAX_ROWS
             )
         )
-    return nxt.filter(F.col("n_pending") > 0)
-
-
-def _write_tables_concurrently(
-    ckpt: str, epoch: int, tables: list[tuple[DataFrame, str]]
-) -> None:
-    """Write independent epoch-state tables from one thread each so their
-    fixed job-submission latencies overlap (Spark schedules concurrent jobs
-    from one session; the writes target distinct dirs). Run serially these
-    were ~1 s of a ~4.5 s small-epoch wall (phase_ms, r4 profile) — pure
-    driver-side latency, invisible at big-epoch scale but the dominant term
-    of the reference-site crawl."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(len(tables)) as ex:
-        futs = [
-            ex.submit(ck.write_table, df, ckpt, epoch, name) for df, name in tables
-        ]
-        for f in futs:
-            f.result()
+    else:
+        _filter_add_from_df(flt, hashes_df, n_rows=n_rows)
 
 
 _BUILD_ROWS_PER_PART = 50_000_000  # ~1 partial per 50M hashes per task
@@ -511,287 +638,6 @@ def _filter_add_from_df(flt, hashes_df: DataFrame, n_rows: int | None = None) ->
         _bloom_add_from_df(flt, hashes_df, n_rows)
 
 
-# Full-row collect gate for the small-epoch driver commit: an admission
-# batch this small (≤2^18 rows ≈ 50 MB of ~200 B link rows) is collected to
-# the driver in ONE job and the four next-epoch state tables (frontier,
-# host_counts, politeness, seen_new) are written with write_table_local —
-# replacing four Spark write jobs (plus their join/shuffle stages) whose
-# fixed latencies dominated the small-site epoch (r6 phase profile:
-# state_writes 1.1-1.4 s of a ~2.9 s epoch). Large admission batches keep
-# the distributed write path unchanged — at 10^8-row epochs the gate never
-# passes and nothing collects. The admission SEMANTICS (route filter,
-# robots, keep-first, bloom prefilter, exact anti-join) stay in Spark
-# either way; only the final materialization moves.
-_DRIVER_COMMIT_MAX_ROWS = 1 << 18
-
-
-def _py_url_path(url: str) -> str:
-    """Python mirror of functions.urls.url_path (parse_url(url, 'PATH')):
-    the path component without query/fragment, '/' when absent. Exactness
-    matters only up to prefix matching against the robots table — both
-    forms agree on every prefix test for scheme://host/path[?query] URLs."""
-    rest = url.split("//", 1)[1] if "//" in url else url
-    slash = rest.find("/")
-    if slash == -1:
-        return "/"
-    path = rest[slash:]
-    for sep in ("?", "#"):
-        k = path.find(sep)
-        if k != -1:
-            path = path[:k]
-    return path or "/"
-
-
-def _seen_rows_small(ckpt: str, upto_epoch: int, cap: int) -> bool:
-    """True iff the exact seen view's input rows total ≤ cap (parquet
-    footer counts only — no reads)."""
-    total = 0
-    for e in range(upto_epoch + 1):
-        for t in ("seen_new", "seen_removed"):
-            if os.path.isdir(ck.table_path(ckpt, e, t)):
-                total += ck.table_num_rows(ckpt, e, t)
-                if total > cap:
-                    return False
-    return True
-
-
-def _seen_view_local(ckpt: str, upto_epoch: int) -> set:
-    """`_seen_view` as a driver-side url set (callers gate the size via
-    `_seen_rows_small`): union of per-epoch seen_new MINUS expiry
-    tombstones, a url surviving iff some seen row's admit_epoch exceeds its
-    latest removal — term-for-term the DataFrame view's semantics."""
-    removed: dict = {}
-    for e in range(upto_epoch + 1):
-        if os.path.isdir(ck.table_path(ckpt, e, "seen_removed")):
-            cols = ck.read_columns_local(
-                ckpt, e, "seen_removed", ["url", "removed_epoch"],
-                _DRIVER_ADD_MAX_ROWS,
-            )
-            for u, r in zip(cols["url"], cols["removed_epoch"]):
-                ri = int(r)
-                if removed.get(u, -1) < ri:
-                    removed[u] = ri
-    seen: set = set()
-    for e in range(upto_epoch + 1):
-        if not os.path.isdir(ck.table_path(ckpt, e, "seen_new")):
-            continue
-        cols = ck.read_columns_local(
-            ckpt, e, "seen_new", ["url", "admit_epoch"], _DRIVER_ADD_MAX_ROWS
-        )
-        if not removed:
-            seen.update(cols["url"].tolist())
-        else:
-            for u, a in zip(cols["url"], cols["admit_epoch"]):
-                r = removed.get(u)
-                if r is None or int(a) > r:
-                    seen.add(u)
-    return seen
-
-
-def _admit_links_driver(
-    ckpt: str, epoch: int, out_epoch: int, fetch_out_path: str
-) -> list:
-    """The admission pipeline (route filter → robots → keep-first → exact
-    seen anti-join) over a SMALL discovered-link batch, driver-side — the
-    same four steps the distributed path runs, mirrored operation for
-    operation (the callers' gates bound both the link batch and the seen
-    view). Returns admitted rows as dicts carrying FRONTIER_COLS +
-    url_hash, sorted by url (unique after keep-first) so downstream writes
-    are deterministic.
-
-    Semantics mirrored exactly: route drop is `kind != 'list' AND (route
-    missing OR unknown)`; robots drops when the host's disallow_prefixes
-    prefix-match the url path (hosts absent from the robots table pass);
-    keep-first takes the minimum (priority, disc_epoch, seed_idx, page_idx,
-    pos, kind, host) struct per url (disc_epoch is constant out_epoch across
-    the batch, string comparisons are ASCII so Python tuple order ==
-    Spark's UTF8 binary struct order); the anti-join is exact (a Bloom
-    prefilter adds nothing driver-side — set membership IS the exact
-    test)."""
-    import pyarrow.parquet as pq
-
-    robots_cols = ck.read_columns_local(
-        ckpt, 0, "robots", ["host", "disallow_prefixes"], _DRIVER_ADD_MAX_ROWS
-    )
-    robots = {
-        h: list(p) if p is not None else None
-        for h, p in zip(robots_cols["host"], robots_cols["disallow_prefixes"])
-    }
-    seen = _seen_view_local(ckpt, epoch)
-
-    link_dir = os.path.join(fetch_out_path, "row_type=link")
-    if not os.path.isdir(link_dir):
-        # n_links rides an accumulator that can only over-count (task
-        # retries); if no link rows were actually written there is nothing
-        # to admit — mirrors the distributed path's empty result
-        return []
-    cols = [
-        "priority", "disc_epoch", "seed_idx", "page_idx", "pos",
-        "kind", "url", "host", "route",
-    ]
-    best: dict = {}
-    for fn in sorted(os.listdir(link_dir)):
-        if not fn.endswith(".parquet"):
-            continue
-        t = pq.read_table(os.path.join(link_dir, fn), columns=cols)
-        d = {c: t.column(c).to_pylist() for c in cols}
-        for prio, seed_idx, page_idx, pos, kind, url, host, route in zip(
-            d["priority"], d["seed_idx"], d["page_idx"], d["pos"],
-            d["kind"], d["url"], d["host"], d["route"],
-        ):
-            if kind != "list" and (route is None or route == sm.ROUTE_UNKNOWN):
-                continue
-            prefixes = robots.get(host)
-            if prefixes:
-                path = _py_url_path(url)
-                if any(path.startswith(p) for p in prefixes):
-                    continue
-            key = (prio, out_epoch, seed_idx, page_idx, pos, kind, host)
-            cur = best.get(url)
-            if cur is None or key < cur:
-                best[url] = key
-    admitted = []
-    for url in sorted(best):
-        if url in seen:
-            continue
-        prio, de, seed_idx, page_idx, pos, kind, host = best[url]
-        admitted.append(
-            {
-                "priority": prio, "disc_epoch": de, "seed_idx": seed_idx,
-                "page_idx": page_idx, "pos": pos, "kind": kind, "url": url,
-                "host": host, "url_hash": sm.h64(url),
-            }
-        )
-    return admitted
-
-
-def _commit_small_epoch_state(
-    ckpt: str,
-    epoch: int,
-    out_epoch: int,
-    spec: SiteSpec,
-    adm_rows: list,
-    write_seen_new: bool = True,
-) -> None:
-    """Driver-side materialization of the four next-epoch state tables from
-    an already-collected admission batch, on the UNCONSTRAINED fast path
-    only (selected == whole frontier ⇒ remaining is empty, per-host taken
-    == pending). Value-identical to the distributed writes it replaces:
-    same politeness token arithmetic term-for-term (tokens − taken + refill,
-    capped at burst, full-outer over active hosts), same next host_counts
-    (pending − taken + admitted, zeros dropped ⇒ admitted counts by host),
-    same row sets with explicitly matched parquet types (int32 frontier
-    keys — cross-epoch unions require it). Deterministic row order (sorted
-    by url / host) keeps resume replay byte-identical."""
-    import pyarrow as pa
-
-    hc = ck.read_columns_local(
-        ckpt, epoch, "host_counts", ["host", "n_pending"], _DRIVER_ADD_MAX_ROWS
-    )
-    pol = ck.read_columns_local(
-        ckpt, epoch, "politeness", ["host", "tokens"], _DRIVER_ADD_MAX_ROWS
-    )
-    taken = {h: int(n) for h, n in zip(hc["host"], hc["n_pending"])}
-    tokens = {h: float(t) for h, t in zip(pol["host"], pol["tokens"])}
-    refill = float(spec.rate_per_sec * spec.epoch_seconds)
-    burst = float(spec.burst)
-    # _advance_politeness mirror (active = hosts with pending this epoch):
-    # identical float64 expression shape: min(burst, (tokens - taken) + refill)
-    new_tokens = {}
-    for h in set(tokens) | set(taken):
-        base = tokens.get(h, burst)
-        if h in taken:
-            base = min(burst, base - float(taken[h]) + refill)
-        new_tokens[h] = base
-    _write_frontier_tables_local(ckpt, out_epoch, adm_rows, write_seen_new)
-
-    pol_sorted = sorted(new_tokens)
-    politeness = pa.Table.from_arrays(
-        [
-            pa.array(pol_sorted, type=pa.string()),
-            pa.array([new_tokens[h] for h in pol_sorted], type=pa.float64()),
-        ],
-        names=["host", "tokens"],
-    )
-    ck.write_table_local(ckpt, out_epoch, "politeness", politeness)
-
-
-def _write_frontier_tables_local(
-    ckpt: str, out_epoch: int, rows: list, write_seen_new: bool
-) -> None:
-    """frontier + host_counts (+ seen_new) for ``out_epoch`` from
-    driver-held frontier rows (dicts with FRONTIER_COLS + url_hash), with
-    types matched to the distributed writers (int32 frontier keys)."""
-    import pyarrow as pa
-
-    int_cols = {"priority", "disc_epoch", "seed_idx", "page_idx", "pos"}
-    fr_schema = pa.schema(
-        [
-            (c, pa.int32() if c in int_cols else pa.string())
-            for c in FRONTIER_COLS
-        ]
-    )
-    frontier = pa.Table.from_arrays(
-        [
-            pa.array([r[c] for r in rows], type=fr_schema.field(c).type)
-            for c in FRONTIER_COLS
-        ],
-        schema=fr_schema,
-    )
-    ck.write_table_local(ckpt, out_epoch, "frontier", frontier)
-
-    if write_seen_new:  # zero-discovery epochs commit no seen_new table
-        seen_new = pa.Table.from_arrays(
-            [
-                pa.array([r["url"] for r in rows], type=pa.string()),
-                pa.array([r["url_hash"] for r in rows], type=pa.int64()),
-                pa.array([out_epoch] * len(rows), type=pa.int32()),
-            ],
-            names=["url", "url_hash", "admit_epoch"],
-        )
-        ck.write_table_local(ckpt, out_epoch, "seen_new", seen_new)
-
-    n_by_host: dict[str, int] = {}
-    for r in rows:
-        n_by_host[r["host"]] = n_by_host.get(r["host"], 0) + 1
-    hosts_sorted = sorted(n_by_host)
-    host_counts = pa.Table.from_arrays(
-        [
-            pa.array(hosts_sorted, type=pa.string()),
-            pa.array([n_by_host[h] for h in hosts_sorted], type=pa.int64()),
-        ],
-        names=["host", "n_pending"],
-    )
-    ck.write_table_local(ckpt, out_epoch, "host_counts", host_counts)
-
-
-# Below this many admitted URLs the seen-filter add runs driver-side from
-# the just-written seen_new parquet (≤8 MB of int64 hashes — same bound as
-# expire_seen's chunks) instead of launching a Spark job: the distributed
-# build is one full job of fixed ~0.5 s latency to hash a few hundred rows,
-# the dominant term of the small-site epoch's `bloom` phase (r5 phase_ms
-# profile). Big admission batches keep the treeReduce path unchanged.
-_DRIVER_ADD_MAX_ROWS = 1 << 20
-
-
-def _filter_add_after_write(
-    flt, ckpt: str, epoch: int, hashes_df: DataFrame, n_rows: int
-) -> None:
-    """Add an admission batch whose hashes are ALREADY persisted as the
-    epoch's seen_new table: small batches read the column driver-side (no
-    Spark job), large ones go distributed. Replay-deterministic either way
-    (sorted part files / deterministic coalesce), so resume stays
-    byte-identical."""
-    if n_rows <= _DRIVER_ADD_MAX_ROWS:
-        flt.add_many(
-            ck.read_column_local(
-                ckpt, epoch, "seen_new", "url_hash", max_rows=_DRIVER_ADD_MAX_ROWS
-            )
-        )
-    else:
-        _filter_add_from_df(flt, hashes_df, n_rows=n_rows)
-
-
 # growth trigger for the cuckoo seen-filter: above ~90% of slot capacity,
 # eviction cascades lengthen and add_many can hit its _MAX_KICKS RuntimeError
 # mid-commit (ADVICE r3) — grow BEFORE inserting the batch that would cross it
@@ -832,12 +678,10 @@ def _grow_cuckoo(
     return new
 
 
-def _seen_filter_load(flt) -> float | None:
+def _seen_filter_load(flt) -> float:
     """The saturation gauge recorded in every committed manifest — visible
     BEFORE it becomes fatal (cuckoo: fraction of slots; bloom: fraction of
     set bits, fpr ≈ fill^k)."""
-    if flt is None:
-        return None
     if isinstance(flt, CuckooFilter):
         return round(flt.load_factor(), 4)
     return round(flt.fill_fraction(), 4)
@@ -852,6 +696,10 @@ def _make_seen_filter(kind: str, n_expected: int):
     if kind == "bloom":
         return BloomFilter(n_expected)
     raise ValueError(f"unknown seen-filter kind {kind!r}")
+
+
+def _filter_path(ckpt: str, epoch: int) -> str:
+    return os.path.join(ck.epoch_dir(ckpt, epoch), "bloom.npz")
 
 
 def _load_seen_filter(path: str):
@@ -873,249 +721,130 @@ def _seen_filter_udf(flt):
     return maybe_seen
 
 
-def _advance_politeness(
-    spec: SiteSpec, politeness: DataFrame, active: DataFrame, taken: DataFrame | None
-) -> DataFrame:
-    """Token-bucket transition (T2): refill only hosts with pending rows this
-    epoch (spec shared with refsim — idle hosts keep stale tokens). One left
-    join tree (no inner/anti/union split) so the update is a single stage."""
-    refill = float(spec.rate_per_sec * spec.epoch_seconds)
-    # FULL outer: an active host the table has never seen (first discovered
-    # this epoch) enters with a fresh burst-sized bucket instead of silently
-    # never existing — without this the politeness table could only shrink
-    out = politeness.join(
-        active.withColumn("_active", F.lit(1)), "host", "full"
-    ).withColumn("tokens", F.coalesce("tokens", F.lit(float(spec.burst))))
-    if taken is not None:
-        out = out.join(taken, "host", "left")
-    else:
-        out = out.withColumn("n_taken", F.lit(None).cast("long"))
-    return out.withColumn(
-        "tokens",
-        F.when(
-            F.col("_active").isNotNull(),
-            F.least(
-                F.lit(float(spec.burst)),
-                F.col("tokens")
-                - F.coalesce(F.col("n_taken"), F.lit(0))
-                + F.lit(refill),
-            ),
-        ).otherwise(F.col("tokens")),
-    ).drop("n_taken", "_active")
+def _select(
+    spark: SparkSession, ckpt: str, epoch: int, frontier: DataFrame,
+    hosts: _Hosts, cached: list,
+):
+    """(selected, remaining, crawl_log): the rows to fetch (a DataFrame, or
+    None in a tick epoch), the rows carried to the next frontier, and the
+    crawl_log to commit (None when it is the frontier snapshot itself).
 
-
-def run_epoch(
-    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, use_bloom: bool = True
-) -> tuple[int, int]:
-    """Process epoch `epoch` (state dir `epoch`) → commit dir `epoch+1`.
-    Returns (frontier size, URLs fetched); frontier 0 ⇒ crawl done.
-
-    A zero-budget epoch (frontier pending but every active host's bucket
-    below 1 token) still commits: politeness refills and virtual time
-    advances, matching the simulator's cadence exactly."""
-    # per-phase wall clock, committed into the epoch manifest ("phase_ms"):
-    # the scheduler's own lineage for finding non-scaling time (a phase whose
-    # wall is flat across core counts is serial overhead — Amdahl's bill)
-    phases: dict[str, float] = {}
-    _t = time.perf_counter()
-
-    def _mark(name: str) -> None:
-        nonlocal _t
-        now = time.perf_counter()
-        phases[name] = round((now - _t) * 1000.0, 1)
-        _t = now
-
-    # explicit schemas: spark.read.parquet without one EAGERLY lists the
-    # dir and reads a footer for inference (~50-60 ms of py4j/JVM latency
-    # per table per epoch — the bulk of the round-6 plan phase); the
-    # schemas are ours and fixed. The robots read moved into the one branch
-    # that uses it (distributed admission).
-    frontier = (
-        spark.read.schema(_FRONTIER_SCHEMA)
-        .parquet(ck.table_path(ckpt, epoch, "frontier"))
+    When every host's pending set fits its budget the whole frontier is
+    selected (the steady-state fast path and the drain phase of every
+    crawl: no sort at all). Otherwise each host takes its `n_taken` first
+    rows by SELECT_ORDER, skew-safe (Zipf host distributions are the norm —
+    site_model.py:55): a plain PARTITION BY host window sorts one dominant
+    host's ENTIRE pending set (10^9 rows at 10^10-URL scale) in a single
+    task, because the budget bounds the window's output, not its input.
+    Stage 1 salts each host's rows into N_SALT_PARTS sub-windows and keeps
+    only the per-salt top-n_taken — sound because any row in the global
+    top-n_taken has < n_taken rows ahead of it overall, hence < n_taken
+    ahead within its own salt. Stage 2 ranks the ≤ salts·n_taken survivors
+    exactly. Rows dropped in stage 1 are provably unselected, so the
+    result is bit-identical to the unsalted window (test_crawl_skew.py
+    proves it against refsim under 90% skew)."""
+    if hosts.n_selected == hosts.n_frontier:
+        return frontier, _FRONTIER_PA.empty_table(), None
+    if hosts.n_selected == 0:  # tick: the frontier carries over unchanged
+        if hosts.n_frontier <= _DRIVER_COMMIT_MAX_ROWS:
+            return None, ck.read_table_local(
+                ckpt, epoch, "frontier", FRONTIER_COLS, _DRIVER_COMMIT_MAX_ROWS
+            ).cast(_FRONTIER_PA), None
+        return None, frontier, None
+    taken = _to_df(spark, _cols(hosts.plan, ["host", "n_taken"]))
+    wpre = W.partitionBy("host", "_salt").orderBy(*SELECT_ORDER)
+    pre = (
+        with_salt(frontier, N_SALT_PARTS, "url")
+        .join(F.broadcast(taken), "host", "left")
+        .fillna(0, ["n_taken"])
+        .withColumn("_prn", F.row_number().over(wpre))
         .persist()
     )
-    politeness = spark.read.schema("host string, tokens double").parquet(
-        ck.table_path(ckpt, epoch, "politeness")
+    cached.append(pre)
+    wsel = W.partitionBy("host").orderBy(*SELECT_ORDER)
+    ranked = (
+        pre.filter(F.col("_prn") <= F.col("n_taken"))
+        .withColumn("_rn", F.row_number().over(wsel))
     )
-    out_epoch = epoch + 1
-    # a frontier host missing from the politeness table (discovered this
-    # run) starts with a fresh bucket — floor(burst), exactly what
-    # init_state grants; without the coalesce a null budget made the
-    # constrained filters silently drop the host's rows and the fast path
-    # fetch with no cap at all
-    default_budget = int(spec.burst)
-    budgets = politeness.withColumn("budget", F.floor("tokens").cast("int"))
-
-    # per-host pending counts: they feed (a) the tiny agg below that decides
-    # everything the driver needs — total pending and whether any host's
-    # pending exceeds its budget (if not, the per-host top-k window — the
-    # only sort in the loop — is skipped entirely; this is the steady-state
-    # fast path when politeness isn't the binding constraint, and the drain
-    # phase of every crawl) — (b) the active-host set for the politeness
-    # refill, and (c) the fast path's per-host taken counts (selected ==
-    # frontier there). Round 5: the previous commit CARRIES these counts
-    # (pending − taken + admitted, a host_counts epoch table), so the plan
-    # phase normally aggregates |hosts| rows instead of re-shuffling the
-    # whole frontier — at 10^10-URL scale that removes a full frontier
-    # groupBy per epoch. Fallback (pre-carry checkpoints, reseed/expiry
-    # epochs that skip the carry): recompute from the frontier;
-    # tests/test_host_counts_carry.py pins carried == recomputed on every
-    # committed epoch.
-    host_counts = _read_host_counts(spark, ckpt, epoch)
-    stats = None
-    if host_counts is None:
-        host_counts = frontier.groupBy("host").agg(
-            F.count(F.lit(1)).alias("n_pending")
-        )
-    else:
-        # carried counts exist on disk: small host sets compute the three
-        # plan scalars driver-side from the parquet (no Spark job at all
-        # in the plan phase); large ones fall through to the aggregate
-        stats = _pending_stats_local(ckpt, epoch, default_budget)
-    host_counts = host_counts.persist()
-    # small host/politeness tables read driver-side ⇒ the commit fast path
-    # below may also run driver-side (same bounded-local gate)
-    stats_local = stats is not None
-    if stats is None:
-        pending_stats = (
-            host_counts.join(F.broadcast(budgets), "host", "left")
-            .withColumn("budget", F.coalesce("budget", F.lit(default_budget)))
-            .agg(
-                F.sum("n_pending").alias("n_frontier"),
-                F.max(
-                    F.when(F.col("n_pending") > F.col("budget"), 1).otherwise(0)
-                ).alias("constrained"),
-                # the salted top-budget below takes exactly min(pending,
-                # budget) per host, so the selected-set size is known BEFORE
-                # selection — one aggregate over |hosts| rows replaces a
-                # count job over the selected rows (10^8+/epoch at scale)
-                F.sum(F.least("n_pending", "budget")).alias("n_selected"),
-            )
-            .first()
-        )
-        stats = (
-            int(pending_stats["n_frontier"] or 0),
-            int(pending_stats["constrained"] or 0),
-            int(pending_stats["n_selected"] or 0),
-        )
-    n_frontier, constrained, stats_n_selected = stats
-    _mark("plan")
-    if n_frontier == 0:
-        host_counts.unpersist()
-        frontier.unpersist()
-        return 0, 0
-    active = host_counts.select("host")
-
-    epoch_cache = [host_counts]
-    if constrained == 0:
-        selected = frontier.select(*FRONTIER_COLS)
-        remaining = frontier.select(*FRONTIER_COLS).limit(0)
-        n_selected = n_frontier
-        taken = host_counts.withColumnRenamed("n_pending", "n_taken")
-    else:
-        # Skew-safe per-host top-budget (Zipf host distributions are the
-        # norm — site_model.py:55): a plain PARTITION BY host window sorts
-        # one dominant host's ENTIRE pending set (10^9 rows at 10^10-URL
-        # scale) in a single task, because the budget bounds the window's
-        # output, not its input. Stage 1 salts each host's rows into
-        # N_SALT_PARTS sub-windows and keeps only the per-salt top-budget —
-        # sound because any row in the global top-budget has < budget rows
-        # ahead of it overall, hence < budget ahead within its own salt.
-        # Stage 2 ranks the ≤ salts·budget survivors exactly. Rows dropped
-        # in stage 1 are provably unselected and go straight to remaining,
-        # so the result set is bit-identical to the unsalted window
-        # (test_crawl_skew.py proves it against refsim under 90% skew).
-        wpre = W.partitionBy("host", "_salt").orderBy(*SELECT_ORDER)
-        pre = (
-            with_salt(frontier, N_SALT_PARTS, "url")
-            .join(F.broadcast(budgets), "host", "left")
-            .withColumn("budget", F.coalesce("budget", F.lit(default_budget)))
-            .withColumn("_prn", F.row_number().over(wpre))
-            .persist()
-        )
-        epoch_cache.append(pre)
-        survivors = pre.filter(F.col("_prn") <= F.col("budget")).drop(
-            "_salt", "_prn"
-        )
-        dropped = pre.filter(F.col("_prn") > F.col("budget")).select(*FRONTIER_COLS)
-        wsel = W.partitionBy("host").orderBy(*SELECT_ORDER)
-        ranked = survivors.withColumn("rn", F.row_number().over(wsel)).persist()
-        epoch_cache.append(ranked)
-        selected = ranked.filter(F.col("rn") <= F.col("budget")).select(*FRONTIER_COLS)
-        remaining = dropped.unionByName(
-            ranked.filter(F.col("rn") > F.col("budget")).select(*FRONTIER_COLS)
-        )
-        # both derived from |hosts|-row metadata, not from the selected rows:
-        # per-host take is exactly min(pending, budget) (proved bit-identical
-        # to the window output by test_crawl_skew/test_crawl_equivalence), so
-        # no count job and no groupBy shuffle over the selected set
-        n_selected = stats_n_selected
-        taken = (
-            host_counts.join(F.broadcast(budgets), "host", "left")
-            .withColumn("budget", F.coalesce("budget", F.lit(default_budget)))
-            .select(
-                "host", F.least("n_pending", "budget").alias("n_taken")
+    marked = (
+        pre.filter(F.col("_prn") > F.col("n_taken"))
+        .select(*FRONTIER_COLS, F.lit(False).alias("_sel"))
+        .unionByName(
+            ranked.select(
+                *FRONTIER_COLS, (F.col("_rn") <= F.col("n_taken")).alias("_sel")
             )
         )
-    _mark("select")
-    if n_selected == 0:
-        # virtual-time tick: refill buckets, carry frontier unchanged
-        ck.write_table(frontier.select(*FRONTIER_COLS), ckpt, out_epoch, "frontier")
-        ck.write_table(host_counts, ckpt, out_epoch, "host_counts")
-        ck.write_table(
-            _advance_politeness(spec, politeness, active, None),
-            ckpt,
-            out_epoch,
-            "politeness",
+        .persist()
+    )
+    cached.append(marked)
+    selected = marked.filter(F.col("_sel")).select(*FRONTIER_COLS)
+    if hosts.n_frontier > _DRIVER_COMMIT_MAX_ROWS:
+        return (
+            selected,
+            marked.filter(~F.col("_sel")).select(*FRONTIER_COLS),
+            selected.withColumn("epoch", F.lit(epoch)),
         )
-        flt = None
-        if use_bloom:
-            flt = _load_seen_filter(
-                os.path.join(ck.epoch_dir(ckpt, epoch), "bloom.npz")
-            )
-            flt.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
-        filter_load = _seen_filter_load(flt)  # inside the timed phase
-        _mark("tick_commit")
-        ck.commit_epoch(
-            ckpt,
-            out_epoch,
-            {
-                "processed_epoch": epoch,
-                "urls_fetched": 0,
-                "urls_admitted": 0,
-                "seen_filter_load": filter_load,
-                "phase_ms": phases,
-            },
-        )
-        for df in epoch_cache:
-            df.unpersist()
-        frontier.unpersist()
-        return n_frontier, 0
+    # one collect fills the cache the fetch reads and yields both tables
+    rows = marked.toArrow()
+    sel = rows.column("_sel")
+    log = rows.filter(sel).select(FRONTIER_COLS).cast(_FRONTIER_PA)
+    return (
+        selected,
+        rows.filter(pc.invert(sel)).select(FRONTIER_COLS).cast(_FRONTIER_PA),
+        log.append_column("epoch", pa.array(np.full(log.num_rows, epoch, np.int32))),
+    )
 
-    # ---- fetch (payloads stay partition-local; written exactly once before
-    # any shuffle — partitionBy(row_type) lets every downstream reader prune
-    # the heavy payload files away; parquet compression off because image
-    # payloads are already entropy-dense)
-    fetch_out_path = ck.table_path(ckpt, out_epoch, "fetch_out")
+
+# Fetch-task sizing floor: at ~2 ms of codec work per URL and ~10 ms of
+# fixed per-task cost (schedule + Arrow round-trip + commit), a task below
+# ~32 URLs spends more on overhead than fetching — the round-6 A/B read the
+# small-site crawl at 10.3 s with floor 4 vs 7.3 s with floor 32 (fetch
+# phase 4.8 → 2.3 s). The 2×-slots cap still binds at scale, so the
+# big-epoch plan is unchanged.
+_MIN_URLS_PER_FETCH_TASK = 32
+
+
+def _robots(ckpt: str) -> dict:
+    """host → disallowed path prefixes, for the hosts that have any: the
+    robots table init wrote (one row per seed host), for the fetcher."""
+    t = pq.read_table(
+        ck.table_path(ckpt, 0, "robots"), columns=["host", "disallow_prefixes"]
+    )
+    return {
+        h: tuple(p)
+        for h, p in zip(
+            t.column("host").to_pylist(), t.column("disallow_prefixes").to_pylist()
+        )
+        if p
+    }
+
+
+def _fetch(
+    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int,
+    selected: DataFrame, n_selected: int,
+) -> int:
+    """Fetch the selected rows into the next epoch's fetch_out; returns the
+    number of candidate links written. Payloads stay partition-local and
+    are written exactly once before any shuffle — partitionBy(row_type)
+    lets every downstream reader prune the heavy payload files away;
+    parquet compression off because image payloads are already dense."""
     # fetch tasks must be sized by fetch *cost*, not by input bytes: the
     # frontier rows are ~100 B each, so a byte-based scan split would run a
     # million-URL fetch on two cores. Round-robin to 2× task slots — but no
-    # more tasks than ~n_selected/4: a 96-URL drain epoch on 64 tasks paid
-    # more scheduling than fetching (r4 phase profile). At scale the 2×-slot
-    # cap always binds, so the big-epoch plan is unchanged.
+    # more tasks than ~n_selected/32 (see _MIN_URLS_PER_FETCH_TASK).
     fetch_par = min(
         spark.sparkContext.defaultParallelism * 2,
         max(1, -(-n_selected // _MIN_URLS_PER_FETCH_TASK)),
     )
-    # discovered-link count rides back on an accumulator instead of a probe
-    # job over the metric rows (see make_fetcher: retries can only inflate
-    # it, and the epoch only branches on == 0, so inflation is benign)
+    # the link count rides back on an accumulator instead of a probe job
+    # over the metric rows (see make_fetcher: retries can only inflate it,
+    # and the epoch only branches on == 0, so inflation is benign)
     links_acc = spark.sparkContext.accumulator(0)
     (
         selected.repartition(fetch_par)
         .mapInArrow(
-            make_fetcher(spec, epoch, links_acc=links_acc), schema=FETCH_OUT_SCHEMA
+            make_fetcher(spec, epoch, _robots(ckpt), links_acc=links_acc),
+            schema=FETCH_OUT_SCHEMA,
         )
         .write.mode("overwrite")
         .partitionBy("row_type")
@@ -1126,249 +855,239 @@ def run_epoch(
         # on every page; disabling it read the steady-state epoch at
         # 2.9-3.2 → 2.5 s fetch (CPU 53-57 → 49, same-window A/B r6)
         .option("parquet.enable.dictionary", "false")
-        .parquet(fetch_out_path)
+        .parquet(ck.table_path(ckpt, epoch + 1, "fetch_out"))
     )
-    _mark("fetch")
+    return links_acc.value
 
-    # crawl_log is the proof artifact; when the fast path selected the WHOLE
-    # frontier, it is byte-equal to the epoch's frontier snapshot — record a
-    # manifest pointer instead of re-writing it (CrawlResult reassembles)
-    log_is_frontier = constrained == 0
-    if not log_is_frontier:
-        ck.write_table(
-            selected.withColumn("epoch", F.lit(epoch)), ckpt, out_epoch, "crawl_log"
-        )
 
-    # whether anything was discovered (rode back on the fetch job's
-    # accumulator) lets pure-payload epochs (steady state, drain) skip the
-    # entire admission machinery
-    n_links = links_acc.value
-    _mark("links_probe")
+def _seen_rows_small(ckpt: str, upto_epoch: int, cap: int) -> bool:
+    """True iff the exact seen view's input rows total ≤ cap (parquet
+    footer counts only — no reads)."""
+    total = 0
+    for e in range(upto_epoch + 1):
+        for t in ("seen_new", "seen_removed"):
+            if os.path.isdir(ck.table_path(ckpt, e, t)):
+                total += ck.table_num_rows(ckpt, e, t)
+                if total > cap:
+                    return False
+    return True
 
-    if n_links == 0:
-        if stats_local and constrained == 0:
-            # pure-payload fast-path epoch (steady state, drain): remaining
-            # is empty and taken == pending, so the three next-state tables
-            # are tiny and fully driver-computable — same writes, no jobs
-            _commit_small_epoch_state(
-                ckpt, epoch, out_epoch, spec, [], write_seen_new=False
+
+def _seen_view_local(ckpt: str, upto_epoch: int) -> set:
+    """`_seen_view` as a driver-side url set (callers gate the size via
+    `_seen_rows_small`): union of per-epoch seen_new MINUS expiry
+    tombstones, a url surviving iff some seen row's admit_epoch exceeds its
+    latest removal — term-for-term the DataFrame view's semantics."""
+    removed: dict = {}
+    for e in range(upto_epoch + 1):
+        if os.path.isdir(ck.table_path(ckpt, e, "seen_removed")):
+            t = ck.read_table_local(
+                ckpt, e, "seen_removed", ["url", "removed_epoch"], _DRIVER_ADD_MAX_ROWS
             )
-        else:
-            _write_tables_concurrently(
-                ckpt,
-                out_epoch,
-                [
-                    (remaining, "frontier"),
-                    (_next_host_counts(host_counts, taken, None), "host_counts"),
-                    (
-                        _advance_politeness(spec, politeness, active, taken),
-                        "politeness",
-                    ),
-                ],
+            for u, r in zip(*(c.to_pylist() for c in t.columns)):
+                if removed.get(u, -1) < r:
+                    removed[u] = r
+    seen: set = set()
+    for e in range(upto_epoch + 1):
+        if os.path.isdir(ck.table_path(ckpt, e, "seen_new")):
+            t = ck.read_table_local(
+                ckpt, e, "seen_new", ["url", "admit_epoch"], _DRIVER_ADD_MAX_ROWS
             )
-        _mark("state_writes")
-        flt = None
-        if use_bloom:
-            flt = _load_seen_filter(
-                os.path.join(ck.epoch_dir(ckpt, epoch), "bloom.npz")
-            )
-            flt.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
-        filter_load = _seen_filter_load(flt)  # inside the timed phase
-        _mark("bloom")
-        ck.commit_epoch(
-            ckpt,
-            out_epoch,
-            {
-                "processed_epoch": epoch,
-                "urls_fetched": n_selected,
-                "urls_admitted": 0,
-                "crawl_log_from_frontier": log_is_frontier,
-                "seen_filter_load": filter_load,
-                "phase_ms": phases,
-            },
-        )
-        for df in epoch_cache:
-            df.unpersist()
-        frontier.unpersist()
-        return n_frontier, n_selected
+            for u, a in zip(*(c.to_pylist() for c in t.columns)):
+                r = removed.get(u)
+                if r is None or a > r:
+                    seen.add(u)
+    return seen
 
-    # small-epoch driver commit (round 6): when the carried counts were
-    # already read locally, selection was unconstrained (remaining empty,
-    # taken == pending) and both the link batch and the seen view fit the
-    # bounded-local gates, the whole admission pipeline AND all four state
-    # writes run driver-side — zero Spark jobs between fetch and commit
-    # (the r6 phase profile put ~2 s of the ~2.9 s small epoch in the
-    # admission job + state-write jobs' fixed latencies). Semantics are
-    # mirrored operation-for-operation (_admit_links_driver /
-    # _commit_small_epoch_state); large epochs take the distributed path
-    # below unchanged.
-    if (
-        stats_local
-        and constrained == 0
-        and n_links <= _DRIVER_COMMIT_MAX_ROWS
-        and _seen_rows_small(ckpt, epoch, _DRIVER_ADD_MAX_ROWS)
+
+def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: list):
+    """Admission of the epoch's candidate links: keep-first within the
+    batch (the smallest (ORDER_KEY, kind, host) per url, disc_epoch = the
+    next epoch) and the exact anti-join against the seen view. Returns the
+    admitted rows (FRONTIER_COLS + url_hash): a pyarrow table sorted by url
+    when the link batch and the seen view fit the local caps, else a
+    persisted DataFrame whose anti-join only sees the rows the seen-filter
+    cannot rule out."""
+    out_epoch = epoch + 1
+    fetch_out = ck.table_path(ckpt, out_epoch, "fetch_out")
+    if n_links <= _DRIVER_COMMIT_MAX_ROWS and _seen_rows_small(
+        ckpt, epoch, _DRIVER_ADD_MAX_ROWS
     ):
-        adm_rows = _admit_links_driver(ckpt, epoch, out_epoch, fetch_out_path)
-        n_admitted = len(adm_rows)
-        _mark("admission")
-        _commit_small_epoch_state(ckpt, epoch, out_epoch, spec, adm_rows)
-        _mark("state_writes")
-        bf = None
-        if use_bloom:
-            bf = _load_seen_filter(
-                os.path.join(ck.epoch_dir(ckpt, epoch), "bloom.npz")
-            )
-            if n_admitted > 0:
-                if (
-                    isinstance(bf, CuckooFilter)
-                    and len(bf) + n_admitted > _CUCKOO_GROW_LOAD * bf.capacity
-                ):
-                    # seen_new for this epoch is already written above, so
-                    # the rebuild covers the batch too
-                    bf = _grow_cuckoo(
-                        spark, ckpt, out_epoch, bf, len(bf) + n_admitted
-                    )
-                else:
-                    bf.add_many(
-                        np.fromiter(
-                            (r["url_hash"] for r in adm_rows),
-                            dtype=np.int64,
-                            count=n_admitted,
-                        )
-                    )
-            bf.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
-        filter_load = _seen_filter_load(bf)  # inside the timed phase
-        _mark("bloom")
-        ck.commit_epoch(
-            ckpt,
-            out_epoch,
-            {
-                "processed_epoch": epoch,
-                "urls_fetched": n_selected,
-                "urls_admitted": n_admitted,
-                "crawl_log_from_frontier": log_is_frontier,
-                "seen_filter_load": filter_load,
-                "phase_ms": phases,
-            },
+        link_dir = os.path.join(fetch_out, "row_type=link")
+        # n_links can only over-count (task retries): no link rows written
+        # means nothing to admit
+        links = (
+            pq.read_table(link_dir, columns=FRONTIER_COLS).cast(_FRONTIER_PA)
+            if os.path.isdir(link_dir)
+            else _FRONTIER_PA.empty_table()
         )
-        for df in epoch_cache:
-            df.unpersist()
-        frontier.unpersist()
-        return n_frontier, n_selected
-
-    # ---- admission: route filter → robots → keep-first → bloom+anti-join
-    # (explicit schema: skips inference listing; pure-payload epochs above
-    # never open the directory at all)
-    fetch_out = spark.read.schema(FETCH_OUT_SCHEMA).parquet(fetch_out_path)
+        links = links.set_column(
+            1, "disc_epoch", pa.array(np.full(links.num_rows, out_epoch, np.int32))
+        ).sort_by([(c, "ascending") for c in ["url", *ORDER_KEY, "kind", "host"]])
+        url = links.column("url").to_numpy(zero_copy_only=False)
+        first = np.ones(len(url), dtype=bool)
+        first[1:] = url[1:] != url[:-1]
+        seen = _seen_view_local(ckpt, epoch)
+        new = np.fromiter((u not in seen for u in url), bool, len(url))
+        admitted = links.filter(pa.array(first & new))
+        return admitted.append_column(
+            "url_hash",
+            pa.array([sm.h64(u) for u in admitted.column("url").to_pylist()], pa.int64()),
+        )
     links = (
-        fetch_out.filter(F.col("row_type") == "link")
-        .select(*FRONTIER_COLS, "route")
+        spark.read.schema(FETCH_OUT_SCHEMA).parquet(fetch_out)
+        .filter(F.col("row_type") == "link")
+        .select(*FRONTIER_COLS)
         .withColumn("disc_epoch", F.lit(out_epoch))
     )
-    links = links.filter(
-        (F.col("kind") == "list") | (F.col("route") != sm.ROUTE_UNKNOWN)
-    ).drop("route")
-    robots = ck.read_table(spark, ckpt, 0, "robots")
-    links = (
-        links.join(F.broadcast(robots), "host", "left")
-        .withColumn("_path", url_path("url"))
-        .filter(
-            F.col("disallow_prefixes").isNull()
-            | ~F.exists(
-                "disallow_prefixes", lambda p: F.col("_path").startswith(p)
-            )
-        )
-        .drop("disallow_prefixes", "_path")
-    )
-    # keep-first within the epoch: min-struct aggregation (one partial+final
-    # hash agg — no sort, cheaper than a row_number window; the admission
-    # key leads the struct so lexicographic min IS first-occurrence)
+    # min-struct aggregation: one partial+final hash agg — no sort, cheaper
+    # than a row_number window; the admission key leads the struct so the
+    # lexicographic min IS the first occurrence
     cand = (
         links.groupBy("url")
         .agg(F.min(F.struct(*ORDER_KEY, "kind", "host")).alias("_first"))
         .select("url", "_first.*")
         .withColumn("url_hash", url_hash64("url"))
     )
+    flt = _load_seen_filter(_filter_path(ckpt, epoch))
+    cand = cand.withColumn("_maybe", _seen_filter_udf(flt)("url_hash")).persist()
+    cached.append(cand)
+    suspect = cand.filter(F.col("_maybe")).drop("_maybe")
+    admitted = (
+        cand.filter(~F.col("_maybe"))
+        .drop("_maybe")
+        .unionByName(suspect.join(_seen_view(spark, ckpt, epoch), "url", "left_anti"))
+        .persist()
+    )
+    cached.append(admitted)
+    return admitted
 
-    seen = _seen_view(spark, ckpt, epoch)
 
-    if use_bloom:
-        bf = _load_seen_filter(os.path.join(ck.epoch_dir(ckpt, epoch), "bloom.npz"))
-        cand = cand.withColumn("_maybe", _seen_filter_udf(bf)("url_hash")).persist()
-        epoch_cache.append(cand)
-        definite_new = cand.filter(~F.col("_maybe")).drop("_maybe")
-        suspect = cand.filter(F.col("_maybe")).drop("_maybe")
-        admitted = definite_new.unionByName(suspect.join(seen, "url", "left_anti"))
+class _Phases(dict):
+    """Per-phase wall clock (ms), committed into the epoch manifest
+    ("phase_ms"): the scheduler's own lineage for finding non-scaling time
+    (a phase whose wall is flat across core counts is serial overhead)."""
+
+    def __init__(self):
+        super().__init__()
+        self._t = time.perf_counter()
+
+    def mark(self, name: str) -> None:
+        now = time.perf_counter()
+        self[name] = round((now - self._t) * 1000.0, 1)
+        self._t = now
+
+
+def _commit(
+    spark: SparkSession, ckpt: str, epoch: int, hosts: _Hosts, remaining,
+    crawl_log, admitted, phases: _Phases,
+) -> None:
+    """Commit epoch `epoch`'s transition as epoch `epoch + 1`: the next
+    frontier (remaining ∪ admitted), host_counts (`_host_carry`),
+    politeness (`_host_plan`'s refill), seen_new, crawl_log, the seen-filter
+    with the admitted hashes, and last the manifest. Driver-held inputs
+    write driver-side; any Spark input makes its table a Spark write."""
+    out_epoch = epoch + 1
+    n_admitted = 0
+    frontier = [remaining]
+    if admitted is not None:
+        # written first: for a Spark batch this is the one pass that
+        # computes `admitted` into its cache (no separate count job — the
+        # count comes from the written parquet footers) before the
+        # concurrent writes below read it
+        _write_all(ckpt, out_epoch, {"seen_new": _seen_new(admitted, out_epoch)})
+        n_admitted = ck.table_num_rows(ckpt, out_epoch, "seen_new")
+        frontier.append(_cols(admitted, FRONTIER_COLS))
+    if any(isinstance(t, DataFrame) for t in frontier):
+        dfs = [_to_df(spark, t) for t in frontier if isinstance(t, DataFrame) or t.num_rows]
+        frontier = dfs[0]
+        for df in dfs[1:]:
+            frontier = frontier.unionByName(df)
+        if admitted is not None:
+            frontier = frontier.repartition("host")
     else:
-        bf = None
-        admitted = cand.join(seen, "url", "left_anti")
+        frontier = pa.concat_tables(frontier)
+    tables = {
+        "frontier": frontier,
+        "host_counts": _carry_host_counts(spark, hosts.plan, admitted),
+        "politeness": _cols(hosts.plan, ["host", "tokens"]),
+    }
+    if crawl_log is not None:
+        tables["crawl_log"] = crawl_log
+    _write_all(ckpt, out_epoch, tables)
+    phases.mark("state_writes")
 
-    admitted = admitted.persist()
-    _mark("admission")
-
-    # ---- commit next state. `admitted` is persisted but NOT
-    # pre-materialized with a count job: the seen_new write below is the one
-    # pass that computes it into the cache (written and materialized in the
-    # same job), n_admitted then comes from the written parquet footers —
-    # exact, driver-side metadata — and the remaining three independent
-    # writes read the cache concurrently. One full Spark job less per epoch
-    # than count-then-write, with no concurrent cache-fill contention.
-    ck.write_table(
-        admitted.select("url", "url_hash", F.lit(out_epoch).alias("admit_epoch")),
-        ckpt,
-        out_epoch,
-        "seen_new",
-    )
-    n_admitted = ck.table_num_rows(ckpt, out_epoch, "seen_new")
-    new_frontier = remaining.unionByName(admitted.select(*FRONTIER_COLS)).repartition(
-        "host"
-    )
-    _write_tables_concurrently(
-        ckpt,
-        out_epoch,
-        [
-            (new_frontier, "frontier"),
-            (_next_host_counts(host_counts, taken, admitted), "host_counts"),
-            (_advance_politeness(spec, politeness, active, taken), "politeness"),
-        ],
-    )
-    _mark("state_writes")
-
-    if use_bloom and bf is not None:
-        if n_admitted > 0:
-            if (
-                isinstance(bf, CuckooFilter)
-                and len(bf) + n_admitted > _CUCKOO_GROW_LOAD * bf.capacity
-            ):
-                # the batch would cross the safe load factor: rebuild
-                # larger from the exact seen view (seen_new for this epoch
-                # is already written, so the rebuild covers the batch too)
-                bf = _grow_cuckoo(spark, ckpt, out_epoch, bf, len(bf) + n_admitted)
-            else:
-                _filter_add_after_write(
-                    bf, ckpt, out_epoch, admitted.select("url_hash"), n_admitted
-                )
-        bf.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
-    filter_load = _seen_filter_load(bf)  # inside the timed phase
-    _mark("bloom")
-
+    flt = _load_seen_filter(_filter_path(ckpt, epoch))
+    if n_admitted:
+        if (
+            isinstance(flt, CuckooFilter)
+            and len(flt) + n_admitted > _CUCKOO_GROW_LOAD * flt.capacity
+        ):
+            # the batch would cross the safe load factor: rebuild larger
+            # from the exact seen view (seen_new for this epoch is already
+            # written, so the rebuild covers the batch too)
+            flt = _grow_cuckoo(spark, ckpt, out_epoch, flt, len(flt) + n_admitted)
+        else:
+            _filter_add_after_write(
+                flt, ckpt, out_epoch, _cols(admitted, ["url_hash"]), n_admitted
+            )
+    flt.save(_filter_path(ckpt, out_epoch))
+    filter_load = _seen_filter_load(flt)  # inside the timed phase
+    phases.mark("bloom")
     ck.commit_epoch(
         ckpt,
         out_epoch,
         {
             "processed_epoch": epoch,
-            "urls_fetched": n_selected,
+            "urls_fetched": hosts.n_selected,
             "urls_admitted": n_admitted,
-            "crawl_log_from_frontier": log_is_frontier,
+            # a fetch of the whole frontier logs exactly the frontier
+            # snapshot: a manifest pointer instead of a re-write
+            # (CrawlResult.crawl_order reassembles it)
+            "crawl_log_from_frontier": hosts.n_selected == hosts.n_frontier,
             "seen_filter_load": filter_load,
             "phase_ms": phases,
         },
     )
-    for df in epoch_cache:
-        df.unpersist()
-    frontier.unpersist()
-    admitted.unpersist()
-    return n_frontier, n_selected
+
+
+def run_epoch(
+    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int
+) -> tuple[int, int]:
+    """Process epoch `epoch` (state dir `epoch`) → commit dir `epoch+1`.
+    Returns (frontier size, URLs fetched); frontier 0 ⇒ crawl done.
+
+    plan → select → fetch → admit → commit. A zero-budget epoch (frontier
+    pending but every active host's bucket below 1 token) skips fetch and
+    admit but still commits: politeness refills and virtual time advances,
+    matching the simulator's cadence exactly. A pure-payload epoch (steady
+    state, drain) skips admit."""
+    phases = _Phases()
+    cached: list[DataFrame] = []
+    try:
+        frontier = spark.read.schema(_FRONTIER_SCHEMA).parquet(
+            ck.table_path(ckpt, epoch, "frontier")
+        )
+        hosts = _plan_hosts(spark, spec, ckpt, epoch, frontier, cached)
+        phases.mark("plan")
+        if hosts.n_frontier == 0:
+            return 0, 0
+        selected, remaining, crawl_log = _select(
+            spark, ckpt, epoch, frontier, hosts, cached
+        )
+        phases.mark("select")
+        admitted = None
+        if selected is not None:
+            n_links = _fetch(spark, spec, ckpt, epoch, selected, hosts.n_selected)
+            phases.mark("fetch")
+            if n_links:
+                admitted = _admit(spark, ckpt, epoch, n_links, cached)
+                phases.mark("admission")
+        _commit(spark, ckpt, epoch, hosts, remaining, crawl_log, admitted, phases)
+        return hosts.n_frontier, hosts.n_selected
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def init_steady_frontier(
@@ -1402,39 +1121,26 @@ def init_steady_frontier(
                 }
             )
 
-    frontier = spark.range(n_urls).repartition(32).mapInPandas(
-        gen,
-        schema="priority int, disc_epoch int, seed_idx int, page_idx int,"
-        " pos int, kind string, url string, host string",
-    )
-    ck.write_table(frontier.select(*FRONTIER_COLS), ckpt, 0, "frontier")
-    ck.write_table(
-        frontier.groupBy("host").agg(F.count(F.lit(1)).alias("n_pending")),
-        ckpt,
-        0,
-        "host_counts",
-    )
-    ck.write_table(
-        frontier.select(
-            "url", url_hash64("url").alias("url_hash"), F.lit(0).alias("admit_epoch")
-        ),
-        ckpt,
-        0,
-        "seen_new",
+    frontier = (
+        spark.range(n_urls)
+        .repartition(32)
+        .mapInPandas(gen, schema=_FRONTIER_SCHEMA)
+        .withColumn("url_hash", url_hash64("url"))
     )
     hosts = spark.createDataFrame(
-        [(f"h{i}.test",) for i in range(spec.n_hosts)], ["host"]
+        [(f"h{i}.test", float(spec.burst), []) for i in range(spec.n_hosts)],
+        "host string, tokens double, disallow_prefixes array<string>",
     )
-    ck.write_table(
-        hosts.withColumn("tokens", F.lit(float(spec.burst))), ckpt, 0, "politeness"
-    )
-    ck.write_table(
-        hosts.withColumn(
-            "disallow_prefixes", F.array().cast("array<string>")
-        ),
+    _write_all(
         ckpt,
         0,
-        "robots",
+        {
+            "frontier": frontier.select(*FRONTIER_COLS),
+            "host_counts": _count_by_host(frontier, "n_pending"),
+            "seen_new": _seen_new(frontier, 0),
+            "politeness": hosts.select("host", "tokens"),
+            "robots": hosts.select("host", "disallow_prefixes"),
+        },
     )
     bf = _make_seen_filter(filter_kind, max(n_urls, 1024))
     _filter_add_from_df(
@@ -1442,7 +1148,7 @@ def init_steady_frontier(
         spark.read.parquet(ck.table_path(ckpt, 0, "seen_new")).select("url_hash"),
         n_rows=n_urls,
     )
-    bf.save(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
+    bf.save(_filter_path(ckpt, 0))
     ck.commit_epoch(ckpt, 0, {"n_urls": n_urls, "kind": "steady_state_init"})
 
 
@@ -1451,7 +1157,6 @@ def run_crawl(
     spec: SiteSpec,
     ckpt: str,
     max_epochs: int = 10_000,
-    use_bloom: bool = True,
     resume: bool = True,
     filter_kind: str = "bloom",
 ) -> CrawlResult:
@@ -1466,7 +1171,7 @@ def run_crawl(
         last = 0
     epoch = last
     while epoch < max_epochs:
-        n_frontier, _ = run_epoch(spark, spec, ckpt, epoch, use_bloom=use_bloom)
+        n_frontier, _ = run_epoch(spark, spec, ckpt, epoch)
         if n_frontier == 0:
             break
         epoch += 1
@@ -1527,29 +1232,27 @@ def expire_seen(
         ck.read_table(spark, ckpt, last, "politeness"), ckpt, out_epoch, "politeness"
     )
 
-    flt_path = os.path.join(ck.epoch_dir(ckpt, last), "bloom.npz")
-    if os.path.exists(flt_path):  # use_bloom=False crawls keep no prefilter
-        flt = _load_seen_filter(flt_path)
-        if isinstance(flt, CuckooFilter):
-            buf: list[int] = []
-            for row in gone.select("url_hash").toLocalIterator():
-                buf.append(row[0])
-                if len(buf) >= delete_chunk:
-                    flt.delete_many(np.array(buf, dtype=np.int64))
-                    buf.clear()
-            if buf:
+    flt = _load_seen_filter(_filter_path(ckpt, last))
+    if isinstance(flt, CuckooFilter):
+        buf: list[int] = []
+        for row in gone.select("url_hash").toLocalIterator():
+            buf.append(row[0])
+            if len(buf) >= delete_chunk:
                 flt.delete_many(np.array(buf, dtype=np.int64))
-        else:
-            # same geometry as the original (NOT sized to the post-expiry
-            # count: the crawl keeps adding keys at the spec's rate, and a
-            # shrunken filter would saturate)
-            remaining = _seen_view(spark, ckpt, out_epoch).select(
-                url_hash64("url").alias("url_hash")
-            )
-            rebuilt = BloomFilter.empty_like(flt)
-            _bloom_add_from_df(rebuilt, remaining)
-            flt = rebuilt
-        flt.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
+                buf.clear()
+        if buf:
+            flt.delete_many(np.array(buf, dtype=np.int64))
+    else:
+        # same geometry as the original (NOT sized to the post-expiry
+        # count: the crawl keeps adding keys at the spec's rate, and a
+        # shrunken filter would saturate)
+        remaining = _seen_view(spark, ckpt, out_epoch).select(
+            url_hash64("url").alias("url_hash")
+        )
+        rebuilt = BloomFilter.empty_like(flt)
+        _bloom_add_from_df(rebuilt, remaining)
+        flt = rebuilt
+    flt.save(_filter_path(ckpt, out_epoch))
 
     ck.commit_epoch(
         ckpt,
@@ -1608,13 +1311,11 @@ def reseed(spark: SparkSession, spec: SiteSpec, ckpt: str) -> None:
         out_epoch,
         "politeness",
     )
-    flt_path = os.path.join(ck.epoch_dir(ckpt, last), "bloom.npz")
-    if os.path.exists(flt_path):
-        flt = _load_seen_filter(flt_path)
-        _filter_add_from_df(
-            flt, spark.read.parquet(ck.table_path(ckpt, out_epoch, "seen_new"))
-            .select("url_hash")
-        )
-        flt.save(os.path.join(ck.epoch_dir(ckpt, out_epoch), "bloom.npz"))
+    flt = _load_seen_filter(_filter_path(ckpt, last))
+    _filter_add_from_df(
+        flt,
+        spark.read.parquet(ck.table_path(ckpt, out_epoch, "seen_new")).select("url_hash"),
+    )
+    flt.save(_filter_path(ckpt, out_epoch))
     seeds.unpersist()
     ck.commit_epoch(ckpt, out_epoch, {"kind": "reseed", "processed_epoch": last})

@@ -56,50 +56,45 @@ def table_num_rows(ckpt: str, epoch: int, name: str) -> int:
     return total
 
 
-def read_columns_local(
+def read_table_local(
     ckpt: str, epoch: int, name: str, columns: list, max_rows: int
-) -> dict:
-    """Driver-side column read of a SMALL staged/committed epoch table —
-    the latency escape hatch for per-epoch scheduler bookkeeping (a Spark
-    job costs ~0.3-0.5 s of fixed latency to scan a few hundred rows).
+) -> "pa.Table":
+    """Driver-side read of a SMALL staged/committed epoch table — the
+    latency escape hatch for per-epoch scheduler bookkeeping (a Spark job
+    costs ~0.3-0.5 s of fixed latency to scan a few hundred rows).
     Bounded by construction: callers must pass the row cap they already
     know from ``table_num_rows`` and the read raises if the table exceeds
-    it, so this can never become an unbounded driver collect. Returns
-    {column: np.ndarray} (object dtype for strings). Iceberg-honorable:
+    it, so this can never become an unbounded driver collect. Part files
+    are read in sorted order (deterministic replay). Iceberg-honorable:
     snapshot data files are parquet under the real catalog too, and a
     read-only client-side scan of a small snapshot is exactly what an
     Iceberg client library does."""
-    import numpy as np
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     root = table_path(ckpt, epoch, name)
     parts = []
     total = 0
-    for fn in sorted(os.listdir(root)):  # sorted: deterministic replay order
+    for fn in sorted(os.listdir(root)):
         if not fn.endswith(".parquet"):
             continue
         t = pq.read_table(os.path.join(root, fn), columns=list(columns))
         total += t.num_rows
         if total > max_rows:
             raise ValueError(
-                f"read_columns_local({name}): {total} rows exceeds "
+                f"read_table_local({name}): {total} rows exceeds "
                 f"the caller's bound of {max_rows}"
             )
         parts.append(t)
     if not parts:
-        return {c: np.empty(0, dtype=np.int64) for c in columns}
-    import pyarrow as pa
-
-    tbl = pa.concat_tables(parts)
-    return {
-        c: tbl.column(c).to_numpy(zero_copy_only=False) for c in columns
-    }
+        return pa.table({c: [] for c in columns})
+    return pa.concat_tables(parts)
 
 
 def write_table_local(ckpt: str, epoch: int, name: str, table) -> None:
     """Driver-side write of a SMALL epoch table (a ``pyarrow.Table``) as one
     deterministic parquet file — the write-side counterpart of
-    ``read_columns_local`` (round 6). A Spark write job costs ~0.3 s of
+    ``read_table_local`` (round 6). A Spark write job costs ~0.3 s of
     fixed latency (job submission + committer protocol) to persist a few
     hundred rows; for tables the caller has ALREADY bounded and holds in
     driver memory, one ``pq.write_table`` is equivalent output (the readers
@@ -118,9 +113,9 @@ def write_table_local(ckpt: str, epoch: int, name: str, table) -> None:
 def read_column_local(
     ckpt: str, epoch: int, name: str, column: str, max_rows: int
 ) -> "np.ndarray":
-    """Single-column convenience over ``read_columns_local`` (the
-    seen-filter add path)."""
-    return read_columns_local(ckpt, epoch, name, [column], max_rows)[column]
+    """One column of ``read_table_local`` as a numpy array (the seen-filter
+    add path)."""
+    return read_table_local(ckpt, epoch, name, [column], max_rows).column(column).to_numpy()
 
 
 def commit_epoch(ckpt: str, epoch: int, lineage: dict) -> None:

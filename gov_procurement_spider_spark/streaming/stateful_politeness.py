@@ -1,8 +1,9 @@
 """Custom stateful streaming operator: per-host politeness token bucket via
 ``applyInPandasWithState`` (SURVEY §2.10 T2, streaming-native variant).
 
-The batch engine enforces politeness with a state-table join per epoch
-(plans/crawl.py::_advance_politeness); in a continuous deployment the same
+The batch engine enforces politeness with a per-host pyarrow step over the
+host_counts ⟗ politeness tables once per epoch
+(plans/crawl.py::_host_plan); in a continuous deployment the same
 semantics run inside Structured Streaming — group the request stream by
 host, keep the bucket level in GroupState, admit up to ⌊tokens⌋ requests per
 micro-batch in arrival order, refill by rate once per batch, and tag the

@@ -4,6 +4,8 @@ construction paths they replaced (same schema, same rows, same trees)."""
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from gov_procurement_spider_spark.operators.splitter import (
@@ -32,6 +34,18 @@ def test_memo_keys_are_per_path(spark, sf_small, sf_dir):
     tables.load_table(spark, sf_small, "events")
     tables.load_table(spark, sf_dir, "events")
     assert len(tables._SCHEMA_MEMO) == 2
+
+
+def test_memo_sees_a_rewritten_file(spark, tmp_path):
+    """A file rewritten in place with another schema is read under the new
+    schema, not the memoized one."""
+    path = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), path)
+    assert tables.load_table(spark, str(tmp_path), "t").columns == ["a"]
+    pq.write_table(pa.table({"b": ["x"], "c": [1.5]}), path)
+    df = tables.load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["b", "c"]
+    assert tuple(df.collect()[0]) == ("x", 1.5)
 
 
 # strings exercising every delimiter plus trim/empty-part edge cases the

@@ -167,7 +167,7 @@ def test_interface_exposes_no_mutation_of_committed_epochs():
         # bounded read-only column scans of a small snapshot (Iceberg: a
         # client-side read of a snapshot's data files — still no mutation)
         "read_column_local",
-        "read_columns_local",
+        "read_table_local",
         "commit_epoch",
         "committed_epochs",
         "last_committed",

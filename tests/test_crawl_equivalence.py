@@ -6,15 +6,19 @@ results.
 
 from __future__ import annotations
 
+import os
 import tempfile
 
 import numpy as np
 import pytest
 
+from gov_procurement_spider_spark.crawler.bloom import BloomFilter
 from gov_procurement_spider_spark.functions import images
-from gov_procurement_spider_spark.plans.crawl import ORDER_KEY, run_crawl
+from gov_procurement_spider_spark.plans import crawl as crawl_plan
+from gov_procurement_spider_spark.plans.crawl import ORDER_KEY, init_state, run_crawl
 from gov_procurement_spider_spark.refsim import simulate
 from gov_procurement_spider_spark.sources.site_model import SiteSpec
+from gov_procurement_spider_spark.streaming import checkpoint as ck
 
 SPEC = SiteSpec(
     n_seeds=6,
@@ -137,9 +141,23 @@ def test_failed_fetch_equivalence(spark):
     assert got_payload_urls.isdisjoint(failed_sim)
 
 
-def test_bloom_off_equivalence(spark, sim):
-    """Bloom is an optimization, never semantics: identical output with it off."""
-    ckpt = tempfile.mkdtemp(prefix="crawl_nobloom_")
-    res = run_crawl(spark, SPEC, ckpt, use_bloom=False)
+def test_saturated_filter_equivalence(spark, sim, monkeypatch):
+    """The seen-filter is an optimization, never semantics: with an
+    all-ones epoch-0 Bloom filter every candidate is 'maybe seen' and goes
+    through the exact anti-join (local caps at 0, so admission runs in
+    Spark, the path that consults the filter), and the crawl still equals
+    the reference."""
+    ckpt = tempfile.mkdtemp(prefix="crawl_saturated_")
+    init_state(spark, SPEC, ckpt)
+    path = os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz")
+    bf = BloomFilter.load(path)
+    bf.bits[:] = 0xFF
+    bf.save(path)
+    for cap in ("_DRIVER_COMMIT_MAX_ROWS", "_DRIVER_ADD_MAX_ROWS"):
+        monkeypatch.setattr(crawl_plan, cap, 0)
+    res = run_crawl(spark, SPEC, ckpt)
     engine = [tuple(r) for r in res.crawl_order().select(*ORDER_COLS).collect()]
     assert engine == [tuple(o) for o in sim.crawl_order]
+    assert {r.url for r in res.seen().collect()} == sim.url_seen
+    last = BloomFilter.load(os.path.join(ck.epoch_dir(ckpt, res.epochs), "bloom.npz"))
+    assert last.fill_fraction() == 1.0

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import tempfile
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -98,12 +99,13 @@ def test_missing_table_falls_back_to_recompute(spark):
     _assert_counts_match_frontier(spark, ckpt)
 
 
-def test_local_pending_stats_match_spark_aggregate(spark):
-    """The driver-side plan-scalar path (_pending_stats_local) must return
-    exactly what the distributed aggregate returns, on every committed
-    epoch of a crawl that exercises both constrained and fast-path epochs
-    — same budget = floor(tokens) semantics, same default for hosts absent
-    from the politeness table."""
+def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
+    """The host plan (_host_plan) run on the driver and through mapInArrow
+    must yield the same per-host rows, and its plan scalars must equal an
+    independent Spark aggregate, on every committed epoch of a crawl that
+    exercises both budget-bound and fast-path epochs — budget =
+    floor(tokens), a full bucket for hosts absent from the politeness
+    table, n_selected = Σ min(n_pending, budget)."""
     spec = SiteSpec(
         n_seeds=6, n_hosts=3, detail_space=60, max_list_pages=3,
         rate_per_sec=2.0, burst=4.0, epoch_seconds=2.0,
@@ -116,8 +118,18 @@ def test_local_pending_stats_match_spark_aggregate(spark):
         carried = C._read_host_counts(spark, ckpt, e)
         if carried is None:
             continue
-        local = C._pending_stats_local(ckpt, e, default_budget)
-        assert local is not None
+        frontier = ck.read_table(spark, ckpt, e, "frontier")
+        local = C._plan_hosts(spark, spec, ckpt, e, frontier, [])
+        assert isinstance(local.plan, pa.Table)
+        with monkeypatch.context() as m:
+            m.setattr(C, "_DRIVER_ADD_MAX_ROWS", 0)
+            cached = []
+            dist = C._plan_hosts(spark, spec, ckpt, e, frontier, cached)
+        assert sorted(tuple(r) for r in dist.plan.collect()) == sorted(
+            zip(*local.plan.to_pydict().values())
+        ), f"epoch {e}: driver and mapInArrow plans differ"
+        for df in cached:
+            df.unpersist()
         budgets = ck.read_table(spark, ckpt, e, "politeness").withColumn(
             "budget", F.floor("tokens").cast("int")
         )
@@ -126,14 +138,12 @@ def test_local_pending_stats_match_spark_aggregate(spark):
             .withColumn("budget", F.coalesce("budget", F.lit(default_budget)))
             .agg(
                 F.sum("n_pending").alias("nf"),
-                F.max(
-                    F.when(F.col("n_pending") > F.col("budget"), 1).otherwise(0)
-                ).alias("c"),
                 F.sum(F.least("n_pending", "budget")).alias("ns"),
             )
             .first()
         )
-        want = (int(row["nf"] or 0), int(row["c"] or 0), int(row["ns"] or 0))
-        assert local == want, f"epoch {e}: local {local} != spark {want}"
+        want = (int(row["nf"] or 0), int(row["ns"] or 0))
+        for got in (local, dist):
+            assert (got.n_frontier, got.n_selected) == want, f"epoch {e}"
         checked += 1
     assert checked >= 2

@@ -53,7 +53,7 @@ def _inject_unknown_host(spark, ckpt):
     seen_rows = seen.collect()
     ck.write_table(spark.createDataFrame(seen_rows, seen.schema), ckpt, 0, "seen_new")
     # hand-editing the frontier invalidates the carried host_counts (in the
-    # real flow admissions maintain it via _next_host_counts) — drop it so
+    # real flow every commit carries it via _host_carry) — drop it so
     # run_epoch takes the documented recompute fallback
     shutil.rmtree(ck.table_path(ckpt, 0, "host_counts"), ignore_errors=True)
     bf = BloomFilter(1024)
@@ -66,7 +66,7 @@ def test_unknown_host_selected_capped_and_tracked(spark):
     init_steady_frontier(spark, SPEC, ckpt, 40)
     _inject_unknown_host(spark, ckpt)
 
-    n_frontier, n_sel = run_epoch(spark, SPEC, ckpt, 0, use_bloom=False)
+    n_frontier, n_sel = run_epoch(spark, SPEC, ckpt, 0)
     assert n_frontier == 40 + N_UNKNOWN
 
     log = spark.read.parquet(ck.table_path(ckpt, 1, "crawl_log"))
