@@ -9,7 +9,7 @@ DataFrame dataflow, one path for every epoch:
   select  frontier ─ top-taken per host (O2, salted) ─► selected / remaining
   fetch   selected ─ mapInArrow fetch (S3) ─► payloads + candidate links
           (route filter P5 and robots T3 applied where links are generated)
-  admit   links ─ keep-first window ─ seen-filter prefilter + exact
+  admit   links ─ keep-first (min per url) ─ seen-filter prefilter + exact
           anti-join vs seen (D1) ─► admitted
   commit  frontier' / host_counts' / politeness' / seen+ / crawl_log /
           seen-filter, one manifest per epoch (T5) — `_commit`
@@ -17,13 +17,13 @@ DataFrame dataflow, one path for every epoch:
 A tick epoch (no budget anywhere) skips fetch and admit; a link-free epoch
 skips admit. Each table is materialised on the driver (pyarrow, one sorted
 parquet file) when its size — known before it is built — is under the local
-caps, otherwise by Spark jobs; the semantics have one implementation either
-way. The host-sized state (plan scalars, per-host taken, token refill,
-host_counts carry) is the pyarrow pair `_host_plan` / `_host_carry`, called
-directly on the driver or through mapInArrow over the host-keyed join.
-Keep-first and the exact seen anti-join run in Spark for big link batches
-and in pyarrow for small ones (tests/test_crawl_dual_path.py pins the two
-byte for byte).
+caps, otherwise by Spark jobs. The host-sized state (plan scalars,
+per-host taken, token refill, host_counts carry) has one implementation,
+the pyarrow pair `_host_plan` / `_host_carry`, called directly on the
+driver or through mapInArrow over the host-keyed join. Keep-first and the
+exact seen anti-join are the one pair kept in two forms: Spark for big link
+batches, pyarrow for small ones (tests/test_crawl_dual_path.py pins both
+materialisations to the same committed rows and filters).
 
 The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
 filter (crawler/cuckoo.py) when per-key deletion is needed: expire_seen
@@ -87,9 +87,10 @@ SELECT_ORDER = ORDER_KEY + ["url"]
 # pending set sorts in N_SALT_PARTS parallel bounded tasks instead of one
 N_SALT_PARTS = 16
 
-_FRONTIER_SCHEMA = (
-    "priority int, disc_epoch int, seed_idx int, page_idx int, pos int,"
-    " kind string, url string, host string"
+# Arrow types of the frontier tables, whichever writer: int32 keys, or
+# cross-epoch unions break
+_FRONTIER_PA = pa.schema(
+    [(c, pa.int32() if c in ORDER_KEY else pa.string()) for c in FRONTIER_COLS]
 )
 
 
@@ -256,11 +257,6 @@ def _seed_frontier(spark: SparkSession, spec: SiteSpec) -> DataFrame:
     )
 
 
-# Arrow types of the driver-written epoch tables: exactly what the Spark
-# writers produce (int32 frontier keys), or cross-epoch unions break
-_FRONTIER_PA = pa.schema(
-    [(c, pa.int32() if c in ORDER_KEY else pa.string()) for c in FRONTIER_COLS]
-)
 # a driver-written table is one parquet file in this row order: same rows →
 # same bytes, so resume replay stays byte-identical
 _SORT_KEY = {
@@ -400,7 +396,6 @@ _HOST_PLAN_PA = pa.schema(
      ("tokens", pa.float64())]
 )
 _HOST_COUNTS_PA = pa.schema([("host", pa.string()), ("n_pending", pa.int64())])
-_HOST_COUNTS_SCHEMA = "host string, n_pending bigint"
 
 
 def _host_plan(hosts: pa.RecordBatch, burst: float, refill: float) -> pa.RecordBatch:
@@ -471,7 +466,7 @@ def _read_host_counts(spark: SparkSession, ckpt: str, epoch: int) -> DataFrame |
     path = ck.table_path(ckpt, epoch, "host_counts")
     if not os.path.isdir(path):
         return None
-    return spark.read.schema(_HOST_COUNTS_SCHEMA).parquet(path)
+    return spark.read.schema(from_arrow_schema(_HOST_COUNTS_PA)).parquet(path)
 
 
 @dataclass
@@ -1065,7 +1060,7 @@ def run_epoch(
     phases = _Phases()
     cached: list[DataFrame] = []
     try:
-        frontier = spark.read.schema(_FRONTIER_SCHEMA).parquet(
+        frontier = spark.read.schema(from_arrow_schema(_FRONTIER_PA)).parquet(
             ck.table_path(ckpt, epoch, "frontier")
         )
         hosts = _plan_hosts(spark, spec, ckpt, epoch, frontier, cached)
@@ -1124,7 +1119,7 @@ def init_steady_frontier(
     frontier = (
         spark.range(n_urls)
         .repartition(32)
-        .mapInPandas(gen, schema=_FRONTIER_SCHEMA)
+        .mapInPandas(gen, schema=from_arrow_schema(_FRONTIER_PA))
         .withColumn("url_hash", url_hash64("url"))
     )
     hosts = spark.createDataFrame(
