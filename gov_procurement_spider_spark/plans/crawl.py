@@ -311,6 +311,12 @@ def _write_all(ckpt: str, epoch: int, tables: dict) -> None:
                 f.result()
 
 
+def _with_url_hash(t: pa.Table) -> pa.Table:
+    """`t` plus its url_hash column (site_model.h64, = url_hash64 in Spark)."""
+    hashes = [sm.h64(u) for u in t.column("url").to_pylist()]
+    return t.append_column("url_hash", pa.array(hashes, pa.int64()))
+
+
 def _seed_frontier_local(spec: SiteSpec) -> pa.Table:
     """`_seed_frontier` on the driver, for seed sets under the local cap:
     the same seed tuples and keep-first (the smallest ORDER_KEY per url),
@@ -360,11 +366,7 @@ def init_state(
     seen-filter seeded with the seed URLs — generated on the driver when
     the seed set is under the local cap, else by Spark."""
     if spec.n_seeds <= _DRIVER_COMMIT_MAX_ROWS:
-        frontier = _seed_frontier_local(spec)
-        frontier = frontier.append_column(
-            "url_hash",
-            pa.array([sm.h64(u) for u in frontier.column("url").to_pylist()], pa.int64()),
-        )
+        frontier = _with_url_hash(_seed_frontier_local(spec))
         hosts = pa.table({"host": pc.unique(frontier.column("host"))})
     else:
         frontier = _seed_frontier(spark, spec).withColumn("url_hash", url_hash64("url"))
@@ -801,7 +803,9 @@ _MIN_URLS_PER_FETCH_TASK = 32
 
 def _robots(ckpt: str) -> dict:
     """host → disallowed path prefixes, for the hosts that have any: the
-    robots table init wrote (one row per seed host), for the fetcher."""
+    robots table init wrote (one row per seed host). The fetch closure
+    carries it to every task, as the broadcast robots join it replaces did
+    (PySpark broadcasts a pickled closure above 1 MB)."""
     t = pq.read_table(
         ck.table_path(ckpt, 0, "robots"), columns=["host", "disallow_prefixes"]
     )
@@ -924,11 +928,7 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
         first[1:] = url[1:] != url[:-1]
         seen = _seen_view_local(ckpt, epoch)
         new = np.fromiter((u not in seen for u in url), bool, len(url))
-        admitted = links.filter(pa.array(first & new))
-        return admitted.append_column(
-            "url_hash",
-            pa.array([sm.h64(u) for u in admitted.column("url").to_pylist()], pa.int64()),
-        )
+        return _with_url_hash(links.filter(pa.array(first & new)))
     links = (
         spark.read.schema(FETCH_OUT_SCHEMA).parquet(fetch_out)
         .filter(F.col("row_type") == "link")
@@ -994,7 +994,11 @@ def _commit(
         n_admitted = ck.table_num_rows(ckpt, out_epoch, "seen_new")
         frontier.append(_cols(admitted, FRONTIER_COLS))
     if any(isinstance(t, DataFrame) for t in frontier):
-        dfs = [_to_df(spark, t) for t in frontier if isinstance(t, DataFrame) or t.num_rows]
+        dfs = [
+            _to_df(spark, t)
+            for t in frontier
+            if isinstance(t, DataFrame) or t.num_rows
+        ]
         frontier = dfs[0]
         for df in dfs[1:]:
             frontier = frontier.unionByName(df)
@@ -1307,10 +1311,8 @@ def reseed(spark: SparkSession, spec: SiteSpec, ckpt: str) -> None:
         "politeness",
     )
     flt = _load_seen_filter(_filter_path(ckpt, last))
-    _filter_add_from_df(
-        flt,
-        spark.read.parquet(ck.table_path(ckpt, out_epoch, "seen_new")).select("url_hash"),
-    )
+    seen_new = spark.read.parquet(ck.table_path(ckpt, out_epoch, "seen_new"))
+    _filter_add_from_df(flt, seen_new.select("url_hash"))
     flt.save(_filter_path(ckpt, out_epoch))
     seeds.unpersist()
     ck.commit_epoch(ckpt, out_epoch, {"kind": "reseed", "processed_epoch": last})

@@ -115,7 +115,8 @@ def read_column_local(
 ) -> "np.ndarray":
     """One column of ``read_table_local`` as a numpy array (the seen-filter
     add path)."""
-    return read_table_local(ckpt, epoch, name, [column], max_rows).column(column).to_numpy()
+    table = read_table_local(ckpt, epoch, name, [column], max_rows)
+    return table.column(column).to_numpy()
 
 
 def commit_epoch(ckpt: str, epoch: int, lineage: dict) -> None:

@@ -4,12 +4,14 @@ whether its small tables are computed on the driver or by Spark jobs.
 Each crawl runs twice — as-is (small epochs commit driver-side) and with
 the local row caps forced to 0, so every epoch, init and lifecycle step
 goes through Spark. At every committed epoch the state tables must be equal
-as sorted rows with equal Arrow column types, the seen filters equal (Bloom arrays byte for byte),
-and the manifests must agree on what was fetched and admitted.
+as sorted rows with equal Arrow column types, the seen filters equal (Bloom
+arrays byte for byte), and the manifests must agree on what was fetched and
+admitted.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 import tempfile
@@ -145,6 +147,13 @@ def _differences(local, spark_only):
 )
 def test_driver_and_spark_commits_identical(spark, monkeypatch, drive, spec):
     local, spark_only = _run_both(spark, monkeypatch, drive, spec)
+    # the two runs really took different paths: driver-side writes produce
+    # one fixed-name file per table (ck.write_table_local)
+    driver_files = [
+        glob.glob(os.path.join(c, "epoch=*", "*", "part-00000-driver.parquet"))
+        for c in (local, spark_only)
+    ]
+    assert driver_files[0] and not driver_files[1]
     assert _differences(local, spark_only) == []
     for ckpt in (local, spark_only):
         shutil.rmtree(ckpt, ignore_errors=True)
