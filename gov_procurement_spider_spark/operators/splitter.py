@@ -41,7 +41,8 @@ def _split_clean(col: Column, delim: str) -> Column:
 
 
 def _sql_str(s: str) -> str:
-    """Spark-SQL single-quoted string literal for `s` (default escaping)."""
+    """Spark-SQL single-quoted string literal for `s` (default escaping,
+    pinned by `session.get_spark`)."""
     return "'" + s.replace("\\", "\\\\").replace("'", "\\'").replace("\n", "\\n") + "'"
 
 

@@ -9,8 +9,9 @@ built the same signature through a posexplode×explode of 512 rows per
 vector plus two shuffles — VERDICT r2 item 4 removed all of it; see
 _bucket_udf's docstring for why the UDF beats the declarative forms here).
 Candidate pairs only form *within* a (band, bucket), posting-list style:
-one shuffle groups each bucket's members, pairs + cosines are generated
-in-row — the cross join never exists and no embedding re-join is needed.
+one shuffle groups each bucket's members, pairs + cosines come from the
+shared `operators.pairs.bucket_pairs` generator — the cross join never
+exists and no embedding re-join is needed.
 Banding is the recall knob, exactly like MinHash LSH (text_ops dd4): b
 independent 8-plane signatures, candidates unioned and deduped, so a near
 pair straddling one band's hyperplane is still caught by another band
@@ -30,7 +31,7 @@ diverge when a true value sits within the ~1e-13 accumulated-order error of
 a decision boundary (0 for sign bits, a 5e-5 rounding edge for 4dp cell
 ranks) — per-comparison probability ~1e-9 on this data, zero observed
 across four rounds of full-registry parity. Cosine SIMILARITIES are outside
-the caveat since round 5: _cos_seq_udf reproduces the sequential left-fold
+the caveat since round 5: _cosine_scorer reproduces the sequential left-fold
 bit-exactly with np.add.accumulate, so the vectorized scorer carries no
 order error at all (and if a boundary hit ever surfaces elsewhere, quantize
 the INPUTS — fixed-point ints, the au1/im1 recipe — rather than slowing the
@@ -46,8 +47,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import ArrayType, LongType
 
+from ..operators.pairs import bucket_pairs, group_members
 from ..sources.tables import load_table
 from .registry import register
 
@@ -78,12 +80,12 @@ def _load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cosine(a, b):
     """Cosine as interpreted higher-order fns — the semantic REFERENCE the
-    vectorized scorers (`_cos_seq_udf`, `_score_members`) are pinned
-    bit-identical to in tests/test_ann_recall.py. Used directly by ml1,
+    vectorized scorer `_cosine_scorer` is pinned bit-identical to in
+    tests/test_ann_recall.py. Used directly by ml1,
     where the pair rows already exist (BNLJ output) and shipping 2×64
     floats per pair through Arrow costs more CPU than the ~16 µs/pair
     lambda interpreter saves (measured, `BENCH/raw_r5/ab_cpu.jsonl`); the
-    bucketed paths score BEFORE exploding instead (`_score_members`)."""
+    bucketed paths score BEFORE exploding instead (`_cosine_scorer`)."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0),
@@ -97,42 +99,6 @@ def _cosine(a, b):
     )
     return dot / (na * nb)
 
-
-@F.pandas_udf(DoubleType())
-def _cos_seq_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Cosine over two array<float> columns, BIT-IDENTICAL to `_cosine`'s
-    interpreted fold: `np.add.accumulate` along the dim axis reproduces the
-    left-fold partial-sum sequence exactly (0.0 + x₀ ≡ x₀, then strictly
-    sequential float64 adds — unlike np.dot/sum's pairwise/SIMD order), the
-    float→double casts and the dot/(na·nb) expression shape match term for
-    term. That exactness is what keeps the DuckDB oracle hash-matching
-    (DuckDB's list_cosine_similarity is the same sequential loop); asserted
-    on real data in tests/test_ann_recall.py. Batched Arrow replaces ~16 µs
-    of per-pair lambda interpretation with vectorized numpy: pair
-    generation at sf0.1 went 1.13 → 0.68 s measured."""
-    if len(a) == 0:
-        return pd.Series([], dtype="float64")
-    A = np.stack(a.to_numpy()).astype(np.float64)
-    B = np.stack(b.to_numpy()).astype(np.float64)
-    dot = np.add.accumulate(A * B, axis=1)[:, -1]
-    na = np.sqrt(np.add.accumulate(A * A, axis=1)[:, -1])
-    nb = np.sqrt(np.add.accumulate(B * B, axis=1)[:, -1])
-    return pd.Series(dot / (na * nb))
-
-
-# pair-slice width for the per-bucket triu scoring: bounds the transient
-# A/B/A·B float64 blocks at ~3 × 64k × 64 × 8 B ≈ 100 MB per python worker
-# even at the _MAX_BUCKET=1000 cap (~500k pairs), where the unchunked round-5
-# loop materialized ~1.25 GB per bucket (round-5 ADVICE). Slicing along the
-# pair axis cannot change any pair's value — each row's fold is independent.
-_PAIR_CHUNK = 1 << 16
-
-_PAIR_OUT_SCHEMA = "a_id long, b_id long, sim double"
-_EMPTY_PAIRS = {
-    "a_id": np.empty(0, dtype=np.int64),
-    "b_id": np.empty(0, dtype=np.int64),
-    "sim": np.empty(0, dtype=np.float64),
-}
 
 # Conservative margins for in-scorer candidate pruning. Downstream both
 # consumers compare ROUNDED sims (`F.round(sim, 6)` — half-up to the 1e-6
@@ -149,97 +115,81 @@ _PRUNE_GE_MARGIN = 1e-6
 
 
 def _topk_keep_mask(
-    m: int, i: np.ndarray, j: np.ndarray, s_clean: np.ndarray, k: int
+    i: np.ndarray, j: np.ndarray, s_clean: np.ndarray, k: int
 ) -> np.ndarray:
-    """Per-pair keep mask for bucket-local top-k pruning: drop (a, b) only
-    when BOTH members already have ≥ k same-bucket partners whose unrounded
-    sim exceeds the pair's by `_PRUNE_GT_MARGIN` — partners guaranteed to
+    """Per-pair keep mask for bucket-local top-k pruning over one chunk of
+    pairs (i, j index the chunk's members): drop (a, b) only when BOTH
+    members already have ≥ k partners in the chunk whose unrounded sim
+    exceeds the pair's by `_PRUNE_GT_MARGIN` — partners guaranteed to
     strictly precede it in the final `(round(sim,6) DESC, neighbor_id)`
-    window order. Such a pair can never reach either member's global top-k
-    (its bucket alone supplies k strictly-better candidates), so the window
-    output is unchanged. `s_clean` must be NaN-free (callers map NaN→−inf
-    and keep NaN pairs unconditionally: Spark orders NaN above every
-    number, so they may legitimately win)."""
-    pairs = len(i)
-    # the triu is complete, so every member has exactly m−1 directed entries
-    src = np.concatenate([i, j])
-    sv = np.concatenate([s_clean, s_clean])
-    order = np.argsort(src, kind="stable")
-    by_row = sv[order].reshape(m, m - 1)
-    row_sorted = np.sort(by_row, axis=1)
-    better = np.empty((m, m - 1), dtype=np.int64)
-    for q in range(m):
-        # partners with s strictly above this pair's sim + margin
-        better[q] = (m - 1) - np.searchsorted(
-            row_sorted[q], by_row[q] + _PRUNE_GT_MARGIN, side="right"
-        )
-    keep_dir = np.empty(2 * pairs, dtype=bool)
-    keep_dir[order] = (better < k).ravel()
-    return keep_dir[:pairs] | keep_dir[pairs:]
+    window order. Such a pair can never reach either member's global top-k,
+    so the window output is unchanged. A chunk holds whole buckets unless a
+    bucket alone outgrows it; on a cut bucket the count is a lower bound of
+    the whole bucket's, so the mask only keeps more. `s_clean` must be
+    NaN-free (callers map NaN→−inf and keep NaN pairs unconditionally:
+    Spark orders NaN above every number, so they may legitimately win)."""
+    n = len(i)
+    # directed entries (member, sim) and their thresholds sim + margin in one
+    # sort by (member, value), an entry before an equal threshold: the
+    # entries at or below a threshold count that member's partners ≤ it
+    src = np.concatenate([i, j, i, j])
+    val = np.concatenate([s_clean, s_clean, s_clean + _PRUNE_GT_MARGIN,
+                          s_clean + _PRUNE_GT_MARGIN])
+    is_thr = np.arange(4 * n) >= 2 * n
+    order = np.lexsort((is_thr, val, src))
+    entries_upto = np.cumsum(~is_thr[order])
+    deg = np.bincount(src[: 2 * n])
+    start = np.cumsum(deg) - deg
+    pos = np.flatnonzero(is_thr[order])
+    q = order[pos] - 2 * n
+    member = src[q]
+    better = deg[member] - (entries_upto[pos] - start[member])
+    keep_dir = np.empty(2 * n, dtype=bool)
+    keep_dir[q] = better < k
+    return keep_dir[:n] | keep_dir[n:]
 
 
-def _score_members(
-    ids: np.ndarray,
-    E: np.ndarray,
-    top_k: int | None = None,
-    min_sim: float | None = None,
-) -> pd.DataFrame:
-    """One LSH bucket's members (ids, float64 embedding matrix) → every
-    scored pair (a_id < b_id, unrounded sim) as a 3-column DataFrame.
-    Round-5 topology (each member crosses the Arrow boundary ONCE; scoring
-    pairs after the explode shipped every embedding once per pair — measured
-    +1.6 CPU-s on ml3, BENCH/raw_r5/ab_cpu.jsonl), with the round-6 fixes:
+def _cosine_scorer(top_k: int | None = None, min_sim: float | None = None):
+    """`bucket_pairs` scorer over (vec_id, embedding) members → every pair
+    (a_id < b_id, unrounded sim). Each member crosses the Arrow boundary
+    once and its norm fold runs once per chunk; the output is three numpy
+    columns, never per-pair Python objects.
 
-    - each member's norm fold runs once (indexed into the pair slices)
-      instead of once per pair — the same float64 values, so bit-exactness
-      is untouched;
-    - pair slices are `_PAIR_CHUNK`-bounded (memory, round-5 ADVICE);
-    - output is three numpy columns, never per-pair Python objects (the
-      round-5 array-of-struct return built ~3M dicts per sf1.0 run — the
-      dominant ml3 CPU term in the round-6 profile).
-
-    The cosine stays the fold-exact `np.add.accumulate` recipe, bit-identical
+    The cosine is the fold-exact `np.add.accumulate` recipe, bit-identical
     to `_cosine`'s interpreted left-fold (DuckDB parity by construction);
-    rounding stays JVM-side (`F.round` on the result), unchanged. Sorts by
-    vec_id itself so a_id < b_id holds regardless of input order.
+    rounding stays JVM-side (`F.round` on the result).
 
-    `top_k` / `min_sim` (round-6 tail pruning, guide §2.3 — shrink what the
-    shuffle carries, not what it means): every pair is still SCORED, but
-    pairs the unchanged downstream plan provably discards are dropped here
-    instead of riding the Arrow boundary, the dedup exchange, the mirror
-    explode and the top-k window. `top_k` keeps a pair unless both members
-    have ≥ k margin-strictly-better same-bucket partners (`_topk_keep_mask`);
-    `min_sim` drops pairs whose sim rounding cannot lift to the threshold.
-    Both are conservative (NaN pairs always kept; margins 2× the proof's
-    need); the JVM tail remains the semantic gate, so the query result is
-    identical pair-for-pair — pinned by the pruned-vs-unpruned plan-equality
-    tests."""
-    m = len(ids)
-    if m < 2:
-        return pd.DataFrame(_EMPTY_PAIRS)
-    order = np.argsort(ids, kind="stable")
-    ids, E = ids[order], E[order]
-    # per-member norms: identical float64 sequence to the per-pair fold
-    norms = np.sqrt(np.add.accumulate(E * E, axis=1)[:, -1])
-    i, j = np.triu_indices(m, 1)
-    sim = np.empty(len(i), dtype=np.float64)
-    for s in range(0, len(i), _PAIR_CHUNK):
-        sl = slice(s, s + _PAIR_CHUNK)
-        isl, jsl = i[sl], j[sl]
-        dot = np.add.accumulate(E[isl] * E[jsl], axis=1)[:, -1]
-        sim[sl] = dot / (norms[isl] * norms[jsl])
-    if top_k is not None or min_sim is not None:
-        nan_mask = np.isnan(sim)
-        keep = np.ones(len(i), dtype=bool)
-        if min_sim is not None:
-            keep &= sim >= min_sim - _PRUNE_GE_MARGIN
-        if top_k is not None and m - 1 > top_k:
-            # with ≤ top_k partners per member nothing is droppable
-            s_clean = np.where(nan_mask, -np.inf, sim)
-            keep &= _topk_keep_mask(m, i, j, s_clean, top_k)
-        keep |= nan_mask
-        i, j, sim = i[keep], j[keep], sim[keep]
-    return pd.DataFrame({"a_id": ids[i], "b_id": ids[j], "sim": sim})
+    `top_k` / `min_sim` (tail pruning — shrink what the shuffle carries,
+    not what it means): every pair is still SCORED, but pairs the unchanged
+    downstream plan provably discards are dropped here instead of riding
+    the Arrow boundary, the dedup exchange, the mirror explode and the
+    top-k window. `top_k` keeps a pair unless both members have ≥ k
+    margin-strictly-better partners (`_topk_keep_mask`); `min_sim` drops
+    pairs whose sim rounding cannot lift to the threshold. Both are
+    conservative (NaN pairs always kept; margins 2× the proof's need); the
+    JVM tail remains the semantic gate, so the query result is identical
+    pair-for-pair — pinned by the pruned-vs-unpruned plan-equality tests."""
+
+    def score(cols, i, j):
+        ids, emb = cols
+        E = emb.astype(np.float64)
+        # per-member norms: identical float64 sequence to the per-pair fold
+        norms = np.sqrt(np.add.accumulate(E * E, axis=1)[:, -1])
+        dot = np.add.accumulate(E[i] * E[j], axis=1)[:, -1]
+        sim = dot / (norms[i] * norms[j])
+        if top_k is not None or min_sim is not None:
+            nan_mask = np.isnan(sim)
+            keep = np.ones(len(sim), dtype=bool)
+            if min_sim is not None:
+                keep &= sim >= min_sim - _PRUNE_GE_MARGIN
+            if top_k is not None:
+                s_clean = np.where(nan_mask, -np.inf, sim)
+                keep &= _topk_keep_mask(i, j, s_clean, top_k)
+            keep |= nan_mask
+            i, j, sim = i[keep], j[keep], sim[keep]
+        return {"a_id": ids[i], "b_id": ids[j], "sim": sim}
+
+    return score
 
 
 @register(
@@ -260,7 +210,7 @@ def _score_members(
     """,
 )
 def ml1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Brute-force cosine top-{_TOP_K} for the first 50 query vectors:
+    """Brute-force cosine top-`_TOP_K` for the first 50 query vectors:
     zip_with dot product + aggregate norms (JVM-side, no UDF), ranked with a
     rounded similarity so cross-engine float ties break identically.
 
@@ -270,7 +220,7 @@ def ml1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     a CPU-second A/B measured at ~1.8× the total CPU of the interpreted
     JVM fold (`BENCH/raw_r5/ab_cpu.jsonl`). The bounded 50-row broadcast
     side keeps the interpreted cost small; the bucketed paths (ml3/dd6)
-    batch whole buckets instead — see `_score_members`.
+    batch whole buckets instead — see `_cosine_scorer`.
 
     Round 6: each side's norm fold is projected BELOW the join (once per
     row: 50 + n folds) instead of inside the per-pair expression (2·50·n
@@ -313,7 +263,7 @@ _POW2 = 2 ** np.arange(_N_PLANES, dtype=np.int64)
 
 @F.pandas_udf(ArrayType(LongType()))
 def _bucket_udf(emb: pd.Series) -> pd.Series:
-    """All {_N_BANDS} band buckets per vector in ONE Arrow batch: a single
+    """All `_N_BANDS` band buckets per vector in ONE Arrow batch: a single
     BLAS matmul of the batch against the 32 hyperplanes, sign bits packed
     per band. A UDF is deliberate here — the declarative alternatives both
     lose: higher-order array functions evaluate interpreted lambdas
@@ -368,7 +318,7 @@ ML2_ORACLE_SQL = f"""
 
 
 def ml2_ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hyperplane-sign LSH signature (band 0: {_N_PLANES} planes → bucket
+    """Hyperplane-sign LSH signature (band 0: `_N_PLANES` planes → bucket
     id): a single projection over the scan — zero shuffles, zero explode
     (round 2 spent 512 pre-agg rows and two shuffles per vector on this)."""
     e = _load_embeddings(spark, sf_dir)
@@ -396,7 +346,7 @@ _CAND_DUCK = f"""
 
 
 # bucket cap (scale guarantee, same role as dd2's df-cap / dd7's bucket
-# cap): a bucket of n vectors emits n(n-1)/2 in-row pairs, so a degenerate
+# cap): a bucket of n vectors emits n(n-1)/2 pairs, so a degenerate
 # bucket (all-zero embeddings, or too few planes for the corpus size) is
 # dropped rather than exploded — on BOTH engines. Inert at test scale
 # (buckets ≈ 8 at sf0.1); at 10^9 vectors you ALSO add planes per band so
@@ -426,8 +376,8 @@ _MAX_BUCKET = 1_000
 )
 def ml3_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The production ANN dish, oracle-checked end-to-end: bucket every
-    vector in {_N_BANDS} independent LSH bands, union+dedup within-bucket
-    candidates, then cosine-rank top-{_TOP_K} — the cross join never exists
+    vector in `_N_BANDS` independent LSH bands, union+dedup within-bucket
+    candidates, then cosine-rank top-`_TOP_K` — the cross join never exists
     (pair space is Σ_bands Σ_buckets n_b², linear for balanced buckets) and
     multi-banding recovers neighbors a single band's hyperplanes split."""
     return ann_lsh_topk(spark, sf_dir)
@@ -442,48 +392,21 @@ def _bucket_pairs(
 ) -> DataFrame:
     """(vec_id, embedding) → unordered candidate pairs (a_id < b_id, sim)
     from multi-band LSH buckets, posting-list style: ONE shuffle groups each
-    (band, bucket)'s members, then the whole bucket batches through
-    `_score_members` — each member crosses the Arrow boundary ONCE and every
-    pair's fold-exact cosine comes back as three scalars (no per-pair
-    embedding duplication in-stage, no self-join, no distinct-shuffle, no
-    embedding re-join). Round 6: the grouping is `applyInPandas` instead of
-    collect_list(struct) + a pandas UDF over the array — the members arrive
-    as plain Arrow columns (no per-member struct dicts on the Python side,
-    no ObjectHashAggregate building 80k member structs on the JVM side) and
-    the pairs leave as plain columns (no arrays_zip/explode). The
-    `max_bucket` cap moves inside the group function: a group larger than
-    the cap returns no pairs — exactly what the pre-filter produced.
-    Rounding stays JVM-side so the DuckDB comparison semantics are
-    unchanged. Pairs found by several bands are deduped by the caller's
-    groupBy."""
+    (band, bucket)'s members (buckets over `max_bucket` dropped), then
+    `bucket_pairs` scores them through `_cosine_scorer` — no self-join, no
+    distinct-shuffle, no embedding re-join. Rounding stays JVM-side so the
+    DuckDB comparison semantics are unchanged. Pairs found by several bands
+    are deduped by the caller's groupBy."""
     exploded = e.select(
         "vec_id",
         "embedding",
         F.posexplode(F.slice(_bucket_udf("embedding"), 1, n_bands)),
     ).withColumnsRenamed({"pos": "band", "col": "bucket"})
-
-    def score(tbl):
-        import pyarrow as pa
-
-        m = tbl.num_rows
-        if m < 2 or (max_bucket is not None and m > max_bucket):
-            return pa.table(_EMPTY_PAIRS)
-        ids = tbl.column("vec_id").to_numpy()
-        # list<float> → one contiguous values buffer: reshape instead of
-        # building m per-row object arrays (flatten() honors offsets)
-        emb = tbl.column("embedding").combine_chunks()
-        E = emb.flatten().to_numpy().astype(np.float64).reshape(m, -1)
-        out = _score_members(ids, E, top_k=top_k, min_sim=min_sim)
-        return pa.table(
-            {
-                "a_id": out["a_id"].to_numpy(),
-                "b_id": out["b_id"].to_numpy(),
-                "sim": out["sim"].to_numpy(),
-            }
-        )
-
-    pairs = exploded.groupBy("band", "bucket").applyInArrow(
-        score, schema=_PAIR_OUT_SCHEMA
+    grouped = group_members(
+        exploded, ["band", "bucket"], ["vec_id", "embedding"], max_bucket
+    )
+    pairs = bucket_pairs(
+        grouped, _cosine_scorer(top_k, min_sim), "a_id long, b_id long, sim double"
     )
     return pairs.select(
         "a_id", "b_id", F.round(F.col("sim"), 6).alias("sim")
@@ -663,7 +586,7 @@ def _ivf_sample(
 def ivf_train(e: DataFrame, n_cells: int = _IVF_CELLS,
               iters: int = _IVF_ITERS, sample_mod: int | None = None) -> np.ndarray:
     """Train the coarse quantizer on a deterministically-sampled,
-    absolute-size-bounded subset of ``e`` (≤ n_cells·{_IVF_TRAIN_PER_CELL}
+    absolute-size-bounded subset of ``e`` (≤ n_cells·`_IVF_TRAIN_PER_CELL`
     vectors regardless of corpus size). ``sample_mod=None`` derives the
     modulus from a cheap count; pass an explicit modulus to pin the sample
     (tests)."""

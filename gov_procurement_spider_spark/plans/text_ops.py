@@ -23,6 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from ..operators.pairs import bucket_pairs, group_members
 from ..sources.tables import load_table
 from .registry import register
 
@@ -237,16 +238,13 @@ def _shingles_spark(d: DataFrame) -> DataFrame:
 # O(distinct shingles · τ²) — linear in corpus size for fixed τ.
 _DD2_MAX_DF = 50
 
-# all ordered pairs (docs[i], docs[j]) with i < j from a sorted `docs` array,
-# generated in-row — shared by the dd2 posting-list and dd4 band-bucket
-# candidate generation. Parser-side string for build latency: the identical
-# nested-transform tree the Column API built cost ~30 py4j round trips per
-# fresh build; named_struct is what struct(x.alias(...)) resolved to.
-_PAIRS_SQL = (
-    "flatten(transform(docs, (x, i) ->"
-    " transform(slice(docs, i + 2, size(docs)),"
-    " y -> named_struct('doc_a', x, 'doc_b', y))))"
-)
+_DOC_PAIRS_SCHEMA = "doc_a long, doc_b long"
+
+
+def _doc_pairs(cols, i, j):
+    """`bucket_pairs` scorer for the id-only candidate queries (dd2, dd4)."""
+    (ids,) = cols
+    return {"doc_a": ids[i], "doc_b": ids[j]}
 
 
 def ngram_jaccard_pairs(
@@ -255,31 +253,17 @@ def ngram_jaccard_pairs(
     """Inverted-index near-dup pairs from a (doc_id, shingle) table, the
     canonical one-pass posting-list formulation: ONE shuffle groups each
     shingle's (sorted) doc list, the df-cap is a free filter on list size,
-    and candidate pairs come from in-memory array combinations of each
-    ≤τ-element posting list — no self-join, no second pass over the shingle
-    table. Sizes come from the capped lists too, so the metric stays a true
-    Jaccard of the restricted shingle sets."""
-    grouped = sh.groupBy("shingle").agg(
-        F.sort_array(F.collect_list("doc_id")).alias("docs")
-    )
-    if max_df is not None:
-        grouped = grouped.filter(F.size("docs") <= max_df)
+    and candidate pairs come from `bucket_pairs` over each ≤τ-element
+    posting list — no self-join, no second pass over the shingle table.
+    Sizes come from the same capped lists (singletons included), so the
+    metric stays a true Jaccard of the restricted shingle sets."""
+    grouped = group_members(sh, ["shingle"], ["doc_id"], max_df)
     sizes = (
-        grouped.select(F.explode("docs").alias("doc_id"))
+        grouped.select(F.explode("members").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("sz"))
     )
-    # all ordered pairs (docs[i], docs[j]) with i < j from each posting list:
-    # ≤ τ(τ-1)/2 structs per shingle, generated inside the row. Singleton
-    # posting lists (the overwhelming majority of distinct shingles) can't
-    # produce a pair — filter them BEFORE the interpreted combination
-    # lambdas rather than evaluating transform/flatten to an empty array
-    # per list (round 6; sizes below still counts every capped list).
-    pairs = (
-        grouped.filter(F.size("docs") >= 2)
-        .select(F.expr(f"explode({_PAIRS_SQL})").alias("p"))
-        .select("p.doc_a", "p.doc_b")
-    )
+    pairs = bucket_pairs(grouped, _doc_pairs, _DOC_PAIRS_SCHEMA)
     inter = pairs.groupBy("doc_a", "doc_b").agg(
         F.count(F.lit(1)).alias("n_common")
     )
@@ -319,7 +303,7 @@ def ngram_jaccard_pairs(
 def dd2_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup detection: 3-gram shingle Jaccard ≥ 0.3. The pair space is
     generated ONLY through the shared-shingle join (inverted index), never a
-    cross join, and shingles with document frequency > {_DD2_MAX_DF} are
+    cross join, and shingles with document frequency > `_DD2_MAX_DF` are
     dropped first — so at 100 TB the shuffle is O(total shingles) and the
     pair fan-out per shingle is bounded at τ(τ-1)/2 regardless of how common
     a boilerplate phrase is."""
@@ -409,12 +393,13 @@ def dd4_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     of each band's two minima, byte-identical md5 input to the old
     sort+transform over collected (seed, minhash) structs — and candidate
     pairs come from posting lists per (band, band_key), dd2-style: one
-    shuffle groups each bucket's doc list, pairs are in-row combinations
-    (doc_a < doc_b by the sorted list), cross-band duplicates drop in the
-    final distinct. One pass over the documents instead of two, two
-    ObjectHashAggregates and the broadcast build removed. Pair fan-out per
-    bucket is n·(n-1)/2 exactly as the old join's — the bucket IS the
-    candidate set either way."""
+    shuffle groups each bucket's doc list, `bucket_pairs` emits its
+    combinations (doc_a < doc_b by the sorted list), cross-band duplicates
+    drop in the final distinct. One pass over the documents instead of two,
+    two ObjectHashAggregates and the broadcast build removed. Pair fan-out
+    per bucket is n·(n-1)/2 exactly as the old join's — the bucket IS the
+    candidate set either way. There is no bucket cap: a hot bucket (many
+    identical documents) streams out in `_PAIR_CHUNK`-bounded batches."""
     wide = _minhash_wide(load_table(spark, sf_dir, "documents"))
     n_bands = _N_MINHASH // 2
     keyed = wide.selectExpr(
@@ -430,16 +415,8 @@ def dd4_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         args=", ".join(f"CAST({b} AS BIGINT), _k{b}" for b in range(n_bands)),
     )
     bands = keyed.select("doc_id", F.expr(stack_expr))
-    grouped = (
-        bands.groupBy("band", "band_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("docs"))
-        .filter(F.size("docs") >= 2)
-    )
-    return (
-        grouped.select(F.expr(f"explode({_PAIRS_SQL})").alias("p"))
-        .select("p.doc_a", "p.doc_b")
-        .distinct()
-    )
+    grouped = group_members(bands, ["band", "band_key"], ["doc_id"])
+    return bucket_pairs(grouped, _doc_pairs, _DOC_PAIRS_SCHEMA).distinct()
 
 
 _N_SIMHASH_BITS = 32
@@ -564,14 +541,9 @@ def simhash_pairs(
     pipeline per join side); a final groupBy dedups pairs found by several
     blocks. Two shuffles total.
 
-    Round 6: the bucket pair generation batches through applyInArrow
-    (ml3's `_score_members` pattern) instead of in-row nested transform
-    lambdas — at sf1.0 the buckets average ~195 members (≈19k pairs each),
-    so the interpreted path built ~13M structs per run; here each bucket is
-    one triu + SWAR-popcount numpy pass, bit-identical (integer xor/
-    popcount, doc_a < doc_b by the same doc_id sort, the ≤max_hamming
-    filter and >cap drop applied inside the group fn — the same rows the
-    explode+filter produced)."""
+    Pairs come from `bucket_pairs`: a vectorized SWAR popcount of each
+    chunk of candidate pairs, integer-exact, doc_a < doc_b by the sorted
+    member lists; buckets over `max_bucket` are dropped before pairing."""
     import numpy as np
 
     stack_args = ", ".join(
@@ -583,36 +555,21 @@ def simhash_pairs(
         F.expr(f"stack({_DD7_BLOCKS}, {stack_args}) as (block, block_val)"),
     )
 
-    def pairs(tbl):
-        import pyarrow as pa
-
-        m = tbl.num_rows
-        if m < 2 or (max_bucket is not None and m > max_bucket):
-            return pa.table(
-                {
-                    "doc_a": np.empty(0, dtype=np.int64),
-                    "doc_b": np.empty(0, dtype=np.int64),
-                    "hamming": np.empty(0, dtype=np.int32),
-                }
-            )
-        ids = tbl.column("doc_id").to_numpy()
-        sigs = tbl.column("simhash").to_numpy()
-        order = np.argsort(ids, kind="stable")
-        ids, sigs = ids[order], sigs[order]
-        i, j = np.triu_indices(m, 1)
+    def near(cols, i, j):
+        ids, sigs = cols
         ham = _popcount64(np.bitwise_xor(sigs[i], sigs[j]))
         keep = ham <= max_hamming
-        return pa.table(
-            {
-                "doc_a": ids[i][keep],
-                "doc_b": ids[j][keep],
-                "hamming": ham[keep].astype(np.int32),
-            }
-        )
+        return {
+            "doc_a": ids[i][keep],
+            "doc_b": ids[j][keep],
+            "hamming": ham[keep].astype(np.int32),
+        }
 
+    grouped = group_members(
+        blocks, ["block", "block_val"], ["doc_id", "simhash"], max_bucket
+    )
     return (
-        blocks.groupBy("block", "block_val")
-        .applyInArrow(pairs, schema="doc_a long, doc_b long, hamming int")
+        bucket_pairs(grouped, near, "doc_a long, doc_b long, hamming int")
         .groupBy("doc_a", "doc_b")
         .agg(F.min("hamming").alias("hamming"))
     )
@@ -648,7 +605,7 @@ def simhash_pairs(
 )
 def dd7_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pair generation (completes the family the way dd4
-    completes MinHash — VERDICT r2 item 3): bit-block LSH buckets, in-row
+    completes MinHash — VERDICT r2 item 3): bit-block LSH buckets,
     posting-list pair combinations, exact hamming verification. Candidate
     generation is linear in docs; pair fan-out per bucket is bounded."""
     return simhash_pairs(

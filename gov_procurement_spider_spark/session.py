@@ -59,5 +59,8 @@ def get_spark(
         for k, v in extra_conf.items():
             builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    # operators/splitter.py `_sql_str` writes SQL string literals for the
+    # default escaping; `extra_conf` must not turn it off
+    spark.conf.set("spark.sql.parser.escapedStringLiterals", "false")
     spark.sparkContext.setLogLevel("WARN")
     return spark

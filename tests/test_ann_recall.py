@@ -158,13 +158,14 @@ def test_simhash_cap_inert_below_tau(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_cos_seq_udf_bit_identical_to_declarative_fold(spark):
-    """_cos_seq_udf (Arrow-batched np.add.accumulate) must reproduce the
-    interpreted F.aggregate left-fold BIT-exactly — same unrounded float64
-    for every pair, not merely close: the DuckDB oracle's hash compare
-    tolerates zero ULP of drift at the 6dp rounding boundary. Checked on
-    the planted-near-dup corpus (450 vectors, all consecutive pairs)."""
-    from gov_procurement_spider_spark.plans.ml_ops import _cos_seq_udf, _cosine
+def test_cosine_scorer_unrounded_bit_identical_to_declarative_fold(spark):
+    """`_cosine_scorer` (np.add.accumulate over the member matrix) must
+    reproduce the interpreted F.aggregate left-fold BIT-exactly — same
+    unrounded float64 for every pair, not merely close: the DuckDB oracle's
+    hash compare tolerates zero ULP of drift at the 6dp rounding boundary.
+    Checked on the planted-near-dup corpus (450 vectors, all consecutive
+    pairs)."""
+    from gov_procurement_spider_spark.plans.ml_ops import _cosine, _cosine_scorer
 
     e = _corpus(spark)
     w = e.withColumn(
@@ -173,23 +174,28 @@ def test_cos_seq_udf_bit_identical_to_declarative_fold(spark):
             .orderBy("vec_id")
         ),
     ).filter(F.col("nxt").isNotNull())
-    both = w.select(
-        "vec_id",
-        _cosine(F.col("embedding"), F.col("nxt")).alias("hof"),
-        _cos_seq_udf(F.col("embedding"), F.col("nxt")).alias("np"),
-    ).collect()
-    assert len(both) == N_BASE + N_PLANTED - 1
-    for r in both:
-        assert r["hof"] == r["np"], (r["vec_id"], r["hof"].hex(), r["np"].hex())
+    hof = {
+        r["vec_id"]: r["hof"]
+        for r in w.select(
+            "vec_id", _cosine(F.col("embedding"), F.col("nxt")).alias("hof")
+        ).collect()
+    }
+    rows = e.orderBy("vec_id").collect()
+    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
+    E = np.array([r["embedding"] for r in rows], dtype=np.float32)
+    i = np.arange(len(ids) - 1)
+    out = _cosine_scorer()([ids, E], i, i + 1)
+    assert len(hof) == len(out["sim"]) == N_BASE + N_PLANTED - 1
+    for a, sim in zip(out["a_id"], out["sim"]):
+        assert hof[a] == sim, (a, hof[a].hex(), sim.hex())
 
 
 def test_pair_scores_udf_bit_identical_to_declarative_fold(spark):
-    """The bucket-level Arrow scorer (`_score_members` via applyInPandas,
-    round 6) must reproduce the interpreted F.aggregate left-fold
-    BIT-exactly for every pair it emits, and enumerate exactly the
-    a_id < b_id combinations — same contract _cos_seq_udf carries, checked
-    through the real _bucket_pairs plan so the groupBy→Arrow round trip is
-    what's tested."""
+    """The bucket-level Arrow scorer (`_cosine_scorer` via `bucket_pairs`)
+    must reproduce the interpreted F.aggregate left-fold BIT-exactly for
+    every pair it emits, and enumerate exactly the a_id < b_id combinations
+    — checked through the real _bucket_pairs plan so the groupBy→Arrow
+    round trip is what's tested."""
     from itertools import combinations
 
     from gov_procurement_spider_spark.plans.ml_ops import _bucket_pairs, _cosine
@@ -229,52 +235,98 @@ def test_pair_scores_udf_bit_identical_to_declarative_fold(spark):
     assert all(a != b for a, b in got)
 
 
-def test_pair_scores_udf_edges_direct():
-    """Direct (no-Spark) unit of the bucket scorer's edge cases: singleton
-    buckets (no pairs) and members arriving UNSORTED — `_score_members`
-    must sort by vec_id itself so a_id < b_id holds regardless of the
-    shuffle's group-row order."""
-    import numpy as np
+def _members_batch(buckets):
+    """One `group_members`-shaped Arrow batch: a list of (vec_id, embedding)
+    member structs per bucket, in the given order."""
+    import pyarrow as pa
 
-    from gov_procurement_spider_spark.plans.ml_ops import _score_members
+    t = pa.list_(
+        pa.struct([("vec_id", pa.int64()), ("embedding", pa.list_(pa.float32()))])
+    )
+    rows = [
+        [{"vec_id": int(v), "embedding": [float(x) for x in e]} for v, e in b]
+        for b in buckets
+    ]
+    return pa.RecordBatch.from_arrays([pa.array(rows, type=t)], ["members"])
 
-    e1 = np.ones(4, dtype=np.float64)
-    e2 = np.array([1, 0, 0, 0], dtype=np.float64)
-    e3 = np.array([0, 1, 0, 0], dtype=np.float64)
-    # singleton bucket → no pairs
-    out = _score_members(np.array([7]), np.stack([e1]))
-    assert list(out.columns) == ["a_id", "b_id", "sim"] and len(out) == 0
-    # unsorted 3-bucket → 3 sorted pairs
-    out = _score_members(np.array([9, 2, 5]), np.stack([e3, e1, e2]))
-    pairs = list(zip(out["a_id"].tolist(), out["b_id"].tolist()))
-    assert pairs == [(2, 5), (2, 9), (5, 9)]
-    sims = dict(zip(pairs, out["sim"].tolist()))
+
+def _scored(batches):
+    return [
+        (a, b, s)
+        for rb in batches
+        for a, b, s in zip(*(rb.column(c).to_pylist() for c in range(3)))
+    ]
+
+
+def test_pair_scores_udf_edges_direct(spark):
+    """Edge cases of the bucket scorer, driven straight through the pair
+    generator: a singleton bucket yields no pairs, and members arriving
+    UNSORTED leave `group_members` sorted by vec_id, so a_id < b_id holds
+    regardless of the shuffle's row order."""
+    from gov_procurement_spider_spark.operators.pairs import (
+        _PAIR_CHUNK,
+        _pair_batches,
+        group_members,
+    )
+    from gov_procurement_spider_spark.plans.ml_ops import _cosine_scorer
+
+    e1, e2, e3 = [1.0] * 4, [1.0, 0.0, 0.0, 0.0], [0.0, 1.0, 0.0, 0.0]
+    rows = [(0, 7, e1), (1, 9, e3), (1, 2, e1), (1, 5, e2)]
+    df = spark.createDataFrame(
+        rows, "bucket long, vec_id long, embedding array<float>"
+    ).repartition(3)
+    grouped = (
+        group_members(df, ["bucket"], ["vec_id", "embedding"])
+        .orderBy("bucket")
+        .toArrow()
+    )
+    singleton, trio = grouped.select(["members"]).to_batches(max_chunksize=1)
+    assert list(_pair_batches([singleton], _cosine_scorer(), _PAIR_CHUNK)) == []
+    out = _scored(_pair_batches([trio], _cosine_scorer(), _PAIR_CHUNK))
+    assert [(a, b) for a, b, _ in out] == [(2, 5), (2, 9), (5, 9)]
+    sims = {(a, b): s for a, b, s in out}
     assert abs(sims[(2, 5)] - 0.5) < 1e-12  # cos(ones, e1-axis) = 1/2
     assert sims[(5, 9)] == 0.0  # orthogonal axes
 
 
-def test_pair_scores_chunking_is_value_identical():
-    """The _PAIR_CHUNK pair-slice bound (memory, round-5 ADVICE) must not
-    change any pair's value: slicing along the pair axis leaves each row's
-    fold untouched. Score a bucket with the production chunk width and with
-    a width that forces several slices; bit-compare."""
-    import numpy as np
-
-    from gov_procurement_spider_spark.plans import ml_ops
+def test_pair_scores_chunking_is_value_identical(spark):
+    """The `_PAIR_CHUNK` pair bound must not change any pair's value: each
+    pair's fold is independent of the chunk it lands in. Score a bucket
+    with the production chunk width and with a width that cuts it into
+    several chunks; the two agree bit for bit, and with `_cosine`."""
+    from gov_procurement_spider_spark.operators.pairs import (
+        _PAIR_CHUNK,
+        _pair_batches,
+    )
+    from gov_procurement_spider_spark.plans.ml_ops import _cosine, _cosine_scorer
 
     rng = np.random.default_rng(7)
-    ids = np.arange(9, dtype=np.int64)  # 36 pairs
-    E = rng.normal(size=(9, 8)).astype(np.float32).astype(np.float64)
-    full = ml_ops._score_members(ids.copy(), E.copy())
-    orig = ml_ops._PAIR_CHUNK
-    try:
-        ml_ops._PAIR_CHUNK = 5  # 36 pairs → 8 slices
-        chunked = ml_ops._score_members(ids.copy(), E.copy())
-    finally:
-        ml_ops._PAIR_CHUNK = orig
-    assert full["a_id"].tolist() == chunked["a_id"].tolist()
-    assert full["b_id"].tolist() == chunked["b_id"].tolist()
-    assert [s.hex() for s in full["sim"]] == [s.hex() for s in chunked["sim"]]
+    E = rng.normal(size=(9, 8)).astype(np.float32)  # 36 pairs
+    batch = _members_batch([list(enumerate(E))])
+    full = _scored(_pair_batches([batch], _cosine_scorer(), _PAIR_CHUNK))
+    chunked = list(_pair_batches([batch], _cosine_scorer(), 5))
+    assert len(chunked) == 8 and max(rb.num_rows for rb in chunked) == 5
+    chunked = _scored(chunked)
+    assert [(a, b) for a, b, _ in full] == [(a, b) for a, b, _ in chunked]
+    assert [s.hex() for *_, s in full] == [s.hex() for *_, s in chunked]
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in e]) for i, e in enumerate(E)],
+        "vec_id long, embedding array<float>",
+    )
+    a, b = df.alias("a"), df.alias("b")
+    ref = {
+        (r[0], r[1]): r[2]
+        for r in a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            "a.vec_id",
+            "b.vec_id",
+            _cosine(F.col("a.embedding"), F.col("b.embedding")),
+        )
+        .collect()
+    }
+    assert {(a, b): s.hex() for a, b, s in full} == {
+        k: v.hex() for k, v in ref.items()
+    }
 
 
 def _tie_corpus(spark):
@@ -304,7 +356,7 @@ def _rows_key(rows):
 def test_topk_prune_plan_identical_to_unpruned(spark, tmp_path):
     """ml3's in-scorer top-k pruning (round 6 late) must be invisible in the
     query result: the pruned and unpruned plans, run end-to-end through the
-    real groupBy→applyInArrow→dedup→mirror→window pipeline, return the
+    real group→mapInArrow→dedup→mirror→window pipeline, return the
     identical row set (ids and bit-identical sims) — on the planted-dup
     corpus AND with the adversarial tie cluster."""
     from gov_procurement_spider_spark.plans import ml_ops
@@ -350,7 +402,7 @@ def test_topk_keep_mask_brute_force():
         sim[: len(i) // 3] = np.round(sim[: len(i) // 3], 6) + rng.uniform(
             -2e-6, 2e-6, size=len(i) // 3
         )
-        keep = ml_ops._topk_keep_mask(m, i, j, sim, k)
+        keep = ml_ops._topk_keep_mask(i, j, sim, k)
         S = np.full((m, m), -np.inf)
         S[i, j] = sim
         S[j, i] = sim

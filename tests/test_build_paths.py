@@ -76,3 +76,25 @@ def test_split_clean_sql_matches_column_api(spark):
         ).collect()
         for row in got:
             assert row.old == row.new, (d, row)
+
+
+def test_get_spark_pins_default_string_escaping(spark):
+    """`_sql_str` writes literals for the default parser escaping, so
+    `get_spark` must keep it even when `extra_conf` asks otherwise; the
+    `\\n` and `|` delimiters are the ones the other escaping would change."""
+    from gov_procurement_spider_spark.session import get_spark
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    s = get_spark(
+        app_name="tests", master="local[8]", shuffle_partitions=8,
+        extra_conf={key: "true"},
+    )
+    assert s.conf.get(key) == "false"
+    df = s.createDataFrame([(c,) for c in _SPLIT_CASES], ["v"])
+    for d in ("\n", "|"):
+        got = df.select(
+            _split_clean(F.col("v"), d).alias("old"),
+            F.expr(_split_clean_sql("v", d)).alias("new"),
+        ).collect()
+        for row in got:
+            assert row.old == row.new, (d, row)
