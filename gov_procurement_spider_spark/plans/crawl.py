@@ -6,7 +6,8 @@ in-flight request, fresh Chrome per URL, no persistence) with per-epoch
 DataFrame dataflow, one path for every epoch:
 
   plan    host_counts ⟗ politeness ─ _host_plan ─► per-host taken, refill
-  select  frontier ─ top-taken per host (O2, salted) ─► selected / remaining
+  select  frontier ─ top-taken per host (O2; salted above the cap) ─►
+          selected / remaining
   fetch   selected ─ mapInArrow fetch (S3) ─► payloads + candidate links
           (route filter P5 and robots T3 applied where links are generated)
   admit   links ─ keep-first (min per url) ─ seen-filter prefilter + exact
@@ -20,10 +21,12 @@ parquet file) when its size — known before it is built — is under the local
 caps, otherwise by Spark jobs. The host-sized state (plan scalars,
 per-host taken, token refill, host_counts carry) has one implementation,
 the pyarrow pair `_host_plan` / `_host_carry`, called directly on the
-driver or through mapInArrow over the host-keyed join. Keep-first and the
-exact seen anti-join are the one pair kept in two forms: Spark for big link
-batches, pyarrow for small ones (tests/test_crawl_dual_path.py pins both
-materialisations to the same committed rows and filters).
+driver or through mapInArrow over the host-keyed join. Two steps are kept
+in two forms, Spark for big inputs and pyarrow/numpy for small ones: the
+budget-bound selection (salted windows / a host-run rank over the sorted
+frontier) and admission's keep-first plus exact seen anti-join
+(tests/test_crawl_dual_path.py pins both materialisations to the same
+committed rows and filters).
 
 The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
 filter (crawler/cuckoo.py) when per-key deletion is needed: expire_seen
@@ -722,32 +725,36 @@ def _select(
     spark: SparkSession, ckpt: str, epoch: int, frontier: DataFrame,
     hosts: _Hosts, cached: list,
 ):
-    """(selected, remaining, crawl_log): the rows to fetch (a DataFrame, or
-    None in a tick epoch), the rows carried to the next frontier, and the
-    crawl_log to commit (None when it is the frontier snapshot itself).
+    """(selected, remaining, crawl_log): the rows to fetch (None in a tick
+    epoch), the rows carried to the next frontier, and the crawl_log to
+    commit (None when it is the frontier snapshot itself); pyarrow tables
+    where the driver built them, DataFrames where Spark does.
 
     When every host's pending set fits its budget the whole frontier is
     selected (the steady-state fast path and the drain phase of every
     crawl: no sort at all). Otherwise each host takes its `n_taken` first
-    rows by SELECT_ORDER, skew-safe (Zipf host distributions are the norm —
-    site_model.py:55): a plain PARTITION BY host window sorts one dominant
-    host's ENTIRE pending set (10^9 rows at 10^10-URL scale) in a single
-    task, because the budget bounds the window's output, not its input.
-    Stage 1 salts each host's rows into N_SALT_PARTS sub-windows and keeps
-    only the per-salt top-n_taken — sound because any row in the global
-    top-n_taken has < n_taken rows ahead of it overall, hence < n_taken
-    ahead within its own salt. Stage 2 ranks the ≤ salts·n_taken survivors
-    exactly. Rows dropped in stage 1 are provably unselected, so the
-    result is bit-identical to the unsalted window (test_crawl_skew.py
-    proves it against refsim under 90% skew)."""
+    rows by SELECT_ORDER — on the driver for a frontier under the local
+    cap (`_select_local`), else by two salted Spark windows, skew-safe
+    (Zipf host distributions are the norm — site_model.py:55): a plain
+    PARTITION BY host window sorts one dominant host's ENTIRE pending set
+    (10^9 rows at 10^10-URL scale) in a single task, because the budget
+    bounds the window's output, not its input. Stage 1 salts each host's
+    rows into N_SALT_PARTS sub-windows and keeps only the per-salt
+    top-n_taken — sound because any row in the global top-n_taken has
+    < n_taken rows ahead of it overall, hence < n_taken ahead within its
+    own salt. Stage 2 ranks the ≤ salts·n_taken survivors exactly. Rows
+    dropped in stage 1 are provably unselected, so the result is
+    bit-identical to the unsalted window (test_crawl_skew.py proves both
+    forms against refsim under 90% skew)."""
     if hosts.n_selected == hosts.n_frontier:
         return frontier, _FRONTIER_PA.empty_table(), None
+    local = hosts.n_frontier <= _DRIVER_COMMIT_MAX_ROWS
     if hosts.n_selected == 0:  # tick: the frontier carries over unchanged
-        if hosts.n_frontier <= _DRIVER_COMMIT_MAX_ROWS:
-            return None, ck.read_table_local(
-                ckpt, epoch, "frontier", FRONTIER_COLS, _DRIVER_COMMIT_MAX_ROWS
-            ).cast(_FRONTIER_PA), None
+        if local:
+            return None, _read_frontier_local(ckpt, epoch), None
         return None, frontier, None
+    if local:
+        return _select_local(ckpt, epoch, hosts)
     taken = _to_df(spark, _cols(hosts.plan, ["host", "n_taken"]))
     wpre = W.partitionBy("host", "_salt").orderBy(*SELECT_ORDER)
     pre = (
@@ -775,19 +782,49 @@ def _select(
     )
     cached.append(marked)
     selected = marked.filter(F.col("_sel")).select(*FRONTIER_COLS)
-    if hosts.n_frontier > _DRIVER_COMMIT_MAX_ROWS:
-        return (
-            selected,
-            marked.filter(~F.col("_sel")).select(*FRONTIER_COLS),
-            selected.withColumn("epoch", F.lit(epoch)),
-        )
-    # one collect fills the cache the fetch reads and yields both tables
-    rows = marked.toArrow()
-    sel = rows.column("_sel")
-    log = rows.filter(sel).select(FRONTIER_COLS).cast(_FRONTIER_PA)
     return (
         selected,
-        rows.filter(pc.invert(sel)).select(FRONTIER_COLS).cast(_FRONTIER_PA),
+        marked.filter(~F.col("_sel")).select(*FRONTIER_COLS),
+        selected.withColumn("epoch", F.lit(epoch)),
+    )
+
+
+def _read_frontier_local(ckpt: str, epoch: int) -> pa.Table:
+    return ck.read_table_local(
+        ckpt, epoch, "frontier", FRONTIER_COLS, _DRIVER_COMMIT_MAX_ROWS
+    ).cast(_FRONTIER_PA)
+
+
+_TAKEN_PA = pa.schema([("host", pa.string()), ("n_taken", pa.int64())])
+
+
+def _select_local(ckpt: str, epoch: int, hosts: _Hosts):
+    """The budget-bound selection on the driver: the frontier left-joined
+    to the plan's (host, n_taken) and sorted by (host, SELECT_ORDER), each
+    row ranked within its host run; rank < n_taken is selected. The same
+    rows as the salted windows, with no Spark job — unless the plan is a
+    DataFrame (the first epoch after reseed or expire_seen, which carry no
+    host_counts): then one collect of its hosts with budget, at most
+    n_frontier rows."""
+    taken = _cols(hosts.plan, ["host", "n_taken"])
+    if isinstance(taken, DataFrame):
+        taken = taken.filter(F.col("n_taken") > 0).toArrow()
+    rows = (
+        _read_frontier_local(ckpt, epoch)
+        .join(taken.cast(_TAKEN_PA), "host", join_type="left outer")
+        .sort_by([(c, "ascending") for c in ["host", *SELECT_ORDER]])
+    )
+    host = rows.column("host").to_numpy(zero_copy_only=False)
+    i = np.arange(len(host))
+    start = np.ones(len(host), dtype=bool)
+    start[1:] = host[1:] != host[:-1]
+    rank = i - np.maximum.accumulate(np.where(start, i, 0))
+    sel = pa.array(rank < pc.fill_null(rows.column("n_taken"), 0).to_numpy())
+    rows = rows.select(FRONTIER_COLS)
+    log = rows.filter(sel)
+    return (
+        log,
+        rows.filter(pc.invert(sel)),
         log.append_column("epoch", pa.array(np.full(log.num_rows, epoch, np.int32))),
     )
 
@@ -1077,7 +1114,9 @@ def run_epoch(
         phases.mark("select")
         admitted = None
         if selected is not None:
-            n_links = _fetch(spark, spec, ckpt, epoch, selected, hosts.n_selected)
+            n_links = _fetch(
+                spark, spec, ckpt, epoch, _to_df(spark, selected), hosts.n_selected
+            )
             phases.mark("fetch")
             if n_links:
                 admitted = _admit(spark, ckpt, epoch, n_links, cached)

@@ -17,8 +17,11 @@ import shutil
 import tempfile
 
 import numpy as np
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from gov_procurement_spider_spark.crawler.cuckoo import CuckooFilter
 from gov_procurement_spider_spark.plans import crawl as C
@@ -161,3 +164,112 @@ def test_driver_and_spark_commits_identical(spark, monkeypatch, drive, spec):
     assert _differences(local, spark_only) == []
     for ckpt in (local, spark_only):
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def _frontier_df(spark, ckpt, epoch):
+    return spark.read.schema(from_arrow_schema(C._FRONTIER_PA)).parquet(
+        ck.table_path(ckpt, epoch, "frontier")
+    )
+
+
+def _rows(t):
+    """(column names, sorted rows) of a pyarrow table or a DataFrame."""
+    if isinstance(t, DataFrame):
+        t = t.toArrow()
+    return t.column_names, sorted(zip(*(c.to_pylist() for c in t.columns)))
+
+
+def _frontier_row(host, key, url):
+    return dict(zip(C.ORDER_KEY, key), kind="detail", url=url, host=host)
+
+
+# three hosts at a budget boundary: a.test's 2nd and 3rd rows tie on
+# ORDER_KEY and differ only by url; b.test has no budget; c.test has fewer
+# pending rows than its budget
+BOUNDARY_ROWS = [
+    _frontier_row("a.test", (0, 0, 0, 0, 0), "https://a.test/detail/9"),
+    _frontier_row("a.test", (0, 0, 1, 0, 3), "https://a.test/detail/2"),
+    _frontier_row("a.test", (0, 0, 1, 0, 3), "https://a.test/detail/1"),
+    _frontier_row("a.test", (1, 0, 0, 0, 0), "https://a.test/detail/0"),
+    _frontier_row("b.test", (0, 0, 0, 0, 0), "https://b.test/detail/0"),
+    _frontier_row("b.test", (0, 0, 0, 0, 1), "https://b.test/detail/1"),
+    _frontier_row("c.test", (0, 1, 0, 0, 0), "https://c.test/detail/1"),
+    _frontier_row("c.test", (0, 0, 0, 0, 0), "https://c.test/detail/0"),
+]
+BOUNDARY_PLAN = pa.table(
+    {
+        "host": ["a.test", "b.test", "c.test"],
+        "n_pending": [4, 2, 2],
+        "n_taken": [2, 0, 3],
+        "tokens": [0.5, 0.5, 2.0],
+    },
+    schema=C._HOST_PLAN_PA,
+)
+BOUNDARY_SELECTED = {
+    "https://a.test/detail/9", "https://a.test/detail/1",
+    "https://c.test/detail/0", "https://c.test/detail/1",
+}
+
+
+@pytest.mark.parametrize("plan_kind", ["driver_plan", "spark_plan"])
+def test_select_boundary_driver_equals_salted(spark, monkeypatch, plan_kind):
+    """Driver `_select` (plan held on the driver, or a DataFrame as after
+    reseed/expire_seen) and the salted Spark `_select` (caps 0) pick the
+    same rows at a budget boundary."""
+    ckpt = tempfile.mkdtemp(prefix="select_boundary_")
+    ck.write_table_local(
+        ckpt, 0, "frontier", pa.Table.from_pylist(BOUNDARY_ROWS, schema=C._FRONTIER_PA)
+    )
+    plan = BOUNDARY_PLAN
+    if plan_kind == "spark_plan":
+        plan = spark.createDataFrame(plan)
+    hosts = C._Hosts(plan, len(BOUNDARY_ROWS), len(BOUNDARY_SELECTED))
+    results = []
+    cached = []
+    for spark_only in (False, True):
+        with monkeypatch.context() as m:
+            if spark_only:
+                for cap in LOCAL_CAPS:
+                    m.setattr(C, cap, 0)
+            out = C._select(spark, ckpt, 0, _frontier_df(spark, ckpt, 0), hosts, cached)
+            assert isinstance(out[0], DataFrame) == spark_only
+            results.append([_rows(t) for t in out])
+    for df in cached:
+        df.unpersist()
+    assert results[0] == results[1]
+    (cols, selected), (_, remaining), (log_cols, log) = results[0]
+    url = cols.index("url")
+    assert {r[url] for r in selected} == BOUNDARY_SELECTED
+    assert {r[url] for r in remaining} == {
+        r["url"] for r in BOUNDARY_ROWS
+    } - BOUNDARY_SELECTED
+    assert log_cols == cols + ["epoch"] and log == [r + (0,) for r in selected]
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_budget_bound_select_runs_no_spark_job(spark):
+    """Under the default caps a budget-bound epoch of a small crawl selects
+    on the driver: `_select` launches no Spark job."""
+    ckpt = tempfile.mkdtemp(prefix="select_jobs_")
+    C.init_state(spark, SPEC, ckpt)
+    epoch, cached = 0, []
+    while True:
+        frontier = _frontier_df(spark, ckpt, epoch)
+        hosts = C._plan_hosts(spark, SPEC, ckpt, epoch, frontier, cached)
+        assert hosts.n_frontier, "the crawl ended without a budget-bound epoch"
+        if 0 < hosts.n_selected < hosts.n_frontier:
+            break
+        C.run_epoch(spark, SPEC, ckpt, epoch)
+        epoch += 1
+    sc = spark.sparkContext
+    group = f"select_jobs_{os.getpid()}"
+    sc.setJobGroup(group, "budget-bound _select")
+    try:
+        C._select(spark, ckpt, epoch, frontier, hosts, cached)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+        for df in cached:
+            df.unpersist()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    shutil.rmtree(ckpt, ignore_errors=True)

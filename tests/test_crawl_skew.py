@@ -1,13 +1,18 @@
-"""Salted constrained selection under heavy host skew: with one ccgp-style
-portal holding ~90% of the frontier and budget ≪ pending, the per-(host,
-salt) pre-truncation + exact re-rank must still reproduce the sequential
-simulator's crawl order and URL-seen set bit-for-bit (north rule), while no
-single task ever sorts the dominant host's whole pending set."""
+"""Constrained selection under heavy host skew: with one ccgp-style portal
+holding ~90% of the frontier and budget ≪ pending, both forms of the
+selection must reproduce the sequential simulator's crawl order and
+URL-seen set bit-for-bit (north rule) — the driver-side host-run rank that
+small frontiers take, and (local caps forced to 0) the salted per-(host,
+salt) pre-truncation + exact re-rank, in which no single task ever sorts
+the dominant host's whole pending set."""
 
 from __future__ import annotations
 
 import tempfile
 
+import pytest
+
+from gov_procurement_spider_spark.plans import crawl as C
 from gov_procurement_spider_spark.plans.crawl import ORDER_KEY, run_crawl
 from gov_procurement_spider_spark.refsim import simulate
 from gov_procurement_spider_spark.sources.site_model import SiteSpec, seed_host
@@ -27,6 +32,8 @@ SPEC = SiteSpec(
 )
 
 ORDER_COLS = ["epoch", "host"] + ORDER_KEY + ["kind", "url"]
+# the row caps below which an epoch materialises its tables on the driver
+LOCAL_CAPS = ("_DRIVER_COMMIT_MAX_ROWS", "_DRIVER_ADD_MAX_ROWS")
 
 
 def test_spec_is_actually_skewed():
@@ -34,7 +41,11 @@ def test_spec_is_actually_skewed():
     assert hosts.count("h0.test") / len(hosts) >= 0.85
 
 
-def test_crawl_order_exact_under_skew(spark):
+@pytest.mark.parametrize("spark_only", [False, True], ids=["default_caps", "caps_0"])
+def test_crawl_order_exact_under_skew(spark, monkeypatch, spark_only):
+    if spark_only:
+        for cap in LOCAL_CAPS:
+            monkeypatch.setattr(C, cap, 0)
     sim = simulate(SPEC)
     ckpt = tempfile.mkdtemp(prefix="crawl_skew_")
     crawl = run_crawl(spark, SPEC, ckpt)
