@@ -2,12 +2,15 @@
 per-URL headless-Chrome lifecycle (jiangsu.py:218-232, driver_setup.py:36-40:
 spawn + handshake + quit *per row*).
 
-One `mapInArrow` pass per epoch fetches every selected frontier row inside
-its partition: list pages yield discovered-link rows (next pagination page +
-detail links, ref main.py:89-100), detail pages yield the image+caption
-payload (BASELINE.json input_hint schema), and each batch appends one
-``metric`` lineage row (per-partition fetch counts/bytes/wall — SURVEY §2.10
-T6). In this sandbox the "network" is the deterministic synthetic site
+One function, ``make_fetcher``'s, fetches every selected frontier row of
+an epoch, in one of two forms (plans/crawl.py `_fetch`): called directly
+over the pyarrow batches of a small driver-held selection, or as a
+`mapInArrow` pass inside each partition of a large one. List pages yield
+discovered-link rows (next pagination page + detail links, ref
+main.py:89-100), detail pages yield the image+caption payload
+(BASELINE.json input_hint schema), and each batch appends one ``metric``
+lineage row (per-batch fetch counts/bytes/wall — SURVEY §2.10 T6). In this
+sandbox the "network" is the deterministic synthetic site
 (sources/site_model.py); on a real cluster this function body is the only
 thing that changes (batched HTTP with connection reuse per partition).
 
@@ -20,10 +23,11 @@ that motivated the nullable dtypes (mixed None/int inferring float64 and
 rounding 64-bit phashes) disappears with pandas itself: pa.array with an
 explicit int64 type is exact by construction.
 
-Payload bytes are produced and written in the same partition-local stage —
-they never enter a shuffle, and the epoch writes them exactly once
-(partitionBy(row_type) lets downstream readers prune them away). Only the
-small link rows (strings + ints) shuffle for dedup.
+Payload bytes are produced and written in the same partition-local stage (or
+on the driver) — they never enter a shuffle, and the epoch writes them
+exactly once (fetch_out is partitioned by row_type, so downstream readers
+prune them away). Only the small link rows (strings + ints) shuffle for
+dedup.
 """
 
 from __future__ import annotations
@@ -38,16 +42,6 @@ from ..functions import images
 from ..sources import site_model as sm
 from ..sources.site_model import SiteSpec
 
-# unified output schema: link / payload / metric rows discriminated by row_type
-FETCH_OUT_SCHEMA = (
-    "row_type string, fetch_epoch int, priority int, disc_epoch int,"
-    " seed_idx int, page_idx int, pos int, kind string, url string,"
-    " host string,"
-    " image_id string, bytes binary, w int, h int, fmt string, caption string,"
-    " phash long,"
-    " urls_fetched long, links_discovered long, payload_bytes long, wall_ms long"
-)
-
 COLS = [
     "row_type", "fetch_epoch", "priority", "disc_epoch", "seed_idx",
     "page_idx", "pos", "kind", "url", "host", "image_id", "bytes",
@@ -55,8 +49,10 @@ COLS = [
     "urls_fetched", "links_discovered", "payload_bytes", "wall_ms",
 ]
 
-# pyarrow mirror of FETCH_OUT_SCHEMA (int → int32, long → int64) — mapInArrow
-# ships these batches to the JVM verbatim, so the types must match exactly
+# the unified output schema — link / payload / failed / metric rows
+# discriminated by row_type. mapInArrow ships the batches to the JVM
+# verbatim and the driver form writes them as they are, so this one schema
+# types fetch_out whichever form wrote it
 _PA_TYPES = {
     "row_type": pa.string(), "fetch_epoch": pa.int32(),
     "priority": pa.int32(), "disc_epoch": pa.int32(),
@@ -68,7 +64,7 @@ _PA_TYPES = {
     "urls_fetched": pa.int64(), "links_discovered": pa.int64(),
     "payload_bytes": pa.int64(), "wall_ms": pa.int64(),
 }
-PA_SCHEMA = pa.schema([(c, _PA_TYPES[c]) for c in COLS])
+FETCH_OUT_PA = pa.schema([(c, _PA_TYPES[c]) for c in COLS])
 
 # per-row-varying columns of each section; everything else is a constant or
 # null for that row_type and is filled column-wise in _batch
@@ -93,7 +89,7 @@ def _batch(dynamic: dict, constants: dict, n: int) -> pa.RecordBatch:
             arrays.append(pa.array([constants[c]] * n, type=t))
         else:
             arrays.append(pa.nulls(n, type=t))
-    return pa.RecordBatch.from_arrays(arrays, schema=PA_SCHEMA)
+    return pa.RecordBatch.from_arrays(arrays, schema=FETCH_OUT_PA)
 
 
 def _allowed(url: str, disallowed: tuple) -> bool:
@@ -105,8 +101,10 @@ def _allowed(url: str, disallowed: tuple) -> bool:
 def make_fetcher(
     spec: SiteSpec, epoch: int, robots: dict, validate: bool = True, links_acc=None
 ):
-    """Returns the mapInArrow function over selected frontier rows
-    (priority, disc_epoch, seed_idx, page_idx, pos, kind, url, host).
+    """Returns the fetch function, an iterator of record batches of selected
+    frontier rows (priority, disc_epoch, seed_idx, page_idx, pos, kind,
+    url, host) → an iterator of FETCH_OUT_PA batches, for mapInArrow or a
+    direct call on the driver.
 
     Discovered links are filtered where they are generated, so link rows
     are admission candidates: a detail link with an unknown route is

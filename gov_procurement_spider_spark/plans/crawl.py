@@ -8,8 +8,10 @@ DataFrame dataflow, one path for every epoch:
   plan    host_counts ⟗ politeness ─ _host_plan ─► per-host taken, refill
   select  frontier ─ top-taken per host (O2; salted above the cap) ─►
           selected / remaining
-  fetch   selected ─ mapInArrow fetch (S3) ─► payloads + candidate links
-          (route filter P5 and robots T3 applied where links are generated)
+  fetch   selected ─ make_fetcher (S3) ─► fetch_out: payloads + candidate
+          links (route filter P5 and robots T3 applied where links are
+          generated); on the driver for a small driver-held selection,
+          else through mapInArrow
   admit   links ─ keep-first (min per url) ─ seen-filter prefilter + exact
           anti-join vs seen (D1) ─► admitted
   commit  frontier' / host_counts' / politeness' / seen+ / crawl_log /
@@ -19,14 +21,17 @@ A tick epoch (no budget anywhere) skips fetch and admit; a link-free epoch
 skips admit. Each table is materialised on the driver (pyarrow, one sorted
 parquet file) when its size — known before it is built — is under the local
 caps, otherwise by Spark jobs. The host-sized state (plan scalars,
-per-host taken, token refill, host_counts carry) has one implementation,
-the pyarrow pair `_host_plan` / `_host_carry`, called directly on the
-driver or through mapInArrow over the host-keyed join. Two steps are kept
-in two forms, Spark for big inputs and pyarrow/numpy for small ones: the
-budget-bound selection (salted windows / a host-run rank over the sorted
-frontier) and admission's keep-first plus exact seen anti-join
-(tests/test_crawl_dual_path.py pins both materialisations to the same
-committed rows and filters).
+per-host taken, token refill, host_counts carry) and the fetch have one
+implementation each — the pyarrow pair `_host_plan` / `_host_carry` and
+`make_fetcher` — with two forms chosen in one place (`_map_arrow`): called
+directly over the batches of a driver-held table, or through mapInArrow
+over a DataFrame (the host-keyed join; a selection above
+`_DRIVER_FETCH_MAX_URLS`). A small crawl therefore launches no Spark job
+at all. Two steps are kept in two forms, Spark for big inputs and
+pyarrow/numpy for small ones: the budget-bound selection (salted windows /
+a host-run rank over the sorted frontier) and admission's keep-first plus
+exact seen anti-join (tests/test_crawl_dual_path.py pins both
+materialisations to the same committed rows, fetch_out and filters).
 
 The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
 filter (crawler/cuckoo.py) when per-key deletion is needed: expire_seen
@@ -55,6 +60,7 @@ an exact re-rank of the ≤ salts·budget survivors.
 from __future__ import annotations
 
 import os
+import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
@@ -71,7 +77,7 @@ from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..crawler.bloom import BloomFilter
 from ..crawler.cuckoo import CuckooFilter
-from ..crawler.fetcher import FETCH_OUT_SCHEMA, make_fetcher
+from ..crawler.fetcher import FETCH_OUT_PA, make_fetcher
 from ..functions.urls import url_hash64
 from ..operators.skew import with_salt
 from ..sources import site_model as sm
@@ -374,7 +380,9 @@ def init_state(
     else:
         frontier = _seed_frontier(spark, spec).withColumn("url_hash", url_hash64("url"))
         hosts = frontier.select("host").distinct()
-    new_hosts = _map_hosts(partial(_new_hosts, spec=spec), hosts, _NEW_HOST_PA)
+    new_hosts = _map_arrow(
+        _per_batch(partial(_new_hosts, spec=spec)), hosts, _NEW_HOST_PA
+    )
     _write_all(
         ckpt,
         0,
@@ -452,16 +460,20 @@ def _host_carry(hosts: pa.RecordBatch) -> pa.RecordBatch:
     return out.filter(pc.greater(n, 0))
 
 
-def _map_hosts(fn, hosts, schema: pa.Schema):
-    """`fn` over every batch of a host table: directly on a driver-held
-    pyarrow table, through mapInArrow on a DataFrame."""
-    if isinstance(hosts, DataFrame):
-        return hosts.mapInArrow(
-            lambda batches: map(fn, batches), from_arrow_schema(schema)
-        )
-    return pa.Table.from_batches(
-        [fn(b) for b in hosts.combine_chunks().to_batches()], schema=schema
-    )
+def _per_batch(fn):
+    """The iterator-of-batches form of a batch → batch function."""
+    return lambda batches: map(fn, batches)
+
+
+def _map_arrow(fn, t, schema: pa.Schema):
+    """`fn`, an iterator of record batches → an iterator of `schema`
+    batches, over a table: called directly on a driver-held pyarrow table,
+    through mapInArrow on a DataFrame. The host plan and carry and the
+    fetch all go through here, so each has one implementation and its form
+    follows from where its input is held."""
+    if isinstance(t, DataFrame):
+        return t.mapInArrow(fn, from_arrow_schema(schema))
+    return pa.Table.from_batches(fn(t.combine_chunks().to_batches()), schema=schema)
 
 
 def _read_host_counts(spark: SparkSession, ckpt: str, epoch: int) -> DataFrame | None:
@@ -482,8 +494,7 @@ class _Hosts:
 
 
 def _plan_hosts(
-    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int,
-    frontier: DataFrame, cached: list,
+    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, cached: list
 ) -> _Hosts:
     """Run `_host_plan` over the epoch's host tables. Both are |hosts| rows:
     the carried host_counts (round 5 — the plan phase aggregates |hosts|
@@ -491,9 +502,11 @@ def _plan_hosts(
     when absent) and politeness. Under the local cap they are read and
     planned on the driver with no Spark job; above it through mapInArrow
     over their full outer join, persisted for selection and the commit."""
-    fn = partial(
-        _host_plan, burst=float(spec.burst),
-        refill=float(spec.rate_per_sec * spec.epoch_seconds),
+    fn = _per_batch(
+        partial(
+            _host_plan, burst=float(spec.burst),
+            refill=float(spec.rate_per_sec * spec.epoch_seconds),
+        )
     )
     if os.path.isdir(ck.table_path(ckpt, epoch, "host_counts")) and all(
         ck.table_num_rows(ckpt, epoch, t) <= _DRIVER_ADD_MAX_ROWS
@@ -508,7 +521,7 @@ def _plan_hosts(
             "host",
             join_type="full outer",
         )
-        plan = _map_hosts(fn, hosts, _HOST_PLAN_PA)
+        plan = _map_arrow(fn, hosts, _HOST_PLAN_PA)
         return _Hosts(
             plan,
             pc.sum(plan.column("n_pending")).as_py() or 0,
@@ -516,13 +529,12 @@ def _plan_hosts(
         )
     host_counts = _read_host_counts(spark, ckpt, epoch)
     if host_counts is None:
-        host_counts = _count_by_host(frontier, "n_pending")
-    # explicit schema: a schema-less read eagerly lists the dir and reads a
-    # footer for inference (~50-60 ms of py4j/JVM latency per table)
+        host_counts = _count_by_host(_read_frontier(spark, ckpt, epoch), "n_pending")
+    # explicit schema, as in _read_frontier
     politeness = spark.read.schema("host string, tokens double").parquet(
         ck.table_path(ckpt, epoch, "politeness")
     )
-    plan = _map_hosts(
+    plan = _map_arrow(
         fn, host_counts.join(politeness, "host", "full"), _HOST_PLAN_PA
     ).persist()
     cached.append(plan)
@@ -541,7 +553,7 @@ def _carry_host_counts(spark: SparkSession, plan, admitted):
             hosts = hosts.join(_to_df(spark, by_host), "host", "full")
     elif by_host is not None:
         hosts = hosts.join(by_host, "host", join_type="full outer")
-    return _map_hosts(_host_carry, hosts, _HOST_COUNTS_PA)
+    return _map_arrow(_per_batch(_host_carry), hosts, _HOST_COUNTS_PA)
 
 
 # The local caps. An epoch table whose row count — known before it is built
@@ -555,6 +567,17 @@ _DRIVER_COMMIT_MAX_ROWS = 1 << 18
 # Narrow rows: the host tables, the seen view's urls, url_hash columns
 # (≤8 MB of int64 hashes — the same bound as expire_seen's chunks).
 _DRIVER_ADD_MAX_ROWS = 1 << 20
+# URLs a driver-held selection may hold to be fetched on the driver
+# (`_fetch`), serially, instead of by a Spark job over 2× task slots. On a
+# 4-core local[4] box the driver fetch costs ~0.3 ms per URL at max_dim 64
+# (761 URLs in ~0.2 s); a warm Spark fetch job has ~0.4-0.5 s of fixed
+# latency before any work (a 14-URL epoch spent 0.39-0.52 s in its fetch
+# phase), so the serial fetch is no slower in wall time up to ~0.5 s /
+# 0.3 ms ≈ 1,700-1,800 URLs, and costs far less CPU (no JVM job, no Python
+# worker). 1024 stays below that break-even: every politeness-bound
+# crawl_polite epoch (14-318 URLs) fetches on the driver, a 51,200-URL
+# steady-state epoch in Spark.
+_DRIVER_FETCH_MAX_URLS = 1 << 10
 
 
 def _filter_add_after_write(
@@ -722,8 +745,7 @@ def _seen_filter_udf(flt):
 
 
 def _select(
-    spark: SparkSession, ckpt: str, epoch: int, frontier: DataFrame,
-    hosts: _Hosts, cached: list,
+    spark: SparkSession, ckpt: str, epoch: int, hosts: _Hosts, cached: list
 ):
     """(selected, remaining, crawl_log): the rows to fetch (None in a tick
     epoch), the rows carried to the next frontier, and the crawl_log to
@@ -732,33 +754,38 @@ def _select(
 
     When every host's pending set fits its budget the whole frontier is
     selected (the steady-state fast path and the drain phase of every
-    crawl: no sort at all). Otherwise each host takes its `n_taken` first
-    rows by SELECT_ORDER — on the driver for a frontier under the local
-    cap (`_select_local`), else by two salted Spark windows, skew-safe
-    (Zipf host distributions are the norm — site_model.py:55): a plain
-    PARTITION BY host window sorts one dominant host's ENTIRE pending set
-    (10^9 rows at 10^10-URL scale) in a single task, because the budget
-    bounds the window's output, not its input. Stage 1 salts each host's
-    rows into N_SALT_PARTS sub-windows and keeps only the per-salt
-    top-n_taken — sound because any row in the global top-n_taken has
-    < n_taken rows ahead of it overall, hence < n_taken ahead within its
-    own salt. Stage 2 ranks the ≤ salts·n_taken survivors exactly. Rows
-    dropped in stage 1 are provably unselected, so the result is
-    bit-identical to the unsalted window (test_crawl_skew.py proves both
+    crawl: no sort at all). It is read onto the driver only when `_fetch`
+    will fetch it there; a larger one stays a parquet scan. Otherwise each
+    host takes its `n_taken` first rows by SELECT_ORDER — on the driver for
+    a frontier under the local cap (`_select_local`), else by two salted
+    Spark windows, skew-safe (Zipf host distributions are the norm —
+    site_model.py:55): a plain PARTITION BY host window sorts one dominant
+    host's ENTIRE pending set (10^9 rows at 10^10-URL scale) in a single
+    task, because the budget bounds the window's output, not its input.
+    Stage 1 salts each host's rows into N_SALT_PARTS sub-windows and keeps
+    only the per-salt top-n_taken — sound because any row in the global
+    top-n_taken has < n_taken rows ahead of it overall, hence < n_taken
+    ahead within its own salt. Stage 2 ranks the ≤ salts·n_taken survivors
+    exactly. Rows dropped in stage 1 are provably unselected, so the result
+    is bit-identical to the unsalted window (test_crawl_skew.py proves both
     forms against refsim under 90% skew)."""
-    if hosts.n_selected == hosts.n_frontier:
-        return frontier, _FRONTIER_PA.empty_table(), None
     local = hosts.n_frontier <= _DRIVER_COMMIT_MAX_ROWS
+    if hosts.n_selected == hosts.n_frontier:
+        if local and hosts.n_selected <= _DRIVER_FETCH_MAX_URLS:
+            selected = _read_frontier_local(ckpt, epoch)
+        else:
+            selected = _read_frontier(spark, ckpt, epoch)
+        return selected, _FRONTIER_PA.empty_table(), None
     if hosts.n_selected == 0:  # tick: the frontier carries over unchanged
         if local:
             return None, _read_frontier_local(ckpt, epoch), None
-        return None, frontier, None
+        return None, _read_frontier(spark, ckpt, epoch), None
     if local:
         return _select_local(ckpt, epoch, hosts)
     taken = _to_df(spark, _cols(hosts.plan, ["host", "n_taken"]))
     wpre = W.partitionBy("host", "_salt").orderBy(*SELECT_ORDER)
     pre = (
-        with_salt(frontier, N_SALT_PARTS, "url")
+        with_salt(_read_frontier(spark, ckpt, epoch), N_SALT_PARTS, "url")
         .join(F.broadcast(taken), "host", "left")
         .fillna(0, ["n_taken"])
         .withColumn("_prn", F.row_number().over(wpre))
@@ -786,6 +813,15 @@ def _select(
         selected,
         marked.filter(~F.col("_sel")).select(*FRONTIER_COLS),
         selected.withColumn("epoch", F.lit(epoch)),
+    )
+
+
+def _read_frontier(spark: SparkSession, ckpt: str, epoch: int) -> DataFrame:
+    """The epoch's frontier as a Spark scan, for the branches that run Spark
+    jobs over it. Explicit schema: a schema-less read eagerly lists the dir
+    and reads a footer (~50-60 ms of py4j/JVM latency per call)."""
+    return spark.read.schema(from_arrow_schema(_FRONTIER_PA)).parquet(
+        ck.table_path(ckpt, epoch, "frontier")
     )
 
 
@@ -829,12 +865,14 @@ def _select_local(ckpt: str, epoch: int, hosts: _Hosts):
     )
 
 
-# Fetch-task sizing floor: at ~2 ms of codec work per URL and ~10 ms of
-# fixed per-task cost (schedule + Arrow round-trip + commit), a task below
-# ~32 URLs spends more on overhead than fetching — the round-6 A/B read the
-# small-site crawl at 10.3 s with floor 4 vs 7.3 s with floor 32 (fetch
-# phase 4.8 → 2.3 s). The 2×-slots cap still binds at scale, so the
-# big-epoch plan is unchanged.
+# Task-sizing floor of the Spark fetch: at ~2 ms of codec work per URL and
+# ~10 ms of fixed per-task cost (schedule + Arrow round-trip + commit), a
+# task below ~32 URLs spends more on overhead than fetching. (Round 6 set it
+# on the small-site crawl, which then fetched in Spark: floor 4 → 32 cut its
+# fetch phase 4.8 → 2.3 s. Small selections now fetch on the driver, see
+# _DRIVER_FETCH_MAX_URLS.) Above that cap the floor binds only where 2×
+# task slots exceed n_selected/32 — a few thousand URLs on a wide cluster;
+# the 2×-slots cap binds at scale, so the big-epoch plan is unchanged.
 _MIN_URLS_PER_FETCH_TASK = 32
 
 
@@ -856,44 +894,67 @@ def _robots(ckpt: str) -> dict:
 
 
 def _fetch(
-    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int,
-    selected: DataFrame, n_selected: int,
+    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, selected,
+    n_selected: int,
 ) -> int:
     """Fetch the selected rows into the next epoch's fetch_out; returns the
-    number of candidate links written. Payloads stay partition-local and
-    are written exactly once before any shuffle — partitionBy(row_type)
-    lets every downstream reader prune the heavy payload files away;
-    parquet compression off because image payloads are already dense."""
-    # fetch tasks must be sized by fetch *cost*, not by input bytes: the
-    # frontier rows are ~100 B each, so a byte-based scan split would run a
-    # million-URL fetch on two cores. Round-robin to 2× task slots — but no
-    # more tasks than ~n_selected/32 (see _MIN_URLS_PER_FETCH_TASK).
-    fetch_par = min(
-        spark.sparkContext.defaultParallelism * 2,
-        max(1, -(-n_selected // _MIN_URLS_PER_FETCH_TASK)),
-    )
-    # the link count rides back on an accumulator instead of a probe job
-    # over the metric rows (see make_fetcher: retries can only inflate it,
-    # and the epoch only branches on == 0, so inflation is benign)
-    links_acc = spark.sparkContext.accumulator(0)
-    (
-        selected.repartition(fetch_par)
-        .mapInArrow(
-            make_fetcher(spec, epoch, _robots(ckpt), links_acc=links_acc),
-            schema=FETCH_OUT_SCHEMA,
+    number of candidate links written. One fetch function (`make_fetcher`),
+    two forms: a driver-held selection of at most _DRIVER_FETCH_MAX_URLS
+    rows is fetched on the driver and each fetch_out/row_type=<kind> dir
+    written as one file; any other runs through mapInArrow. Either way
+    payloads are written exactly once before any shuffle, fetch_out is
+    partitioned by row_type so every downstream reader prunes the heavy
+    payload files away, and parquet compression is off because image
+    payloads are already dense."""
+    links_acc = None
+    if isinstance(selected, DataFrame) or n_selected > _DRIVER_FETCH_MAX_URLS:
+        # fetch tasks must be sized by fetch *cost*, not by input bytes: the
+        # frontier rows are ~100 B each, so a byte-based scan split would run
+        # a million-URL fetch on two cores. Round-robin to 2× task slots —
+        # but no more tasks than ~n_selected/32 (see _MIN_URLS_PER_FETCH_TASK).
+        fetch_par = min(
+            spark.sparkContext.defaultParallelism * 2,
+            max(1, -(-n_selected // _MIN_URLS_PER_FETCH_TASK)),
         )
-        .write.mode("overwrite")
-        .partitionBy("row_type")
-        .option("compression", "none")
-        # payload bytes are entropy-dense and unique (real crawls: already-
-        # compressed images) — parquet's dictionary attempt buffers and
-        # hashes every ~9 KB value before falling back to plain encoding
-        # on every page; disabling it read the steady-state epoch at
-        # 2.9-3.2 → 2.5 s fetch (CPU 53-57 → 49, same-window A/B r6)
-        .option("parquet.enable.dictionary", "false")
-        .parquet(ck.table_path(ckpt, epoch + 1, "fetch_out"))
+        selected = _to_df(spark, selected).repartition(fetch_par)
+        # the link count rides back on an accumulator instead of a probe job
+        # over the metric rows (see make_fetcher: retries can only inflate
+        # it, and the epoch only branches on == 0, so inflation is benign)
+        links_acc = spark.sparkContext.accumulator(0)
+    rows = _map_arrow(
+        make_fetcher(spec, epoch, _robots(ckpt), links_acc=links_acc),
+        selected,
+        FETCH_OUT_PA,
     )
-    return links_acc.value
+    if isinstance(rows, DataFrame):
+        (
+            rows.write.mode("overwrite")
+            .partitionBy("row_type")
+            .option("compression", "none")
+            # payload bytes are entropy-dense and unique (real crawls:
+            # already-compressed images) — parquet's dictionary attempt
+            # buffers and hashes every ~9 KB value before falling back to
+            # plain encoding on every page; disabling it read the
+            # steady-state epoch at 2.9-3.2 → 2.5 s fetch (CPU 53-57 → 49,
+            # same-window A/B r6)
+            .option("parquet.enable.dictionary", "false")
+            .parquet(ck.table_path(ckpt, epoch + 1, "fetch_out"))
+        )
+        return links_acc.value
+    # the layout Spark's partitionBy writer produces: one dir per row_type,
+    # its files holding every other column with the same types; cleared
+    # first, as the Spark writer's overwrite mode does
+    shutil.rmtree(ck.table_path(ckpt, epoch + 1, "fetch_out"), ignore_errors=True)
+    kinds = rows.column("row_type")
+    n_links = 0
+    for kind in pc.unique(kinds).to_pylist():
+        part = rows.filter(pc.equal(kinds, kind)).drop_columns(["row_type"])
+        n_links += part.num_rows if kind == "link" else 0
+        ck.write_table_local(
+            ckpt, epoch + 1, os.path.join("fetch_out", f"row_type={kind}"), part,
+            compression="none", use_dictionary=False,
+        )
+    return n_links
 
 
 def _seen_rows_small(ckpt: str, upto_epoch: int, cap: int) -> bool:
@@ -967,7 +1028,7 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
         new = np.fromiter((u not in seen for u in url), bool, len(url))
         return _with_url_hash(links.filter(pa.array(first & new)))
     links = (
-        spark.read.schema(FETCH_OUT_SCHEMA).parquet(fetch_out)
+        spark.read.schema(from_arrow_schema(FETCH_OUT_PA)).parquet(fetch_out)
         .filter(F.col("row_type") == "link")
         .select(*FRONTIER_COLS)
         .withColumn("disc_epoch", F.lit(out_epoch))
@@ -1101,22 +1162,15 @@ def run_epoch(
     phases = _Phases()
     cached: list[DataFrame] = []
     try:
-        frontier = spark.read.schema(from_arrow_schema(_FRONTIER_PA)).parquet(
-            ck.table_path(ckpt, epoch, "frontier")
-        )
-        hosts = _plan_hosts(spark, spec, ckpt, epoch, frontier, cached)
+        hosts = _plan_hosts(spark, spec, ckpt, epoch, cached)
         phases.mark("plan")
         if hosts.n_frontier == 0:
             return 0, 0
-        selected, remaining, crawl_log = _select(
-            spark, ckpt, epoch, frontier, hosts, cached
-        )
+        selected, remaining, crawl_log = _select(spark, ckpt, epoch, hosts, cached)
         phases.mark("select")
         admitted = None
         if selected is not None:
-            n_links = _fetch(
-                spark, spec, ckpt, epoch, _to_df(spark, selected), hosts.n_selected
-            )
+            n_links = _fetch(spark, spec, ckpt, epoch, selected, hosts.n_selected)
             phases.mark("fetch")
             if n_links:
                 admitted = _admit(spark, ckpt, epoch, n_links, cached)

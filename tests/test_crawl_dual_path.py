@@ -1,12 +1,13 @@
 """One crawl, two materialisations: every epoch must commit the same bytes
 whether its small tables are computed on the driver or by Spark jobs.
 
-Each crawl runs twice — as-is (small epochs commit driver-side) and with
-the local row caps forced to 0, so every epoch, init and lifecycle step
-goes through Spark. At every committed epoch the state tables must be equal
-as sorted rows with equal Arrow column types, the seen filters equal (Bloom
-arrays byte for byte), and the manifests must agree on what was fetched and
-admitted.
+Each crawl runs twice — as-is (small epochs fetch and commit driver-side)
+and with the local caps forced to 0, so every epoch, init and lifecycle
+step goes through Spark. At every committed epoch the state tables and the
+fetch_out payload, link and failed rows must be equal as sorted rows with
+equal Arrow column types, the fetch_out metric rows must sum to the same
+counts, the seen filters must be equal (Bloom arrays byte for byte), and
+the manifests must agree on what was fetched and admitted.
 """
 
 from __future__ import annotations
@@ -21,19 +22,26 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import DataFrame
-from pyspark.sql.pandas.types import from_arrow_schema
 
 from gov_procurement_spider_spark.crawler.cuckoo import CuckooFilter
 from gov_procurement_spider_spark.plans import crawl as C
 from gov_procurement_spider_spark.sources.site_model import SiteSpec
 from gov_procurement_spider_spark.streaming import checkpoint as ck
 
-# the row caps below which an epoch materialises its tables on the driver
-LOCAL_CAPS = ("_DRIVER_COMMIT_MAX_ROWS", "_DRIVER_ADD_MAX_ROWS")
+# the caps below which an epoch fetches and materialises its tables on the
+# driver
+LOCAL_CAPS = (
+    "_DRIVER_COMMIT_MAX_ROWS", "_DRIVER_ADD_MAX_ROWS", "_DRIVER_FETCH_MAX_URLS"
+)
 TABLES = (
     "frontier", "host_counts", "politeness", "seen_new", "crawl_log",
     "seen_removed",
+    *(f"fetch_out/row_type={kind}" for kind in ("payload", "link", "failed")),
 )
+# a metric row is written per fetched batch, and the two fetch forms cut
+# batches differently (and time them differently: wall_ms): metric rows
+# are compared by these sums
+METRIC_SUMS = ("urls_fetched", "links_discovered", "payload_bytes")
 
 # test_crawl_equivalence's site: budget-bound and admitting epochs
 SPEC = SiteSpec(
@@ -96,6 +104,13 @@ def _table(path):
     return fields, sorted(zip(*(t.column(c).to_pylist() for c in t.column_names)))
 
 
+def _metric_sums(path):
+    t = pq.read_table(path)
+    return [(f.name, f.type) for f in t.schema], [
+        sum(t.column(c).to_pylist()) for c in METRIC_SUMS
+    ]
+
+
 def _filter_content(ckpt, epoch):
     """Bloom: the saved arrays, byte for byte. Cuckoo: the table size and
     the multiset of stored (fingerprint, bucket pair) entries. Which of its
@@ -130,6 +145,15 @@ def _differences(local, spark_only):
                     diffs.append(f"epoch {e} {name}: columns {fa} != {fb}")
                 elif ra != rb:
                     diffs.append(f"epoch {e} {name}: rows differ")
+        metric = [
+            ck.table_path(c, e, "fetch_out/row_type=metric")
+            for c in (local, spark_only)
+        ]
+        present = [os.path.isdir(p) for p in metric]
+        if present[0] != present[1]:
+            diffs.append(f"epoch {e} metric rows: present {present}")
+        elif present[0] and _metric_sums(metric[0]) != _metric_sums(metric[1]):
+            diffs.append(f"epoch {e} metric rows: {[_metric_sums(p) for p in metric]}")
         if _filter_content(local, e) != _filter_content(spark_only, e):
             diffs.append(f"epoch {e}: bloom.npz differs")
         ma, mb = ck.read_manifest(local, e), ck.read_manifest(spark_only, e)
@@ -151,25 +175,23 @@ def _differences(local, spark_only):
 def test_driver_and_spark_commits_identical(spark, monkeypatch, drive, spec):
     local, spark_only = _run_both(spark, monkeypatch, drive, spec)
     # the two runs really took different paths: a driver-side write is one
-    # fixed-name file per table (ck.write_table_local), and with the caps at
-    # 0 only empty tables may be written that way
-    driver_rows = [
-        [
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(os.path.join(c, "epoch=*", "*", "part-*-driver.parquet"))
+    # fixed-name file per table or fetch_out dir (ck.write_table_local), and
+    # with the caps at 0 only empty tables may be written that way
+    for table_glob in (
+        ("*", "part-*-driver.parquet"),
+        ("fetch_out", "row_type=*", "part-*-driver.parquet"),
+    ):
+        driver_rows = [
+            [
+                pq.ParquetFile(f).metadata.num_rows
+                for f in glob.glob(os.path.join(c, "epoch=*", *table_glob))
+            ]
+            for c in (local, spark_only)
         ]
-        for c in (local, spark_only)
-    ]
-    assert any(driver_rows[0]) and not any(driver_rows[1])
+        assert any(driver_rows[0]) and not any(driver_rows[1]), table_glob
     assert _differences(local, spark_only) == []
     for ckpt in (local, spark_only):
         shutil.rmtree(ckpt, ignore_errors=True)
-
-
-def _frontier_df(spark, ckpt, epoch):
-    return spark.read.schema(from_arrow_schema(C._FRONTIER_PA)).parquet(
-        ck.table_path(ckpt, epoch, "frontier")
-    )
 
 
 def _rows(t):
@@ -231,7 +253,7 @@ def test_select_boundary_driver_equals_salted(spark, monkeypatch, plan_kind):
             if spark_only:
                 for cap in LOCAL_CAPS:
                     m.setattr(C, cap, 0)
-            out = C._select(spark, ckpt, 0, _frontier_df(spark, ckpt, 0), hosts, cached)
+            out = C._select(spark, ckpt, 0, hosts, cached)
             assert isinstance(out[0], DataFrame) == spark_only
             results.append([_rows(t) for t in out])
     for df in cached:
@@ -247,29 +269,29 @@ def test_select_boundary_driver_equals_salted(spark, monkeypatch, plan_kind):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_budget_bound_select_runs_no_spark_job(spark):
-    """Under the default caps a budget-bound epoch of a small crawl selects
-    on the driver: `_select` launches no Spark job."""
-    ckpt = tempfile.mkdtemp(prefix="select_jobs_")
-    C.init_state(spark, SPEC, ckpt)
-    epoch, cached = 0, []
-    while True:
-        frontier = _frontier_df(spark, ckpt, epoch)
-        hosts = C._plan_hosts(spark, SPEC, ckpt, epoch, frontier, cached)
-        assert hosts.n_frontier, "the crawl ended without a budget-bound epoch"
-        if 0 < hosts.n_selected < hosts.n_frontier:
-            break
-        C.run_epoch(spark, SPEC, ckpt, epoch)
-        epoch += 1
+def test_small_crawl_runs_no_spark_job(spark):
+    """Under the default caps a whole small crawl — init, a budget-bound
+    selection, every fetch, admission and commit — runs on the driver:
+    `run_crawl` launches no Spark job."""
+    ckpt = tempfile.mkdtemp(prefix="crawl_jobs_")
     sc = spark.sparkContext
-    group = f"select_jobs_{os.getpid()}"
-    sc.setJobGroup(group, "budget-bound _select")
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = f"crawl_jobs_{os.getpid()}"
+    bus.waitUntilEmpty()
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    sc.setJobGroup(group, "small run_crawl")
     try:
-        C._select(spark, ckpt, epoch, frontier, hosts, cached)
+        C.run_crawl(spark, SPEC, ckpt)
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(key, None)
-        for df in cached:
-            df.unpersist()
-    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    bus.waitUntilEmpty()
+    assert list(tracker.getJobIdsForGroup(group)) == []
+    # threads (the concurrent state writes) do not inherit the job group
+    assert [j for j in tracker.getJobIdsForGroup(None) if j > before] == []
+    manifests = [ck.read_manifest(ckpt, e) for e in ck.committed_epochs(ckpt)[1:]]
+    assert any(
+        m["urls_fetched"] and not m["crawl_log_from_frontier"] for m in manifests
+    ), "the crawl had no budget-bound epoch"
     shutil.rmtree(ckpt, ignore_errors=True)

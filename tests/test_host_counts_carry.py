@@ -118,13 +118,12 @@ def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
         carried = C._read_host_counts(spark, ckpt, e)
         if carried is None:
             continue
-        frontier = ck.read_table(spark, ckpt, e, "frontier")
-        local = C._plan_hosts(spark, spec, ckpt, e, frontier, [])
+        local = C._plan_hosts(spark, spec, ckpt, e, [])
         assert isinstance(local.plan, pa.Table)
         with monkeypatch.context() as m:
             m.setattr(C, "_DRIVER_ADD_MAX_ROWS", 0)
             cached = []
-            dist = C._plan_hosts(spark, spec, ckpt, e, frontier, cached)
+            dist = C._plan_hosts(spark, spec, ckpt, e, cached)
         assert sorted(tuple(r) for r in dist.plan.collect()) == sorted(
             zip(*local.plan.to_pydict().values())
         ), f"epoch {e}: driver and mapInArrow plans differ"

@@ -6,6 +6,7 @@
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
@@ -118,5 +119,34 @@ def test_spark_submit_pyfiles_crawl():
         # the second pass must actually FETCH: the deterministic site yields
         # an identical pass-2 crawl, so the total proof artifact doubles
         assert res3["urls"] == 2 * res["urls"], (res3["urls"], res["urls"])
+        # the small crawl above fetches on the driver; a steady-state epoch
+        # above _DRIVER_FETCH_MAX_URLS fetches through mapInArrow, so
+        # executor Python workers must import the package from the zip
+        steady = os.path.join(workdir, "steady")
+        out4 = subprocess.run(
+            [
+                spark_submit,
+                "--master", "local[4]",
+                "--conf", "spark.sql.shuffle.partitions=8",
+                "--conf", "spark.ui.enabled=false",
+                "--py-files", zpath,
+                str(REPO / "scripts" / "crawl_job.py"),
+                "--ckpt", steady,
+                "--hosts", "4", "--steady-urls", "2048",
+            ],
+            capture_output=True,
+            text=True,
+            cwd=workdir,
+            env=env,
+            timeout=600,
+        )
+        assert out4.returncode == 0, out4.stderr[-3000:]
+        res4 = json.loads(
+            [l for l in out4.stdout.splitlines() if l.startswith("{")][-1]
+        )
+        assert res4["mode"] == "steady_epoch" and res4["urls"] == 2048
+        fetch_out = os.path.join(steady, "epoch=000001", "fetch_out")
+        assert glob.glob(os.path.join(fetch_out, "row_type=payload", "part-*.parquet"))
+        assert not glob.glob(os.path.join(fetch_out, "*", "part-*-driver.parquet"))
     finally:
         shutil.rmtree(workdir, ignore_errors=True)
