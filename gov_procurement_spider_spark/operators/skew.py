@@ -7,7 +7,7 @@ itself: the hot side gets a salt column `hash(row) % k`, the small/dim side
 is replicated k× (one copy per salt), and the join key becomes
 (key, salt) — k-way parallelism for the hot key with identical results.
 
-Used by the crawler's constrained selection path (plans/crawl.py run_epoch):
+Used by the crawler's constrained selection path (plans/crawl.py `_select`):
 `with_salt` splits each host's pending set into sub-windows that are
 pre-truncated to budget rows before the exact per-host re-rank, so a
 dominant host sorts in k bounded tasks instead of one unbounded one. Also
@@ -17,18 +17,14 @@ salted == unsalted (j6_salted_skew_join).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_salt(df: DataFrame, n_salts: int, *cols: str) -> DataFrame:
-    """Deterministic salt in [0, n_salts): hash of the given columns (or a
-    uniform spread via monotonically increasing id when none are given —
-    deterministic per row content is preferred for reproducibility)."""
-    if cols:
-        salt: Column = F.pmod(F.xxhash64(*[F.col(c) for c in cols]), F.lit(n_salts))
-    else:
-        salt = F.pmod(F.xxhash64(F.monotonically_increasing_id()), F.lit(n_salts))
+def with_salt(df: DataFrame, n_salts: int, col: str, *cols: str) -> DataFrame:
+    """Deterministic salt in [0, n_salts): a hash of the given columns, so
+    a retried task salts every row the same way."""
+    salt = F.pmod(F.xxhash64(col, *cols), F.lit(n_salts))
     return df.withColumn("_salt", salt.cast("int"))
 
 

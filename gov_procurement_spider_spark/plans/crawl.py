@@ -27,11 +27,15 @@ implementation each — the pyarrow pair `_host_plan` / `_host_carry` and
 directly over the batches of a driver-held table, or through mapInArrow
 over a DataFrame (the host-keyed join; a selection above
 `_DRIVER_FETCH_MAX_URLS`). A small crawl therefore launches no Spark job
-at all. Two steps are kept in two forms, Spark for big inputs and
-pyarrow/numpy for small ones: the budget-bound selection (salted windows /
-a host-run rank over the sorted frontier) and admission's keep-first plus
-exact seen anti-join (tests/test_crawl_dual_path.py pins both
-materialisations to the same committed rows, fetch_out and filters).
+at all. Two steps are kept in two forms, Spark for big inputs and pyarrow
+for small ones: the budget-bound selection (salted windows) and
+admission's keep-first (a min-struct aggregation) plus exact seen
+anti-join. Their driver form is one function, `_take_first` — the first n
+rows of each key run — which also dedups the seed frontier, picks the
+seen view's latest event per url and gates the streaming politeness
+operator (streaming/stateful_politeness.py). tests/test_crawl_dual_path.py
+pins both materialisations to the same committed rows, fetch_out and
+filters.
 
 The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
 filter (crawler/cuckoo.py) when per-key deletion is needed: expire_seen
@@ -226,32 +230,31 @@ def _seen_view(spark: SparkSession, ckpt: str, upto_epoch: int) -> DataFrame:
     return seen.select("url")
 
 
+def _seed_rows(spec: SiteSpec, ids: pd.Series) -> pd.DataFrame:
+    """The seed list pages `ids` as frontier rows, before keep-first."""
+    return pd.DataFrame(
+        {
+            "priority": [sm.seed_priority(spec, i) for i in ids],
+            "disc_epoch": 0,
+            "seed_idx": ids,
+            "page_idx": 1,
+            "pos": -1,
+            "kind": "list",
+            "url": [sm.seed_url(spec, i) for i in ids],
+            "host": [sm.seed_host(spec, i) for i in ids],
+        }
+    )
+
+
 def _seed_frontier(spark: SparkSession, spec: SiteSpec) -> DataFrame:
     """The deduped seed frontier (keep-first on url — parity with refsim's
     seed admission loop), host-partitioned. Used by init_state and reseed."""
     n = spec.n_seeds
-
-    def gen_seeds(batches):
-        for pdf in batches:
-            ids = pdf["id"].astype(int)
-            yield pd.DataFrame(
-                {
-                    "priority": [sm.seed_priority(spec, i) for i in ids],
-                    "disc_epoch": 0,
-                    "seed_idx": ids,
-                    "page_idx": 1,
-                    "pos": -1,
-                    "kind": "list",
-                    "url": [sm.seed_url(spec, i) for i in ids],
-                    "host": [sm.seed_host(spec, i) for i in ids],
-                }
-            )
-
     seeds = (
         spark.range(n)
         .repartition(max(1, min(32, n // 8 or 1)))
         .mapInPandas(
-            gen_seeds,
+            lambda batches: (_seed_rows(spec, pdf["id"]) for pdf in batches),
             schema="priority int, disc_epoch int, seed_idx bigint, page_idx int,"
             " pos int, kind string, url string, host string",
         )
@@ -326,24 +329,33 @@ def _with_url_hash(t: pa.Table) -> pa.Table:
     return t.append_column("url_hash", pa.array(hashes, pa.int64()))
 
 
+def _take_first(t: pa.Table, run: str, order: list, n) -> tuple[pa.Table, pa.Table]:
+    """(taken, rest): `t` sorted by (run, *order) and split into the first
+    `n` rows of each `run` key and the others. `n` is an int or the name of
+    a per-row count column (null counts as 0). The driver form of every
+    first-n-per-key step: the budget-bound selection, keep-first on url,
+    the seen view's latest event per url and the streaming politeness
+    gate."""
+    t = t.sort_by([(c, "ascending") for c in [run, *order]])
+    key = t.column(run).to_numpy(zero_copy_only=False)
+    i = np.arange(len(key))
+    start = np.ones(len(key), dtype=bool)
+    start[1:] = key[1:] != key[:-1]
+    rank = i - np.maximum.accumulate(np.where(start, i, 0))
+    if isinstance(n, str):
+        n = pc.fill_null(t.column(n), 0).to_numpy()
+    first = pa.array(rank < n)
+    return t.filter(first), t.filter(pc.invert(first))
+
+
 def _seed_frontier_local(spec: SiteSpec) -> pa.Table:
     """`_seed_frontier` on the driver, for seed sets under the local cap:
-    the same seed tuples and keep-first (the smallest ORDER_KEY per url),
-    without ~6 Spark jobs (~1.5-2 s of fixed latency) for a few hundred
-    deterministic rows."""
-    best: dict = {}
-    for i in range(spec.n_seeds):
-        key = (sm.seed_priority(spec, i), 0, i, 1, -1)
-        url = sm.seed_url(spec, i)
-        if key < best.get(url, (2**31, 0, 0, 0, 0)):
-            best[url] = key
-    return pa.Table.from_pylist(
-        [
-            dict(zip(ORDER_KEY, k), kind="list", url=u, host=sm.seed_host(spec, k[2]))
-            for u, k in best.items()
-        ],
-        schema=_FRONTIER_PA,
-    )
+    the same seed rows and keep-first, without ~6 Spark jobs (~1.5-2 s of
+    fixed latency) for a few hundred deterministic rows."""
+    seeds = pa.Table.from_pandas(
+        _seed_rows(spec, pd.Series(np.arange(spec.n_seeds))), preserve_index=False
+    ).cast(_FRONTIER_PA)
+    return _take_first(seeds, "url", ORDER_KEY, 1)[0]
 
 
 _NEW_HOST_PA = pa.schema(
@@ -757,11 +769,12 @@ def _select(
     crawl: no sort at all). It is read onto the driver only when `_fetch`
     will fetch it there; a larger one stays a parquet scan. Otherwise each
     host takes its `n_taken` first rows by SELECT_ORDER — on the driver for
-    a frontier under the local cap (`_select_local`), else by two salted
-    Spark windows, skew-safe (Zipf host distributions are the norm —
-    site_model.py:55): a plain PARTITION BY host window sorts one dominant
-    host's ENTIRE pending set (10^9 rows at 10^10-URL scale) in a single
-    task, because the budget bounds the window's output, not its input.
+    a frontier under the local cap (`_select_local`, by `_take_first`),
+    else by two salted Spark windows, skew-safe (Zipf host distributions
+    are the norm — site_model.py:55): a plain PARTITION BY host window
+    sorts one dominant host's ENTIRE pending set (10^9 rows at 10^10-URL
+    scale) in a single task, because the budget bounds the window's
+    output, not its input.
     Stage 1 salts each host's rows into N_SALT_PARTS sub-windows and keeps
     only the per-salt top-n_taken — sound because any row in the global
     top-n_taken has < n_taken rows ahead of it overall, hence < n_taken
@@ -835,32 +848,25 @@ _TAKEN_PA = pa.schema([("host", pa.string()), ("n_taken", pa.int64())])
 
 
 def _select_local(ckpt: str, epoch: int, hosts: _Hosts):
-    """The budget-bound selection on the driver: the frontier left-joined
-    to the plan's (host, n_taken) and sorted by (host, SELECT_ORDER), each
-    row ranked within its host run; rank < n_taken is selected. The same
-    rows as the salted windows, with no Spark job — unless the plan is a
-    DataFrame (the first epoch after reseed or expire_seen, which carry no
-    host_counts): then one collect of its hosts with budget, at most
-    n_frontier rows."""
+    """The budget-bound selection on the driver: `_take_first` of each
+    host's n_taken rows by SELECT_ORDER, over the frontier left-joined to
+    the plan's (host, n_taken). The same rows as the salted windows, with
+    no Spark job — unless the plan is a DataFrame (the first epoch after
+    reseed or expire_seen, which carry no host_counts): then one collect of
+    its hosts with budget, at most n_frontier rows."""
     taken = _cols(hosts.plan, ["host", "n_taken"])
     if isinstance(taken, DataFrame):
         taken = taken.filter(F.col("n_taken") > 0).toArrow()
-    rows = (
-        _read_frontier_local(ckpt, epoch)
-        .join(taken.cast(_TAKEN_PA), "host", join_type="left outer")
-        .sort_by([(c, "ascending") for c in ["host", *SELECT_ORDER]])
+    rows = _read_frontier_local(ckpt, epoch).join(
+        taken.cast(_TAKEN_PA), "host", join_type="left outer"
     )
-    host = rows.column("host").to_numpy(zero_copy_only=False)
-    i = np.arange(len(host))
-    start = np.ones(len(host), dtype=bool)
-    start[1:] = host[1:] != host[:-1]
-    rank = i - np.maximum.accumulate(np.where(start, i, 0))
-    sel = pa.array(rank < pc.fill_null(rows.column("n_taken"), 0).to_numpy())
-    rows = rows.select(FRONTIER_COLS)
-    log = rows.filter(sel)
+    log, rest = (
+        t.select(FRONTIER_COLS)
+        for t in _take_first(rows, "host", SELECT_ORDER, "n_taken")
+    )
     return (
         log,
-        rows.filter(pc.invert(sel)),
+        rest,
         log.append_column("epoch", pa.array(np.full(log.num_rows, epoch, np.int32))),
     )
 
@@ -970,41 +976,47 @@ def _seen_rows_small(ckpt: str, upto_epoch: int, cap: int) -> bool:
     return True
 
 
-def _seen_view_local(ckpt: str, upto_epoch: int) -> set:
-    """`_seen_view` as a driver-side url set (callers gate the size via
-    `_seen_rows_small`): union of per-epoch seen_new MINUS expiry
-    tombstones, a url surviving iff some seen row's admit_epoch exceeds its
-    latest removal — term-for-term the DataFrame view's semantics."""
-    removed: dict = {}
-    for e in range(upto_epoch + 1):
-        if os.path.isdir(ck.table_path(ckpt, e, "seen_removed")):
-            t = ck.read_table_local(
-                ckpt, e, "seen_removed", ["url", "removed_epoch"], _DRIVER_ADD_MAX_ROWS
-            )
-            for u, r in zip(*(c.to_pylist() for c in t.columns)):
-                if removed.get(u, -1) < r:
-                    removed[u] = r
-    seen: set = set()
-    for e in range(upto_epoch + 1):
-        if os.path.isdir(ck.table_path(ckpt, e, "seen_new")):
-            t = ck.read_table_local(
-                ckpt, e, "seen_new", ["url", "admit_epoch"], _DRIVER_ADD_MAX_ROWS
-            )
-            for u, a in zip(*(c.to_pylist() for c in t.columns)):
-                r = removed.get(u)
-                if r is None or a > r:
-                    seen.add(u)
-    return seen
+def _seen_view_local(ckpt: str, upto_epoch: int) -> pa.Array:
+    """`_seen_view`'s urls as a driver-side array (callers gate the size
+    via `_seen_rows_small`): a url is seen iff its latest event in seen_new
+    ∪ seen_removed is an admission, a tombstone winning a tie — the
+    DataFrame view's admit_epoch > max(removed_epoch) rule. `_take_first`
+    keeps each url's latest event."""
+    events = []
+    for name, epoch_col, admitted in (
+        ("seen_new", "admit_epoch", True), ("seen_removed", "removed_epoch", False)
+    ):
+        for e in range(upto_epoch + 1):
+            if os.path.isdir(ck.table_path(ckpt, e, name)):
+                t = ck.read_table_local(
+                    ckpt, e, name, ["url", epoch_col], _DRIVER_ADD_MAX_ROWS
+                )
+                # sorted ascending: the latest epoch first, a tombstone
+                # before an admission of the same epoch
+                after = pc.negate(pc.cast(t.column(epoch_col), pa.int64()))
+                events.append(
+                    pa.table(
+                        {
+                            "url": t.column("url"),
+                            "after": after,
+                            "admitted": pa.array(np.full(t.num_rows, admitted)),
+                        }
+                    )
+                )
+    latest = _take_first(pa.concat_tables(events), "url", ["after", "admitted"], 1)[0]
+    return latest.filter(latest.column("admitted")).column("url").combine_chunks()
 
 
 def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: list):
     """Admission of the epoch's candidate links: keep-first within the
     batch (the smallest (ORDER_KEY, kind, host) per url, disc_epoch = the
     next epoch) and the exact anti-join against the seen view. Returns the
-    admitted rows (FRONTIER_COLS + url_hash): a pyarrow table sorted by url
-    when the link batch and the seen view fit the local caps, else a
-    persisted DataFrame whose anti-join only sees the rows the seen-filter
-    cannot rule out."""
+    admitted rows (FRONTIER_COLS + url_hash). When the link batch and the
+    seen view fit the local caps, that is a pyarrow table sorted by url:
+    keep-first is `_take_first` on url and the anti-join a `pc.is_in` test
+    against `_seen_view_local`. Otherwise it is a persisted DataFrame:
+    keep-first is a min-struct aggregation, and the anti-join only sees
+    the rows the seen-filter cannot rule out."""
     out_epoch = epoch + 1
     fetch_out = ck.table_path(ckpt, out_epoch, "fetch_out")
     if n_links <= _DRIVER_COMMIT_MAX_ROWS and _seen_rows_small(
@@ -1020,13 +1032,10 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
         )
         links = links.set_column(
             1, "disc_epoch", pa.array(np.full(links.num_rows, out_epoch, np.int32))
-        ).sort_by([(c, "ascending") for c in ["url", *ORDER_KEY, "kind", "host"]])
-        url = links.column("url").to_numpy(zero_copy_only=False)
-        first = np.ones(len(url), dtype=bool)
-        first[1:] = url[1:] != url[:-1]
-        seen = _seen_view_local(ckpt, epoch)
-        new = np.fromiter((u not in seen for u in url), bool, len(url))
-        return _with_url_hash(links.filter(pa.array(first & new)))
+        )
+        first = _take_first(links, "url", [*ORDER_KEY, "kind", "host"], 1)[0]
+        seen = pc.is_in(first.column("url"), value_set=_seen_view_local(ckpt, epoch))
+        return _with_url_hash(first.filter(pc.invert(seen)))
     links = (
         spark.read.schema(from_arrow_schema(FETCH_OUT_PA)).parquet(fetch_out)
         .filter(F.col("row_type") == "link")

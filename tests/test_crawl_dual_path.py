@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import glob
 import os
+import re
 import shutil
 import tempfile
 
@@ -192,6 +193,13 @@ def test_driver_and_spark_commits_identical(spark, monkeypatch, drive, spec):
     assert _differences(local, spark_only) == []
     for ckpt in (local, spark_only):
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_local_caps_lists_every_driver_cap():
+    """Every local cap is forced to 0 above, so a new one cannot skip the
+    both-forms comparison."""
+    caps = {n for n in vars(C) if re.fullmatch(r"_DRIVER_\w+_MAX_\w+", n)}
+    assert caps == set(LOCAL_CAPS)
 
 
 def _rows(t):
