@@ -8,10 +8,11 @@ DataFrame dataflow, one path for every epoch:
   plan    host_counts ⟗ politeness ─ _host_plan ─► per-host taken, refill
   select  frontier ─ top-taken per host (O2; salted above the cap) ─►
           selected / remaining
-  fetch   selected ─ make_fetcher (S3) ─► fetch_out: payloads + candidate
-          links (route filter P5 and robots T3 applied where links are
-          generated); on the driver for a small driver-held selection,
-          else through mapInArrow
+  fetch   selected ─ make_fetcher (S3) ─ fetch_out_writer ─► fetch_out:
+          payloads + candidate links (route filter P5 and robots T3
+          applied where links are generated), written by the code that
+          fetched them; on the driver for a small driver-held selection,
+          else in each mapInArrow task
   admit   links ─ keep-first (min per url) ─ seen-filter prefilter + exact
           anti-join vs seen (D1) ─► admitted
   commit  frontier' / host_counts' / politeness' / seen+ / crawl_log /
@@ -49,10 +50,11 @@ Determinism: selection and dedup order by the data-carried key
 so any parallelism level yields the reference crawl order exactly
 (refsim.simulate is the oracle; ref keep-first semantics main.py:111).
 
-Scale design (100 TB / 10^10 URLs): payload bytes never shuffle (fetched
-in-partition, written in-partition); only ~100-byte link rows shuffle for
-dedup; the seen anti-join is Bloom-prefiltered so definite-new URLs skip it;
-the frontier shuffles hash-partitioned by host (politeness is a per-host
+Scale design (100 TB / 10^10 URLs): payload bytes never leave the Python
+worker that fetched them (fetched and written in-partition: no shuffle, no
+hop into the JVM); only ~100-byte link rows shuffle for dedup; the seen
+anti-join is Bloom-prefiltered so definite-new URLs skip it; the frontier
+shuffles hash-partitioned by host (politeness is a per-host
 constraint, so host-partitioning also co-locates the budget join); skewed
 hosts can't exceed their politeness budget, which bounds per-host *fetch*
 work by construction, and the constrained selection window is salted
@@ -79,9 +81,9 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import from_arrow_schema
 
+from ..crawler import fetcher
 from ..crawler.bloom import BloomFilter
 from ..crawler.cuckoo import CuckooFilter
-from ..crawler.fetcher import FETCH_OUT_PA, make_fetcher
 from ..functions.urls import url_hash64
 from ..operators.skew import with_salt
 from ..sources import site_model as sm
@@ -179,7 +181,8 @@ class CrawlResult:
         return _seen_view(self.spark, self.ckpt, last if last is not None else 0)
 
     def metrics(self) -> DataFrame:
-        """Per-partition fetch lineage rows emitted by the fetch UDF (T6)."""
+        """Fetch lineage rows (T6): one per batch the fetch function
+        fetched."""
         return (
             self._union("fetch_out")
             .filter(F.col("row_type") == "metric")
@@ -904,15 +907,13 @@ def _fetch(
     n_selected: int,
 ) -> int:
     """Fetch the selected rows into the next epoch's fetch_out; returns the
-    number of candidate links written. One fetch function (`make_fetcher`),
-    two forms: a driver-held selection of at most _DRIVER_FETCH_MAX_URLS
-    rows is fetched on the driver and each fetch_out/row_type=<kind> dir
-    written as one file; any other runs through mapInArrow. Either way
-    payloads are written exactly once before any shuffle, fetch_out is
-    partitioned by row_type so every downstream reader prunes the heavy
-    payload files away, and parquet compression is off because image
-    payloads are already dense."""
-    links_acc = None
+    number of candidate links written. One fetch function (`make_fetcher`)
+    inside one writer (`fetch_out_writer`), two forms: a driver-held
+    selection of at most _DRIVER_FETCH_MAX_URLS rows is fetched and written
+    on the driver, one file per row_type; any other runs through
+    mapInArrow, each task writing its own file per row_type. Either way
+    payloads are written exactly once, by the Python code that fetched
+    them, and only the per-call link counts come back."""
     if isinstance(selected, DataFrame) or n_selected > _DRIVER_FETCH_MAX_URLS:
         # fetch tasks must be sized by fetch *cost*, not by input bytes: the
         # frontier rows are ~100 B each, so a byte-based scan split would run
@@ -923,44 +924,15 @@ def _fetch(
             max(1, -(-n_selected // _MIN_URLS_PER_FETCH_TASK)),
         )
         selected = _to_df(spark, selected).repartition(fetch_par)
-        # the link count rides back on an accumulator instead of a probe job
-        # over the metric rows (see make_fetcher: retries can only inflate
-        # it, and the epoch only branches on == 0, so inflation is benign)
-        links_acc = spark.sparkContext.accumulator(0)
-    rows = _map_arrow(
-        make_fetcher(spec, epoch, _robots(ckpt), links_acc=links_acc),
-        selected,
-        FETCH_OUT_PA,
+    out_dir = ck.table_path(ckpt, epoch + 1, "fetch_out")
+    shutil.rmtree(out_dir, ignore_errors=True)
+    fetch = fetcher.make_fetcher(spec, epoch, _robots(ckpt))
+    counts = _map_arrow(
+        fetcher.fetch_out_writer(fetch, out_dir), selected, fetcher.FETCH_COUNT_PA
     )
-    if isinstance(rows, DataFrame):
-        (
-            rows.write.mode("overwrite")
-            .partitionBy("row_type")
-            .option("compression", "none")
-            # payload bytes are entropy-dense and unique (real crawls:
-            # already-compressed images) — parquet's dictionary attempt
-            # buffers and hashes every ~9 KB value before falling back to
-            # plain encoding on every page; disabling it read the
-            # steady-state epoch at 2.9-3.2 → 2.5 s fetch (CPU 53-57 → 49,
-            # same-window A/B r6)
-            .option("parquet.enable.dictionary", "false")
-            .parquet(ck.table_path(ckpt, epoch + 1, "fetch_out"))
-        )
-        return links_acc.value
-    # the layout Spark's partitionBy writer produces: one dir per row_type,
-    # its files holding every other column with the same types; cleared
-    # first, as the Spark writer's overwrite mode does
-    shutil.rmtree(ck.table_path(ckpt, epoch + 1, "fetch_out"), ignore_errors=True)
-    kinds = rows.column("row_type")
-    n_links = 0
-    for kind in pc.unique(kinds).to_pylist():
-        part = rows.filter(pc.equal(kinds, kind)).drop_columns(["row_type"])
-        n_links += part.num_rows if kind == "link" else 0
-        ck.write_table_local(
-            ckpt, epoch + 1, os.path.join("fetch_out", f"row_type={kind}"), part,
-            compression="none", use_dictionary=False,
-        )
-    return n_links
+    if isinstance(counts, DataFrame):
+        counts = counts.toArrow()
+    return pc.sum(counts.column("n_links")).as_py()
 
 
 def _seen_rows_small(ckpt: str, upto_epoch: int, cap: int) -> bool:
@@ -1022,14 +994,11 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
     if n_links <= _DRIVER_COMMIT_MAX_ROWS and _seen_rows_small(
         ckpt, epoch, _DRIVER_ADD_MAX_ROWS
     ):
-        link_dir = os.path.join(fetch_out, "row_type=link")
-        # n_links can only over-count (task retries): no link rows written
-        # means nothing to admit
-        links = (
-            pq.read_table(link_dir, columns=FRONTIER_COLS).cast(_FRONTIER_PA)
-            if os.path.isdir(link_dir)
-            else _FRONTIER_PA.empty_table()
-        )
+        # n_links is exact and the epoch admits only when it is > 0, so
+        # the link dir exists
+        links = pq.read_table(
+            os.path.join(fetch_out, "row_type=link"), columns=FRONTIER_COLS
+        ).cast(_FRONTIER_PA)
         links = links.set_column(
             1, "disc_epoch", pa.array(np.full(links.num_rows, out_epoch, np.int32))
         )
@@ -1037,7 +1006,7 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
         seen = pc.is_in(first.column("url"), value_set=_seen_view_local(ckpt, epoch))
         return _with_url_hash(first.filter(pc.invert(seen)))
     links = (
-        spark.read.schema(from_arrow_schema(FETCH_OUT_PA)).parquet(fetch_out)
+        spark.read.schema(from_arrow_schema(fetcher.FETCH_OUT_PA)).parquet(fetch_out)
         .filter(F.col("row_type") == "link")
         .select(*FRONTIER_COLS)
         .withColumn("disc_epoch", F.lit(out_epoch))

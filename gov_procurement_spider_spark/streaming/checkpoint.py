@@ -91,7 +91,7 @@ def read_table_local(
     return pa.concat_tables(parts)
 
 
-def write_table_local(ckpt: str, epoch: int, name: str, table, **options) -> None:
+def write_table_local(ckpt: str, epoch: int, name: str, table) -> None:
     """Driver-side write of a SMALL epoch table (a ``pyarrow.Table``) as one
     deterministic parquet file — the write-side counterpart of
     ``read_table_local`` (round 6). A Spark write job costs ~0.3 s of
@@ -101,15 +101,13 @@ def write_table_local(ckpt: str, epoch: int, name: str, table, **options) -> Non
     above glob ``*.parquet``; Spark's reader accepts the same files) at
     ~1 ms. Callers own the bound and the schema — pass explicit types that
     match what the distributed writer produces, or cross-epoch unions
-    break; ``options`` go to ``pq.write_table`` (the fetch_out writer's
-    compression and dictionary settings). Deterministic: fixed filename, no
-    timestamps in our metadata, same rows → same bytes (resume replay stays
-    byte-identical)."""
+    break. Deterministic: fixed filename, no timestamps in our metadata,
+    same rows → same bytes (resume replay stays byte-identical)."""
     import pyarrow.parquet as pq
 
     root = table_path(ckpt, epoch, name)
     os.makedirs(root, exist_ok=True)
-    pq.write_table(table, os.path.join(root, "part-00000-driver.parquet"), **options)
+    pq.write_table(table, os.path.join(root, "part-00000-driver.parquet"))
 
 
 def read_column_local(

@@ -24,6 +24,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import DataFrame
 
+from gov_procurement_spider_spark.crawler import fetcher
 from gov_procurement_spider_spark.crawler.cuckoo import CuckooFilter
 from gov_procurement_spider_spark.plans import crawl as C
 from gov_procurement_spider_spark.sources.site_model import SiteSpec
@@ -84,16 +85,29 @@ def _growing_then_recrawl(spark, spec, ckpt):
 
 
 def _run_both(spark, monkeypatch, drive, spec):
-    ckpts = []
+    """Runs `drive` as-is and with the local caps at 0. Returns the two
+    checkpoints and, per run, the type name of the input each fetch ran over
+    (a driver-held pyarrow "Table" or a "DataFrame")."""
+    ckpts, fetched = [], []
+    map_arrow = C._map_arrow
     for spark_only in (False, True):
         ckpt = tempfile.mkdtemp(prefix=f"dual_{'spark' if spark_only else 'local'}_")
+        forms = []
+
+        def spy(fn, t, schema):
+            if schema.equals(fetcher.FETCH_COUNT_PA):
+                forms.append(type(t).__name__)
+            return map_arrow(fn, t, schema)
+
         with monkeypatch.context() as m:
+            m.setattr(C, "_map_arrow", spy)
             if spark_only:
                 for cap in LOCAL_CAPS:
                     m.setattr(C, cap, 0)
             drive(spark, spec, ckpt)
         ckpts.append(ckpt)
-    return ckpts
+        fetched.append(forms)
+    return ckpts, fetched
 
 
 def _table(path):
@@ -174,22 +188,20 @@ def _differences(local, spark_only):
     ids=["budget_bound", "fractional_rate", "cuckoo_growth_recrawl"],
 )
 def test_driver_and_spark_commits_identical(spark, monkeypatch, drive, spec):
-    local, spark_only = _run_both(spark, monkeypatch, drive, spec)
+    (local, spark_only), fetched = _run_both(spark, monkeypatch, drive, spec)
     # the two runs really took different paths: a driver-side write is one
-    # fixed-name file per table or fetch_out dir (ck.write_table_local), and
-    # with the caps at 0 only empty tables may be written that way
-    for table_glob in (
-        ("*", "part-*-driver.parquet"),
-        ("fetch_out", "row_type=*", "part-*-driver.parquet"),
-    ):
-        driver_rows = [
-            [
-                pq.ParquetFile(f).metadata.num_rows
-                for f in glob.glob(os.path.join(c, "epoch=*", *table_glob))
-            ]
-            for c in (local, spark_only)
+    # fixed-name file per table (ck.write_table_local), and with the caps at
+    # 0 only empty tables may be written that way; the local run fetched
+    # only driver-held tables, the other only DataFrames
+    driver_rows = [
+        [
+            pq.ParquetFile(f).metadata.num_rows
+            for f in glob.glob(os.path.join(c, "epoch=*", "*", "part-*-driver.parquet"))
         ]
-        assert any(driver_rows[0]) and not any(driver_rows[1]), table_glob
+        for c in (local, spark_only)
+    ]
+    assert any(driver_rows[0]) and not any(driver_rows[1])
+    assert set(fetched[0]) == {"Table"} and set(fetched[1]) == {"DataFrame"}
     assert _differences(local, spark_only) == []
     for ckpt in (local, spark_only):
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -6,12 +6,14 @@ results.
 
 from __future__ import annotations
 
+import glob
 import os
 import tempfile
 
 import numpy as np
 import pytest
 
+from gov_procurement_spider_spark.crawler import fetcher
 from gov_procurement_spider_spark.crawler.bloom import BloomFilter
 from gov_procurement_spider_spark.functions import images
 from gov_procurement_spider_spark.plans import crawl as crawl_plan
@@ -81,15 +83,9 @@ def test_metrics_lineage(crawl, sim):
     assert all(r.wall_ms >= 0 for r in m)
 
 
-def test_resume_byte_identical(spark, crawl, sim):
-    """Kill after 3 epochs → resume → identical crawl order, seen set, and
-    payload bytes as the uninterrupted run (T5; ref has no counterpart —
-    main.py:55-68 loses everything)."""
-    ckpt = tempfile.mkdtemp(prefix="crawl_resume_")
-    partial = run_crawl(spark, SPEC, ckpt, max_epochs=3)
-    assert partial.epochs == 3
-    resumed = run_crawl(spark, SPEC, ckpt)  # picks up from last manifest
-
+def _assert_resumed_equal(resumed, crawl, sim):
+    """The resumed crawl's order, seen set and payload bytes equal refsim's
+    and the uninterrupted run's."""
     engine = [tuple(r) for r in resumed.crawl_order().select(*ORDER_COLS).collect()]
     assert engine == [tuple(o) for o in sim.crawl_order]
     assert {r.url for r in resumed.seen().collect()} == sim.url_seen
@@ -101,6 +97,45 @@ def test_resume_byte_identical(spark, crawl, sim):
         r.url: (bytes(r.bytes), r.caption, r.phash) for r in resumed.fetched().collect()
     }
     assert base_payloads == res_payloads
+
+
+def test_resume_byte_identical(spark, crawl, sim):
+    """Kill after 3 epochs → resume → identical crawl order, seen set, and
+    payload bytes as the uninterrupted run (T5; ref has no counterpart —
+    main.py:55-68 loses everything)."""
+    ckpt = tempfile.mkdtemp(prefix="crawl_resume_")
+    partial = run_crawl(spark, SPEC, ckpt, max_epochs=3)
+    assert partial.epochs == 3
+    resumed = run_crawl(spark, SPEC, ckpt)  # picks up from last manifest
+    _assert_resumed_equal(resumed, crawl, sim)
+
+
+def test_resume_after_crash_inside_payload_file(spark, crawl, sim, monkeypatch):
+    """Kill epoch 2's fetch after a payload batch reached its fetch_out
+    file → resume unpatched → the same crawl as the uninterrupted run."""
+    make_fetcher = fetcher.make_fetcher
+
+    def crashing(spec, epoch, robots):
+        fetch = make_fetcher(spec, epoch, robots)
+
+        def crash(batches):
+            for rb in fetch(batches):
+                yield rb
+                if rb.column(0)[0].as_py() == "payload":
+                    raise RuntimeError("killed inside fetch_out")
+
+        return crash if epoch == 2 else fetch
+
+    ckpt = tempfile.mkdtemp(prefix="crawl_crash_")
+    with monkeypatch.context() as m:
+        m.setattr(fetcher, "make_fetcher", crashing)
+        with pytest.raises(RuntimeError, match="killed inside fetch_out"):
+            run_crawl(spark, SPEC, ckpt)
+    assert ck.last_committed(ckpt) == 2
+    payload_dir = os.path.join(ck.table_path(ckpt, 3, "fetch_out"), "row_type=payload")
+    assert os.listdir(payload_dir) and not glob.glob(f"{payload_dir}/*.parquet")
+    resumed = run_crawl(spark, SPEC, ckpt)
+    _assert_resumed_equal(resumed, crawl, sim)
 
 
 def test_fractional_rate_engine_equivalence(spark):
