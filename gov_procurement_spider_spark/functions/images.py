@@ -207,9 +207,3 @@ def ahash64(pixels: np.ndarray) -> int:
     bits = (blocks > blocks.sum() / 64.0).ravel()  # == blocks.mean(), sans wrapper
     v = int.from_bytes(np.packbits(bits).tobytes(), "big")
     return v - (1 << 64) if v >= (1 << 63) else v
-
-
-def make_payload(pixel_seed: int, w: int, h: int, fmt: str) -> tuple[bytes, int]:
-    """(encoded bytes, phash) for a detail page's image."""
-    px = gen_pixels(pixel_seed, w, h)
-    return encode_image(px, fmt), ahash64(px)

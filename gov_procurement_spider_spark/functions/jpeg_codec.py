@@ -107,7 +107,6 @@ def _zigzag() -> np.ndarray:
 
 
 _ZZ = _zigzag()
-_UNZZ = np.argsort(_ZZ)
 
 # orthonormal 8-point DCT-II matrix: JPEG's FDCT/IDCT pair is exactly
 # coef = T @ block @ T.T (the 1/4·C(u)C(v) spelling collapses into the

@@ -16,7 +16,9 @@ DataFrame dataflow, one path for every epoch:
   admit   links ─ keep-first (min per url) ─ seen-filter prefilter + exact
           anti-join vs seen (D1) ─► admitted
   commit  frontier' / host_counts' / politeness' / seen+ / crawl_log /
-          seen-filter, one manifest per epoch (T5) — `_commit`
+          seen-filter, one manifest per epoch (T5) — `_commit_epoch`, the
+          one commit path of every epoch kind (init, run_epoch, expiry,
+          reseed)
 
 A tick epoch (no budget anywhere) skips fetch and admit; a link-free epoch
 skips admit. Each table is materialised on the driver (pyarrow, one sorted
@@ -30,13 +32,13 @@ over a DataFrame (the host-keyed join; a selection above
 `_DRIVER_FETCH_MAX_URLS`). A small crawl therefore launches no Spark job
 at all. Two steps are kept in two forms, Spark for big inputs and pyarrow
 for small ones: the budget-bound selection (salted windows) and
-admission's keep-first (a min-struct aggregation) plus exact seen
-anti-join. Their driver form is one function, `_take_first` — the first n
-rows of each key run — which also dedups the seed frontier, picks the
-seen view's latest event per url and gates the streaming politeness
-operator (streaming/stateful_politeness.py). tests/test_crawl_dual_path.py
-pins both materialisations to the same committed rows, fetch_out and
-filters.
+admission's keep-first (`_first_per_url`, a min-struct aggregation) plus
+exact seen anti-join. Their driver form is one function, `_take_first` —
+the first n rows of each key run — which also dedups the seed frontier,
+picks the seen view's latest event per url and gates the streaming
+politeness operator (streaming/stateful_politeness.py).
+tests/test_crawl_dual_path.py pins both materialisations to the same
+committed rows, fetch_out and filters.
 
 The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
 filter (crawler/cuckoo.py) when per-key deletion is needed: expire_seen
@@ -249,6 +251,20 @@ def _seed_rows(spec: SiteSpec, ids: pd.Series) -> pd.DataFrame:
     )
 
 
+def _first_per_url(df: DataFrame) -> DataFrame:
+    """Keep-first on url in Spark: each url's row with the smallest
+    (ORDER_KEY, kind, host), as FRONTIER_COLS. A min-struct aggregation is
+    one partial+final hash agg — no sort, cheaper than a row_number window;
+    the order key leads the struct so the lexicographic min IS the first
+    occurrence. The Spark form of `_take_first(t, "url", ..., 1)`."""
+    return (
+        df.groupBy("url")
+        .agg(F.min(F.struct(*ORDER_KEY, "kind", "host")).alias("_first"))
+        .select("url", "_first.*")
+        .select(*FRONTIER_COLS)
+    )
+
+
 def _seed_frontier(spark: SparkSession, spec: SiteSpec) -> DataFrame:
     """The deduped seed frontier (keep-first on url — parity with refsim's
     seed admission loop), host-partitioned. Used by init_state and reseed."""
@@ -263,13 +279,7 @@ def _seed_frontier(spark: SparkSession, spec: SiteSpec) -> DataFrame:
         )
         .withColumn("seed_idx", F.col("seed_idx").cast("int"))
     )
-    wdup = W.partitionBy("url").orderBy(*ORDER_KEY)
-    return (
-        seeds.withColumn("_rn", F.row_number().over(wdup))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-        .repartition("host")
-    )
+    return _first_per_url(seeds).repartition("host")
 
 
 # a driver-written table is one parquet file in this row order: same rows →
@@ -398,7 +408,8 @@ def init_state(
     new_hosts = _map_arrow(
         _per_batch(partial(_new_hosts, spec=spec)), hosts, _NEW_HOST_PA
     )
-    _write_all(
+    _commit_epoch(
+        spark,
         ckpt,
         0,
         {
@@ -408,12 +419,10 @@ def init_state(
             "politeness": _cols(new_hosts, ["host", "tokens"]),
             "robots": _cols(new_hosts, ["host", "disallow_prefixes"]),
         },
+        _make_seen_filter(filter_kind, _bloom_expected(spec)),
+        {"kind": "init"},
+        _Phases(),
     )
-    n_seeds = ck.table_num_rows(ckpt, 0, "seen_new")
-    bf = _make_seen_filter(filter_kind, _bloom_expected(spec))
-    _filter_add_after_write(bf, ckpt, 0, _cols(frontier, ["url_hash"]), n_seeds)
-    bf.save(_filter_path(ckpt, 0))
-    ck.commit_epoch(ckpt, 0, {"n_seeds": n_seeds, "kind": "init"})
 
 
 # ---- host-sized state: one pyarrow implementation, on the driver or in
@@ -491,16 +500,6 @@ def _map_arrow(fn, t, schema: pa.Schema):
     return pa.Table.from_batches(fn(t.combine_chunks().to_batches()), schema=schema)
 
 
-def _read_host_counts(spark: SparkSession, ckpt: str, epoch: int) -> DataFrame | None:
-    """The carried per-host pending-count table for `epoch`'s frontier, or
-    None when absent (pre-carry checkpoint, reseed/expiry epoch) — callers
-    then recompute from the frontier. Explicit schema: no inference listing."""
-    path = ck.table_path(ckpt, epoch, "host_counts")
-    if not os.path.isdir(path):
-        return None
-    return spark.read.schema(from_arrow_schema(_HOST_COUNTS_PA)).parquet(path)
-
-
 @dataclass
 class _Hosts:
     plan: object  # _host_plan output: pa.Table on the driver, else DataFrame
@@ -513,8 +512,8 @@ def _plan_hosts(
 ) -> _Hosts:
     """Run `_host_plan` over the epoch's host tables. Both are |hosts| rows:
     the carried host_counts (round 5 — the plan phase aggregates |hosts|
-    rows instead of re-shuffling the frontier; recomputed from the frontier
-    when absent) and politeness. Under the local cap they are read and
+    rows instead of re-shuffling the frontier; every committed epoch
+    carries it) and politeness. Under the local cap they are read and
     planned on the driver with no Spark job; above it through mapInArrow
     over their full outer join, persisted for selection and the commit."""
     fn = _per_batch(
@@ -523,7 +522,7 @@ def _plan_hosts(
             refill=float(spec.rate_per_sec * spec.epoch_seconds),
         )
     )
-    if os.path.isdir(ck.table_path(ckpt, epoch, "host_counts")) and all(
+    if all(
         ck.table_num_rows(ckpt, epoch, t) <= _DRIVER_ADD_MAX_ROWS
         for t in ("host_counts", "politeness")
     ):
@@ -542,10 +541,10 @@ def _plan_hosts(
             pc.sum(plan.column("n_pending")).as_py() or 0,
             pc.sum(plan.column("n_taken")).as_py() or 0,
         )
-    host_counts = _read_host_counts(spark, ckpt, epoch)
-    if host_counts is None:
-        host_counts = _count_by_host(_read_frontier(spark, ckpt, epoch), "n_pending")
-    # explicit schema, as in _read_frontier
+    # explicit schemas, as in _read_frontier
+    host_counts = spark.read.schema(from_arrow_schema(_HOST_COUNTS_PA)).parquet(
+        ck.table_path(ckpt, epoch, "host_counts")
+    )
     politeness = spark.read.schema("host string, tokens double").parquet(
         ck.table_path(ckpt, epoch, "politeness")
     )
@@ -593,25 +592,6 @@ _DRIVER_ADD_MAX_ROWS = 1 << 20
 # crawl_polite epoch (14-318 URLs) fetches on the driver, a 51,200-URL
 # steady-state epoch in Spark.
 _DRIVER_FETCH_MAX_URLS = 1 << 10
-
-
-def _filter_add_after_write(
-    flt, ckpt: str, epoch: int, hashes_df: DataFrame, n_rows: int
-) -> None:
-    """Add an admission batch whose hashes are ALREADY persisted as the
-    epoch's seen_new table: small batches read the column driver-side (no
-    Spark job — the distributed build is one full job of fixed ~0.5 s
-    latency to hash a few hundred rows), large ones go distributed.
-    Replay-deterministic either way (sorted part files / deterministic
-    coalesce), so resume stays byte-identical."""
-    if n_rows <= _DRIVER_ADD_MAX_ROWS:
-        flt.add_many(
-            ck.read_column_local(
-                ckpt, epoch, "seen_new", "url_hash", max_rows=_DRIVER_ADD_MAX_ROWS
-            )
-        )
-    else:
-        _filter_add_from_df(flt, hashes_df, n_rows=n_rows)
 
 
 _BUILD_ROWS_PER_PART = 50_000_000  # ~1 partial per 50M hashes per task
@@ -854,9 +834,10 @@ def _select_local(ckpt: str, epoch: int, hosts: _Hosts):
     """The budget-bound selection on the driver: `_take_first` of each
     host's n_taken rows by SELECT_ORDER, over the frontier left-joined to
     the plan's (host, n_taken). The same rows as the salted windows, with
-    no Spark job — unless the plan is a DataFrame (the first epoch after
-    reseed or expire_seen, which carry no host_counts): then one collect of
-    its hosts with budget, at most n_frontier rows."""
+    no Spark job — unless the plan is a DataFrame (host_counts or
+    politeness above `_DRIVER_ADD_MAX_ROWS` under a frontier within the
+    local cap): then one collect of its hosts with budget, at most
+    n_frontier rows."""
     taken = _cols(hosts.plan, ["host", "n_taken"])
     if isinstance(taken, DataFrame):
         taken = taken.filter(F.col("n_taken") > 0).toArrow()
@@ -987,8 +968,8 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
     seen view fit the local caps, that is a pyarrow table sorted by url:
     keep-first is `_take_first` on url and the anti-join a `pc.is_in` test
     against `_seen_view_local`. Otherwise it is a persisted DataFrame:
-    keep-first is a min-struct aggregation, and the anti-join only sees
-    the rows the seen-filter cannot rule out."""
+    keep-first is `_first_per_url`, and the anti-join only sees the rows
+    the seen-filter cannot rule out."""
     out_epoch = epoch + 1
     fetch_out = ck.table_path(ckpt, out_epoch, "fetch_out")
     if n_links <= _DRIVER_COMMIT_MAX_ROWS and _seen_rows_small(
@@ -1011,15 +992,7 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
         .select(*FRONTIER_COLS)
         .withColumn("disc_epoch", F.lit(out_epoch))
     )
-    # min-struct aggregation: one partial+final hash agg — no sort, cheaper
-    # than a row_number window; the admission key leads the struct so the
-    # lexicographic min IS the first occurrence
-    cand = (
-        links.groupBy("url")
-        .agg(F.min(F.struct(*ORDER_KEY, "kind", "host")).alias("_first"))
-        .select("url", "_first.*")
-        .withColumn("url_hash", url_hash64("url"))
-    )
+    cand = _first_per_url(links).withColumn("url_hash", url_hash64("url"))
     flt = _load_seen_filter(_filter_path(ckpt, epoch))
     cand = cand.withColumn("_maybe", _seen_filter_udf(flt)("url_hash")).persist()
     cached.append(cand)
@@ -1049,25 +1022,76 @@ class _Phases(dict):
         self._t = now
 
 
-def _commit(
-    spark: SparkSession, ckpt: str, epoch: int, hosts: _Hosts, remaining,
-    crawl_log, admitted, phases: _Phases,
+def _commit_epoch(
+    spark: SparkSession, ckpt: str, epoch: int, tables: dict, flt, lineage: dict,
+    phases: _Phases,
 ) -> None:
-    """Commit epoch `epoch`'s transition as epoch `epoch + 1`: the next
-    frontier (remaining ∪ admitted), host_counts (`_host_carry`),
-    politeness (`_host_plan`'s refill), seen_new, crawl_log, the seen-filter
-    with the admitted hashes, and last the manifest. Driver-held inputs
-    write driver-side; any Spark input makes its table a Spark write."""
-    out_epoch = epoch + 1
-    n_admitted = 0
-    frontier = [remaining]
-    if admitted is not None:
+    """The one commit path of every epoch kind (init, run_epoch, expiry,
+    reseed): write `tables` (`_write_all`), add the written seen_new hashes
+    to the seen-filter `flt` and save it, and last write the manifest — the
+    caller's `lineage` plus urls_admitted, seen_filter_load and phase_ms.
+    The hashes are read back from the written table: on the driver up to
+    `_DRIVER_ADD_MAX_ROWS` (a distributed build is a full job of ~0.5 s
+    fixed latency to hash a few hundred rows), else by a distributed build
+    over its scan. Replay-deterministic either way (sorted part files /
+    deterministic coalesce), so resume stays byte-identical."""
+    seen_new = tables.pop("seen_new", None)
+    if seen_new is not None:
         # written first: for a Spark batch this is the one pass that
         # computes `admitted` into its cache (no separate count job — the
         # count comes from the written parquet footers) before the
         # concurrent writes below read it
-        _write_all(ckpt, out_epoch, {"seen_new": _seen_new(admitted, out_epoch)})
-        n_admitted = ck.table_num_rows(ckpt, out_epoch, "seen_new")
+        _write_all(ckpt, epoch, {"seen_new": seen_new})
+    _write_all(ckpt, epoch, tables)
+    phases.mark("state_writes")
+
+    n_admitted = 0 if seen_new is None else ck.table_num_rows(ckpt, epoch, "seen_new")
+    if n_admitted:
+        if (
+            isinstance(flt, CuckooFilter)
+            and len(flt) + n_admitted > _CUCKOO_GROW_LOAD * flt.capacity
+        ):
+            # the batch would cross the safe load factor: rebuild larger
+            # from the exact seen view (seen_new for this epoch is already
+            # written, so the rebuild covers the batch too)
+            flt = _grow_cuckoo(spark, ckpt, epoch, flt, len(flt) + n_admitted)
+        elif n_admitted <= _DRIVER_ADD_MAX_ROWS:
+            flt.add_many(
+                ck.read_column_local(
+                    ckpt, epoch, "seen_new", "url_hash", _DRIVER_ADD_MAX_ROWS
+                )
+            )
+        else:
+            hashes = ck.read_table(spark, ckpt, epoch, "seen_new").select("url_hash")
+            _filter_add_from_df(flt, hashes, n_admitted)
+    flt.save(_filter_path(ckpt, epoch))
+    filter_load = _seen_filter_load(flt)  # inside the timed phase
+    phases.mark("bloom")
+    ck.commit_epoch(
+        ckpt,
+        epoch,
+        {
+            **lineage,
+            "urls_admitted": n_admitted,
+            "seen_filter_load": filter_load,
+            "phase_ms": phases,
+        },
+    )
+
+
+def _commit(
+    spark: SparkSession, ckpt: str, epoch: int, hosts: _Hosts, remaining,
+    crawl_log, admitted, phases: _Phases,
+) -> None:
+    """Commit epoch `epoch`'s transition as epoch `epoch + 1`: assemble the
+    next frontier (remaining ∪ admitted), host_counts (`_host_carry`),
+    politeness (`_host_plan`'s refill), seen_new and crawl_log, and hand
+    them with the previous seen-filter to `_commit_epoch`. Driver-held
+    inputs write driver-side; any Spark input makes its table a Spark
+    write."""
+    out_epoch = epoch + 1
+    frontier = [remaining]
+    if admitted is not None:
         frontier.append(_cols(admitted, FRONTIER_COLS))
     if any(isinstance(t, DataFrame) for t in frontier):
         dfs = [
@@ -1087,42 +1111,25 @@ def _commit(
         "host_counts": _carry_host_counts(spark, hosts.plan, admitted),
         "politeness": _cols(hosts.plan, ["host", "tokens"]),
     }
+    if admitted is not None:
+        tables["seen_new"] = _seen_new(admitted, out_epoch)
     if crawl_log is not None:
         tables["crawl_log"] = crawl_log
-    _write_all(ckpt, out_epoch, tables)
-    phases.mark("state_writes")
-
-    flt = _load_seen_filter(_filter_path(ckpt, epoch))
-    if n_admitted:
-        if (
-            isinstance(flt, CuckooFilter)
-            and len(flt) + n_admitted > _CUCKOO_GROW_LOAD * flt.capacity
-        ):
-            # the batch would cross the safe load factor: rebuild larger
-            # from the exact seen view (seen_new for this epoch is already
-            # written, so the rebuild covers the batch too)
-            flt = _grow_cuckoo(spark, ckpt, out_epoch, flt, len(flt) + n_admitted)
-        else:
-            _filter_add_after_write(
-                flt, ckpt, out_epoch, _cols(admitted, ["url_hash"]), n_admitted
-            )
-    flt.save(_filter_path(ckpt, out_epoch))
-    filter_load = _seen_filter_load(flt)  # inside the timed phase
-    phases.mark("bloom")
-    ck.commit_epoch(
+    _commit_epoch(
+        spark,
         ckpt,
         out_epoch,
+        tables,
+        _load_seen_filter(_filter_path(ckpt, epoch)),
         {
             "processed_epoch": epoch,
             "urls_fetched": hosts.n_selected,
-            "urls_admitted": n_admitted,
             # a fetch of the whole frontier logs exactly the frontier
             # snapshot: a manifest pointer instead of a re-write
             # (CrawlResult.crawl_order reassembles it)
             "crawl_log_from_frontier": hosts.n_selected == hosts.n_frontier,
-            "seen_filter_load": filter_load,
-            "phase_ms": phases,
         },
+        phases,
     )
 
 
@@ -1201,7 +1208,8 @@ def init_steady_frontier(
         [(f"h{i}.test", float(spec.burst), []) for i in range(spec.n_hosts)],
         "host string, tokens double, disallow_prefixes array<string>",
     )
-    _write_all(
+    _commit_epoch(
+        spark,
         ckpt,
         0,
         {
@@ -1211,15 +1219,10 @@ def init_steady_frontier(
             "politeness": hosts.select("host", "tokens"),
             "robots": hosts.select("host", "disallow_prefixes"),
         },
+        _make_seen_filter(filter_kind, max(n_urls, 1024)),
+        {"kind": "steady_state_init"},
+        _Phases(),
     )
-    bf = _make_seen_filter(filter_kind, max(n_urls, 1024))
-    _filter_add_from_df(
-        bf,
-        spark.read.parquet(ck.table_path(ckpt, 0, "seen_new")).select("url_hash"),
-        n_rows=n_urls,
-    )
-    bf.save(_filter_path(ckpt, 0))
-    ck.commit_epoch(ckpt, 0, {"n_urls": n_urls, "kind": "steady_state_init"})
 
 
 def run_crawl(
@@ -1268,11 +1271,12 @@ def expire_seen(
       rebuild. The members-only deletion contract holds by construction:
       the batch is first semi-joined against the exact seen view.
     - bloom: cannot forget; the filter is REBUILT from the post-expiry
-      exact set (a full scan — the cost that motivates the cuckoo
-      fallback).
+      exact set, the seen view less the expired urls (a full scan — the
+      cost that motivates the cuckoo fallback).
 
-    Frontier and politeness carry forward unchanged; returns the number of
-    URLs actually expired. The cuckoo delete streams the expiry hashes
+    Frontier, host_counts and politeness carry forward unchanged, as copies
+    of the committed dirs (exact bytes, no Spark job), and the epoch commits
+    through `_commit_epoch`; returns the number of URLs actually expired. The cuckoo delete streams the expiry hashes
     through the driver in bounded ``delete_chunk`` batches (toLocalIterator
     — one partition in flight at a time), so a full-seen-set recrawl sweep
     (crawl_job --recrawl passes prior.seen() wholesale) holds O(chunk)
@@ -1285,23 +1289,16 @@ def expire_seen(
     assert last is not None, "expire_seen needs an initialised checkpoint"
     out_epoch = last + 1
 
+    seen = _seen_view(spark, ckpt, last)
     gone = (
         urls_df.select("url")
         .distinct()
-        .join(_seen_view(spark, ckpt, last), "url", "semi")
+        .join(seen, "url", "semi")
         .withColumn("url_hash", url_hash64("url"))
         .withColumn("removed_epoch", F.lit(out_epoch))
         .persist()
     )
     n_expired = gone.count()
-    ck.write_table(gone, ckpt, out_epoch, "seen_removed")
-    ck.write_table(
-        ck.read_table(spark, ckpt, last, "frontier"), ckpt, out_epoch, "frontier"
-    )
-    ck.write_table(
-        ck.read_table(spark, ckpt, last, "politeness"), ckpt, out_epoch, "politeness"
-    )
-
     flt = _load_seen_filter(_filter_path(ckpt, last))
     if isinstance(flt, CuckooFilter):
         buf: list[int] = []
@@ -1316,18 +1313,24 @@ def expire_seen(
         # same geometry as the original (NOT sized to the post-expiry
         # count: the crawl keeps adding keys at the spec's rate, and a
         # shrunken filter would saturate)
-        remaining = _seen_view(spark, ckpt, out_epoch).select(
+        remaining = seen.join(gone, "url", "left_anti").select(
             url_hash64("url").alias("url_hash")
         )
         rebuilt = BloomFilter.empty_like(flt)
         _bloom_add_from_df(rebuilt, remaining)
         flt = rebuilt
-    flt.save(_filter_path(ckpt, out_epoch))
-
-    ck.commit_epoch(
+    for name in ("frontier", "host_counts", "politeness"):
+        shutil.copytree(
+            ck.table_path(ckpt, last, name), ck.table_path(ckpt, out_epoch, name)
+        )
+    _commit_epoch(
+        spark,
         ckpt,
         out_epoch,
+        {"seen_removed": gone},
+        flt,
         {"kind": "expiry", "processed_epoch": last, "urls_expired": n_expired},
+        _Phases(),
     )
     gone.unpersist()
     return n_expired
@@ -1339,27 +1342,24 @@ def reseed(spark: SparkSession, spec: SiteSpec, ckpt: str) -> None:
     currently seen as seen (init_state's invariant: seeds are born seen —
     refsim puts them in the seen set at start, so a recrawl pass must too),
     and reset politeness buckets to a full burst — the state a fresh crawl
-    starts from. Combined with expire_seen over the previous crawl's URLs,
-    a resumed run_crawl reproduces the reference crawl order again from the
-    new epoch (tests/test_recrawl.py proves the second pass bit-identical)."""
+    starts from — and commit them with the new frontier's host_counts
+    through `_commit_epoch`. Combined with expire_seen over the previous
+    crawl's URLs, a resumed run_crawl reproduces the reference crawl order
+    again from the new epoch (tests/test_recrawl.py proves the second pass
+    bit-identical)."""
     ck.cleanup_uncommitted(ckpt)  # never reseed over crash debris (ADVICE r3)
     last = ck.last_committed(ckpt)
     assert last is not None, "reseed needs an initialised checkpoint"
     out_epoch = last + 1
 
-    carried = ck.read_table(spark, ckpt, last, "frontier")
     seeds = _seed_frontier(spark, spec).persist()
-    wdup = W.partitionBy("url").orderBy(*ORDER_KEY)
     frontier = (
-        carried.select(*FRONTIER_COLS)
-        .unionByName(seeds.select(*FRONTIER_COLS))
-        .withColumn("_rn", F.row_number().over(wdup))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
+        _first_per_url(
+            _read_frontier(spark, ckpt, last).unionByName(seeds.select(*FRONTIER_COLS))
+        )
         .repartition("host")
+        .persist()
     )
-    ck.write_table(frontier, ckpt, out_epoch, "frontier")
-
     # seeds not currently seen (expired, or never crawled) re-enter the seen
     # set now, exactly like init_state's seed admission; seeds still seen are
     # left alone so no url ever has two live seen rows
@@ -1372,18 +1372,20 @@ def reseed(spark: SparkSession, spec: SiteSpec, ckpt: str) -> None:
             F.lit(out_epoch).alias("admit_epoch"),
         )
     )
-    ck.write_table(seed_seen, ckpt, out_epoch, "seen_new")
-
     politeness = ck.read_table(spark, ckpt, last, "politeness")
-    ck.write_table(
-        politeness.withColumn("tokens", F.lit(float(spec.burst))),
+    _commit_epoch(
+        spark,
         ckpt,
         out_epoch,
-        "politeness",
+        {
+            "seen_new": seed_seen,
+            "frontier": frontier,
+            "host_counts": _count_by_host(frontier, "n_pending"),
+            "politeness": politeness.withColumn("tokens", F.lit(float(spec.burst))),
+        },
+        _load_seen_filter(_filter_path(ckpt, last)),
+        {"kind": "reseed", "processed_epoch": last},
+        _Phases(),
     )
-    flt = _load_seen_filter(_filter_path(ckpt, last))
-    seen_new = spark.read.parquet(ck.table_path(ckpt, out_epoch, "seen_new"))
-    _filter_add_from_df(flt, seen_new.select("url_hash"))
-    flt.save(_filter_path(ckpt, out_epoch))
-    seeds.unpersist()
-    ck.commit_epoch(ckpt, out_epoch, {"kind": "reseed", "processed_epoch": last})
+    for df in (seeds, frontier):
+        df.unpersist()

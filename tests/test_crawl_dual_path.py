@@ -13,10 +13,12 @@ the manifests must agree on what was fetched and admitted.
 from __future__ import annotations
 
 import glob
+import inspect
 import os
 import re
 import shutil
 import tempfile
+import uuid
 
 import numpy as np
 import pyarrow as pa
@@ -214,6 +216,15 @@ def test_local_caps_lists_every_driver_cap():
     assert caps == set(LOCAL_CAPS)
 
 
+def test_one_commit_path():
+    """Every epoch kind commits through `_commit_epoch`: the manifest write
+    and the seen-filter save each appear once in the module, inside it, so
+    a second commit tail cannot skip its filter growth or manifest keys."""
+    module, commit = inspect.getsource(C), inspect.getsource(C._commit_epoch)
+    for call in ("ck.commit_epoch(", ".save(_filter_path("):
+        assert module.count(call) == 1 and call in commit, call
+
+
 def _rows(t):
     """(column names, sorted rows) of a pyarrow table or a DataFrame."""
     if isinstance(t, DataFrame):
@@ -255,9 +266,9 @@ BOUNDARY_SELECTED = {
 
 @pytest.mark.parametrize("plan_kind", ["driver_plan", "spark_plan"])
 def test_select_boundary_driver_equals_salted(spark, monkeypatch, plan_kind):
-    """Driver `_select` (plan held on the driver, or a DataFrame as after
-    reseed/expire_seen) and the salted Spark `_select` (caps 0) pick the
-    same rows at a budget boundary."""
+    """Driver `_select` (plan held on the driver, or a DataFrame as when
+    the host tables are above the politeness cap) and the salted Spark
+    `_select` (caps 0) pick the same rows at a budget boundary."""
     ckpt = tempfile.mkdtemp(prefix="select_boundary_")
     ck.write_table_local(
         ckpt, 0, "frontier", pa.Table.from_pylist(BOUNDARY_ROWS, schema=C._FRONTIER_PA)
@@ -289,29 +300,50 @@ def test_select_boundary_driver_equals_salted(spark, monkeypatch, plan_kind):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
+def _spark_jobs(spark, run):
+    """The ids of the Spark jobs launched while `run()` runs: those of its
+    job group, and any new job outside a group — threads (the concurrent
+    state writes) do not inherit the job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    bus = sc._jsc.sc().listenerBus()
+    group = f"counted_{uuid.uuid4().hex}"
+    bus.waitUntilEmpty()
+    before = max(tracker.getJobIdsForGroup(None), default=-1)
+    sc.setJobGroup(group, "counted run")
+    try:
+        run()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description"):
+            sc.setLocalProperty(key, None)
+    bus.waitUntilEmpty()
+    return list(tracker.getJobIdsForGroup(group)) + [
+        j for j in tracker.getJobIdsForGroup(None) if j > before
+    ]
+
+
 def test_small_crawl_runs_no_spark_job(spark):
     """Under the default caps a whole small crawl — init, a budget-bound
     selection, every fetch, admission and commit — runs on the driver:
     `run_crawl` launches no Spark job."""
     ckpt = tempfile.mkdtemp(prefix="crawl_jobs_")
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    bus = sc._jsc.sc().listenerBus()
-    group = f"crawl_jobs_{os.getpid()}"
-    bus.waitUntilEmpty()
-    before = max(tracker.getJobIdsForGroup(None), default=-1)
-    sc.setJobGroup(group, "small run_crawl")
-    try:
-        C.run_crawl(spark, SPEC, ckpt)
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(key, None)
-    bus.waitUntilEmpty()
-    assert list(tracker.getJobIdsForGroup(group)) == []
-    # threads (the concurrent state writes) do not inherit the job group
-    assert [j for j in tracker.getJobIdsForGroup(None) if j > before] == []
+    assert _spark_jobs(spark, lambda: C.run_crawl(spark, SPEC, ckpt)) == []
     manifests = [ck.read_manifest(ckpt, e) for e in ck.committed_epochs(ckpt)[1:]]
     assert any(
         m["urls_fetched"] and not m["crawl_log_from_frontier"] for m in manifests
     ), "the crawl had no budget-bound epoch"
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_recrawl_after_expiry_and_reseed_runs_no_spark_job(spark):
+    """expire_seen and reseed commit host_counts like every other epoch, so
+    the second pass of a small site plans from it on the driver: the
+    resumed `run_crawl` launches no Spark job either."""
+    ckpt = tempfile.mkdtemp(prefix="recrawl_jobs_")
+    first = C.run_crawl(spark, SPEC, ckpt)
+    C.expire_seen(spark, ckpt, first.seen())
+    C.reseed(spark, SPEC, ckpt)
+    reseed_epoch = ck.last_committed(ckpt)
+    assert _spark_jobs(spark, lambda: C.run_crawl(spark, SPEC, ckpt)) == []
+    assert ck.last_committed(ckpt) > reseed_epoch + 1, "the second pass never ran"
     shutil.rmtree(ckpt, ignore_errors=True)

@@ -8,10 +8,12 @@ knew. The commit now carries `host_counts` forward incrementally
 carried table instead. These tests pin the invariant that makes that
 sound: for every committed epoch, the carried table equals a fresh
 recomputation from that epoch's frontier — through admissions, constrained
-selection, zero-budget ticks, and resume."""
+selection, zero-budget ticks, resume, expiry and reseed."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 
 import pyarrow as pa
@@ -26,9 +28,7 @@ from gov_procurement_spider_spark.streaming import checkpoint as ck
 def _assert_counts_match_frontier(spark, ckpt):
     checked = 0
     for e in ck.committed_epochs(ckpt):
-        carried = C._read_host_counts(spark, ckpt, e)
-        if carried is None:
-            continue
+        carried = ck.read_table(spark, ckpt, e, "host_counts")
         want = sorted(
             (r.host, r.n)
             for r in ck.read_table(spark, ckpt, e, "frontier")
@@ -76,27 +76,32 @@ def test_plan_phase_reads_carried_table_not_frontier(spark):
     ckpt = tempfile.mkdtemp(prefix="hc_present_")
     C.run_crawl(spark, spec, ckpt, max_epochs=2)
     for e in ck.committed_epochs(ckpt):
-        assert C._read_host_counts(spark, ckpt, e) is not None
+        assert os.path.isdir(ck.table_path(ckpt, e, "host_counts"))
 
 
-def test_missing_table_falls_back_to_recompute(spark):
-    """An epoch dir without host_counts (pre-round-5 checkpoint, or a
-    reseed/expiry epoch) must still run — the plan phase recomputes from
-    the frontier and the NEXT commit re-establishes the carry."""
-    import shutil
-
+def test_every_epoch_kind_commits_counts_and_filter_lineage(spark):
+    """init, run_epoch, expiry and reseed all commit through one path:
+    through a crawl, an expiry of every seen URL, a reseed and the second
+    crawl, each committed epoch carries host_counts equal to a recount of
+    its frontier and a manifest with urls_admitted and seen_filter_load."""
     spec = SiteSpec(
         n_seeds=4, n_hosts=2, detail_space=40, max_list_pages=2,
-        rate_per_sec=50.0, burst=100.0,
+        rate_per_sec=1.0, burst=2.0, epoch_seconds=2.0,
     )
-    ckpt = tempfile.mkdtemp(prefix="hc_fallback_")
-    C.run_crawl(spark, spec, ckpt, max_epochs=1)
-    last = ck.last_committed(ckpt)
-    shutil.rmtree(ck.table_path(ckpt, last, "host_counts"))
-    assert C._read_host_counts(spark, ckpt, last) is None
-    res = C.run_crawl(spark, spec, ckpt)  # resumes from the stripped epoch
-    assert res.epochs > last
+    ckpt = tempfile.mkdtemp(prefix="hc_lifecycle_")
+    first = C.run_crawl(spark, spec, ckpt)
+    C.expire_seen(spark, ckpt, first.seen())
+    C.reseed(spark, spec, ckpt)
+    C.run_crawl(spark, spec, ckpt)
     _assert_counts_match_frontier(spark, ckpt)
+    kinds = set()
+    for e in ck.committed_epochs(ckpt):
+        man = ck.read_manifest(ckpt, e)
+        kinds.add(man.get("kind", "run_epoch"))
+        for key in ("urls_admitted", "seen_filter_load"):
+            assert key in man, f"epoch {e} manifest lacks {key}"
+    assert kinds == {"init", "run_epoch", "expiry", "reseed"}
+    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
@@ -115,9 +120,7 @@ def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
     default_budget = int(spec.burst)
     checked = 0
     for e in ck.committed_epochs(ckpt):
-        carried = C._read_host_counts(spark, ckpt, e)
-        if carried is None:
-            continue
+        carried = ck.read_table(spark, ckpt, e, "host_counts")
         local = C._plan_hosts(spark, spec, ckpt, e, [])
         assert isinstance(local.plan, pa.Table)
         with monkeypatch.context() as m:

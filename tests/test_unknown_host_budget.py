@@ -7,7 +7,6 @@ table via the full-outer refill."""
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 from pyspark.sql import functions as F
@@ -16,6 +15,7 @@ from gov_procurement_spider_spark.crawler.bloom import BloomFilter
 from gov_procurement_spider_spark.functions.urls import url_hash64
 from gov_procurement_spider_spark.plans.crawl import (
     FRONTIER_COLS,
+    _count_by_host,
     init_steady_frontier,
     run_epoch,
 )
@@ -53,9 +53,11 @@ def _inject_unknown_host(spark, ckpt):
     seen_rows = seen.collect()
     ck.write_table(spark.createDataFrame(seen_rows, seen.schema), ckpt, 0, "seen_new")
     # hand-editing the frontier invalidates the carried host_counts (in the
-    # real flow every commit carries it via _host_carry) — drop it so
-    # run_epoch takes the documented recompute fallback
-    shutil.rmtree(ck.table_path(ckpt, 0, "host_counts"), ignore_errors=True)
+    # real flow every commit carries it via _host_carry) — recount it
+    ck.write_table(
+        _count_by_host(ck.read_table(spark, ckpt, 0, "frontier"), "n_pending"),
+        ckpt, 0, "host_counts",
+    )
     bf = BloomFilter(1024)
     bf.save(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
 
