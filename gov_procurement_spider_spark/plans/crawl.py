@@ -30,15 +30,18 @@ implementation each — the pyarrow pair `_host_plan` / `_host_carry` and
 directly over the batches of a driver-held table, or through mapInArrow
 over a DataFrame (the host-keyed join; a selection above
 `_DRIVER_FETCH_MAX_URLS`). A small crawl therefore launches no Spark job
-at all. Two steps are kept in two forms, Spark for big inputs and pyarrow
-for small ones: the budget-bound selection (salted windows) and
-admission's keep-first (`_first_per_url`, a min-struct aggregation) plus
-exact seen anti-join. Their driver form is one function, `_take_first` —
-the first n rows of each key run — which also dedups the seed frontier,
-picks the seen view's latest event per url and gates the streaming
-politeness operator (streaming/stateful_politeness.py).
-tests/test_crawl_dual_path.py pins both materialisations to the same
-committed rows, fetch_out and filters.
+at all. Three steps are kept in two forms, Spark for big inputs and
+pyarrow for small ones: the budget-bound selection (salted windows),
+keep-first on url (`_first_per_url`, a min-struct aggregation) and the
+exact seen anti-join (`_unseen`, Bloom-prefiltered in Spark). The last two
+dispatch on where their input is held and are shared by admission and
+seed injection. Their driver form rests on one function, `_take_first` —
+the first n rows of each key run — which also picks the seen view's
+latest event per url and gates the streaming politeness operator
+(streaming/stateful_politeness.py). Seeds enter the frontier one way,
+`_inject_seeds`: init_state injects them into an empty checkpoint, reseed
+over the last committed epoch. tests/test_crawl_dual_path.py pins both
+materialisations to the same committed rows, fetch_out and filters.
 
 The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
 filter (crawler/cuckoo.py) when per-key deletion is needed: expire_seen
@@ -235,9 +238,10 @@ def _seen_view(spark: SparkSession, ckpt: str, upto_epoch: int) -> DataFrame:
     return seen.select("url")
 
 
-def _seed_rows(spec: SiteSpec, ids: pd.Series) -> pd.DataFrame:
-    """The seed list pages `ids` as frontier rows, before keep-first."""
-    return pd.DataFrame(
+def _seed_rows(spec: SiteSpec) -> pa.Table:
+    """The seed list pages as frontier rows, before keep-first."""
+    ids = range(spec.n_seeds)
+    rows = pd.DataFrame(
         {
             "priority": [sm.seed_priority(spec, i) for i in ids],
             "disc_epoch": 0,
@@ -249,37 +253,32 @@ def _seed_rows(spec: SiteSpec, ids: pd.Series) -> pd.DataFrame:
             "host": [sm.seed_host(spec, i) for i in ids],
         }
     )
+    return pa.Table.from_pandas(rows, preserve_index=False).cast(_FRONTIER_PA)
 
 
-def _first_per_url(df: DataFrame) -> DataFrame:
-    """Keep-first on url in Spark: each url's row with the smallest
-    (ORDER_KEY, kind, host), as FRONTIER_COLS. A min-struct aggregation is
-    one partial+final hash agg — no sort, cheaper than a row_number window;
-    the order key leads the struct so the lexicographic min IS the first
-    occurrence. The Spark form of `_take_first(t, "url", ..., 1)`."""
+def _first_per_url(t):
+    """Keep-first on url: each url's row with the smallest (ORDER_KEY,
+    kind, host). On the driver `_take_first(t, "url", ..., 1)`; in Spark a
+    min-struct aggregation, as FRONTIER_COLS — one partial+final hash agg,
+    no sort, cheaper than a row_number window; the order key leads the
+    struct so the lexicographic min IS the first occurrence."""
+    if not isinstance(t, DataFrame):
+        return _take_first(t, "url", [*ORDER_KEY, "kind", "host"], 1)[0]
     return (
-        df.groupBy("url")
+        t.groupBy("url")
         .agg(F.min(F.struct(*ORDER_KEY, "kind", "host")).alias("_first"))
         .select("url", "_first.*")
         .select(*FRONTIER_COLS)
     )
 
 
-def _seed_frontier(spark: SparkSession, spec: SiteSpec) -> DataFrame:
+def _seed_frontier(spec: SiteSpec) -> pa.Table:
     """The deduped seed frontier (keep-first on url — parity with refsim's
-    seed admission loop), host-partitioned. Used by init_state and reseed."""
-    n = spec.n_seeds
-    seeds = (
-        spark.range(n)
-        .repartition(max(1, min(32, n // 8 or 1)))
-        .mapInPandas(
-            lambda batches: (_seed_rows(spec, pdf["id"]) for pdf in batches),
-            schema="priority int, disc_epoch int, seed_idx bigint, page_idx int,"
-            " pos int, kind string, url string, host string",
-        )
-        .withColumn("seed_idx", F.col("seed_idx").cast("int"))
-    )
-    return _first_per_url(seeds).repartition("host")
+    seed admission loop), always built on the driver: the seed list is the
+    site's configuration (at most 96 seeds in any caller), so it becomes a
+    DataFrame only when the injection runs in Spark. `_inject_seeds` is its
+    one caller."""
+    return _first_per_url(_seed_rows(spec))
 
 
 # a driver-written table is one parquet file in this row order: same rows →
@@ -336,8 +335,11 @@ def _write_all(ckpt: str, epoch: int, tables: dict) -> None:
                 f.result()
 
 
-def _with_url_hash(t: pa.Table) -> pa.Table:
-    """`t` plus its url_hash column (site_model.h64, = url_hash64 in Spark)."""
+def _with_url_hash(t):
+    """`t` plus its url_hash column: url_hash64 in Spark, site_model.h64
+    (the same hash) on the driver."""
+    if isinstance(t, DataFrame):
+        return t.withColumn("url_hash", url_hash64("url"))
     hashes = [sm.h64(u) for u in t.column("url").to_pylist()]
     return t.append_column("url_hash", pa.array(hashes, pa.int64()))
 
@@ -361,67 +363,85 @@ def _take_first(t: pa.Table, run: str, order: list, n) -> tuple[pa.Table, pa.Tab
     return t.filter(first), t.filter(pc.invert(first))
 
 
-def _seed_frontier_local(spec: SiteSpec) -> pa.Table:
-    """`_seed_frontier` on the driver, for seed sets under the local cap:
-    the same seed rows and keep-first, without ~6 Spark jobs (~1.5-2 s of
-    fixed latency) for a few hundred deterministic rows."""
-    seeds = pa.Table.from_pandas(
-        _seed_rows(spec, pd.Series(np.arange(spec.n_seeds))), preserve_index=False
-    ).cast(_FRONTIER_PA)
-    return _take_first(seeds, "url", ORDER_KEY, 1)[0]
-
-
-_NEW_HOST_PA = pa.schema(
-    [("host", pa.string()), ("tokens", pa.float64()),
-     ("disallow_prefixes", pa.list_(pa.string()))]
-)
-
-
-def _new_hosts(hosts: pa.RecordBatch, spec: SiteSpec) -> pa.RecordBatch:
-    """Epoch-0 state of a batch of seed hosts: a full politeness bucket and
-    the host's robots rules."""
-    names = hosts.column("host").to_pylist()
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(names, pa.string()),
-            pa.array([float(spec.burst)] * len(names), pa.float64()),
-            pa.array(
+def _new_hosts(hosts: pa.Array, spec: SiteSpec) -> pa.Table:
+    """The seed hosts' first state: a full politeness bucket and the host's
+    robots rules."""
+    names = hosts.to_pylist()
+    return pa.table(
+        {
+            "host": pa.array(names, pa.string()),
+            "tokens": pa.array([float(spec.burst)] * len(names), pa.float64()),
+            "disallow_prefixes": pa.array(
                 [sm.robots_disallows(spec, h) for h in names], pa.list_(pa.string())
             ),
-        ],
-        schema=_NEW_HOST_PA,
+        }
     )
+
+
+def _inject_seeds(
+    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, flt, lineage: dict
+) -> None:
+    """Commit epoch `epoch` as the seed list pages injected into the state
+    of epoch `epoch - 1` (none at init), through `_commit_epoch` with the
+    seen-filter `flt`. The frontier keeps the first row of each url over
+    the pending rows and the seeds (`_first_per_url`). The seeds not seen
+    as of the prior epoch enter seen_new (`_unseen`): refsim puts the seeds
+    in the seen set at start, so every pass must, and a seed still seen
+    keeps its one live seen row. The seed hosts get a full politeness
+    bucket (a host with no row plans from a full bucket, and an idle host's
+    stale tokens are never refilled, so other hosts' rows need no reset);
+    robots is written at init only, where `_robots` reads it. The seeds are
+    built on the driver, and every table stays there when the seeds, the
+    pending frontier and the prior seen view fit the local caps, as in
+    `_admit`; otherwise the steps run in Spark."""
+    prior = epoch - 1
+    seeds = _seed_frontier(spec)
+    new_hosts = _new_hosts(pc.unique(seeds.column("host")), spec)
+    local = spec.n_seeds <= _DRIVER_COMMIT_MAX_ROWS and (
+        epoch == 0
+        or ck.table_num_rows(ckpt, prior, "frontier") <= _DRIVER_COMMIT_MAX_ROWS
+        and _seen_rows_small(ckpt, prior, _DRIVER_ADD_MAX_ROWS)
+    )
+    if not local:
+        seeds, new_hosts = _to_df(spark, seeds), _to_df(spark, new_hosts)
+    cached: list[DataFrame] = []
+    try:
+        if epoch == 0:
+            frontier, admitted = seeds, _with_url_hash(seeds)
+        else:
+            pending = (
+                _read_frontier_local(ckpt, prior)
+                if local
+                else _read_frontier(spark, ckpt, prior)
+            )
+            frontier = _first_per_url(_union(spark, [pending, seeds]))
+            if not local:  # read twice: written, and counted by host
+                frontier = frontier.persist()
+                cached.append(frontier)
+            admitted = _unseen(spark, ckpt, prior, seeds, cached)
+        tables = {
+            "frontier": frontier,
+            "seen_new": _seen_new(admitted, epoch),
+            "host_counts": _count_by_host(frontier, "n_pending"),
+            "politeness": _cols(new_hosts, ["host", "tokens"]),
+        }
+        if epoch == 0:
+            tables["robots"] = _cols(new_hosts, ["host", "disallow_prefixes"])
+        _commit_epoch(spark, ckpt, epoch, tables, flt, lineage, _Phases())
+    finally:
+        for df in cached:
+            df.unpersist()
 
 
 def init_state(
     spark: SparkSession, spec: SiteSpec, ckpt: str, filter_kind: str = "bloom"
 ) -> None:
-    """Epoch-0 state: seed frontier, seen=seeds, politeness=burst, robots,
-    seen-filter seeded with the seed URLs — generated on the driver when
-    the seed set is under the local cap, else by Spark."""
-    if spec.n_seeds <= _DRIVER_COMMIT_MAX_ROWS:
-        frontier = _with_url_hash(_seed_frontier_local(spec))
-        hosts = pa.table({"host": pc.unique(frontier.column("host"))})
-    else:
-        frontier = _seed_frontier(spark, spec).withColumn("url_hash", url_hash64("url"))
-        hosts = frontier.select("host").distinct()
-    new_hosts = _map_arrow(
-        _per_batch(partial(_new_hosts, spec=spec)), hosts, _NEW_HOST_PA
-    )
-    _commit_epoch(
-        spark,
-        ckpt,
-        0,
-        {
-            "frontier": _cols(frontier, FRONTIER_COLS),
-            "seen_new": _seen_new(frontier, 0),
-            "host_counts": _count_by_host(frontier, "n_pending"),
-            "politeness": _cols(new_hosts, ["host", "tokens"]),
-            "robots": _cols(new_hosts, ["host", "disallow_prefixes"]),
-        },
-        _make_seen_filter(filter_kind, _bloom_expected(spec)),
-        {"kind": "init"},
-        _Phases(),
+    """Epoch-0 state: the seeds injected (`_inject_seeds`) into an empty
+    checkpoint with a fresh seen-filter of `filter_kind` — frontier = the
+    seeds, seen = the seeds, politeness = burst, robots."""
+    _inject_seeds(
+        spark, spec, ckpt, 0,
+        _make_seen_filter(filter_kind, _bloom_expected(spec)), {"kind": "init"},
     )
 
 
@@ -576,7 +596,7 @@ def _carry_host_counts(spark: SparkSession, plan, admitted):
 # profile put such jobs at ~2 s of a ~2.9 s small-site epoch). Larger ones
 # stay Spark jobs, so at 10^8-row epochs nothing collects.
 # Full frontier/link rows (~200 B each, ≤50 MB at the cap): a budget-bound
-# epoch's selection, a discovered-link batch, the seed set at init.
+# epoch's selection, a discovered-link batch, a seed injection.
 _DRIVER_COMMIT_MAX_ROWS = 1 << 18
 # Narrow rows: the host tables, the seen view's urls, url_hash columns
 # (≤8 MB of int64 hashes — the same bound as expire_seen's chunks).
@@ -663,10 +683,11 @@ _CUCKOO_GROW_LOAD = 0.9
 
 
 def _grown_m(old_m: int, n_total: int) -> int:
-    """Bucket count for a rebuilt seen-filter: ≥2× the old table (amortized
-    O(1) growth) and sized so ``n_total`` keys land at ≤0.72·0.95 ≈ 0.68
-    load — always below the 0.9 grow trigger, so a rebuild can never be
-    immediately re-triggered by its own admission batch."""
+    """Bucket count for a fresh (``old_m`` 0) or rebuilt cuckoo
+    seen-filter: ≥2× the old table (amortized O(1) growth) and sized so
+    ``n_total`` keys land at ≤0.72·0.95 ≈ 0.68 load — always below the 0.9
+    grow trigger, so a filter can never be rebuilt by the batch it was
+    sized for."""
     return max(2 * old_m, CuckooFilter.m_for(int(n_total / 0.72) + 1))
 
 
@@ -710,7 +731,7 @@ def _make_seen_filter(kind: str, n_expected: int):
     append-only in a plain crawl) or 'cuckoo' (supports expire_seen's
     per-key deletion without a rebuild; north rule's fallback)."""
     if kind == "cuckoo":
-        return CuckooFilter(n_expected)
+        return CuckooFilter.empty(_grown_m(0, n_expected))
     if kind == "bloom":
         return BloomFilter(n_expected)
     raise ValueError(f"unknown seen-filter kind {kind!r}")
@@ -960,16 +981,37 @@ def _seen_view_local(ckpt: str, upto_epoch: int) -> pa.Array:
     return latest.filter(latest.column("admitted")).column("url").combine_chunks()
 
 
+def _unseen(spark: SparkSession, ckpt: str, epoch: int, t, cached: list):
+    """The rows of `t` whose url is not in the seen view as of `epoch`,
+    plus url_hash: the exact seen anti-join of admission and seed
+    injection. A driver-held `t` (its callers gate the seen view's size by
+    `_seen_rows_small`) is tested by `pc.is_in` against `_seen_view_local`;
+    a DataFrame is anti-joined on only the rows the epoch's seen-filter
+    cannot rule out, and the result is persisted."""
+    if not isinstance(t, DataFrame):
+        seen = pc.is_in(t.column("url"), value_set=_seen_view_local(ckpt, epoch))
+        return _with_url_hash(t.filter(pc.invert(seen)))
+    maybe = _seen_filter_udf(_load_seen_filter(_filter_path(ckpt, epoch)))
+    cand = _with_url_hash(t).withColumn("_maybe", maybe("url_hash")).persist()
+    cached.append(cand)
+    suspect = cand.filter(F.col("_maybe")).drop("_maybe")
+    admitted = (
+        cand.filter(~F.col("_maybe"))
+        .drop("_maybe")
+        .unionByName(suspect.join(_seen_view(spark, ckpt, epoch), "url", "left_anti"))
+        .persist()
+    )
+    cached.append(admitted)
+    return admitted
+
+
 def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: list):
     """Admission of the epoch's candidate links: keep-first within the
-    batch (the smallest (ORDER_KEY, kind, host) per url, disc_epoch = the
-    next epoch) and the exact anti-join against the seen view. Returns the
-    admitted rows (FRONTIER_COLS + url_hash). When the link batch and the
-    seen view fit the local caps, that is a pyarrow table sorted by url:
-    keep-first is `_take_first` on url and the anti-join a `pc.is_in` test
-    against `_seen_view_local`. Otherwise it is a persisted DataFrame:
-    keep-first is `_first_per_url`, and the anti-join only sees the rows
-    the seen-filter cannot rule out."""
+    batch (`_first_per_url`, disc_epoch = the next epoch), then the exact
+    anti-join against the seen view (`_unseen`). Returns the admitted rows
+    (FRONTIER_COLS + url_hash): a pyarrow table sorted by url when the link
+    batch and the seen view fit the local caps, else a persisted
+    DataFrame."""
     out_epoch = epoch + 1
     fetch_out = ck.table_path(ckpt, out_epoch, "fetch_out")
     if n_links <= _DRIVER_COMMIT_MAX_ROWS and _seen_rows_small(
@@ -983,28 +1025,15 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
         links = links.set_column(
             1, "disc_epoch", pa.array(np.full(links.num_rows, out_epoch, np.int32))
         )
-        first = _take_first(links, "url", [*ORDER_KEY, "kind", "host"], 1)[0]
-        seen = pc.is_in(first.column("url"), value_set=_seen_view_local(ckpt, epoch))
-        return _with_url_hash(first.filter(pc.invert(seen)))
-    links = (
-        spark.read.schema(from_arrow_schema(fetcher.FETCH_OUT_PA)).parquet(fetch_out)
-        .filter(F.col("row_type") == "link")
-        .select(*FRONTIER_COLS)
-        .withColumn("disc_epoch", F.lit(out_epoch))
-    )
-    cand = _first_per_url(links).withColumn("url_hash", url_hash64("url"))
-    flt = _load_seen_filter(_filter_path(ckpt, epoch))
-    cand = cand.withColumn("_maybe", _seen_filter_udf(flt)("url_hash")).persist()
-    cached.append(cand)
-    suspect = cand.filter(F.col("_maybe")).drop("_maybe")
-    admitted = (
-        cand.filter(~F.col("_maybe"))
-        .drop("_maybe")
-        .unionByName(suspect.join(_seen_view(spark, ckpt, epoch), "url", "left_anti"))
-        .persist()
-    )
-    cached.append(admitted)
-    return admitted
+    else:
+        links = (
+            spark.read.schema(from_arrow_schema(fetcher.FETCH_OUT_PA))
+            .parquet(fetch_out)
+            .filter(F.col("row_type") == "link")
+            .select(*FRONTIER_COLS)
+            .withColumn("disc_epoch", F.lit(out_epoch))
+        )
+    return _unseen(spark, ckpt, epoch, _first_per_url(links), cached)
 
 
 class _Phases(dict):
@@ -1079,6 +1108,19 @@ def _commit_epoch(
     )
 
 
+def _union(spark: SparkSession, tables: list):
+    """The frontier rows of `tables`: one driver-held table when all are,
+    else the union of the DataFrames and the non-empty driver tables,
+    hash-partitioned by host."""
+    if not any(isinstance(t, DataFrame) for t in tables):
+        return pa.concat_tables(tables)
+    dfs = [_to_df(spark, t) for t in tables if isinstance(t, DataFrame) or t.num_rows]
+    out = dfs[0]
+    for df in dfs[1:]:
+        out = out.unionByName(df)
+    return out.repartition("host")
+
+
 def _commit(
     spark: SparkSession, ckpt: str, epoch: int, hosts: _Hosts, remaining,
     crawl_log, admitted, phases: _Phases,
@@ -1090,22 +1132,9 @@ def _commit(
     inputs write driver-side; any Spark input makes its table a Spark
     write."""
     out_epoch = epoch + 1
-    frontier = [remaining]
+    frontier = remaining
     if admitted is not None:
-        frontier.append(_cols(admitted, FRONTIER_COLS))
-    if any(isinstance(t, DataFrame) for t in frontier):
-        dfs = [
-            _to_df(spark, t)
-            for t in frontier
-            if isinstance(t, DataFrame) or t.num_rows
-        ]
-        frontier = dfs[0]
-        for df in dfs[1:]:
-            frontier = frontier.unionByName(df)
-        if admitted is not None:
-            frontier = frontier.repartition("host")
-    else:
-        frontier = pa.concat_tables(frontier)
+        frontier = _union(spark, [remaining, _cols(admitted, FRONTIER_COLS)])
     tables = {
         "frontier": frontier,
         "host_counts": _carry_host_counts(spark, hosts.plan, admitted),
@@ -1198,11 +1227,10 @@ def init_steady_frontier(
                 }
             )
 
-    frontier = (
+    frontier = _with_url_hash(
         spark.range(n_urls)
         .repartition(32)
         .mapInPandas(gen, schema=from_arrow_schema(_FRONTIER_PA))
-        .withColumn("url_hash", url_hash64("url"))
     )
     hosts = spark.createDataFrame(
         [(f"h{i}.test", float(spec.burst), []) for i in range(spec.n_hosts)],
@@ -1337,55 +1365,19 @@ def expire_seen(
 
 
 def reseed(spark: SparkSession, spec: SiteSpec, ckpt: str) -> None:
-    """Recrawl entry point: re-inject the seed list pages into the frontier
-    (keep-first against rows already pending), mark any seed that is not
-    currently seen as seen (init_state's invariant: seeds are born seen —
-    refsim puts them in the seen set at start, so a recrawl pass must too),
-    and reset politeness buckets to a full burst — the state a fresh crawl
-    starts from — and commit them with the new frontier's host_counts
-    through `_commit_epoch`. Combined with expire_seen over the previous
-    crawl's URLs, a resumed run_crawl reproduces the reference crawl order
-    again from the new epoch (tests/test_recrawl.py proves the second pass
-    bit-identical)."""
+    """Recrawl entry point: the seeds injected (`_inject_seeds`) over the
+    last committed epoch with that epoch's seen-filter — keep-first against
+    the rows already pending, the seeds not currently seen marked seen
+    (init_state's invariant: seeds are born seen) and the seed hosts'
+    politeness buckets full, the state a fresh crawl starts from. Combined
+    with expire_seen over the previous crawl's URLs, a resumed run_crawl
+    reproduces the reference crawl order again from the new epoch
+    (tests/test_recrawl.py proves the second pass bit-identical)."""
     ck.cleanup_uncommitted(ckpt)  # never reseed over crash debris (ADVICE r3)
     last = ck.last_committed(ckpt)
     assert last is not None, "reseed needs an initialised checkpoint"
-    out_epoch = last + 1
-
-    seeds = _seed_frontier(spark, spec).persist()
-    frontier = (
-        _first_per_url(
-            _read_frontier(spark, ckpt, last).unionByName(seeds.select(*FRONTIER_COLS))
-        )
-        .repartition("host")
-        .persist()
-    )
-    # seeds not currently seen (expired, or never crawled) re-enter the seen
-    # set now, exactly like init_state's seed admission; seeds still seen are
-    # left alone so no url ever has two live seen rows
-    seed_seen = (
-        seeds.select("url")
-        .join(_seen_view(spark, ckpt, last), "url", "left_anti")
-        .select(
-            "url",
-            url_hash64("url").alias("url_hash"),
-            F.lit(out_epoch).alias("admit_epoch"),
-        )
-    )
-    politeness = ck.read_table(spark, ckpt, last, "politeness")
-    _commit_epoch(
-        spark,
-        ckpt,
-        out_epoch,
-        {
-            "seen_new": seed_seen,
-            "frontier": frontier,
-            "host_counts": _count_by_host(frontier, "n_pending"),
-            "politeness": politeness.withColumn("tokens", F.lit(float(spec.burst))),
-        },
+    _inject_seeds(
+        spark, spec, ckpt, last + 1,
         _load_seen_filter(_filter_path(ckpt, last)),
         {"kind": "reseed", "processed_epoch": last},
-        _Phases(),
     )
-    for df in (seeds, frontier):
-        df.unpersist()

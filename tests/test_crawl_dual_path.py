@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from gov_procurement_spider_spark.crawler import fetcher
 from gov_procurement_spider_spark.crawler.cuckoo import CuckooFilter
 from gov_procurement_spider_spark.plans import crawl as C
+from gov_procurement_spider_spark.sources import site_model as sm
 from gov_procurement_spider_spark.sources.site_model import SiteSpec
 from gov_procurement_spider_spark.streaming import checkpoint as ck
 
@@ -83,6 +84,22 @@ def _growing_then_recrawl(spark, spec, ckpt):
     assert grown.m > tiny.m, "the filter never grew"
     C.expire_seen(spark, ckpt, first.seen())
     C.reseed(spark, spec, ckpt)
+    C.run_crawl(spark, spec, ckpt)
+
+
+def _partial_expiry_recrawl(spark, spec, ckpt):
+    """A crawl, an expiry of every other seen url, a reseed and the second
+    pass: the reseed finds some seeds still seen and re-admits the rest."""
+    first = C.run_crawl(spark, spec, ckpt)
+    urls = sorted(r.url for r in first.seen().collect())
+    expired = spark.createDataFrame([(u,) for u in urls[::2]], "url string")
+    C.expire_seen(spark, ckpt, expired)
+    C.reseed(spark, spec, ckpt)
+    epoch = ck.last_committed(ckpt)
+    frontier = pq.read_table(ck.table_path(ckpt, epoch, "frontier"), columns=["url"])
+    seeds = {sm.seed_url(spec, i) for i in range(spec.n_seeds)}
+    n_seeds = len(seeds & set(frontier.column("url").to_pylist()))
+    assert 0 < ck.read_manifest(ckpt, epoch)["urls_admitted"] < n_seeds
     C.run_crawl(spark, spec, ckpt)
 
 
@@ -186,8 +203,12 @@ def _differences(local, spark_only):
         (_crawl, SPEC),
         (_crawl, FRACTIONAL),
         (_growing_then_recrawl, GROWING),
+        (_partial_expiry_recrawl, SPEC),
     ],
-    ids=["budget_bound", "fractional_rate", "cuckoo_growth_recrawl"],
+    ids=[
+        "budget_bound", "fractional_rate", "cuckoo_growth_recrawl",
+        "partial_expiry_recrawl",
+    ],
 )
 def test_driver_and_spark_commits_identical(spark, monkeypatch, drive, spec):
     (local, spark_only), fetched = _run_both(spark, monkeypatch, drive, spec)
@@ -223,6 +244,21 @@ def test_one_commit_path():
     module, commit = inspect.getsource(C), inspect.getsource(C._commit_epoch)
     for call in ("ck.commit_epoch(", ".save(_filter_path("):
         assert module.count(call) == 1 and call in commit, call
+
+
+def test_one_seed_path():
+    """Seeds enter the frontier one way: init_state and reseed both call
+    `_inject_seeds`, the only caller of `_seed_frontier`, which alone
+    builds the seed rows, so a second seed path cannot skip keep-first or
+    the seen anti-join."""
+    module = inspect.getsource(C)
+    inject = inspect.getsource(C._inject_seeds)
+    assert module.count("_seed_frontier(") == 2  # its def and one call
+    assert "_seed_frontier(" in inject
+    assert module.count("_seed_rows(") == 2
+    assert "_seed_rows(" in inspect.getsource(C._seed_frontier)
+    for entry in (C.init_state, C.reseed):
+        assert "_inject_seeds(" in inspect.getsource(entry), entry.__name__
 
 
 def _rows(t):
@@ -336,13 +372,14 @@ def test_small_crawl_runs_no_spark_job(spark):
 
 
 def test_recrawl_after_expiry_and_reseed_runs_no_spark_job(spark):
-    """expire_seen and reseed commit host_counts like every other epoch, so
-    the second pass of a small site plans from it on the driver: the
-    resumed `run_crawl` launches no Spark job either."""
+    """reseed injects a small site's seeds on the driver, as init does, and
+    expire_seen and reseed commit host_counts like every other epoch, so
+    the second pass plans from it on the driver: neither reseed nor the
+    resumed `run_crawl` launches a Spark job."""
     ckpt = tempfile.mkdtemp(prefix="recrawl_jobs_")
     first = C.run_crawl(spark, SPEC, ckpt)
     C.expire_seen(spark, ckpt, first.seen())
-    C.reseed(spark, SPEC, ckpt)
+    assert _spark_jobs(spark, lambda: C.reseed(spark, SPEC, ckpt)) == []
     reseed_epoch = ck.last_committed(ckpt)
     assert _spark_jobs(spark, lambda: C.run_crawl(spark, SPEC, ckpt)) == []
     assert ck.last_committed(ckpt) > reseed_epoch + 1, "the second pass never ran"

@@ -26,7 +26,7 @@ SPEC = SiteSpec(n_seeds=4, n_hosts=2, detail_space=40, fail_permille=300)
 
 def _selection(spec):
     """The seed list pages plus the detail links of each seed's first page."""
-    rows = C._seed_frontier_local(spec).to_pylist()
+    rows = C._seed_frontier(spec).to_pylist()
     for i in range(spec.n_seeds):
         for pos in range(sm.n_links(spec, i, 1)):
             url, _ = sm.child_detail(spec, i, 1, pos)

@@ -215,6 +215,24 @@ def test_expire_seen_chunked_equivalence(spark):
     assert int((t_a != 0).sum()) == 20  # the 20 unexpired keys remain
 
 
+def test_fresh_cuckoo_sized_below_grow_trigger(spark, monkeypatch):
+    """A fresh cuckoo filter gets the headroom a grown one gets: at 3,891
+    keys a table sized for <=95% load (4,096 slots) sits above the 0.9
+    grow trigger, and the init commit that fills it would rebuild it."""
+    import shutil
+
+    from gov_procurement_spider_spark.plans import crawl as C
+
+    calls = []
+    grow = C._grow_cuckoo
+    monkeypatch.setattr(C, "_grow_cuckoo", lambda *a: calls.append(a) or grow(*a))
+    ckpt = _fresh_cuckoo_ckpt(spark, 3891)
+    flt = _load_seen_filter(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
+    assert calls == [], "init rebuilt the filter it had just sized"
+    assert len(flt) == 3891 and flt.load_factor() <= C._CUCKOO_GROW_LOAD
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def test_grow_cuckoo_rebuilds_at_2x(spark):
     """ADVICE r3: near the safe load factor the epoch grows the filter into
     a 2×-bucket table rebuilt from the exact seen view — every seen key
