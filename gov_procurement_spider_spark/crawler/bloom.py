@@ -38,14 +38,20 @@ class BloomFilter:
 
     @classmethod
     def empty_like(cls, other: "BloomFilter") -> "BloomFilter":
-        """A zeroed filter with ``other``'s exact geometry (m, k) — for
-        rebuilds that must keep the capacity the original was sized for
-        (e.g. expire_seen: the post-expiry set is small NOW, but the crawl
-        keeps adding keys at the original spec's rate)."""
+        """A zeroed filter with ``other``'s exact geometry (m, k): a
+        partial of the distributed build, and the rebuild after an expiry
+        epoch, which keeps the capacity the original was sized for (the
+        post-expiry set is small NOW, but the crawl keeps adding keys at the
+        original spec's rate)."""
         bf = cls.__new__(cls)
         bf.m, bf.k = other.m, other.k
         bf.bits = np.zeros_like(other.bits)
         return bf
+
+    def merge(self, other: "BloomFilter") -> "BloomFilter":
+        """Union with a filter of the same geometry: OR its bits in."""
+        self.bits |= other.bits
+        return self
 
     def _positions(self, hashes: np.ndarray) -> np.ndarray:
         """(len(hashes), k) bit positions via double hashing, vectorized."""

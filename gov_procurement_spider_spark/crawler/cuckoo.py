@@ -70,6 +70,11 @@ class CuckooFilter:
         cf.fill = np.zeros(m, dtype=np.uint8)
         return cf
 
+    @classmethod
+    def empty_like(cls, other: "CuckooFilter") -> "CuckooFilter":
+        """A zeroed filter with ``other``'s bucket count."""
+        return cls.empty(other.m)
+
     # ---- key → (fingerprint, bucket) -------------------------------------
     def _fp_and_bucket(self, hashes: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
         h = np.asarray(hashes).astype(np.int64).view(np.uint64)

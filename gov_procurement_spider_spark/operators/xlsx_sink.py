@@ -11,10 +11,9 @@ last SURVEY §2 gap for real instead of by declaration.
 Scale posture (honest): an .xlsx worksheet is hard-capped by the format at
 1,048,576 rows — it is a REPORT artifact, not a data sink. ``write_df_xlsx``
 therefore streams the DataFrame through the driver partition-by-partition
-(toLocalIterator — O(partition) driver memory, same pattern as
-expire_seen's chunked delete) and refuses anything over the format limit
-rather than silently truncating. Bulk egress stays parquet/CSV; this sink
-exists for the reference's end-user deliverable.
+(toLocalIterator — O(partition) driver memory) and refuses anything over
+the format limit rather than silently truncating. Bulk egress stays
+parquet/CSV; this sink exists for the reference's end-user deliverable.
 
 Verified without openpyxl by unzipping and XML-parsing what we wrote
 (tests/test_xlsx_sink.py); the format details follow ECMA-376 (public).

@@ -69,31 +69,43 @@ def _crawl(spark, spec, ckpt):
     C.run_crawl(spark, spec, ckpt)
 
 
-def _growing_then_recrawl(spark, spec, ckpt):
-    """A cuckoo crawl that grows its filter mid-crawl, then one expiry of
-    every seen URL, a reseed and the second pass over the site."""
+def _init_tiny_cuckoo(spark, spec, ckpt):
+    """init_state with a cuckoo filter swapped for a 16-bucket one holding
+    the seeds, so the first admitting epoch must grow it. Returns it."""
     C.init_state(spark, spec, ckpt, filter_kind="cuckoo")
     seeds = pq.read_table(ck.table_path(ckpt, 0, "seen_new"), columns=["url_hash"])
     tiny = CuckooFilter(16)
     tiny.add_many(np.sort(seeds.column("url_hash").to_numpy()))
     tiny.save(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
-    first = C.run_crawl(spark, spec, ckpt)
-    grown = C._load_seen_filter(
+    return tiny
+
+
+def _last_filter(ckpt):
+    return C._load_seen_filter(
         os.path.join(ck.epoch_dir(ckpt, ck.last_committed(ckpt)), "bloom.npz")
     )
-    assert grown.m > tiny.m, "the filter never grew"
-    C.expire_seen(spark, ckpt, first.seen())
+
+
+def _growing_then_recrawl(spark, spec, ckpt):
+    """A cuckoo crawl that grows its filter mid-crawl, then one expiry of
+    every seen URL (a driver-held table: the local run deletes driver-written
+    tombstones), a reseed and the second pass over the site."""
+    tiny = _init_tiny_cuckoo(spark, spec, ckpt)
+    first = C.run_crawl(spark, spec, ckpt)
+    assert _last_filter(ckpt).m > tiny.m, "the filter never grew"
+    C.expire_seen(spark, ckpt, first.seen().toArrow())
     C.reseed(spark, spec, ckpt)
     C.run_crawl(spark, spec, ckpt)
 
 
 def _partial_expiry_recrawl(spark, spec, ckpt):
-    """A crawl, an expiry of every other seen url, a reseed and the second
-    pass: the reseed finds some seeds still seen and re-admits the rest."""
+    """A crawl, an expiry of every other seen url (a driver-held table: the
+    local run expires and rebuilds its Bloom filter on the driver), a
+    reseed and the second pass: the reseed finds some seeds still seen and
+    re-admits the rest."""
     first = C.run_crawl(spark, spec, ckpt)
     urls = sorted(r.url for r in first.seen().collect())
-    expired = spark.createDataFrame([(u,) for u in urls[::2]], "url string")
-    C.expire_seen(spark, ckpt, expired)
+    C.expire_seen(spark, ckpt, pa.table({"url": urls[::2]}))
     C.reseed(spark, spec, ckpt)
     epoch = ck.last_committed(ckpt)
     frontier = pq.read_table(ck.table_path(ckpt, epoch, "frontier"), columns=["url"])
@@ -246,6 +258,19 @@ def test_one_commit_path():
         assert module.count(call) == 1 and call in commit, call
 
 
+def test_one_filter_update_path():
+    """Every seen-filter change happens in `_commit_epoch`, read back from
+    the tables it wrote: the cuckoo delete appears once, inside it, the
+    refill from the seen view is called only there and by `_grow_cuckoo`,
+    and no filter update streams a DataFrame through the driver."""
+    module, commit = inspect.getsource(C), inspect.getsource(C._commit_epoch)
+    assert module.count(".delete_many(") == 1 and ".delete_many(" in commit
+    assert module.count("_refill_seen_filter(") == 3  # its def and two calls
+    for caller in (C._commit_epoch, C._grow_cuckoo):
+        assert "_refill_seen_filter(" in inspect.getsource(caller), caller.__name__
+    assert "toLocalIterator" not in module
+
+
 def test_one_seed_path():
     """Seeds enter the frontier one way: init_state and reseed both call
     `_inject_seeds`, the only caller of `_seed_frontier`, which alone
@@ -372,15 +397,29 @@ def test_small_crawl_runs_no_spark_job(spark):
 
 
 def test_recrawl_after_expiry_and_reseed_runs_no_spark_job(spark):
-    """reseed injects a small site's seeds on the driver, as init does, and
-    expire_seen and reseed commit host_counts like every other epoch, so
-    the second pass plans from it on the driver: neither reseed nor the
-    resumed `run_crawl` launches a Spark job."""
+    """A small site's expiry of a driver-held url table tombstones, counts
+    and rebuilds the Bloom filter on the driver; reseed injects the seeds
+    on the driver, as init does; and both commit host_counts like every
+    other epoch, so the second pass plans from it on the driver: none of
+    expire_seen, reseed and the resumed `run_crawl` launches a Spark job."""
     ckpt = tempfile.mkdtemp(prefix="recrawl_jobs_")
     first = C.run_crawl(spark, SPEC, ckpt)
-    C.expire_seen(spark, ckpt, first.seen())
+    urls = first.seen().toArrow()
+    assert _spark_jobs(spark, lambda: C.expire_seen(spark, ckpt, urls)) == []
+    assert ck.read_manifest(ckpt, ck.last_committed(ckpt))["urls_expired"] == len(urls)
     assert _spark_jobs(spark, lambda: C.reseed(spark, SPEC, ckpt)) == []
     reseed_epoch = ck.last_committed(ckpt)
     assert _spark_jobs(spark, lambda: C.run_crawl(spark, SPEC, ckpt)) == []
     assert ck.last_committed(ckpt) > reseed_epoch + 1, "the second pass never ran"
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_small_cuckoo_growth_runs_no_spark_job(spark):
+    """A cuckoo filter outgrown by a small crawl is rebuilt from the seen
+    view on the driver, like every other small-site filter update: the
+    crawl launches no Spark job, and the filter grew."""
+    ckpt = tempfile.mkdtemp(prefix="cuckoo_growth_jobs_")
+    tiny = _init_tiny_cuckoo(spark, GROWING, ckpt)
+    assert _spark_jobs(spark, lambda: C.run_crawl(spark, GROWING, ckpt)) == []
+    assert _last_filter(ckpt).m > tiny.m, "the filter never grew"
     shutil.rmtree(ckpt, ignore_errors=True)
