@@ -17,8 +17,8 @@ DataFrame dataflow, one path for every epoch:
           anti-join vs seen (D1) ─► admitted
   commit  frontier' / host_counts' / politeness' / seen+ / crawl_log /
           seen-filter, one manifest per epoch (T5) — `_commit_epoch`, the
-          one commit path of every epoch kind (init, run_epoch, expiry,
-          reseed)
+          one commit path of every epoch kind (init, steady init,
+          run_epoch, expiry, reseed)
 
 A tick epoch (no budget anywhere) skips fetch and admit; a link-free epoch
 skips admit. Each table is materialised on the driver (pyarrow, one sorted
@@ -35,15 +35,19 @@ pyarrow for small ones: the budget-bound selection (salted windows),
 keep-first on url (`_first_per_url`, a min-struct aggregation) and the
 exact seen-membership test (`_split_seen`, Bloom-prefiltered in Spark),
 which splits its input into the seen and the unseen rows. The last two
-dispatch on where their input is held and are shared by admission, seed
+dispatch on where their input is held and are shared by admission,
 injection (both keep the unseen rows) and expiry (which keeps the seen
 ones). Their driver form rests on one function, `_take_first` — the first
 n rows of each key run — which also picks the seen view's latest event
 per url and gates the streaming politeness operator
-(streaming/stateful_politeness.py). Seeds enter the frontier one way,
-`_inject_seeds`: init_state injects them into an empty checkpoint, reseed
-over the last committed epoch. tests/test_crawl_dual_path.py pins both
-materialisations to the same committed rows, fetch_out and filters.
+(streaming/stateful_politeness.py). A frontier is initialised one way,
+`_inject`, which gives the injected hosts a full bucket and their robots
+rules: init_state injects the seeds into an empty checkpoint, reseed over
+the last committed epoch, and init_steady_frontier injects `_steady_rows`
+(built column-wise through `_map_arrow`, from driver-held ids or
+`spark.range`) into an empty checkpoint. tests/test_crawl_dual_path.py
+pins both materialisations to the same committed rows, fetch_out and
+filters.
 
 The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
 filter (crawler/cuckoo.py) when per-key deletion is needed. Every change to
@@ -127,19 +131,27 @@ class CrawlResult:
     epochs: int
     spark: SparkSession
 
-    def _union(self, name: str) -> DataFrame:
-        # per-path reads unioned (not a multi-root read: the row_type
-        # partitioning inside fetch_out confuses cross-root discovery)
-        paths = [
-            ck.table_path(self.ckpt, e, name)
-            for e in ck.committed_epochs(self.ckpt)
-            if os.path.isdir(ck.table_path(self.ckpt, e, name))
-        ]
-        dfs = [self.spark.read.parquet(p) for p in paths]
+    def _concat(self, dfs: list, schema: pa.Schema) -> DataFrame:
+        """The union of `dfs`, or an empty `schema` table when there are
+        none (a checkpoint with no fetch epoch yet)."""
+        if not dfs:
+            return self.spark.createDataFrame([], from_arrow_schema(schema))
         out = dfs[0]
         for d in dfs[1:]:
             out = out.unionByName(d, allowMissingColumns=True)
         return out
+
+    def _fetch_out(self) -> DataFrame:
+        # per-path reads unioned (not a multi-root read: the row_type
+        # partitioning inside fetch_out confuses cross-root discovery)
+        paths = [
+            ck.table_path(self.ckpt, e, "fetch_out")
+            for e in ck.committed_epochs(self.ckpt)
+            if os.path.isdir(ck.table_path(self.ckpt, e, "fetch_out"))
+        ]
+        return self._concat(
+            [self.spark.read.parquet(p) for p in paths], fetcher.FETCH_OUT_PA
+        )
 
     def crawl_order(self) -> DataFrame:
         """Total crawl order: (epoch, host, key...) ascending — the proof
@@ -160,16 +172,16 @@ class CrawlResult:
                     .select(*FRONTIER_COLS)
                     .withColumn("epoch", F.lit(pe))
                 )
-        out = parts[0]
-        for d in parts[1:]:
-            out = out.unionByName(d, allowMissingColumns=True)
+        out = self._concat(
+            parts, _FRONTIER_PA.append(pa.field("epoch", pa.int32()))
+        )
         return out.orderBy(["epoch", "host"] + SELECT_ORDER)
 
     def fetched(self) -> DataFrame:
         """Payload rows (input_hint schema + provenance), partition-pruned
         out of fetch_out — payload bytes are written exactly once."""
         return (
-            self._union("fetch_out")
+            self._fetch_out()
             .filter(F.col("row_type") == "payload")
             .select(
                 "image_id", "bytes", "w", "h", "fmt", "caption", "phash",
@@ -181,7 +193,7 @@ class CrawlResult:
     def failed(self) -> DataFrame:
         """Failed fetches (consumed budget, no payload; ref main.py:124-127)."""
         return (
-            self._union("fetch_out")
+            self._fetch_out()
             .filter(F.col("row_type") == "failed")
             .select("url", "host", "fetch_epoch", *ORDER_KEY)
         )
@@ -190,13 +202,15 @@ class CrawlResult:
         """The current exact seen set (tombstone-aware: expire_seen's
         removals are subtracted unless the URL was re-admitted later)."""
         last = ck.last_committed(self.ckpt)
-        return _seen_view(self.spark, self.ckpt, last if last is not None else 0)
+        return _seen_view(
+            self.spark, self.ckpt, last if last is not None else 0
+        ).select("url")
 
     def metrics(self) -> DataFrame:
         """Fetch lineage rows (T6): one per batch the fetch function
         fetched."""
         return (
-            self._union("fetch_out")
+            self._fetch_out()
             .filter(F.col("row_type") == "metric")
             .select(
                 "fetch_epoch", "urls_fetched", "links_discovered",
@@ -211,12 +225,12 @@ def _bloom_expected(spec: SiteSpec) -> int:
 
 
 def _seen_view(spark: SparkSession, ckpt: str, upto_epoch: int) -> DataFrame:
-    """The exact seen set as of ``upto_epoch``: union of per-epoch seen_new
-    appends MINUS expiry tombstones (expire_seen). A row survives expiry iff
-    it was re-admitted after its latest removal — (url, admit_epoch) vs the
-    max removed_epoch per url — so TTL'd URLs become admissible again while
-    later re-admissions stay seen. Zero-fetch (virtual-time) epochs commit
-    neither table and are skipped."""
+    """The exact seen set (url, url_hash) as of ``upto_epoch``: union of
+    per-epoch seen_new appends MINUS expiry tombstones (expire_seen). A row
+    survives expiry iff it was re-admitted after its latest removal — (url,
+    admit_epoch) vs the max removed_epoch per url — so TTL'd URLs become
+    admissible again while later re-admissions stay seen. Zero-fetch
+    (virtual-time) epochs commit neither table and are skipped."""
     seen_paths = [
         p
         for e in range(0, upto_epoch + 1)
@@ -242,7 +256,7 @@ def _seen_view(spark: SparkSession, ckpt: str, upto_epoch: int) -> DataFrame:
             )
             .drop("_removed_epoch")
         )
-    return seen.select("url")
+    return seen.select("url", "url_hash")
 
 
 def _seed_rows(spec: SiteSpec) -> pa.Table:
@@ -374,8 +388,8 @@ def _take_first(t: pa.Table, run: str, order: list, n) -> tuple[pa.Table, pa.Tab
 
 
 def _new_hosts(hosts: pa.Array, spec: SiteSpec) -> pa.Table:
-    """The seed hosts' first state: a full politeness bucket and the host's
-    robots rules."""
+    """The injected hosts' first state: a full politeness bucket and the
+    host's robots rules."""
     names = hosts.to_pylist()
     return pa.table(
         {
@@ -388,47 +402,53 @@ def _new_hosts(hosts: pa.Array, spec: SiteSpec) -> pa.Table:
     )
 
 
-def _inject_seeds(
-    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, flt, lineage: dict
+def _inject(
+    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, rows,
+    hosts: pa.Array, flt, lineage: dict,
 ) -> None:
-    """Commit epoch `epoch` as the seed list pages injected into the state
-    of epoch `epoch - 1` (none at init), through `_commit_epoch` with the
-    seen-filter `flt`. The frontier keeps the first row of each url over
-    the pending rows and the seeds (`_first_per_url`). The seeds not seen
-    as of the prior epoch enter seen_new (`_split_seen`'s unseen side):
-    refsim puts the seeds in the seen set at start, so every pass must, and
-    a seed still seen keeps its one live seen row. The seed hosts get a full politeness
-    bucket (a host with no row plans from a full bucket, and an idle host's
-    stale tokens are never refilled, so other hosts' rows need no reset);
-    robots is written at init only, where `_robots` reads it. The seeds are
-    built on the driver, and every table stays there when the seeds, the
-    pending frontier and the prior seen view fit the local caps, as in
-    `_admit`; otherwise the steps run in Spark."""
+    """Commit epoch `epoch` as the frontier rows `rows` (keep-first on url
+    already applied) injected into the state of epoch `epoch - 1` (none at
+    init), through `_commit_epoch` with the seen-filter `flt` — the one way
+    a frontier is initialised or reseeded. The frontier keeps the first
+    row of each url over the pending rows and `rows` (`_first_per_url`).
+    The rows not seen as of the prior epoch enter seen_new (`_split_seen`'s
+    unseen side): refsim puts the seeds in the seen set at start, so every
+    pass must, and a row still seen keeps its one live seen row. The
+    `hosts` get a full politeness bucket (a host with no row plans from a
+    full bucket, and an idle host's stale tokens are never refilled, so
+    other hosts' rows need no reset) and their site-model robots rules,
+    written at init only, where `_robots` reads them. Every table stays on
+    the driver when `rows` is a driver-held table and it, the pending
+    frontier and the prior seen view fit the local caps, as in `_admit`;
+    otherwise the steps run in Spark."""
     prior = epoch - 1
-    seeds = _seed_frontier(spec)
-    new_hosts = _new_hosts(pc.unique(seeds.column("host")), spec)
-    local = spec.n_seeds <= _DRIVER_COMMIT_MAX_ROWS and (
-        epoch == 0
-        or ck.table_num_rows(ckpt, prior, "frontier") <= _DRIVER_COMMIT_MAX_ROWS
-        and _seen_rows_small(ckpt, prior, _DRIVER_ADD_MAX_ROWS)
+    new_hosts = _new_hosts(hosts, spec)
+    local = (
+        not isinstance(rows, DataFrame)
+        and rows.num_rows <= _DRIVER_COMMIT_MAX_ROWS
+        and (
+            epoch == 0
+            or ck.table_num_rows(ckpt, prior, "frontier") <= _DRIVER_COMMIT_MAX_ROWS
+            and _seen_rows_small(ckpt, prior)
+        )
     )
     if not local:
-        seeds, new_hosts = _to_df(spark, seeds), _to_df(spark, new_hosts)
+        rows, new_hosts = _to_df(spark, rows), _to_df(spark, new_hosts)
     cached: list[DataFrame] = []
     try:
         if epoch == 0:
-            frontier, admitted = seeds, _with_url_hash(seeds)
+            frontier, admitted = rows, _with_url_hash(rows)
         else:
             pending = (
                 _read_frontier_local(ckpt, prior)
                 if local
                 else _read_frontier(spark, ckpt, prior)
             )
-            frontier = _first_per_url(_union(spark, [pending, seeds]))
+            frontier = _first_per_url(_union(spark, [pending, rows]))
             if not local:  # read twice: written, and counted by host
                 frontier = frontier.persist()
                 cached.append(frontier)
-            admitted = _split_seen(spark, ckpt, prior, seeds, cached)[1]
+            admitted = _split_seen(spark, ckpt, prior, rows, cached)[1]
         tables = {
             "frontier": frontier,
             "seen_new": _seen_event(admitted, "admit_epoch", epoch),
@@ -441,6 +461,16 @@ def _inject_seeds(
     finally:
         for df in cached:
             df.unpersist()
+
+
+def _inject_seeds(
+    spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, flt, lineage: dict
+) -> None:
+    """`_inject` of the seed list pages (`_seed_frontier`, built on the
+    driver) and their hosts."""
+    seeds = _seed_frontier(spec)
+    hosts = pc.unique(seeds.column("host"))
+    _inject(spark, spec, ckpt, epoch, seeds, hosts, flt, lineage)
 
 
 def init_state(
@@ -606,7 +636,7 @@ def _carry_host_counts(spark: SparkSession, plan, admitted):
 # profile put such jobs at ~2 s of a ~2.9 s small-site epoch). Larger ones
 # stay Spark jobs, so at 10^8-row epochs nothing collects.
 # Full frontier/link rows (~200 B each, ≤50 MB at the cap): a budget-bound
-# epoch's selection, a discovered-link batch, a seed injection.
+# epoch's selection, a discovered-link batch, an injection's rows.
 _DRIVER_COMMIT_MAX_ROWS = 1 << 18
 # Narrow rows: the host tables, the seen view's urls, url_hash columns
 # (≤8 MB of int64 hashes).
@@ -681,17 +711,15 @@ def _refill_seen_filter(
     spark: SparkSession, ckpt: str, epoch: int, flt, n_rows: int | None = None
 ):
     """Fill the empty seen-filter `flt` from the exact seen view as of
-    `epoch` (whose own tables must already be written) and return it: on
-    the driver when the view's input rows fit `_DRIVER_ADD_MAX_ROWS`
-    (`_seen_view_local`, hashed by `_with_url_hash`), else by a distributed
-    build over `_seen_view`, partitioned for the caller's `n_rows` hint."""
-    if _seen_rows_small(ckpt, epoch, _DRIVER_ADD_MAX_ROWS):
-        urls = pa.table({"url": _seen_view_local(ckpt, epoch)})
-        flt.add_many(_with_url_hash(urls).column("url_hash").to_numpy())
+    `epoch` (whose own tables must already be written) and return it, with
+    the url_hash each seen row stores: on the driver when the view's input
+    rows fit `_DRIVER_ADD_MAX_ROWS` (`_seen_view_local`), else by a
+    distributed build over `_seen_view`, partitioned for the caller's
+    `n_rows` hint."""
+    if _seen_rows_small(ckpt, epoch):
+        flt.add_many(_seen_view_local(ckpt, epoch).column("url_hash").to_numpy())
     else:
-        hashes = _seen_view(spark, ckpt, epoch).select(
-            url_hash64("url").alias("url_hash")
-        )
+        hashes = _seen_view(spark, ckpt, epoch).select("url_hash")
         _filter_add_from_df(flt, hashes, n_rows)
     return flt
 
@@ -936,25 +964,25 @@ def _fetch(
     return pc.sum(counts.column("n_links")).as_py()
 
 
-def _seen_rows_small(ckpt: str, upto_epoch: int, cap: int) -> bool:
-    """True iff the exact seen view's input rows total ≤ cap (parquet
-    footer counts only — no reads)."""
+def _seen_rows_small(ckpt: str, upto_epoch: int) -> bool:
+    """True iff the exact seen view's input rows total ≤
+    `_DRIVER_ADD_MAX_ROWS` (parquet footer counts only — no reads)."""
     total = 0
     for e in range(upto_epoch + 1):
         for t in ("seen_new", "seen_removed"):
             if os.path.isdir(ck.table_path(ckpt, e, t)):
                 total += ck.table_num_rows(ckpt, e, t)
-                if total > cap:
+                if total > _DRIVER_ADD_MAX_ROWS:
                     return False
     return True
 
 
-def _seen_view_local(ckpt: str, upto_epoch: int) -> pa.Array:
-    """`_seen_view`'s urls as a driver-side array (callers gate the size
-    via `_seen_rows_small`): a url is seen iff its latest event in seen_new
-    ∪ seen_removed is an admission, a tombstone winning a tie — the
-    DataFrame view's admit_epoch > max(removed_epoch) rule. `_take_first`
-    keeps each url's latest event."""
+def _seen_view_local(ckpt: str, upto_epoch: int) -> pa.Table:
+    """`_seen_view` (url, url_hash) as a driver-side table (callers gate
+    the size via `_seen_rows_small`): a url is seen iff its latest event in
+    seen_new ∪ seen_removed is an admission, a tombstone winning a tie —
+    the DataFrame view's admit_epoch > max(removed_epoch) rule.
+    `_take_first` keeps each url's latest event."""
     events = []
     for name, epoch_col, admitted in (
         ("seen_new", "admit_epoch", True), ("seen_removed", "removed_epoch", False)
@@ -962,7 +990,8 @@ def _seen_view_local(ckpt: str, upto_epoch: int) -> pa.Array:
         for e in range(upto_epoch + 1):
             if os.path.isdir(ck.table_path(ckpt, e, name)):
                 t = ck.read_table_local(
-                    ckpt, e, name, ["url", epoch_col], _DRIVER_ADD_MAX_ROWS
+                    ckpt, e, name, ["url", "url_hash", epoch_col],
+                    _DRIVER_ADD_MAX_ROWS,
                 )
                 # sorted ascending: the latest epoch first, a tombstone
                 # before an admission of the same epoch
@@ -971,26 +1000,28 @@ def _seen_view_local(ckpt: str, upto_epoch: int) -> pa.Array:
                     pa.table(
                         {
                             "url": t.column("url"),
+                            "url_hash": t.column("url_hash"),
                             "after": after,
                             "admitted": pa.array(np.full(t.num_rows, admitted)),
                         }
                     )
                 )
     latest = _take_first(pa.concat_tables(events), "url", ["after", "admitted"], 1)[0]
-    return latest.filter(latest.column("admitted")).column("url").combine_chunks()
+    return latest.filter(latest.column("admitted")).select(["url", "url_hash"])
 
 
 def _split_seen(spark: SparkSession, ckpt: str, epoch: int, t, cached: list):
     """(seen, unseen): the rows of `t` whose url is / is not in the seen
     view as of `epoch`, both plus url_hash — the one exact seen-membership
-    test. Admission and seed injection keep the unseen rows, expiry the
+    test. Admission and injection keep the unseen rows, expiry the
     seen ones. A driver-held `t` (its callers gate the seen view's size by
     `_seen_rows_small`) is tested by `pc.is_in` against `_seen_view_local`.
     For a DataFrame only the rows the epoch's seen-filter cannot rule out
     are joined to the view: semi-joined for `seen`, anti-joined for
     `unseen`, which is persisted."""
     if not isinstance(t, DataFrame):
-        seen = pc.is_in(t.column("url"), value_set=_seen_view_local(ckpt, epoch))
+        view = _seen_view_local(ckpt, epoch).column("url").combine_chunks()
+        seen = pc.is_in(t.column("url"), value_set=view)
         return _with_url_hash(t.filter(seen)), _with_url_hash(t.filter(pc.invert(seen)))
     maybe = _seen_filter_udf(_load_seen_filter(_filter_path(ckpt, epoch)))
     cand = _with_url_hash(t).withColumn("_maybe", maybe("url_hash")).persist()
@@ -1016,9 +1047,7 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
     persisted DataFrame."""
     out_epoch = epoch + 1
     fetch_out = ck.table_path(ckpt, out_epoch, "fetch_out")
-    if n_links <= _DRIVER_COMMIT_MAX_ROWS and _seen_rows_small(
-        ckpt, epoch, _DRIVER_ADD_MAX_ROWS
-    ):
+    if n_links <= _DRIVER_COMMIT_MAX_ROWS and _seen_rows_small(ckpt, epoch):
         # n_links is exact and the epoch admits only when it is > 0, so
         # the link dir exists
         links = pq.read_table(
@@ -1057,12 +1086,13 @@ def _commit_epoch(
     spark: SparkSession, ckpt: str, epoch: int, tables: dict, flt, lineage: dict,
     phases: _Phases,
 ) -> None:
-    """The one commit path of every epoch kind (init, run_epoch, expiry,
-    reseed): write `tables` (`_write_all`), apply them to the seen-filter
-    `flt` and save it, and last write the manifest — the caller's `lineage`
-    plus urls_admitted, seen_filter_load and phase_ms, and urls_expired for
-    an expiry. Every filter change is read back from the written tables,
-    so it happens here and only here:
+    """The one commit path of every epoch kind (an injection — init,
+    steady init or reseed —, run_epoch and expiry): write `tables`
+    (`_write_all`), apply them to the seen-filter `flt` and save it, and
+    last write the manifest — the caller's `lineage` plus urls_admitted,
+    seen_filter_load and phase_ms, and urls_expired for an expiry. Every
+    filter change is read back from the written tables, so it happens here
+    and only here:
 
     - seen_removed (an expiry): its row count comes from the footers. A
       cuckoo filter deletes the tombstones' url_hash column, read in
@@ -1225,6 +1255,24 @@ def run_epoch(
             df.unpersist()
 
 
+def _steady_rows(batch: pa.RecordBatch, n_hosts: int) -> pa.RecordBatch:
+    """Steady-state frontier rows for a batch of ids: detail URL i on host
+    i % n_hosts, keyed by i — column-wise, no Python per row."""
+    i = batch.column("id").to_numpy()
+    key = pa.array((i % 2_000_000_000).astype(np.int32))
+    zero = pa.array(np.zeros(len(i), np.int32))
+    host = pc.binary_join_element_wise(
+        "h", pa.array(i % n_hosts).cast(pa.string()), ".test", ""
+    )
+    url = pc.binary_join_element_wise(
+        "https://", host, "/detail/ss", pa.array(i).cast(pa.string()), ""
+    )
+    kind = pa.repeat(pa.scalar("detail", pa.string()), len(i))
+    return pa.RecordBatch.from_arrays(
+        [zero, zero, key, zero, key, kind, url, host], schema=_FRONTIER_PA
+    )
+
+
 def init_steady_frontier(
     spark: SparkSession,
     spec: SiteSpec,
@@ -1236,49 +1284,21 @@ def init_steady_frontier(
     detail URLs across `spec.n_hosts` hosts — the regime every epoch of a
     10^10-URL crawl lives in (frontier ≫ per-epoch budget is the *politeness*
     constraint; here budgets are open so the epoch measures scheduler +
-    fetch + payload throughput, the BASELINE.json metric)."""
-
-    def gen(batches):
-        for pdf in batches:
-            ids = pdf["id"].astype(np.int64)
-            yield pd.DataFrame(
-                {
-                    "priority": np.zeros(len(ids), dtype=np.int32),
-                    "disc_epoch": np.zeros(len(ids), dtype=np.int32),
-                    "seed_idx": (ids % 2_000_000_000).astype(np.int32),
-                    "page_idx": np.zeros(len(ids), dtype=np.int32),
-                    "pos": (ids % 2_000_000_000).astype(np.int32),
-                    "kind": "detail",
-                    "url": [
-                        f"https://h{i % spec.n_hosts}.test/detail/ss{i}" for i in ids
-                    ],
-                    "host": [f"h{i % spec.n_hosts}.test" for i in ids],
-                }
-            )
-
-    frontier = _with_url_hash(
-        spark.range(n_urls)
-        .repartition(32)
-        .mapInPandas(gen, schema=from_arrow_schema(_FRONTIER_PA))
-    )
-    hosts = spark.createDataFrame(
-        [(f"h{i}.test", float(spec.burst), []) for i in range(spec.n_hosts)],
-        "host string, tokens double, disallow_prefixes array<string>",
-    )
-    _commit_epoch(
-        spark,
-        ckpt,
-        0,
-        {
-            "frontier": frontier.select(*FRONTIER_COLS),
-            "host_counts": _count_by_host(frontier, "n_pending"),
-            "seen_new": _seen_event(frontier, "admit_epoch", 0),
-            "politeness": hosts.select("host", "tokens"),
-            "robots": hosts.select("host", "disallow_prefixes"),
-        },
+    fetch + payload throughput, the BASELINE.json metric). The rows
+    (`_steady_rows`) are built from ids held on the driver up to
+    `_DRIVER_COMMIT_MAX_ROWS`, else from `spark.range`, and `_inject`ed
+    into an empty checkpoint with every host h0.test … and a fresh
+    seen-filter of `filter_kind`."""
+    if n_urls <= _DRIVER_COMMIT_MAX_ROWS:
+        ids = pa.table({"id": np.arange(n_urls, dtype=np.int64)})
+    else:
+        ids = spark.range(n_urls).repartition(32)
+    fn = _per_batch(partial(_steady_rows, n_hosts=spec.n_hosts))
+    hosts = pa.array([f"h{i}.test" for i in range(spec.n_hosts)], pa.string())
+    _inject(
+        spark, spec, ckpt, 0, _map_arrow(fn, ids, _FRONTIER_PA), hosts,
         _make_seen_filter(filter_kind, max(n_urls, 1024)),
         {"kind": "steady_state_init"},
-        _Phases(),
     )
 
 
@@ -1336,7 +1356,7 @@ def expire_seen(spark: SparkSession, ckpt: str, urls) -> int:
     local = (
         not isinstance(urls, DataFrame)
         and urls.num_rows <= _DRIVER_COMMIT_MAX_ROWS
-        and _seen_rows_small(ckpt, last, _DRIVER_ADD_MAX_ROWS)
+        and _seen_rows_small(ckpt, last)
     )
     if local:
         urls = pa.table({"url": pc.unique(urls.column("url")).cast(pa.string())})

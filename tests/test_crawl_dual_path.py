@@ -27,6 +27,7 @@ import pytest
 from pyspark.sql import DataFrame
 
 from gov_procurement_spider_spark.crawler import fetcher
+from gov_procurement_spider_spark.crawler.bloom import BloomFilter
 from gov_procurement_spider_spark.crawler.cuckoo import CuckooFilter
 from gov_procurement_spider_spark.plans import crawl as C
 from gov_procurement_spider_spark.sources import site_model as sm
@@ -63,9 +64,20 @@ GROWING = SiteSpec(
     n_seeds=6, n_hosts=3, detail_space=60, max_list_pages=3,
     rate_per_sec=50.0, burst=50.0,
 )
+# a steady frontier of 60 detail urls, 20 per host, drained at 8 per host
+# per epoch over three fetching epochs (two budget-bound), each fetched on
+# the driver when local
+STEADY = SiteSpec(n_hosts=3, rate_per_sec=4.0, burst=8.0, epoch_seconds=2.0)
 
 
 def _crawl(spark, spec, ckpt):
+    C.run_crawl(spark, spec, ckpt)
+
+
+def _steady_crawl(spark, spec, ckpt):
+    """A steady frontier (its rows from driver-held ids when local, from
+    `spark.range` with the caps at 0) crawled to exhaustion."""
+    C.init_steady_frontier(spark, spec, ckpt, 60)
     C.run_crawl(spark, spec, ckpt)
 
 
@@ -216,10 +228,11 @@ def _differences(local, spark_only):
         (_crawl, FRACTIONAL),
         (_growing_then_recrawl, GROWING),
         (_partial_expiry_recrawl, SPEC),
+        (_steady_crawl, STEADY),
     ],
     ids=[
         "budget_bound", "fractional_rate", "cuckoo_growth_recrawl",
-        "partial_expiry_recrawl",
+        "partial_expiry_recrawl", "steady_state",
     ],
 )
 def test_driver_and_spark_commits_identical(spark, monkeypatch, drive, spec):
@@ -272,10 +285,13 @@ def test_one_filter_update_path():
 
 
 def test_one_seed_path():
-    """Seeds enter the frontier one way: init_state and reseed both call
-    `_inject_seeds`, the only caller of `_seed_frontier`, which alone
-    builds the seed rows, so a second seed path cannot skip keep-first or
-    the seen anti-join."""
+    """Every frontier is initialised one way, `_inject`: init_state and
+    reseed call `_inject_seeds`, the only caller of `_seed_frontier`, which
+    alone builds the seed rows, and init_steady_frontier injects its
+    steady rows. `_commit_epoch` is called only by `_inject`, `_commit`
+    and expire_seen, and no per-row pandas generator builds rows, so a
+    second initialisation path cannot skip keep-first, the seen anti-join
+    or the new hosts' state."""
     module = inspect.getsource(C)
     inject = inspect.getsource(C._inject_seeds)
     assert module.count("_seed_frontier(") == 2  # its def and one call
@@ -284,6 +300,37 @@ def test_one_seed_path():
     assert "_seed_rows(" in inspect.getsource(C._seed_frontier)
     for entry in (C.init_state, C.reseed):
         assert "_inject_seeds(" in inspect.getsource(entry), entry.__name__
+    for caller in (C._inject_seeds, C.init_steady_frontier):
+        assert "_inject(" in inspect.getsource(caller), caller.__name__
+    assert module.count("_commit_epoch(") == 4  # its def and three calls
+    for caller in (C._inject, C._commit, C.expire_seen):
+        assert "_commit_epoch(" in inspect.getsource(caller), caller.__name__
+    assert "mapInPandas" not in module
+
+
+def test_driver_refill_reads_stored_hashes(spark, monkeypatch):
+    """The driver refill of a seen-filter adds the url_hash each seen row
+    stores and hashes no url: with site_model.h64 raising, refilling an
+    empty Bloom filter from a small crawl's last seen view gives that
+    epoch's committed filter byte for byte."""
+    ckpt = tempfile.mkdtemp(prefix="refill_")
+    C.run_crawl(spark, SPEC, ckpt)
+    last = ck.last_committed(ckpt)
+    committed = _last_filter(ckpt)
+
+    def no_hash(s):
+        raise AssertionError(f"hashed {s!r}")
+
+    monkeypatch.setattr(sm, "h64", no_hash)
+    refilled = C._refill_seen_filter(
+        spark, ckpt, last, BloomFilter.empty_like(committed)
+    )
+    out = tempfile.mkdtemp(prefix="refilled_")
+    os.makedirs(ck.epoch_dir(out, last))
+    refilled.save(os.path.join(ck.epoch_dir(out, last), "bloom.npz"))
+    assert _filter_content(out, last) == _filter_content(ckpt, last)
+    for d in (ckpt, out):
+        shutil.rmtree(d, ignore_errors=True)
 
 
 def _rows(t):
@@ -411,6 +458,18 @@ def test_recrawl_after_expiry_and_reseed_runs_no_spark_job(spark):
     reseed_epoch = ck.last_committed(ckpt)
     assert _spark_jobs(spark, lambda: C.run_crawl(spark, SPEC, ckpt)) == []
     assert ck.last_committed(ckpt) > reseed_epoch + 1, "the second pass never ran"
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_small_steady_init_runs_no_spark_job(spark):
+    """Under the default caps a steady frontier below
+    `_DRIVER_COMMIT_MAX_ROWS` is built from driver-held ids and injected on
+    the driver: init_steady_frontier launches no Spark job."""
+    ckpt = tempfile.mkdtemp(prefix="steady_jobs_")
+    assert _spark_jobs(
+        spark, lambda: C.init_steady_frontier(spark, STEADY, ckpt, 2048)
+    ) == []
+    assert ck.table_num_rows(ckpt, 0, "frontier") == 2048
     shutil.rmtree(ckpt, ignore_errors=True)
 
 

@@ -83,6 +83,19 @@ def test_metrics_lineage(crawl, sim):
     assert all(r.wall_ms >= 0 for r in m)
 
 
+def test_readers_before_any_fetch_epoch(spark, crawl):
+    """A checkpoint with only its init epoch (max_epochs=0) has no
+    crawl_log or fetch_out yet: each reader returns an empty DataFrame with
+    the columns and types it has on a finished crawl."""
+    ckpt = tempfile.mkdtemp(prefix="crawl_unfetched_")
+    result = run_crawl(spark, SPEC, ckpt, max_epochs=0)
+    assert ck.committed_epochs(ckpt) == [0]
+    for reader in ("crawl_order", "fetched", "failed", "metrics"):
+        empty, full = getattr(result, reader)(), getattr(crawl, reader)()
+        assert empty.dtypes == full.dtypes, reader
+        assert empty.count() == 0, reader
+
+
 def _assert_resumed_equal(resumed, crawl, sim):
     """The resumed crawl's order, seen set and payload bytes equal refsim's
     and the uninterrupted run's."""
