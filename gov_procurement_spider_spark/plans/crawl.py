@@ -5,7 +5,7 @@ Replaces the reference's strictly sequential fetch loop (main.py:69-140, one
 in-flight request, fresh Chrome per URL, no persistence) with per-epoch
 DataFrame dataflow, one path for every epoch:
 
-  plan    host_counts ⟗ politeness ─ _host_plan ─► per-host taken, refill
+  plan    hosts ─ _host_plan ─► per-host taken, refill
   select  frontier ─ top-taken per host (O2; salted above the cap) ─►
           selected / remaining
   fetch   selected ─ make_fetcher (S3) ─ fetch_out_writer ─► fetch_out:
@@ -15,20 +15,21 @@ DataFrame dataflow, one path for every epoch:
           else in each mapInArrow task
   admit   links ─ keep-first (min per url) ─ seen-filter prefilter + exact
           anti-join vs seen (D1) ─► admitted
-  commit  frontier' / host_counts' / politeness' / seen+ / crawl_log /
-          seen-filter, one manifest per epoch (T5) — `_commit_epoch`, the
-          one commit path of every epoch kind (init, steady init,
-          run_epoch, expiry, reseed)
+  commit  frontier' / hosts' / seen+ / crawl_log / seen-filter, one
+          manifest per epoch (T5) — `_commit_epoch`, the one commit path
+          of every epoch kind (init, steady init, run_epoch, expiry,
+          reseed)
 
 A tick epoch (no budget anywhere) skips fetch and admit; a link-free epoch
 skips admit. Each table is materialised on the driver (pyarrow, one sorted
 parquet file) when its size — known before it is built — is under the local
-caps, otherwise by Spark jobs. The host-sized state (plan scalars,
-per-host taken, token refill, host_counts carry) and the fetch have one
+caps, otherwise by Spark jobs. The host-sized state — one carried table,
+`hosts` (host, n_pending, tokens): plan scalars, per-host taken, token
+refill and the pending-count carry — and the fetch have one
 implementation each — the pyarrow pair `_host_plan` / `_host_carry` and
 `make_fetcher` — with two forms chosen in one place (`_map_arrow`): called
 directly over the batches of a driver-held table, or through mapInArrow
-over a DataFrame (the host-keyed join; a selection above
+over a DataFrame (the hosts table above the cap; a selection above
 `_DRIVER_FETCH_MAX_URLS`). A small crawl therefore launches no Spark job
 at all. Three steps are kept in two forms, Spark for big inputs and
 pyarrow for small ones: the budget-bound selection (salted windows),
@@ -306,8 +307,7 @@ def _seed_frontier(spec: SiteSpec) -> pa.Table:
 # same bytes, so resume replay stays byte-identical
 _SORT_KEY = {
     "frontier": "url", "crawl_log": "url", "seen_new": "url",
-    "seen_removed": "url", "host_counts": "host", "politeness": "host",
-    "robots": "host",
+    "seen_removed": "url", "hosts": "host", "robots": "host",
 }
 
 
@@ -413,14 +413,15 @@ def _inject(
     row of each url over the pending rows and `rows` (`_first_per_url`).
     The rows not seen as of the prior epoch enter seen_new (`_split_seen`'s
     unseen side): refsim puts the seeds in the seen set at start, so every
-    pass must, and a row still seen keeps its one live seen row. The
-    `hosts` get a full politeness bucket (a host with no row plans from a
-    full bucket, and an idle host's stale tokens are never refilled, so
-    other hosts' rows need no reset) and their site-model robots rules,
-    written at init only, where `_robots` reads them. Every table stays on
-    the driver when `rows` is a driver-held table and it, the pending
-    frontier and the prior seen view fit the local caps, as in `_admit`;
-    otherwise the steps run in Spark."""
+    pass must, and a row still seen keeps its one live seen row. The hosts
+    table is the frontier's count by host ⟗ the `hosts` with a full
+    politeness bucket (`_carry_hosts`); any other pending host gets null
+    tokens, which plan as a full bucket too. The `hosts` also get their
+    site-model robots rules, written at init only, where `_robots` reads
+    them. Every table stays on the driver when `rows` is a driver-held
+    table and it, the pending frontier and the prior seen view fit the
+    local caps, as in `_admit`; otherwise the steps run in Spark, over
+    `rows` persisted once."""
     prior = epoch - 1
     new_hosts = _new_hosts(hosts, spec)
     local = (
@@ -432,9 +433,10 @@ def _inject(
             and _seen_rows_small(ckpt, prior)
         )
     )
-    if not local:
-        rows, new_hosts = _to_df(spark, rows), _to_df(spark, new_hosts)
     cached: list[DataFrame] = []
+    if not local:  # read by every table built below
+        rows, new_hosts = _to_df(spark, rows).persist(), _to_df(spark, new_hosts)
+        cached.append(rows)
     try:
         if epoch == 0:
             frontier, admitted = rows, _with_url_hash(rows)
@@ -452,8 +454,10 @@ def _inject(
         tables = {
             "frontier": frontier,
             "seen_new": _seen_event(admitted, "admit_epoch", epoch),
-            "host_counts": _count_by_host(frontier, "n_pending"),
-            "politeness": _cols(new_hosts, ["host", "tokens"]),
+            "hosts": _carry_hosts(
+                spark, _count_by_host(frontier, "n_pending"),
+                _cols(new_hosts, ["host", "tokens"]),
+            ),
         }
         if epoch == 0:
             tables["robots"] = _cols(new_hosts, ["host", "disallow_prefixes"])
@@ -478,28 +482,32 @@ def init_state(
 ) -> None:
     """Epoch-0 state: the seeds injected (`_inject_seeds`) into an empty
     checkpoint with a fresh seen-filter of `filter_kind` — frontier = the
-    seeds, seen = the seeds, politeness = burst, robots."""
+    seeds, seen = the seeds, hosts = their counts with tokens = burst,
+    robots."""
     _inject_seeds(
         spark, spec, ckpt, 0,
         _make_seen_filter(filter_kind, _bloom_expected(spec)), {"kind": "init"},
     )
 
 
-# ---- host-sized state: one pyarrow implementation, on the driver or in
-# Spark. Both functions map one batch of a host-keyed join to one batch.
+# ---- host-sized state: one carried table, `hosts` (host, n_pending,
+# tokens), and one pyarrow implementation, on the driver or in Spark. Both
+# functions map one batch to one batch.
 
+_HOSTS_PA = pa.schema(
+    [("host", pa.string()), ("n_pending", pa.int64()), ("tokens", pa.float64())]
+)
 _HOST_PLAN_PA = pa.schema(
     [("host", pa.string()), ("n_pending", pa.int64()), ("n_taken", pa.int64()),
      ("tokens", pa.float64())]
 )
-_HOST_COUNTS_PA = pa.schema([("host", pa.string()), ("n_pending", pa.int64())])
 
 
 def _host_plan(hosts: pa.RecordBatch, burst: float, refill: float) -> pa.RecordBatch:
     """The per-host politeness step (T2, the spec shared with refsim) over
-    a batch of host_counts ⟗ politeness (host, n_pending, tokens). A host
-    the politeness table has never seen (first discovered this run) starts
-    with a full bucket; a host absent from host_counts is idle.
+    a batch of the hosts table (host, n_pending, tokens). A host with null
+    tokens (first discovered this run) starts with a full bucket; a host
+    with no pending url is idle.
 
       n_taken = min(n_pending, floor(tokens))   this epoch's fetches
       tokens' = min(burst, tokens − n_taken + refill)   for active hosts;
@@ -508,40 +516,40 @@ def _host_plan(hosts: pa.RecordBatch, burst: float, refill: float) -> pa.RecordB
     The plan scalars are its sums: Σ n_pending is the frontier size and
     Σ n_taken the selected-set size — known before selection, and the
     selection is budget-bound exactly when they differ."""
-    pending = hosts.column("n_pending")
+    pending = pc.fill_null(hosts.column("n_pending"), 0)
     tokens = pc.fill_null(hosts.column("tokens"), burst)
-    taken = pc.min_element_wise(
-        pc.fill_null(pending, 0), pc.cast(pc.floor(tokens), pa.int64())
-    )
+    taken = pc.min_element_wise(pending, pc.cast(pc.floor(tokens), pa.int64()))
     refilled = pc.min_element_wise(pc.add(pc.subtract(tokens, taken), refill), burst)
     return pa.RecordBatch.from_arrays(
         [
             pc.cast(hosts.column("host"), pa.string()),
-            pc.fill_null(pending, 0),
+            pending,
             taken,
-            pc.if_else(pc.is_valid(pending), refilled, tokens),
+            pc.if_else(pc.greater(pending, 0), refilled, tokens),
         ],
         schema=_HOST_PLAN_PA,
     )
 
 
 def _host_carry(hosts: pa.RecordBatch) -> pa.RecordBatch:
-    """Next epoch's host_counts from a batch of the plan (host, n_pending,
-    n_taken) ⟗ this epoch's admissions by host (host, n_admitted, absent
-    when nothing was admitted): pending − taken + admitted, hosts at zero
-    dropped — what a groupBy over the next frontier returns, without
-    scanning it (tests/test_host_counts_carry.py pins the two equal)."""
+    """The next hosts table (host, n_pending, tokens) from a batch of a
+    host join holding n_pending and tokens, plus n_taken and n_admitted
+    where they apply, each null where its side has no row for the host.
+    The count is pending − taken + admitted — what a groupBy over the next
+    frontier returns, without scanning it (tests/test_host_counts_carry.py
+    pins the two equal); the tokens pass through. Idle hosts keep their
+    row, since their tokens are state, and a host without tokens (first
+    seen in this epoch's admissions) keeps null ones."""
     names = hosts.schema.names
-    n = pc.subtract(
-        pc.fill_null(hosts.column("n_pending"), 0),
-        pc.fill_null(hosts.column("n_taken"), 0),
-    )
+    n = pc.fill_null(hosts.column("n_pending"), 0)
+    if "n_taken" in names:
+        n = pc.subtract(n, pc.fill_null(hosts.column("n_taken"), 0))
     if "n_admitted" in names:
         n = pc.add(n, pc.fill_null(hosts.column("n_admitted"), 0))
-    out = pa.RecordBatch.from_arrays(
-        [pc.cast(hosts.column("host"), pa.string()), n], schema=_HOST_COUNTS_PA
+    return pa.RecordBatch.from_arrays(
+        [pc.cast(hosts.column("host"), pa.string()), n, hosts.column("tokens")],
+        schema=_HOSTS_PA,
     )
-    return out.filter(pc.greater(n, 0))
 
 
 def _per_batch(fn):
@@ -570,64 +578,50 @@ class _Hosts:
 def _plan_hosts(
     spark: SparkSession, spec: SiteSpec, ckpt: str, epoch: int, cached: list
 ) -> _Hosts:
-    """Run `_host_plan` over the epoch's host tables. Both are |hosts| rows:
-    the carried host_counts (round 5 — the plan phase aggregates |hosts|
-    rows instead of re-shuffling the frontier; every committed epoch
-    carries it) and politeness. Under the local cap they are read and
-    planned on the driver with no Spark job; above it through mapInArrow
-    over their full outer join, persisted for selection and the commit."""
+    """Run `_host_plan` over the epoch's hosts table, which every committed
+    epoch carries (|hosts| rows: the plan phase never re-shuffles the
+    frontier). Under the local cap it is read and planned on the driver
+    with no Spark job; above it through mapInArrow over its scan,
+    persisted for selection and the commit."""
     fn = _per_batch(
         partial(
             _host_plan, burst=float(spec.burst),
             refill=float(spec.rate_per_sec * spec.epoch_seconds),
         )
     )
-    if all(
-        ck.table_num_rows(ckpt, epoch, t) <= _DRIVER_ADD_MAX_ROWS
-        for t in ("host_counts", "politeness")
-    ):
+    if ck.table_num_rows(ckpt, epoch, "hosts") <= _DRIVER_ADD_MAX_ROWS:
         hosts = ck.read_table_local(
-            ckpt, epoch, "host_counts", ["host", "n_pending"], _DRIVER_ADD_MAX_ROWS
-        ).join(
-            ck.read_table_local(
-                ckpt, epoch, "politeness", ["host", "tokens"], _DRIVER_ADD_MAX_ROWS
-            ),
-            "host",
-            join_type="full outer",
+            ckpt, epoch, "hosts", _HOSTS_PA.names, _DRIVER_ADD_MAX_ROWS
         )
-        plan = _map_arrow(fn, hosts, _HOST_PLAN_PA)
+    else:  # an explicit schema, as in _read_frontier
+        hosts = spark.read.schema(from_arrow_schema(_HOSTS_PA)).parquet(
+            ck.table_path(ckpt, epoch, "hosts")
+        )
+    plan = _map_arrow(fn, hosts, _HOST_PLAN_PA)
+    if not isinstance(plan, DataFrame):
         return _Hosts(
             plan,
             pc.sum(plan.column("n_pending")).as_py() or 0,
             pc.sum(plan.column("n_taken")).as_py() or 0,
         )
-    # explicit schemas, as in _read_frontier
-    host_counts = spark.read.schema(from_arrow_schema(_HOST_COUNTS_PA)).parquet(
-        ck.table_path(ckpt, epoch, "host_counts")
-    )
-    politeness = spark.read.schema("host string, tokens double").parquet(
-        ck.table_path(ckpt, epoch, "politeness")
-    )
-    plan = _map_arrow(
-        fn, host_counts.join(politeness, "host", "full"), _HOST_PLAN_PA
-    ).persist()
+    plan = plan.persist()
     cached.append(plan)
     row = plan.agg(F.sum("n_pending"), F.sum("n_taken")).first()
     return _Hosts(plan, int(row[0] or 0), int(row[1] or 0))
 
 
-def _carry_host_counts(spark: SparkSession, plan, admitted):
-    """`_host_carry` over plan ⟗ admissions-by-host — on the driver when
-    both are driver-held, else through mapInArrow."""
-    hosts = _cols(plan, ["host", "n_pending", "n_taken"])
-    by_host = None if admitted is None else _count_by_host(admitted, "n_admitted")
-    if isinstance(hosts, DataFrame) or isinstance(by_host, DataFrame):
-        hosts = _to_df(spark, hosts)
-        if by_host is not None:
-            hosts = hosts.join(_to_df(spark, by_host), "host", "full")
-    elif by_host is not None:
-        hosts = hosts.join(by_host, "host", join_type="full outer")
-    return _map_arrow(_per_batch(_host_carry), hosts, _HOST_COUNTS_PA)
+def _carry_hosts(spark: SparkSession, hosts, other):
+    """`_host_carry` over `hosts` ⟗ `other` on host, the one host join:
+    the plan ⟗ this epoch's admissions by host in `_commit` (`other` None
+    when nothing was admitted), the frontier's count by host ⟗ the
+    injected hosts' full buckets in `_inject`. On the driver when both are
+    driver-held, else through mapInArrow."""
+    if other is not None:
+        if isinstance(hosts, DataFrame) or isinstance(other, DataFrame):
+            hosts = _to_df(spark, hosts).join(_to_df(spark, other), "host", "full")
+        else:
+            hosts = hosts.join(other, "host", join_type="full outer")
+    return _map_arrow(_per_batch(_host_carry), hosts, _HOSTS_PA)
 
 
 # The local caps. An epoch table whose row count — known before it is built
@@ -882,10 +876,9 @@ def _select_local(ckpt: str, epoch: int, hosts: _Hosts):
     """The budget-bound selection on the driver: `_take_first` of each
     host's n_taken rows by SELECT_ORDER, over the frontier left-joined to
     the plan's (host, n_taken). The same rows as the salted windows, with
-    no Spark job — unless the plan is a DataFrame (host_counts or
-    politeness above `_DRIVER_ADD_MAX_ROWS` under a frontier within the
-    local cap): then one collect of its hosts with budget, at most
-    n_frontier rows."""
+    no Spark job — unless the plan is a DataFrame (a hosts table above
+    `_DRIVER_ADD_MAX_ROWS` under a frontier within the local cap): then one
+    collect of its hosts with budget, at most n_frontier rows."""
     taken = _cols(hosts.plan, ["host", "n_taken"])
     if isinstance(taken, DataFrame):
         taken = taken.filter(F.col("n_taken") > 0).toArrow()
@@ -1015,14 +1008,21 @@ def _split_seen(spark: SparkSession, ckpt: str, epoch: int, t, cached: list):
     view as of `epoch`, both plus url_hash — the one exact seen-membership
     test. Admission and injection keep the unseen rows, expiry the
     seen ones. A driver-held `t` (its callers gate the seen view's size by
-    `_seen_rows_small`) is tested by `pc.is_in` against `_seen_view_local`.
+    `_seen_rows_small`) is looked up by `pc.index_in` in `_seen_view_local`:
+    the seen rows take the url_hash the view stores (a seen url is never
+    re-hashed), and only the unseen ones are hashed.
     For a DataFrame only the rows the epoch's seen-filter cannot rule out
     are joined to the view: semi-joined for `seen`, anti-joined for
     `unseen`, which is persisted."""
     if not isinstance(t, DataFrame):
-        view = _seen_view_local(ckpt, epoch).column("url").combine_chunks()
-        seen = pc.is_in(t.column("url"), value_set=view)
-        return _with_url_hash(t.filter(seen)), _with_url_hash(t.filter(pc.invert(seen)))
+        view = _seen_view_local(ckpt, epoch)
+        at = pc.index_in(t.column("url"), value_set=view.column("url").combine_chunks())
+        seen = pc.is_valid(at)
+        hashes = view.column("url_hash").take(at.filter(seen))
+        return (
+            t.filter(seen).append_column("url_hash", hashes),
+            _with_url_hash(t.filter(pc.invert(seen))),
+        )
     maybe = _seen_filter_udf(_load_seen_filter(_filter_path(ckpt, epoch)))
     cand = _with_url_hash(t).withColumn("_maybe", maybe("url_hash")).persist()
     cached.append(cand)
@@ -1185,20 +1185,17 @@ def _commit(
     crawl_log, admitted, phases: _Phases,
 ) -> None:
     """Commit epoch `epoch`'s transition as epoch `epoch + 1`: assemble the
-    next frontier (remaining ∪ admitted), host_counts (`_host_carry`),
-    politeness (`_host_plan`'s refill), seen_new and crawl_log, and hand
-    them with the previous seen-filter to `_commit_epoch`. Driver-held
-    inputs write driver-side; any Spark input makes its table a Spark
-    write."""
+    next frontier (remaining ∪ admitted), hosts (`_carry_hosts` of the
+    plan, with `_host_plan`'s refilled tokens, ⟗ the admissions by host),
+    seen_new and crawl_log, and hand them with the previous seen-filter to
+    `_commit_epoch`. Driver-held inputs write driver-side; any Spark input
+    makes its table a Spark write."""
     out_epoch = epoch + 1
-    frontier = remaining
+    frontier, by_host = remaining, None
     if admitted is not None:
         frontier = _union(spark, [remaining, _cols(admitted, FRONTIER_COLS)])
-    tables = {
-        "frontier": frontier,
-        "host_counts": _carry_host_counts(spark, hosts.plan, admitted),
-        "politeness": _cols(hosts.plan, ["host", "tokens"]),
-    }
+        by_host = _count_by_host(admitted, "n_admitted")
+    tables = {"frontier": frontier, "hosts": _carry_hosts(spark, hosts.plan, by_host)}
     if admitted is not None:
         tables["seen_new"] = _seen_event(admitted, "admit_epoch", out_epoch)
     if crawl_log is not None:
@@ -1307,14 +1304,13 @@ def run_crawl(
     spec: SiteSpec,
     ckpt: str,
     max_epochs: int = 10_000,
-    resume: bool = True,
     filter_kind: str = "bloom",
 ) -> CrawlResult:
-    """Run (or resume) the crawl to frontier exhaustion. ``filter_kind``
-    picks the seen-set prefilter at init ('bloom' | 'cuckoo'); resumed
-    crawls keep whatever the checkpoint stored."""
-    if resume:
-        ck.cleanup_uncommitted(ckpt)
+    """Run (or resume, from the last committed epoch: uncommitted crash
+    debris is dropped first) the crawl to frontier exhaustion.
+    ``filter_kind`` picks the seen-set prefilter at init ('bloom' |
+    'cuckoo'); resumed crawls keep whatever the checkpoint stored."""
+    ck.cleanup_uncommitted(ckpt)
     last = ck.last_committed(ckpt)
     if last is None:
         init_state(spark, spec, ckpt, filter_kind=filter_kind)
@@ -1337,10 +1333,10 @@ def expire_seen(spark: SparkSession, ckpt: str, urls) -> int:
     Commits a fresh epoch whose ``seen_removed`` tombstone table (parquet
     is append-only, like Iceberg delete files) holds the distinct `urls`
     that are seen now (`_split_seen`'s seen side, with url_hash).
-    Frontier, host_counts and politeness carry forward unchanged, as copies
-    of the committed dirs (exact bytes, no Spark job). The epoch commits
-    through `_commit_epoch`, which counts the tombstones and updates the
-    seen prefilter from them: per-key cuckoo deletes in bounded chunks, no
+    Frontier and hosts carry forward unchanged, as copies of the committed
+    dirs (exact bytes, no Spark job). The epoch commits through
+    `_commit_epoch`, which counts the tombstones and updates the seen
+    prefilter from them: per-key cuckoo deletes in bounded chunks, no
     rebuild, or a Bloom rebuild from the post-expiry set (the cost that
     motivates the cuckoo fallback).
 
@@ -1365,7 +1361,7 @@ def expire_seen(spark: SparkSession, ckpt: str, urls) -> int:
     cached: list[DataFrame] = []
     try:
         gone = _split_seen(spark, ckpt, last, urls, cached)[0]
-        for name in ("frontier", "host_counts", "politeness"):
+        for name in ("frontier", "hosts"):
             shutil.copytree(
                 ck.table_path(ckpt, last, name), ck.table_path(ckpt, out_epoch, name)
             )

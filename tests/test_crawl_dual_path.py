@@ -40,8 +40,7 @@ LOCAL_CAPS = (
     "_DRIVER_COMMIT_MAX_ROWS", "_DRIVER_ADD_MAX_ROWS", "_DRIVER_FETCH_MAX_URLS"
 )
 TABLES = (
-    "frontier", "host_counts", "politeness", "seen_new", "crawl_log",
-    "seen_removed",
+    "frontier", "hosts", "seen_new", "crawl_log", "seen_removed",
     *(f"fetch_out/row_type={kind}" for kind in ("payload", "link", "failed")),
 )
 # a metric row is written per fetched batch, and the two fetch forms cut
@@ -333,6 +332,29 @@ def test_driver_refill_reads_stored_hashes(spark, monkeypatch):
         shutil.rmtree(d, ignore_errors=True)
 
 
+def test_driver_split_seen_hashes_only_unseen_rows(spark, monkeypatch):
+    """A driver `_split_seen` takes each seen row's url_hash from the seen
+    view and hashes only the unseen urls: site_model.h64 is called once per
+    unseen url, and both sides carry each url's hash."""
+    ckpt = tempfile.mkdtemp(prefix="split_seen_")
+    C.run_crawl(spark, SPEC, ckpt)
+    last = ck.last_committed(ckpt)
+    seen_urls = sorted(C._seen_view_local(ckpt, last).column("url").to_pylist())[:7]
+    new_urls = [f"https://new.test/detail/{i}" for i in range(5)]
+    h64, calls = sm.h64, []
+    monkeypatch.setattr(sm, "h64", lambda u: calls.append(u) or h64(u))
+    seen, unseen = C._split_seen(
+        spark, ckpt, last, pa.table({"url": seen_urls + new_urls}), []
+    )
+    assert sorted(calls) == new_urls
+    assert sorted(seen.column("url").to_pylist()) == seen_urls
+    assert sorted(unseen.column("url").to_pylist()) == new_urls
+    for side in (seen, unseen):
+        urls = side.column("url").to_pylist()
+        assert side.column("url_hash").to_pylist() == [h64(u) for u in urls]
+    shutil.rmtree(ckpt, ignore_errors=True)
+
+
 def _rows(t):
     """(column names, sorted rows) of a pyarrow table or a DataFrame."""
     if isinstance(t, DataFrame):
@@ -375,7 +397,7 @@ BOUNDARY_SELECTED = {
 @pytest.mark.parametrize("plan_kind", ["driver_plan", "spark_plan"])
 def test_select_boundary_driver_equals_salted(spark, monkeypatch, plan_kind):
     """Driver `_select` (plan held on the driver, or a DataFrame as when
-    the host tables are above the politeness cap) and the salted Spark
+    the hosts table is above its local cap) and the salted Spark
     `_select` (caps 0) pick the same rows at a budget boundary."""
     ckpt = tempfile.mkdtemp(prefix="select_boundary_")
     ck.write_table_local(
@@ -446,7 +468,7 @@ def test_small_crawl_runs_no_spark_job(spark):
 def test_recrawl_after_expiry_and_reseed_runs_no_spark_job(spark):
     """A small site's expiry of a driver-held url table tombstones, counts
     and rebuilds the Bloom filter on the driver; reseed injects the seeds
-    on the driver, as init does; and both commit host_counts like every
+    on the driver, as init does; and both commit a hosts table like every
     other epoch, so the second pass plans from it on the driver: none of
     expire_seen, reseed and the resumed `run_crawl` launches a Spark job."""
     ckpt = tempfile.mkdtemp(prefix="recrawl_jobs_")

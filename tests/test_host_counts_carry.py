@@ -1,17 +1,19 @@
-"""The carried per-host pending-count table (epoch state `host_counts`).
+"""The carried per-host table (epoch state `hosts`: pending count and
+politeness tokens).
 
 Round-5 scale fix: every epoch used to open with a full-frontier
 groupBy(host) — at 10^10-URL scale that is a complete frontier shuffle-agg
 per epoch just to learn per-host pending counts the previous epoch already
-knew. The commit now carries `host_counts` forward incrementally
-(pending − taken + admitted), and the plan phase aggregates the tiny
-carried table instead. These tests pin the invariant that makes that
-sound: for every committed epoch, the carried table equals a fresh
-recomputation from that epoch's frontier — through admissions, constrained
-selection, zero-budget ticks, resume, expiry and reseed."""
+knew. The commit now carries the counts forward incrementally
+(pending − taken + admitted) in the hosts table, and the plan phase reads
+that tiny carried table instead. These tests pin the invariant that makes
+that sound: for every committed epoch, the carried counts equal a fresh
+recomputation from that epoch's frontier — through admissions,
+constrained selection, zero-budget ticks, resume, expiry and reseed."""
 
 from __future__ import annotations
 
+import inspect
 import os
 import shutil
 import tempfile
@@ -28,7 +30,7 @@ from gov_procurement_spider_spark.streaming import checkpoint as ck
 def _assert_counts_match_frontier(spark, ckpt):
     checked = 0
     for e in ck.committed_epochs(ckpt):
-        carried = ck.read_table(spark, ckpt, e, "host_counts")
+        carried = ck.read_table(spark, ckpt, e, "hosts").filter("n_pending > 0")
         want = sorted(
             (r.host, r.n)
             for r in ck.read_table(spark, ckpt, e, "frontier")
@@ -39,7 +41,7 @@ def _assert_counts_match_frontier(spark, ckpt):
         got = sorted((r.host, r.n_pending) for r in carried.collect())
         assert got == want, f"epoch {e}: carried {got} != recomputed {want}"
         checked += 1
-    assert checked >= 2, "expected carried host_counts on several epochs"
+    assert checked >= 2, "expected carried host counts on several epochs"
 
 
 def test_carried_counts_match_frontier_with_admissions(spark):
@@ -76,13 +78,13 @@ def test_plan_phase_reads_carried_table_not_frontier(spark):
     ckpt = tempfile.mkdtemp(prefix="hc_present_")
     C.run_crawl(spark, spec, ckpt, max_epochs=2)
     for e in ck.committed_epochs(ckpt):
-        assert os.path.isdir(ck.table_path(ckpt, e, "host_counts"))
+        assert os.path.isdir(ck.table_path(ckpt, e, "hosts"))
 
 
 def test_every_epoch_kind_commits_counts_and_filter_lineage(spark):
     """init, run_epoch, expiry and reseed all commit through one path:
     through a crawl, an expiry of every seen URL, a reseed and the second
-    crawl, each committed epoch carries host_counts equal to a recount of
+    crawl, each committed epoch carries host counts equal to a recount of
     its frontier and a manifest with urls_admitted and seen_filter_load."""
     spec = SiteSpec(
         n_seeds=4, n_hosts=2, detail_space=40, max_list_pages=2,
@@ -109,8 +111,8 @@ def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
     must yield the same per-host rows, and its plan scalars must equal an
     independent Spark aggregate, on every committed epoch of a crawl that
     exercises both budget-bound and fast-path epochs — budget =
-    floor(tokens), a full bucket for hosts absent from the politeness
-    table, n_selected = Σ min(n_pending, budget)."""
+    floor(tokens), a full bucket for hosts with null tokens, n_selected =
+    Σ min(n_pending, budget)."""
     spec = SiteSpec(
         n_seeds=6, n_hosts=3, detail_space=60, max_list_pages=3,
         rate_per_sec=2.0, burst=4.0, epoch_seconds=2.0,
@@ -120,7 +122,7 @@ def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
     default_budget = int(spec.burst)
     checked = 0
     for e in ck.committed_epochs(ckpt):
-        carried = ck.read_table(spark, ckpt, e, "host_counts")
+        carried = ck.read_table(spark, ckpt, e, "hosts")
         local = C._plan_hosts(spark, spec, ckpt, e, [])
         assert isinstance(local.plan, pa.Table)
         with monkeypatch.context() as m:
@@ -132,12 +134,11 @@ def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
         ), f"epoch {e}: driver and mapInArrow plans differ"
         for df in cached:
             df.unpersist()
-        budgets = ck.read_table(spark, ckpt, e, "politeness").withColumn(
-            "budget", F.floor("tokens").cast("int")
-        )
         row = (
-            carried.join(F.broadcast(budgets), "host", "left")
-            .withColumn("budget", F.coalesce("budget", F.lit(default_budget)))
+            carried.withColumn(
+                "budget",
+                F.coalesce(F.floor("tokens").cast("int"), F.lit(default_budget)),
+            )
             .agg(
                 F.sum("n_pending").alias("nf"),
                 F.sum(F.least("n_pending", "budget")).alias("ns"),
@@ -149,3 +150,33 @@ def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
             assert (got.n_frontier, got.n_selected) == want, f"epoch {e}"
         checked += 1
     assert checked >= 2
+
+
+def test_one_host_table(spark):
+    """Every epoch kind commits one host table: through a steady init, and
+    through a crawl, an expiry of every seen URL, a reseed and the second
+    crawl, each committed epoch holds `hosts` and neither of the two
+    tables it replaced (`host_counts`, `politeness`), and the plan phase
+    reads it with no join in either form."""
+    spec = SiteSpec(
+        n_seeds=4, n_hosts=2, detail_space=40, max_list_pages=2,
+        rate_per_sec=1.0, burst=2.0, epoch_seconds=2.0,
+    )
+    steady = tempfile.mkdtemp(prefix="hosts_steady_")
+    C.init_steady_frontier(spark, spec, steady, 40)
+    ckpt = tempfile.mkdtemp(prefix="hosts_lifecycle_")
+    first = C.run_crawl(spark, spec, ckpt)
+    C.expire_seen(spark, ckpt, first.seen().toArrow())
+    C.reseed(spark, spec, ckpt)
+    C.run_crawl(spark, spec, ckpt)
+    kinds = set()
+    for c in (steady, ckpt):
+        for e in ck.committed_epochs(c):
+            kinds.add(ck.read_manifest(c, e).get("kind", "run_epoch"))
+            assert os.path.isdir(ck.table_path(c, e, "hosts")), (c, e)
+            for gone in ("host_counts", "politeness"):
+                assert not os.path.exists(ck.table_path(c, e, gone)), (c, e, gone)
+    assert kinds == {"steady_state_init", "init", "run_epoch", "expiry", "reseed"}
+    assert ".join(" not in inspect.getsource(C._plan_hosts)
+    for c in (steady, ckpt):
+        shutil.rmtree(c, ignore_errors=True)

@@ -1,8 +1,8 @@
-"""A frontier host the politeness table has never seen (first discovered
+"""A frontier host with no politeness tokens yet (first discovered
 mid-crawl) must neither vanish from selection (the old null-budget bug: both
 rn<=budget and rn>budget are null-false) nor fetch uncapped on the fast
-path. It enters with a fresh floor(burst) budget and joins the politeness
-table via the full-outer refill."""
+path. It enters with a fresh floor(burst) budget and keeps its refilled
+tokens in the hosts table."""
 
 from __future__ import annotations
 
@@ -27,7 +27,7 @@ N_UNKNOWN = 10  # pending on the unknown host: >> floor(burst) == 3
 
 
 def _inject_unknown_host(spark, ckpt):
-    """Append detail URLs for a host absent from the politeness table."""
+    """Append detail URLs for a host the hosts table has no tokens for."""
     rows = [
         (9, 0, 1000 + i, 0, i, "detail", f"https://ghost.test/detail/g{i}", "ghost.test")
         for i in range(N_UNKNOWN)
@@ -52,11 +52,16 @@ def _inject_unknown_host(spark, ckpt):
     )
     seen_rows = seen.collect()
     ck.write_table(spark.createDataFrame(seen_rows, seen.schema), ckpt, 0, "seen_new")
-    # hand-editing the frontier invalidates the carried host_counts (in the
-    # real flow every commit carries it via _host_carry) — recount it
+    # hand-editing the frontier invalidates the carried hosts table's
+    # counts (in the real flow every commit carries them via _host_carry) —
+    # recount them, keeping the known hosts' tokens (the ghost gets none)
+    hosts = (
+        _count_by_host(ck.read_table(spark, ckpt, 0, "frontier"), "n_pending")
+        .join(ck.read_table(spark, ckpt, 0, "hosts").drop("n_pending"), "host", "left")
+        .select("host", "n_pending", "tokens")
+    )
     ck.write_table(
-        _count_by_host(ck.read_table(spark, ckpt, 0, "frontier"), "n_pending"),
-        ckpt, 0, "host_counts",
+        spark.createDataFrame(hosts.collect(), hosts.schema), ckpt, 0, "hosts"
     )
     bf = BloomFilter(1024)
     bf.save(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
@@ -81,9 +86,9 @@ def test_unknown_host_selected_capped_and_tracked(spark):
         N_UNKNOWN - int(SPEC.burst)
     )
 
-    pol = spark.read.parquet(ck.table_path(ckpt, 1, "politeness"))
-    ghost_rows = pol.filter(F.col("host") == "ghost.test").collect()
-    assert len(ghost_rows) == 1  # full-outer refill added the new host
+    hosts = spark.read.parquet(ck.table_path(ckpt, 1, "hosts"))
+    ghost_rows = hosts.filter(F.col("host") == "ghost.test").collect()
+    assert len(ghost_rows) == 1  # the carry kept the new host's refill
     # burst - taken + refill, capped at burst
     expected = min(SPEC.burst, SPEC.burst - int(SPEC.burst) + SPEC.rate_per_sec * SPEC.epoch_seconds)
     assert ghost_rows[0]["tokens"] == expected
