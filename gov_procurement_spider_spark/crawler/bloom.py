@@ -10,9 +10,12 @@ negatives bypass it, and the filter has no false negatives.
 
 Pure numpy bit array; double-hashing (h1 + i*h2) over the 60-bit URL hash,
 so adding keys is vectorized and the structure serializes to one .npz per
-epoch checkpoint. A cuckoo filter would replace this if the frontier ever
-needed deletions (north rule's fallback); the seen-set is append-only, so
-Bloom suffices.
+epoch checkpoint. Every crawl starts with this filter: until something
+expires the seen set is append-only, and Bloom holds it in fewer bits per
+key (~9.6 at the 1% target) than a cuckoo filter's 16-bit fingerprints.
+Bloom cannot forget, so the crawl's first expiry that removes a url
+replaces it by a cuckoo filter (crawler/cuckoo.py; plans/crawl.py
+`_commit_epoch`, the north rule's fallback).
 """
 
 from __future__ import annotations
@@ -38,11 +41,9 @@ class BloomFilter:
 
     @classmethod
     def empty_like(cls, other: "BloomFilter") -> "BloomFilter":
-        """A zeroed filter with ``other``'s exact geometry (m, k): a
-        partial of the distributed build, and the rebuild after an expiry
-        epoch, which keeps the capacity the original was sized for (the
-        post-expiry set is small NOW, but the crawl keeps adding keys at the
-        original spec's rate)."""
+        """A zeroed filter with ``other``'s exact geometry (m, k): the
+        per-partition partial of the distributed build (partials must
+        share it to merge)."""
         bf = cls.__new__(cls)
         bf.m, bf.k = other.m, other.k
         bf.bits = np.zeros_like(other.bits)

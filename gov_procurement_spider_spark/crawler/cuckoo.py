@@ -10,7 +10,10 @@ expiry batch is a full scan of the seen table. A cuckoo filter (Fan et al.,
 "Cuckoo Filter: Practically Better Than Bloom", CoNEXT 2014 — public paper)
 stores 16-bit fingerprints in 4-slot buckets with two candidate buckets per
 key, giving the same no-false-negative / low-false-positive contract PLUS
-O(1) deletion of individual keys.
+O(1) deletion of individual keys. So a crawl pays that scan once: its first
+expiry that removes a url builds this filter from the post-expiry seen view
+in place of the Bloom filter (plans/crawl.py `_grow_cuckoo`), and every
+later expiry deletes per key.
 
 Same numpy-vectorized design rules as bloom.py: batch lookup is the Spark
 hot path (broadcast into a pandas UDF, crawl.py), so ``maybe_contains`` is

@@ -50,14 +50,17 @@ the last committed epoch, and init_steady_frontier injects `_steady_rows`
 pins both materialisations to the same committed rows, fetch_out and
 filters.
 
-The seen-set prefilter is Bloom by default (append-only crawls) or a cuckoo
-filter (crawler/cuckoo.py) when per-key deletion is needed. Every change to
-it happens in `_commit_epoch`, read back from the tables the epoch has
-just written: seen_new hashes are added (a cuckoo filter about to cross
-its safe load is first rebuilt larger from the exact seen view), and
-seen_removed hashes are deleted from a cuckoo filter without a rebuild or,
-Bloom being unable to forget, answered by a rebuild from the post-expiry
-view. expire_seen only assembles that tombstone table and reseed
+The seen-set prefilter's kind follows from the checkpoint: every crawl
+starts with a Bloom filter (the seen set is append-only until something
+expires), and the first expiry that removes a url replaces it with a
+cuckoo filter (crawler/cuckoo.py) built from the post-expiry seen view,
+which deletes per key from then on. Every change to the filter happens in
+`_commit_epoch`, read back from the tables the epoch has just written:
+seen_new hashes are added (a cuckoo filter about to cross its safe load
+is first rebuilt larger from the exact seen view), and seen_removed
+hashes are deleted from a cuckoo filter or, at the first expiry, dropped
+by building it. `_grow_cuckoo` is the one builder of a filter from the
+seen view. expire_seen only assembles that tombstone table and reseed
 re-injects the seed pages — together the TTL-recrawl lifecycle
 (tests/test_recrawl.py proves the second pass reproduces the reference
 order bit-identically).
@@ -477,16 +480,13 @@ def _inject_seeds(
     _inject(spark, spec, ckpt, epoch, seeds, hosts, flt, lineage)
 
 
-def init_state(
-    spark: SparkSession, spec: SiteSpec, ckpt: str, filter_kind: str = "bloom"
-) -> None:
+def init_state(spark: SparkSession, spec: SiteSpec, ckpt: str) -> None:
     """Epoch-0 state: the seeds injected (`_inject_seeds`) into an empty
-    checkpoint with a fresh seen-filter of `filter_kind` — frontier = the
-    seeds, seen = the seeds, hosts = their counts with tokens = burst,
-    robots."""
+    checkpoint with a fresh Bloom seen-filter sized for the site —
+    frontier = the seeds, seen = the seeds, hosts = their counts with
+    tokens = burst, robots."""
     _inject_seeds(
-        spark, spec, ckpt, 0,
-        _make_seen_filter(filter_kind, _bloom_expected(spec)), {"kind": "init"},
+        spark, spec, ckpt, 0, BloomFilter(_bloom_expected(spec)), {"kind": "init"}
     )
 
 
@@ -701,41 +701,30 @@ def _grown_m(old_m: int, n_total: int) -> int:
     return max(2 * old_m, CuckooFilter.m_for(int(n_total / 0.72) + 1))
 
 
-def _refill_seen_filter(
-    spark: SparkSession, ckpt: str, epoch: int, flt, n_rows: int | None = None
-):
-    """Fill the empty seen-filter `flt` from the exact seen view as of
-    `epoch` (whose own tables must already be written) and return it, with
-    the url_hash each seen row stores: on the driver when the view's input
-    rows fit `_DRIVER_ADD_MAX_ROWS` (`_seen_view_local`), else by a
-    distributed build over `_seen_view`, partitioned for the caller's
-    `n_rows` hint."""
-    if _seen_rows_small(ckpt, epoch):
-        flt.add_many(_seen_view_local(ckpt, epoch).column("url_hash").to_numpy())
-    else:
-        hashes = _seen_view(spark, ckpt, epoch).select("url_hash")
-        _filter_add_from_df(flt, hashes, n_rows)
-    return flt
-
-
 def _grow_cuckoo(
-    spark: SparkSession, ckpt: str, upto_epoch: int, old: CuckooFilter,
-    n_total: int,
+    spark: SparkSession, ckpt: str, upto_epoch: int, old_m: int, n_total: int
 ) -> CuckooFilter:
-    """Rebuild the cuckoo seen-filter into a larger table from the EXACT
-    seen view as of ``upto_epoch`` (which must already include the epoch's
-    seen_new append; `_refill_seen_filter`, a distributed build scaled by
-    ``n_total`` above the driver cap). A cuckoo table cannot be grown from
-    its own fingerprints — doubling m adds an index bit that only the
-    original 64-bit key carries. The new table is `_grown_m`: at least 2×
-    the old (so growth amortizes to O(1) per admitted URL) and sized so
-    ``n_total`` keys land well below the 0.9 grow trigger — a rebuild
-    landing above it would force another full rebuild on the very next
-    admission (round-4 ADVICE)."""
-    return _refill_seen_filter(
-        spark, ckpt, upto_epoch, CuckooFilter.empty(_grown_m(old.m, n_total)),
-        n_total,
-    )
+    """A cuckoo seen-filter of `_grown_m(old_m, n_total)` buckets built from
+    the EXACT seen view as of ``upto_epoch`` (whose own tables must already
+    be written), with the url_hash each seen row stores: on the driver when
+    the view's input rows fit `_DRIVER_ADD_MAX_ROWS` (`_seen_view_local`),
+    else by a distributed build over `_seen_view` scaled by ``n_total``.
+    The one builder of a filter from the seen view, for two events: the
+    first expiry of a Bloom crawl (``old_m`` 0) and the growth of a cuckoo
+    filter (``old_m`` its bucket count). A cuckoo table cannot be grown
+    from its own fingerprints — doubling m adds an index bit that only the
+    original 64-bit key carries. `_grown_m` is at least 2× the old table
+    (so growth amortizes to O(1) per admitted URL) and lands ``n_total``
+    keys well below the 0.9 grow trigger — a rebuild landing above it would
+    force another full rebuild on the very next admission (round-4
+    ADVICE)."""
+    flt = CuckooFilter.empty(_grown_m(old_m, n_total))
+    if _seen_rows_small(ckpt, upto_epoch):
+        flt.add_many(_seen_view_local(ckpt, upto_epoch).column("url_hash").to_numpy())
+    else:
+        hashes = _seen_view(spark, ckpt, upto_epoch).select("url_hash")
+        _filter_add_from_df(flt, hashes, n_total)
+    return flt
 
 
 def _seen_filter_load(flt) -> float:
@@ -745,17 +734,6 @@ def _seen_filter_load(flt) -> float:
     if isinstance(flt, CuckooFilter):
         return round(flt.load_factor(), 4)
     return round(flt.fill_fraction(), 4)
-
-
-def _make_seen_filter(kind: str, n_expected: int):
-    """Seen-set prefilter factory. 'bloom' (default — the seen set is
-    append-only in a plain crawl) or 'cuckoo' (supports expire_seen's
-    per-key deletion without a rebuild; north rule's fallback)."""
-    if kind == "cuckoo":
-        return CuckooFilter.empty(_grown_m(0, n_expected))
-    if kind == "bloom":
-        return BloomFilter(n_expected)
-    raise ValueError(f"unknown seen-filter kind {kind!r}")
 
 
 def _filter_path(ckpt: str, epoch: int) -> str:
@@ -1099,8 +1077,13 @@ def _commit_epoch(
       `_EXPIRE_CHUNK` batches from the sorted part files — no Spark job and
       O(chunk) driver memory at any size; the members-only deletion
       contract holds because expiry tombstones only seen urls. A Bloom
-      filter cannot forget, so it is refilled from the post-expiry seen
-      view in its own geometry (`_refill_seen_filter`).
+      filter cannot forget, so the first expiry that removes a url
+      replaces it by a cuckoo filter built from the post-expiry seen view
+      (`_grow_cuckoo` from 0 buckets), sized for every url admitted so
+      far: before that expiry nothing was removed and each admission adds
+      only unseen urls, so the manifests' urls_admitted sum to the seen
+      set the crawl already holds. An expiry that removes nothing leaves
+      the filter as it is.
     - seen_new (an admission): its hashes are added, read on the driver up
       to `_DRIVER_ADD_MAX_ROWS` (a distributed build is a full job of
       ~0.5 s fixed latency to hash a few hundred rows), else by a
@@ -1131,8 +1114,12 @@ def _commit_epoch(
                 )
                 for b in chunks:
                     flt.delete_many(b.column(0).to_numpy())
-        else:
-            flt = _refill_seen_filter(spark, ckpt, epoch, BloomFilter.empty_like(flt))
+        elif n_expired:
+            n_seen = sum(
+                ck.read_manifest(ckpt, e)["urls_admitted"]
+                for e in ck.committed_epochs(ckpt)
+            )
+            flt = _grow_cuckoo(spark, ckpt, epoch, 0, n_seen)
     n_admitted = 0 if seen_new is None else ck.table_num_rows(ckpt, epoch, "seen_new")
     if n_admitted:
         if (
@@ -1142,7 +1129,7 @@ def _commit_epoch(
             # the batch would cross the safe load factor: rebuild larger
             # from the exact seen view (seen_new for this epoch is already
             # written, so the rebuild covers the batch too)
-            flt = _grow_cuckoo(spark, ckpt, epoch, flt, len(flt) + n_admitted)
+            flt = _grow_cuckoo(spark, ckpt, epoch, flt.m, len(flt) + n_admitted)
         elif n_admitted <= _DRIVER_ADD_MAX_ROWS:
             flt.add_many(
                 ck.read_column_local(
@@ -1271,11 +1258,7 @@ def _steady_rows(batch: pa.RecordBatch, n_hosts: int) -> pa.RecordBatch:
 
 
 def init_steady_frontier(
-    spark: SparkSession,
-    spec: SiteSpec,
-    ckpt: str,
-    n_urls: int,
-    filter_kind: str = "bloom",
+    spark: SparkSession, spec: SiteSpec, ckpt: str, n_urls: int
 ) -> None:
     """Steady-state bench setup: a frontier preloaded with `n_urls` pending
     detail URLs across `spec.n_hosts` hosts — the regime every epoch of a
@@ -1284,8 +1267,8 @@ def init_steady_frontier(
     fetch + payload throughput, the BASELINE.json metric). The rows
     (`_steady_rows`) are built from ids held on the driver up to
     `_DRIVER_COMMIT_MAX_ROWS`, else from `spark.range`, and `_inject`ed
-    into an empty checkpoint with every host h0.test … and a fresh
-    seen-filter of `filter_kind`."""
+    into an empty checkpoint with every host h0.test … and a fresh Bloom
+    seen-filter."""
     if n_urls <= _DRIVER_COMMIT_MAX_ROWS:
         ids = pa.table({"id": np.arange(n_urls, dtype=np.int64)})
     else:
@@ -1294,26 +1277,21 @@ def init_steady_frontier(
     hosts = pa.array([f"h{i}.test" for i in range(spec.n_hosts)], pa.string())
     _inject(
         spark, spec, ckpt, 0, _map_arrow(fn, ids, _FRONTIER_PA), hosts,
-        _make_seen_filter(filter_kind, max(n_urls, 1024)),
-        {"kind": "steady_state_init"},
+        BloomFilter(max(n_urls, 1024)), {"kind": "steady_state_init"},
     )
 
 
 def run_crawl(
-    spark: SparkSession,
-    spec: SiteSpec,
-    ckpt: str,
-    max_epochs: int = 10_000,
-    filter_kind: str = "bloom",
+    spark: SparkSession, spec: SiteSpec, ckpt: str, max_epochs: int = 10_000
 ) -> CrawlResult:
     """Run (or resume, from the last committed epoch: uncommitted crash
-    debris is dropped first) the crawl to frontier exhaustion.
-    ``filter_kind`` picks the seen-set prefilter at init ('bloom' |
-    'cuckoo'); resumed crawls keep whatever the checkpoint stored."""
+    debris is dropped first) the crawl to frontier exhaustion. A fresh
+    crawl starts with a Bloom seen-filter; a resumed one keeps whatever
+    filter the checkpoint stored (a cuckoo filter after an expiry)."""
     ck.cleanup_uncommitted(ckpt)
     last = ck.last_committed(ckpt)
     if last is None:
-        init_state(spark, spec, ckpt, filter_kind=filter_kind)
+        init_state(spark, spec, ckpt)
         last = 0
     epoch = last
     while epoch < max_epochs:
@@ -1328,7 +1306,8 @@ def expire_seen(spark: SparkSession, ckpt: str, urls) -> int:
     """TTL / policy expiry: make previously-crawled URLs admissible again
     (north rule: the cuckoo filter exists exactly for this). `urls` is a
     pyarrow table or a DataFrame with a ``url`` column; returns the number
-    of URLs actually expired.
+    of URLs actually expired. Raises ValueError when `ckpt` holds no
+    committed epoch.
 
     Commits a fresh epoch whose ``seen_removed`` tombstone table (parquet
     is append-only, like Iceberg delete files) holds the distinct `urls`
@@ -1336,9 +1315,10 @@ def expire_seen(spark: SparkSession, ckpt: str, urls) -> int:
     Frontier and hosts carry forward unchanged, as copies of the committed
     dirs (exact bytes, no Spark job). The epoch commits through
     `_commit_epoch`, which counts the tombstones and updates the seen
-    prefilter from them: per-key cuckoo deletes in bounded chunks, no
-    rebuild, or a Bloom rebuild from the post-expiry set (the cost that
-    motivates the cuckoo fallback).
+    prefilter from them: the crawl's first expiry that removes a url
+    swaps its Bloom filter for a cuckoo filter built from the post-expiry
+    set, and every later one deletes per key in bounded chunks, with no
+    rebuild; an expiry that removes nothing leaves the filter as it is.
 
     The tombstones are built on the driver when `urls` is a table within
     `_DRIVER_COMMIT_MAX_ROWS` and the seen view fits the local cap, so a
@@ -1347,7 +1327,8 @@ def expire_seen(spark: SparkSession, ckpt: str, urls) -> int:
     wholesale, always is)."""
     ck.cleanup_uncommitted(ckpt)  # never expire from crash debris (ADVICE r3)
     last = ck.last_committed(ckpt)
-    assert last is not None, "expire_seen needs an initialised checkpoint"
+    if last is None:
+        raise ValueError("expire_seen needs an initialised checkpoint")
     out_epoch = last + 1
     local = (
         not isinstance(urls, DataFrame)
@@ -1388,10 +1369,12 @@ def reseed(spark: SparkSession, spec: SiteSpec, ckpt: str) -> None:
     politeness buckets full, the state a fresh crawl starts from. Combined
     with expire_seen over the previous crawl's URLs, a resumed run_crawl
     reproduces the reference crawl order again from the new epoch
-    (tests/test_recrawl.py proves the second pass bit-identical)."""
+    (tests/test_recrawl.py proves the second pass bit-identical). Raises
+    ValueError when `ckpt` holds no committed epoch."""
     ck.cleanup_uncommitted(ckpt)  # never reseed over crash debris (ADVICE r3)
     last = ck.last_committed(ckpt)
-    assert last is not None, "reseed needs an initialised checkpoint"
+    if last is None:
+        raise ValueError("reseed needs an initialised checkpoint")
     _inject_seeds(
         spark, spec, ckpt, last + 1,
         _load_seen_filter(_filter_path(ckpt, last)),

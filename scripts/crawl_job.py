@@ -35,14 +35,14 @@ def main() -> None:
     ap.add_argument("--burst", type=float, default=20_000.0)
     ap.add_argument("--max-dim", type=int, default=64)
     ap.add_argument("--max-epochs", type=int, default=10_000)
-    ap.add_argument("--filter", choices=("bloom", "cuckoo"), default="bloom")
     ap.add_argument("--steady-urls", type=int, default=0,
                     help="run one steady-state epoch of N preloaded URLs "
                          "instead of a site crawl")
     ap.add_argument("--recrawl", action="store_true",
                     help="TTL recrawl: expire every seen URL, reseed, and "
-                         "crawl again (requires an existing --ckpt; cuckoo "
-                         "checkpoints expire per-key with no rebuild)")
+                         "crawl again (requires an existing --ckpt; the first "
+                         "expiry swaps the Bloom seen-filter for a cuckoo "
+                         "filter, later ones delete per key with no rebuild)")
     args = ap.parse_args()
 
     # imports resolve from the --py-files zip (spark-submit puts it on
@@ -97,9 +97,7 @@ def main() -> None:
         }
         last = ck.last_committed(args.ckpt)
     elif args.steady_urls:
-        init_steady_frontier(
-            spark, spec, args.ckpt, args.steady_urls, filter_kind=args.filter
-        )
+        init_steady_frontier(spark, spec, args.ckpt, args.steady_urls)
         t0 = time.perf_counter()  # setup untimed, like the scaling bench
         run_epoch(spark, spec, args.ckpt, 0)
         wall = time.perf_counter() - t0
@@ -111,10 +109,7 @@ def main() -> None:
         }
         last = ck.last_committed(args.ckpt)
     else:
-        res = run_crawl(
-            spark, spec, args.ckpt,
-            max_epochs=args.max_epochs, filter_kind=args.filter,
-        )
+        res = run_crawl(spark, spec, args.ckpt, max_epochs=args.max_epochs)
         wall = time.perf_counter() - t0
         n = res.crawl_order().count()
         out = {

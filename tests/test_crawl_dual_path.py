@@ -16,8 +16,6 @@ import glob
 import inspect
 import os
 import re
-import shutil
-import tempfile
 import uuid
 
 import numpy as np
@@ -81,9 +79,10 @@ def _steady_crawl(spark, spec, ckpt):
 
 
 def _init_tiny_cuckoo(spark, spec, ckpt):
-    """init_state with a cuckoo filter swapped for a 16-bucket one holding
-    the seeds, so the first admitting epoch must grow it. Returns it."""
-    C.init_state(spark, spec, ckpt, filter_kind="cuckoo")
+    """init_state with its Bloom filter swapped for a 16-bucket cuckoo
+    filter holding the seeds, so the first admitting epoch must grow it.
+    Returns it."""
+    C.init_state(spark, spec, ckpt)
     seeds = pq.read_table(ck.table_path(ckpt, 0, "seen_new"), columns=["url_hash"])
     tiny = CuckooFilter(16)
     tiny.add_many(np.sort(seeds.column("url_hash").to_numpy()))
@@ -111,8 +110,9 @@ def _growing_then_recrawl(spark, spec, ckpt):
 
 def _partial_expiry_recrawl(spark, spec, ckpt):
     """A crawl, an expiry of every other seen url (a driver-held table: the
-    local run expires and rebuilds its Bloom filter on the driver), a
-    reseed and the second pass: the reseed finds some seeds still seen and
+    local run builds the cuckoo filter that replaces the crawl's Bloom
+    filter on the driver, the other by the distributed build), a reseed
+    and the second pass: the reseed finds some seeds still seen and
     re-admits the rest."""
     first = C.run_crawl(spark, spec, ckpt)
     urls = sorted(r.url for r in first.seen().collect())
@@ -126,14 +126,14 @@ def _partial_expiry_recrawl(spark, spec, ckpt):
     C.run_crawl(spark, spec, ckpt)
 
 
-def _run_both(spark, monkeypatch, drive, spec):
+def _run_both(spark, monkeypatch, tmp_path, drive, spec):
     """Runs `drive` as-is and with the local caps at 0. Returns the two
     checkpoints and, per run, the type name of the input each fetch ran over
     (a driver-held pyarrow "Table" or a "DataFrame")."""
     ckpts, fetched = [], []
     map_arrow = C._map_arrow
     for spark_only in (False, True):
-        ckpt = tempfile.mkdtemp(prefix=f"dual_{'spark' if spark_only else 'local'}_")
+        ckpt = str(tmp_path / ("spark" if spark_only else "local"))
         forms = []
 
         def spy(fn, t, schema):
@@ -234,8 +234,10 @@ def _differences(local, spark_only):
         "partial_expiry_recrawl", "steady_state",
     ],
 )
-def test_driver_and_spark_commits_identical(spark, monkeypatch, drive, spec):
-    (local, spark_only), fetched = _run_both(spark, monkeypatch, drive, spec)
+def test_driver_and_spark_commits_identical(
+    spark, monkeypatch, tmp_path, drive, spec
+):
+    (local, spark_only), fetched = _run_both(spark, monkeypatch, tmp_path, drive, spec)
     # the two runs really took different paths: a driver-side write is one
     # fixed-name file per table (ck.write_table_local), and with the caps at
     # 0 only empty tables may be written that way; the local run fetched
@@ -250,8 +252,6 @@ def test_driver_and_spark_commits_identical(spark, monkeypatch, drive, spec):
     assert any(driver_rows[0]) and not any(driver_rows[1])
     assert set(fetched[0]) == {"Table"} and set(fetched[1]) == {"DataFrame"}
     assert _differences(local, spark_only) == []
-    for ckpt in (local, spark_only):
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_local_caps_lists_every_driver_cap():
@@ -273,13 +273,14 @@ def test_one_commit_path():
 def test_one_filter_update_path():
     """Every seen-filter change happens in `_commit_epoch`, read back from
     the tables it wrote: the cuckoo delete appears once, inside it, the
-    refill from the seen view is called only there and by `_grow_cuckoo`,
-    and no filter update streams a DataFrame through the driver."""
+    one build of a filter from the seen view, `_grow_cuckoo`, is called
+    only there (a Bloom filter's first expiry and a cuckoo filter's
+    growth), and no filter update streams a DataFrame through the
+    driver."""
     module, commit = inspect.getsource(C), inspect.getsource(C._commit_epoch)
     assert module.count(".delete_many(") == 1 and ".delete_many(" in commit
-    assert module.count("_refill_seen_filter(") == 3  # its def and two calls
-    for caller in (C._commit_epoch, C._grow_cuckoo):
-        assert "_refill_seen_filter(" in inspect.getsource(caller), caller.__name__
+    assert module.count("_grow_cuckoo(") == 3  # its def and two calls
+    assert commit.count("_grow_cuckoo(") == 2
     assert "toLocalIterator" not in module
 
 
@@ -307,36 +308,102 @@ def test_one_seed_path():
     assert "mapInPandas" not in module
 
 
-def test_driver_refill_reads_stored_hashes(spark, monkeypatch):
-    """The driver refill of a seen-filter adds the url_hash each seen row
-    stores and hashes no url: with site_model.h64 raising, refilling an
-    empty Bloom filter from a small crawl's last seen view gives that
-    epoch's committed filter byte for byte."""
-    ckpt = tempfile.mkdtemp(prefix="refill_")
+def test_driver_refill_reads_stored_hashes(spark, monkeypatch, tmp_path):
+    """The driver build of a cuckoo filter from the seen view adds the
+    url_hash each seen row stores and hashes no url: with site_model.h64
+    raising, `_grow_cuckoo` over a small crawl's last epoch holds the same
+    entries as a cuckoo filter of its size filled by `add_many` from the
+    committed seen_new url_hash columns."""
+    ckpt = str(tmp_path / "crawl")
     C.run_crawl(spark, SPEC, ckpt)
     last = ck.last_committed(ckpt)
-    committed = _last_filter(ckpt)
+    stored = np.concatenate(
+        [
+            pq.read_table(p, columns=["url_hash"]).column(0).to_numpy()
+            for e in ck.committed_epochs(ckpt)
+            if os.path.isdir(p := ck.table_path(ckpt, e, "seen_new"))
+        ]
+    )
 
     def no_hash(s):
         raise AssertionError(f"hashed {s!r}")
 
     monkeypatch.setattr(sm, "h64", no_hash)
-    refilled = C._refill_seen_filter(
-        spark, ckpt, last, BloomFilter.empty_like(committed)
+    built = C._grow_cuckoo(spark, ckpt, last, 0, len(stored))
+    assert len(built) == len(stored) > 0
+    expected = CuckooFilter.empty(built.m)
+    expected.add_many(stored)
+    contents = []
+    for name, flt in (("built", built), ("expected", expected)):
+        out = str(tmp_path / name)
+        os.makedirs(ck.epoch_dir(out, last))
+        flt.save(os.path.join(ck.epoch_dir(out, last), "bloom.npz"))
+        contents.append(_filter_content(out, last))
+    assert contents[0] == contents[1]
+
+
+def test_seen_filter_follows_expiry(spark, monkeypatch, tmp_path):
+    """The seen-filter's kind is derived, not chosen: no entry point takes
+    a kind, every crawl starts with a Bloom filter, an expiry that removes
+    nothing leaves it as it is, the first expiry that removes a url
+    replaces it by a cuckoo filter built from the post-expiry seen view
+    and sized for every url admitted so far, and later expiries delete per
+    key with no rebuild."""
+    for entry in (C.init_state, C.init_steady_frontier, C.run_crawl):
+        assert "filter_kind" not in inspect.signature(entry).parameters
+    job = os.path.join(os.path.dirname(__file__), "..", "scripts", "crawl_job.py")
+    with open(job) as f:
+        assert "--filter" not in f.read()
+    calls = []
+    grow = C._grow_cuckoo
+    monkeypatch.setattr(C, "_grow_cuckoo", lambda *a: calls.append(a[3:]) or grow(*a))
+    ckpt = str(tmp_path / "crawl")
+    C.run_crawl(spark, SPEC, ckpt)
+
+    # an expiry of an unseen url keeps the previous epoch's filter file
+    unseen = pa.table({"url": ["https://unseen.test/detail/0"]})
+    assert C.expire_seen(spark, ckpt, unseen) == 0
+    noop = ck.last_committed(ckpt)
+    saved = []
+    for e in (noop - 1, noop):
+        with open(C._filter_path(ckpt, e), "rb") as f:
+            saved.append(f.read())
+    assert saved[0] == saved[1]
+    assert calls == []
+
+    seen = sorted(C._seen_view_local(ckpt, noop).column("url").to_pylist())
+    n_admitted = sum(
+        ck.read_manifest(ckpt, e)["urls_admitted"] for e in ck.committed_epochs(ckpt)
     )
-    out = tempfile.mkdtemp(prefix="refilled_")
-    os.makedirs(ck.epoch_dir(out, last))
-    refilled.save(os.path.join(ck.epoch_dir(out, last), "bloom.npz"))
-    assert _filter_content(out, last) == _filter_content(ckpt, last)
-    for d in (ckpt, out):
-        shutil.rmtree(d, ignore_errors=True)
+    assert n_admitted == len(seen)
+    assert C.expire_seen(spark, ckpt, pa.table({"url": seen[::2]})) == len(seen[::2])
+    first = ck.last_committed(ckpt)
+    assert calls == [(0, n_admitted)]
+    for e in ck.committed_epochs(ckpt)[:-1]:
+        assert isinstance(C._load_seen_filter(C._filter_path(ckpt, e)), BloomFilter)
+    flt = _last_filter(ckpt)
+    assert isinstance(flt, CuckooFilter) and flt.m == C._grown_m(0, n_admitted)
+    live = C._seen_view_local(ckpt, first).column("url_hash").to_numpy()
+    assert len(live) == len(seen) - len(seen[::2])
+    expected = CuckooFilter.empty(flt.m)
+    expected.add_many(live)
+    out = str(tmp_path / "expected")
+    os.makedirs(ck.epoch_dir(out, first))
+    expected.save(os.path.join(ck.epoch_dir(out, first), "bloom.npz"))
+    assert _filter_content(ckpt, first) == _filter_content(out, first)
+
+    n = C.expire_seen(spark, ckpt, pa.table({"url": seen[1::2][:5]}))
+    assert n == ck.read_manifest(ckpt, ck.last_committed(ckpt))["urls_expired"] == 5
+    assert calls == [(0, n_admitted)]
+    later = _last_filter(ckpt)
+    assert isinstance(later, CuckooFilter) and len(later) == len(flt) - n
 
 
-def test_driver_split_seen_hashes_only_unseen_rows(spark, monkeypatch):
+def test_driver_split_seen_hashes_only_unseen_rows(spark, monkeypatch, tmp_path):
     """A driver `_split_seen` takes each seen row's url_hash from the seen
     view and hashes only the unseen urls: site_model.h64 is called once per
     unseen url, and both sides carry each url's hash."""
-    ckpt = tempfile.mkdtemp(prefix="split_seen_")
+    ckpt = str(tmp_path)
     C.run_crawl(spark, SPEC, ckpt)
     last = ck.last_committed(ckpt)
     seen_urls = sorted(C._seen_view_local(ckpt, last).column("url").to_pylist())[:7]
@@ -352,7 +419,6 @@ def test_driver_split_seen_hashes_only_unseen_rows(spark, monkeypatch):
     for side in (seen, unseen):
         urls = side.column("url").to_pylist()
         assert side.column("url_hash").to_pylist() == [h64(u) for u in urls]
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _rows(t):
@@ -395,11 +461,11 @@ BOUNDARY_SELECTED = {
 
 
 @pytest.mark.parametrize("plan_kind", ["driver_plan", "spark_plan"])
-def test_select_boundary_driver_equals_salted(spark, monkeypatch, plan_kind):
+def test_select_boundary_driver_equals_salted(spark, monkeypatch, tmp_path, plan_kind):
     """Driver `_select` (plan held on the driver, or a DataFrame as when
     the hosts table is above its local cap) and the salted Spark
     `_select` (caps 0) pick the same rows at a budget boundary."""
-    ckpt = tempfile.mkdtemp(prefix="select_boundary_")
+    ckpt = str(tmp_path)
     ck.write_table_local(
         ckpt, 0, "frontier", pa.Table.from_pylist(BOUNDARY_ROWS, schema=C._FRONTIER_PA)
     )
@@ -427,7 +493,6 @@ def test_select_boundary_driver_equals_salted(spark, monkeypatch, plan_kind):
         r["url"] for r in BOUNDARY_ROWS
     } - BOUNDARY_SELECTED
     assert log_cols == cols + ["epoch"] and log == [r + (0,) for r in selected]
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _spark_jobs(spark, run):
@@ -452,26 +517,26 @@ def _spark_jobs(spark, run):
     ]
 
 
-def test_small_crawl_runs_no_spark_job(spark):
+def test_small_crawl_runs_no_spark_job(spark, tmp_path):
     """Under the default caps a whole small crawl — init, a budget-bound
     selection, every fetch, admission and commit — runs on the driver:
     `run_crawl` launches no Spark job."""
-    ckpt = tempfile.mkdtemp(prefix="crawl_jobs_")
+    ckpt = str(tmp_path)
     assert _spark_jobs(spark, lambda: C.run_crawl(spark, SPEC, ckpt)) == []
     manifests = [ck.read_manifest(ckpt, e) for e in ck.committed_epochs(ckpt)[1:]]
     assert any(
         m["urls_fetched"] and not m["crawl_log_from_frontier"] for m in manifests
     ), "the crawl had no budget-bound epoch"
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_recrawl_after_expiry_and_reseed_runs_no_spark_job(spark):
+def test_recrawl_after_expiry_and_reseed_runs_no_spark_job(spark, tmp_path):
     """A small site's expiry of a driver-held url table tombstones, counts
-    and rebuilds the Bloom filter on the driver; reseed injects the seeds
+    and builds the cuckoo filter that replaces the crawl's Bloom filter on
+    the driver; reseed injects the seeds
     on the driver, as init does; and both commit a hosts table like every
     other epoch, so the second pass plans from it on the driver: none of
     expire_seen, reseed and the resumed `run_crawl` launches a Spark job."""
-    ckpt = tempfile.mkdtemp(prefix="recrawl_jobs_")
+    ckpt = str(tmp_path)
     first = C.run_crawl(spark, SPEC, ckpt)
     urls = first.seen().toArrow()
     assert _spark_jobs(spark, lambda: C.expire_seen(spark, ckpt, urls)) == []
@@ -480,27 +545,24 @@ def test_recrawl_after_expiry_and_reseed_runs_no_spark_job(spark):
     reseed_epoch = ck.last_committed(ckpt)
     assert _spark_jobs(spark, lambda: C.run_crawl(spark, SPEC, ckpt)) == []
     assert ck.last_committed(ckpt) > reseed_epoch + 1, "the second pass never ran"
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_small_steady_init_runs_no_spark_job(spark):
+def test_small_steady_init_runs_no_spark_job(spark, tmp_path):
     """Under the default caps a steady frontier below
     `_DRIVER_COMMIT_MAX_ROWS` is built from driver-held ids and injected on
     the driver: init_steady_frontier launches no Spark job."""
-    ckpt = tempfile.mkdtemp(prefix="steady_jobs_")
+    ckpt = str(tmp_path)
     assert _spark_jobs(
         spark, lambda: C.init_steady_frontier(spark, STEADY, ckpt, 2048)
     ) == []
     assert ck.table_num_rows(ckpt, 0, "frontier") == 2048
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_small_cuckoo_growth_runs_no_spark_job(spark):
+def test_small_cuckoo_growth_runs_no_spark_job(spark, tmp_path):
     """A cuckoo filter outgrown by a small crawl is rebuilt from the seen
     view on the driver, like every other small-site filter update: the
     crawl launches no Spark job, and the filter grew."""
-    ckpt = tempfile.mkdtemp(prefix="cuckoo_growth_jobs_")
+    ckpt = str(tmp_path)
     tiny = _init_tiny_cuckoo(spark, GROWING, ckpt)
     assert _spark_jobs(spark, lambda: C.run_crawl(spark, GROWING, ckpt)) == []
     assert _last_filter(ckpt).m > tiny.m, "the filter never grew"
-    shutil.rmtree(ckpt, ignore_errors=True)

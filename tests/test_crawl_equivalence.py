@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import glob
 import os
-import tempfile
 
 import numpy as np
 import pytest
@@ -41,8 +40,8 @@ def sim():
 
 
 @pytest.fixture(scope="module")
-def crawl(spark):
-    ckpt = tempfile.mkdtemp(prefix="crawl_eq_")
+def crawl(spark, tmp_path_factory):
+    ckpt = str(tmp_path_factory.mktemp("crawl_eq"))
     return run_crawl(spark, SPEC, ckpt)
 
 
@@ -83,11 +82,11 @@ def test_metrics_lineage(crawl, sim):
     assert all(r.wall_ms >= 0 for r in m)
 
 
-def test_readers_before_any_fetch_epoch(spark, crawl):
+def test_readers_before_any_fetch_epoch(spark, crawl, tmp_path):
     """A checkpoint with only its init epoch (max_epochs=0) has no
     crawl_log or fetch_out yet: each reader returns an empty DataFrame with
     the columns and types it has on a finished crawl."""
-    ckpt = tempfile.mkdtemp(prefix="crawl_unfetched_")
+    ckpt = str(tmp_path)
     result = run_crawl(spark, SPEC, ckpt, max_epochs=0)
     assert ck.committed_epochs(ckpt) == [0]
     for reader in ("crawl_order", "fetched", "failed", "metrics"):
@@ -112,18 +111,20 @@ def _assert_resumed_equal(resumed, crawl, sim):
     assert base_payloads == res_payloads
 
 
-def test_resume_byte_identical(spark, crawl, sim):
+def test_resume_byte_identical(spark, crawl, sim, tmp_path):
     """Kill after 3 epochs → resume → identical crawl order, seen set, and
     payload bytes as the uninterrupted run (T5; ref has no counterpart —
     main.py:55-68 loses everything)."""
-    ckpt = tempfile.mkdtemp(prefix="crawl_resume_")
+    ckpt = str(tmp_path)
     partial = run_crawl(spark, SPEC, ckpt, max_epochs=3)
     assert partial.epochs == 3
     resumed = run_crawl(spark, SPEC, ckpt)  # picks up from last manifest
     _assert_resumed_equal(resumed, crawl, sim)
 
 
-def test_resume_after_crash_inside_payload_file(spark, crawl, sim, monkeypatch):
+def test_resume_after_crash_inside_payload_file(
+    spark, crawl, sim, monkeypatch, tmp_path
+):
     """Kill epoch 2's fetch after a payload batch reached its fetch_out
     file → resume unpatched → the same crawl as the uninterrupted run."""
     make_fetcher = fetcher.make_fetcher
@@ -139,7 +140,7 @@ def test_resume_after_crash_inside_payload_file(spark, crawl, sim, monkeypatch):
 
         return crash if epoch == 2 else fetch
 
-    ckpt = tempfile.mkdtemp(prefix="crawl_crash_")
+    ckpt = str(tmp_path)
     with monkeypatch.context() as m:
         m.setattr(fetcher, "make_fetcher", crashing)
         with pytest.raises(RuntimeError, match="killed inside fetch_out"):
@@ -151,7 +152,7 @@ def test_resume_after_crash_inside_payload_file(spark, crawl, sim, monkeypatch):
     _assert_resumed_equal(resumed, crawl, sim)
 
 
-def test_fractional_rate_engine_equivalence(spark):
+def test_fractional_rate_engine_equivalence(spark, tmp_path):
     """rate*epoch < 1 ⇒ zero-fetch virtual-time epochs interleave; the engine
     must refill buckets, keep committing, and still match the simulator
     (regression: zero-fetch epochs write no seen_new dir)."""
@@ -161,14 +162,14 @@ def test_fractional_rate_engine_equivalence(spark):
     )
     sim_f = simulate(spec)
     assert sim_f.epochs > len({row[0] for row in sim_f.crawl_order})
-    ckpt = tempfile.mkdtemp(prefix="crawl_frac_")
+    ckpt = str(tmp_path)
     res = run_crawl(spark, spec, ckpt)
     engine = [tuple(r) for r in res.crawl_order().select(*ORDER_COLS).collect()]
     assert engine == [tuple(o) for o in sim_f.crawl_order]
     assert {r.url for r in res.seen().collect()} == sim_f.url_seen
 
 
-def test_failed_fetch_equivalence(spark):
+def test_failed_fetch_equivalence(spark, tmp_path):
     """Fetch failures (ref main.py:124-127): failed URLs still consume their
     politeness slot and appear in the crawl order, but yield no payload —
     engine and simulator must agree on the exact failed set."""
@@ -179,7 +180,7 @@ def test_failed_fetch_equivalence(spark):
     sim_f = simulate(spec)
     failed_sim = set(sim_f.extra.get("failed", []))
     assert failed_sim, "failure injection produced no failures"
-    ckpt = tempfile.mkdtemp(prefix="crawl_fail_")
+    ckpt = str(tmp_path)
     res = run_crawl(spark, spec, ckpt)
     engine = [tuple(r) for r in res.crawl_order().select(*ORDER_COLS).collect()]
     assert engine == [tuple(o) for o in sim_f.crawl_order]
@@ -189,13 +190,13 @@ def test_failed_fetch_equivalence(spark):
     assert got_payload_urls.isdisjoint(failed_sim)
 
 
-def test_saturated_filter_equivalence(spark, sim, monkeypatch):
+def test_saturated_filter_equivalence(spark, sim, monkeypatch, tmp_path):
     """The seen-filter is an optimization, never semantics: with an
     all-ones epoch-0 Bloom filter every candidate is 'maybe seen' and goes
     through the exact anti-join (local caps at 0, so admission runs in
     Spark, the path that consults the filter), and the crawl still equals
     the reference."""
-    ckpt = tempfile.mkdtemp(prefix="crawl_saturated_")
+    ckpt = str(tmp_path)
     init_state(spark, SPEC, ckpt)
     path = os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz")
     bf = BloomFilter.load(path)

@@ -8,8 +8,6 @@ the dominant host's whole pending set."""
 
 from __future__ import annotations
 
-import tempfile
-
 import pytest
 
 from gov_procurement_spider_spark.plans import crawl as C
@@ -42,12 +40,12 @@ def test_spec_is_actually_skewed():
 
 
 @pytest.mark.parametrize("spark_only", [False, True], ids=["default_caps", "caps_0"])
-def test_crawl_order_exact_under_skew(spark, monkeypatch, spark_only):
+def test_crawl_order_exact_under_skew(spark, monkeypatch, tmp_path, spark_only):
     if spark_only:
         for cap in LOCAL_CAPS:
             monkeypatch.setattr(C, cap, 0)
     sim = simulate(SPEC)
-    ckpt = tempfile.mkdtemp(prefix="crawl_skew_")
+    ckpt = str(tmp_path)
     crawl = run_crawl(spark, SPEC, ckpt)
     engine = [tuple(r) for r in crawl.crawl_order().select(*ORDER_COLS).collect()]
     assert engine == [tuple(o) for o in sim.crawl_order]

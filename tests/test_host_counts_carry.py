@@ -15,8 +15,6 @@ from __future__ import annotations
 
 import inspect
 import os
-import shutil
-import tempfile
 
 import pyarrow as pa
 import pytest
@@ -44,44 +42,44 @@ def _assert_counts_match_frontier(spark, ckpt):
     assert checked >= 2, "expected carried host counts on several epochs"
 
 
-def test_carried_counts_match_frontier_with_admissions(spark):
+def test_carried_counts_match_frontier_with_admissions(spark, tmp_path):
     """A real multi-epoch crawl (links discovered → admissions → drain):
     the incremental carry stays equal to ground truth at every commit."""
     spec = SiteSpec(
         n_seeds=6, n_hosts=3, detail_space=60, max_list_pages=3,
         rate_per_sec=8.0, burst=6.0,
     )
-    ckpt = tempfile.mkdtemp(prefix="hc_carry_")
+    ckpt = str(tmp_path)
     C.run_crawl(spark, spec, ckpt)
     _assert_counts_match_frontier(spark, ckpt)
 
 
-def test_carried_counts_under_constrained_selection(spark):
+def test_carried_counts_under_constrained_selection(spark, tmp_path):
     """Tight budgets force the salted top-k path (taken ≠ pending), the
     branch where the carry must subtract the *selected* counts."""
     spec = SiteSpec(
         n_seeds=4, n_hosts=2, detail_space=40, max_list_pages=2,
         rate_per_sec=1.0, burst=2.0, epoch_seconds=2.0,
     )
-    ckpt = tempfile.mkdtemp(prefix="hc_constr_")
+    ckpt = str(tmp_path)
     C.run_crawl(spark, spec, ckpt)
     _assert_counts_match_frontier(spark, ckpt)
 
 
-def test_plan_phase_reads_carried_table_not_frontier(spark):
+def test_plan_phase_reads_carried_table_not_frontier(spark, tmp_path):
     """After the first epoch commits, the next epoch's plan phase must find
     the carried table (no silent fall-back to the frontier recompute)."""
     spec = SiteSpec(
         n_seeds=4, n_hosts=2, detail_space=40, max_list_pages=2,
         rate_per_sec=50.0, burst=100.0,
     )
-    ckpt = tempfile.mkdtemp(prefix="hc_present_")
+    ckpt = str(tmp_path)
     C.run_crawl(spark, spec, ckpt, max_epochs=2)
     for e in ck.committed_epochs(ckpt):
         assert os.path.isdir(ck.table_path(ckpt, e, "hosts"))
 
 
-def test_every_epoch_kind_commits_counts_and_filter_lineage(spark):
+def test_every_epoch_kind_commits_counts_and_filter_lineage(spark, tmp_path):
     """init, run_epoch, expiry and reseed all commit through one path:
     through a crawl, an expiry of every seen URL, a reseed and the second
     crawl, each committed epoch carries host counts equal to a recount of
@@ -90,7 +88,7 @@ def test_every_epoch_kind_commits_counts_and_filter_lineage(spark):
         n_seeds=4, n_hosts=2, detail_space=40, max_list_pages=2,
         rate_per_sec=1.0, burst=2.0, epoch_seconds=2.0,
     )
-    ckpt = tempfile.mkdtemp(prefix="hc_lifecycle_")
+    ckpt = str(tmp_path)
     first = C.run_crawl(spark, spec, ckpt)
     C.expire_seen(spark, ckpt, first.seen())
     C.reseed(spark, spec, ckpt)
@@ -103,10 +101,9 @@ def test_every_epoch_kind_commits_counts_and_filter_lineage(spark):
         for key in ("urls_admitted", "seen_filter_load"):
             assert key in man, f"epoch {e} manifest lacks {key}"
     assert kinds == {"init", "run_epoch", "expiry", "reseed"}
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
+def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch, tmp_path):
     """The host plan (_host_plan) run on the driver and through mapInArrow
     must yield the same per-host rows, and its plan scalars must equal an
     independent Spark aggregate, on every committed epoch of a crawl that
@@ -117,7 +114,7 @@ def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
         n_seeds=6, n_hosts=3, detail_space=60, max_list_pages=3,
         rate_per_sec=2.0, burst=4.0, epoch_seconds=2.0,
     )
-    ckpt = tempfile.mkdtemp(prefix="hc_stats_")
+    ckpt = str(tmp_path)
     C.run_crawl(spark, spec, ckpt)
     default_budget = int(spec.burst)
     checked = 0
@@ -152,7 +149,7 @@ def test_local_pending_stats_match_spark_aggregate(spark, monkeypatch):
     assert checked >= 2
 
 
-def test_one_host_table(spark):
+def test_one_host_table(spark, tmp_path):
     """Every epoch kind commits one host table: through a steady init, and
     through a crawl, an expiry of every seen URL, a reseed and the second
     crawl, each committed epoch holds `hosts` and neither of the two
@@ -162,9 +159,9 @@ def test_one_host_table(spark):
         n_seeds=4, n_hosts=2, detail_space=40, max_list_pages=2,
         rate_per_sec=1.0, burst=2.0, epoch_seconds=2.0,
     )
-    steady = tempfile.mkdtemp(prefix="hosts_steady_")
+    steady = str(tmp_path / "steady")
     C.init_steady_frontier(spark, spec, steady, 40)
-    ckpt = tempfile.mkdtemp(prefix="hosts_lifecycle_")
+    ckpt = str(tmp_path / "lifecycle")
     first = C.run_crawl(spark, spec, ckpt)
     C.expire_seen(spark, ckpt, first.seen().toArrow())
     C.reseed(spark, spec, ckpt)
@@ -178,5 +175,3 @@ def test_one_host_table(spark):
                 assert not os.path.exists(ck.table_path(c, e, gone)), (c, e, gone)
     assert kinds == {"steady_state_init", "init", "run_epoch", "expiry", "reseed"}
     assert ".join(" not in inspect.getsource(C._plan_hosts)
-    for c in (steady, ckpt):
-        shutil.rmtree(c, ignore_errors=True)

@@ -1,22 +1,23 @@
-"""Cuckoo-filtered crawl + expiry/recrawl (north rule: the deletion-capable
-seen-set fallback, exercised end-to-end).
+"""Expiry/recrawl and the cuckoo seen-filter (north rule: the
+deletion-capable seen-set fallback, exercised end-to-end).
 
-Pass 1 runs the full crawl with the CUCKOO prefilter (same refsim oracle as
-the Bloom path — the prefilter must be semantically invisible). Then every
-seen URL is expired (tombstones + per-key cuckoo deletes, NO rebuild), the
-seeds are re-injected, and the resumed crawl must reproduce the reference
-crawl order a second time, epoch-shifted but otherwise bit-identical — the
-TTL-recrawl contract.
+Pass 1 is a plain crawl (Bloom prefilter, checked against the refsim
+oracle). Then every seen URL is expired: the crawl's first expiry replaces
+the Bloom filter by a cuckoo filter built from the post-expiry seen view,
+and later expiries delete from it per key. The seeds are re-injected, and
+the resumed crawl must reproduce the reference crawl order a second time,
+epoch-shifted but otherwise bit-identical — the TTL-recrawl contract.
 """
 
 from __future__ import annotations
 
 import os
-import tempfile
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
+from gov_procurement_spider_spark.crawler.bloom import BloomFilter
 from gov_procurement_spider_spark.crawler.cuckoo import CuckooFilter
 from gov_procurement_spider_spark.functions.urls import url_hash64
 from gov_procurement_spider_spark.plans.crawl import (
@@ -49,10 +50,10 @@ def sim():
 
 
 @pytest.fixture(scope="module")
-def state(spark, sim):
-    """Pass 1 (cuckoo prefilter) → expire all → reseed → pass 2."""
-    ckpt = tempfile.mkdtemp(prefix="crawl_recrawl_")
-    first = run_crawl(spark, SPEC, ckpt, filter_kind="cuckoo")
+def state(spark, sim, tmp_path_factory):
+    """Pass 1 → expire all → reseed → pass 2."""
+    ckpt = str(tmp_path_factory.mktemp("crawl_recrawl"))
+    first = run_crawl(spark, SPEC, ckpt)
     n_seen = first.seen().count()
     expired = expire_seen(spark, ckpt, first.seen())
     expiry_epoch = ck.last_committed(ckpt)
@@ -70,9 +71,9 @@ def state(spark, sim):
     }
 
 
-def test_pass1_cuckoo_matches_refsim(state, sim):
-    """The cuckoo prefilter is semantically invisible: pass-1 crawl order
-    and URL-seen set equal the sequential oracle, same as the Bloom path."""
+def test_pass1_matches_refsim(state, sim):
+    """Pass 1, a plain crawl up to the expiry, has the sequential oracle's
+    crawl order."""
     pass1 = (
         state["first"]
         .crawl_order()
@@ -84,16 +85,20 @@ def test_pass1_cuckoo_matches_refsim(state, sim):
 
 
 def test_checkpoint_stores_cuckoo(state):
-    flt = _load_seen_filter(
-        os.path.join(ck.epoch_dir(state["ckpt"], 0), "bloom.npz")
-    )
-    assert isinstance(flt, CuckooFilter)
+    """Every epoch before the first expiry stores a Bloom filter, and every
+    epoch from it on a cuckoo filter."""
+    for e in ck.committed_epochs(state["ckpt"]):
+        flt = _load_seen_filter(
+            os.path.join(ck.epoch_dir(state["ckpt"], e), "bloom.npz")
+        )
+        kind = CuckooFilter if e >= state["expiry_epoch"] else BloomFilter
+        assert isinstance(flt, kind), e
 
 
 def test_expiry_counts_and_filter_deletes(state, sim, spark):
-    """Expiry removed exactly the pass-1 seen set, per-key, no rebuild: the
-    post-expiry filter answers 'definitely new' for (almost) every expired
-    URL — impossible for a Bloom filter without a full rebuild."""
+    """Expiry removed exactly the pass-1 seen set, and the cuckoo filter
+    built from the post-expiry view answers 'definitely new' for (almost)
+    every expired URL."""
     assert state["expired"] == state["n_seen_pass1"] == len(sim.url_seen)
     flt = _load_seen_filter(
         os.path.join(ck.epoch_dir(state["ckpt"], state["expiry_epoch"]), "bloom.npz")
@@ -174,29 +179,33 @@ def test_partial_expiry_keeps_rest_seen(spark, state, sim):
 _STEADY_SPEC = SiteSpec(n_hosts=3, rate_per_sec=100.0, burst=100.0)
 
 
-def _fresh_cuckoo_ckpt(spark, n_urls: int) -> str:
-    from gov_procurement_spider_spark.plans.crawl import init_steady_frontier
+def _fresh_cuckoo_ckpt(spark, ckpt: str, n_urls: int) -> str:
+    """A steady frontier of `n_urls` whose epoch-0 Bloom filter is replaced
+    by a fresh cuckoo filter built from its seen view."""
+    from gov_procurement_spider_spark.plans.crawl import (
+        _filter_path,
+        _grow_cuckoo,
+        init_steady_frontier,
+    )
 
-    ckpt = tempfile.mkdtemp(prefix="cuckoo_ck_")
-    init_steady_frontier(spark, _STEADY_SPEC, ckpt, n_urls, filter_kind="cuckoo")
+    init_steady_frontier(spark, _STEADY_SPEC, ckpt, n_urls)
+    _grow_cuckoo(spark, ckpt, 0, 0, n_urls).save(_filter_path(ckpt, 0))
     return ckpt
 
 
 @pytest.mark.parametrize("form", ["table", "dataframe"])
-def test_expire_seen_chunked_equivalence(spark, monkeypatch, form):
+def test_expire_seen_chunked_equivalence(spark, monkeypatch, tmp_path, form):
     """VERDICT r3 item 3: the cuckoo delete reads the written tombstones
     back in bounded chunks. `_EXPIRE_CHUNK` = 7 over 40 expiring URLs (6
     chunks) must leave the filter semantically identical to the
     single-batch read — same expiry count, same per-bucket fingerprint
     multisets — whether the tombstones were written on the driver (a
     pyarrow input) or by Spark (a DataFrame input)."""
-    import shutil
-
     from gov_procurement_spider_spark.plans import crawl as C
 
     results = []
     for chunk in (7, 1 << 20):
-        ckpt = _fresh_cuckoo_ckpt(spark, 60)
+        ckpt = _fresh_cuckoo_ckpt(spark, str(tmp_path / f"chunk_{chunk}"), 60)
         urls = (
             spark.read.parquet(ck.table_path(ckpt, 0, "seen_new"))
             .select("url")
@@ -215,7 +224,6 @@ def test_expire_seen_chunked_equivalence(spark, monkeypatch, form):
         )
         assert isinstance(flt, CuckooFilter)
         results.append((n, np.sort(flt.table, axis=1), flt.m))
-        shutil.rmtree(ckpt, ignore_errors=True)
     (n_a, t_a, m_a), (n_b, t_b, m_b) = results
     assert n_a == n_b == 40
     # deletion ORDER may arrange slots differently; the stored fingerprint
@@ -224,40 +232,39 @@ def test_expire_seen_chunked_equivalence(spark, monkeypatch, form):
     assert int((t_a != 0).sum()) == 20  # the 20 unexpired keys remain
 
 
-def test_fresh_cuckoo_sized_below_grow_trigger(spark, monkeypatch):
-    """A fresh cuckoo filter gets the headroom a grown one gets: at 3,891
-    keys a table sized for <=95% load (4,096 slots) sits above the 0.9
-    grow trigger, and the init commit that fills it would rebuild it."""
-    import shutil
-
+def test_fresh_cuckoo_sized_below_grow_trigger(spark, monkeypatch, tmp_path):
+    """The cuckoo filter a first expiry builds gets the headroom a grown one
+    gets: at 3,891 keys a table sized for <=95% load (4,096 slots) would
+    sit above the 0.9 grow trigger. A steady init of 3,891 urls and one
+    url expired build it once, sized for the 3,891 urls admitted."""
     from gov_procurement_spider_spark.plans import crawl as C
 
     calls = []
     grow = C._grow_cuckoo
-    monkeypatch.setattr(C, "_grow_cuckoo", lambda *a: calls.append(a) or grow(*a))
-    ckpt = _fresh_cuckoo_ckpt(spark, 3891)
-    flt = _load_seen_filter(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
-    assert calls == [], "init rebuilt the filter it had just sized"
-    assert len(flt) == 3891 and flt.load_factor() <= C._CUCKOO_GROW_LOAD
-    shutil.rmtree(ckpt, ignore_errors=True)
+    monkeypatch.setattr(C, "_grow_cuckoo", lambda *a: calls.append(a[3:]) or grow(*a))
+    ckpt = str(tmp_path)
+    C.init_steady_frontier(spark, _STEADY_SPEC, ckpt, 3891)
+    url = C._seen_view_local(ckpt, 0).column("url")[:1]
+    assert expire_seen(spark, ckpt, pa.table({"url": url})) == 1
+    flt = _load_seen_filter(os.path.join(ck.epoch_dir(ckpt, 1), "bloom.npz"))
+    assert calls == [(0, 3891)]
+    assert len(flt) == 3890 and flt.load_factor() <= C._CUCKOO_GROW_LOAD
 
 
-def test_grow_cuckoo_rebuilds_at_2x(spark):
+def test_grow_cuckoo_rebuilds_at_2x(spark, tmp_path):
     """ADVICE r3: near the safe load factor the epoch grows the filter into
     a 2×-bucket table rebuilt from the exact seen view — every seen key
     still answers maybe-seen (no false negatives across growth)."""
-    import shutil
-
     from gov_procurement_spider_spark.plans.crawl import _grow_cuckoo
 
-    ckpt = _fresh_cuckoo_ckpt(spark, 60)
+    ckpt = _fresh_cuckoo_ckpt(spark, str(tmp_path), 60)
     old = _load_seen_filter(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
-    new = _grow_cuckoo(spark, ckpt, 0, old, 60)
+    new = _grow_cuckoo(spark, ckpt, 0, old.m, 60)
     assert new.m == 2 * old.m
     assert len(new) == 60
     # a batch far beyond one doubling sizes past 2× so the rebuilt filter
     # never lands back above the safe load (round-4 review finding)
-    big = _grow_cuckoo(spark, ckpt, 0, old, 64 * old.m * 4)
+    big = _grow_cuckoo(spark, ckpt, 0, old.m, 64 * old.m * 4)
     assert big.m > 2 * old.m
     assert CuckooFilter.m_for(64 * old.m * 4) == big.m
     hashes = np.array(
@@ -270,18 +277,15 @@ def test_grow_cuckoo_rebuilds_at_2x(spark):
         dtype=np.int64,
     )
     assert new.maybe_contains(hashes).all()
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_cuckoo_growth_triggered_in_epoch(spark):
+def test_cuckoo_growth_triggered_in_epoch(spark, tmp_path):
     """End-to-end growth trigger (ADVICE r3): seed a crawl with a
     deliberately tiny cuckoo filter so the first link-admitting epoch
     crosses the safe load factor. run_epoch must rebuild into a larger
     table mid-crawl, and the grown filter must stay semantically invisible:
     the finished crawl's order and seen set still equal the sequential
     oracle exactly."""
-    import shutil
-
     from gov_procurement_spider_spark.plans.crawl import init_state
     from gov_procurement_spider_spark.refsim import simulate
 
@@ -293,8 +297,8 @@ def test_cuckoo_growth_triggered_in_epoch(spark):
         rate_per_sec=50.0,
         burst=50.0,
     )
-    ckpt = tempfile.mkdtemp(prefix="cuckoo_grow_e2e_")
-    init_state(spark, spec, ckpt, filter_kind="cuckoo")
+    ckpt = str(tmp_path)
+    init_state(spark, spec, ckpt)
     # swap in a near-toy filter: capacity 32 slots, seeds already inserted
     tiny = CuckooFilter(16)
     seed_hashes = np.array(
@@ -331,19 +335,32 @@ def test_cuckoo_growth_triggered_in_epoch(spark):
     got = result.crawl_order().select(*ORDER_COLS).collect()
     assert [tuple(r) for r in got] == [tuple(o) for o in sim.crawl_order]
     assert {r.url for r in result.seen().collect()} == sim.url_seen
-    shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_epoch_manifest_records_filter_load(spark):
+def test_epoch_manifest_records_filter_load(spark, tmp_path):
     """ADVICE r3: saturation is visible in lineage before it becomes fatal —
     every admission-committing epoch manifest carries seen_filter_load."""
-    import shutil
-
     from gov_procurement_spider_spark.plans.crawl import run_epoch
 
-    ckpt = _fresh_cuckoo_ckpt(spark, 60)
+    ckpt = _fresh_cuckoo_ckpt(spark, str(tmp_path), 60)
     run_epoch(spark, _STEADY_SPEC, ckpt, 0)
     man = ck.read_manifest(ckpt, 1)
     load = man.get("seen_filter_load")
     assert load is not None and 0.0 < load <= 1.0
-    shutil.rmtree(ckpt, ignore_errors=True)
+
+
+@pytest.mark.parametrize(
+    "entry",
+    [
+        lambda spark, ckpt: expire_seen(spark, ckpt, pa.table({"url": ["u"]})),
+        lambda spark, ckpt: reseed(spark, SPEC, ckpt),
+    ],
+    ids=["expire_seen", "reseed"],
+)
+def test_lifecycle_entry_rejects_uninitialised_checkpoint(spark, tmp_path, entry):
+    """expire_seen and reseed validate the caller's checkpoint with a
+    ValueError (an assert would vanish under `python -O`) and leave no
+    epoch dir behind."""
+    with pytest.raises(ValueError, match="initialised checkpoint"):
+        entry(spark, str(tmp_path))
+    assert os.listdir(tmp_path) == []

@@ -52,7 +52,6 @@ def test_spark_submit_pyfiles_crawl():
                 str(REPO / "scripts" / "crawl_job.py"),
                 "--ckpt", ckpt,
                 "--seeds", "6", "--hosts", "3", "--detail-space", "60",
-                "--filter", "cuckoo",
             ],
             capture_output=True,
             text=True,
@@ -91,7 +90,8 @@ def test_spark_submit_pyfiles_crawl():
         )
         assert res2["urls"] == res["urls"]  # crawl_order is stable across resume
         # full TTL-recrawl lifecycle under ship mode: expire-all + reseed +
-        # second pass (cuckoo checkpoint → per-key deletes, no rebuild)
+        # second pass (the expiry swaps the crawl's Bloom filter for a
+        # cuckoo filter built from the post-expiry seen view)
         out3 = subprocess.run(
             [
                 spark_submit,

@@ -7,7 +7,6 @@ tokens in the hosts table."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -67,8 +66,8 @@ def _inject_unknown_host(spark, ckpt):
     bf.save(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
 
 
-def test_unknown_host_selected_capped_and_tracked(spark):
-    ckpt = tempfile.mkdtemp(prefix="ghost_")
+def test_unknown_host_selected_capped_and_tracked(spark, tmp_path):
+    ckpt = str(tmp_path)
     # known hosts get ample pending so the epoch runs the constrained path
     init_steady_frontier(spark, SPEC, ckpt, 40)
     _inject_unknown_host(spark, ckpt)
