@@ -32,12 +32,12 @@ _POPCNT = np.unpackbits(np.arange(256, dtype=np.uint8)[:, None], axis=1).sum(
 
 
 class BloomFilter:
-    def __init__(self, n_expected: int, fpr: float = 0.01, bits: np.ndarray | None = None):
+    def __init__(self, n_expected: int, fpr: float = 0.01):
         n_expected = max(n_expected, 1)
         m = max(64, int(-n_expected * math.log(fpr) / (math.log(2) ** 2)))
         self.m = ((m + 63) // 64) * 64
         self.k = max(1, round(m / n_expected * math.log(2)))
-        self.bits = bits if bits is not None else np.zeros(self.m // 8, dtype=np.uint8)
+        self.bits = np.zeros(self.m // 8, dtype=np.uint8)
 
     @classmethod
     def empty_like(cls, other: "BloomFilter") -> "BloomFilter":
@@ -92,7 +92,9 @@ class BloomFilter:
         return total / float(len(sample) * 8)
 
     def save(self, path: str) -> None:
-        np.savez_compressed(path, bits=self.bits, m=self.m, k=self.k)
+        """Uncompressed: a bitmap near its design fill is random bits, which
+        deflate does not shrink and saves at a fraction of disk speed."""
+        np.savez(path, kind="bloom", bits=self.bits, m=self.m, k=self.k)
 
     @classmethod
     def load(cls, path: str) -> "BloomFilter":

@@ -28,8 +28,8 @@ fingerprint. The crawler guarantees this by expiring only URLs present in
 the exact `seen` table (plans/crawl.py drives expiry from that table, never
 from user input).
 
-Serialization matches BloomFilter (.npz per epoch checkpoint) and embeds a
-``kind`` field so a checkpoint loader can dispatch on the stored filter.
+Serialization matches BloomFilter: one uncompressed .npz per epoch
+checkpoint with a ``kind`` field, on which a checkpoint loader dispatches.
 """
 
 from __future__ import annotations
@@ -230,7 +230,7 @@ class CuckooFilter:
         return len(self) / float(self.capacity)
 
     def save(self, path: str) -> None:
-        np.savez_compressed(path, kind="cuckoo", table=self.table, m=self.m)
+        np.savez(path, kind="cuckoo", table=self.table, m=self.m)
 
     @classmethod
     def load(cls, path: str) -> "CuckooFilter":

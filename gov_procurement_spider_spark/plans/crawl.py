@@ -33,15 +33,20 @@ over a DataFrame (the hosts table above the cap; a selection above
 `_DRIVER_FETCH_MAX_URLS`). A small crawl therefore launches no Spark job
 at all. Three steps are kept in two forms, Spark for big inputs and
 pyarrow for small ones: the budget-bound selection (salted windows),
-keep-first on url (`_first_per_url`, a min-struct aggregation) and the
-exact seen-membership test (`_split_seen`, Bloom-prefiltered in Spark),
-which splits its input into the seen and the unseen rows. The last two
-dispatch on where their input is held and are shared by admission,
-injection (both keep the unseen rows) and expiry (which keeps the seen
-ones). Their driver form rests on one function, `_take_first` — the first
-n rows of each key run — which also picks the seen view's latest event
-per url and gates the streaming politeness operator
-(streaming/stateful_politeness.py). A frontier is initialised one way,
+keep-first on url (`_first_per_url`) and the exact seen-membership test
+(`_split_seen`, Bloom-prefiltered in Spark), which splits its input into
+the seen and the unseen rows. The last two dispatch on where their input
+is held and are shared by admission, injection (both keep the unseen
+rows) and expiry (which keeps the seen ones). The seen view has one
+source: each step lists the seen log once (`_seen_log`: the seen_new and
+seen_removed tables up to an epoch, with footer row counts), takes the
+view's size from the listing and reads (url, url_hash) from it with
+`_seen_view`, in either form. Keep-first and the view's latest event per
+url are one first-row-per-key step, `_first_per_key`: a min-struct
+aggregation in Spark, on the driver `_take_first` — the first n rows of
+each key run — which also selects the budget-bound rows and gates the
+streaming politeness operator (streaming/stateful_politeness.py). A
+frontier is initialised one way,
 `_inject`, which gives the injected hosts a full bucket and their robots
 rules: init_state injects the seeds into an empty checkpoint, reseed over
 the last committed epoch, and init_steady_frontier injects `_steady_rows`
@@ -86,6 +91,7 @@ an exact re-rank of the ≤ salts·budget survivors.
 from __future__ import annotations
 
 import os
+import pickle
 import shutil
 import time
 from concurrent.futures import ThreadPoolExecutor
@@ -205,10 +211,8 @@ class CrawlResult:
     def seen(self) -> DataFrame:
         """The current exact seen set (tombstone-aware: expire_seen's
         removals are subtracted unless the URL was re-admitted later)."""
-        last = ck.last_committed(self.ckpt)
-        return _seen_view(
-            self.spark, self.ckpt, last if last is not None else 0
-        ).select("url")
+        log = _seen_log(self.ckpt, ck.last_committed(self.ckpt) or 0)
+        return _seen_view(self.spark, log, False).select("url")
 
     def metrics(self) -> DataFrame:
         """Fetch lineage rows (T6): one per batch the fetch function
@@ -226,41 +230,6 @@ class CrawlResult:
 def _bloom_expected(spec: SiteSpec) -> int:
     per_seed = spec.max_list_pages * (1 + spec.max_links_per_page)
     return max(1024, spec.n_seeds * per_seed)
-
-
-def _seen_view(spark: SparkSession, ckpt: str, upto_epoch: int) -> DataFrame:
-    """The exact seen set (url, url_hash) as of ``upto_epoch``: union of
-    per-epoch seen_new appends MINUS expiry tombstones (expire_seen). A row
-    survives expiry iff it was re-admitted after its latest removal — (url,
-    admit_epoch) vs the max removed_epoch per url — so TTL'd URLs become
-    admissible again while later re-admissions stay seen. Zero-fetch
-    (virtual-time) epochs commit neither table and are skipped."""
-    seen_paths = [
-        p
-        for e in range(0, upto_epoch + 1)
-        if os.path.isdir(p := ck.table_path(ckpt, e, "seen_new"))
-    ]
-    seen = spark.read.parquet(*seen_paths)
-    removed_paths = [
-        p
-        for e in range(0, upto_epoch + 1)
-        if os.path.isdir(p := ck.table_path(ckpt, e, "seen_removed"))
-    ]
-    if removed_paths:
-        removed = (
-            spark.read.parquet(*removed_paths)
-            .groupBy("url")
-            .agg(F.max("removed_epoch").alias("_removed_epoch"))
-        )
-        seen = (
-            seen.join(removed, "url", "left")
-            .filter(
-                F.col("_removed_epoch").isNull()
-                | (F.col("admit_epoch") > F.col("_removed_epoch"))
-            )
-            .drop("_removed_epoch")
-        )
-    return seen.select("url", "url_hash")
 
 
 def _seed_rows(spec: SiteSpec) -> pa.Table:
@@ -281,20 +250,24 @@ def _seed_rows(spec: SiteSpec) -> pa.Table:
     return pa.Table.from_pandas(rows, preserve_index=False).cast(_FRONTIER_PA)
 
 
+def _first_per_key(t, key: str, order: list):
+    """Each `key`'s first row by `order` — the one first-row-per-key step,
+    used by keep-first on url and the seen view's latest event per url. On
+    the driver `_take_first(t, key, order, 1)`; in Spark a min-struct
+    aggregation — one partial+final hash agg, no sort, cheaper than a
+    row_number window; `order` leads the struct, so its lexicographic min
+    IS the first row."""
+    if not isinstance(t, DataFrame):
+        return _take_first(t, key, order, 1)[0]
+    rest = [c for c in t.columns if c != key and c not in order]
+    first = F.min(F.struct(*order, *rest)).alias("_first")
+    return t.groupBy(key).agg(first).select(key, "_first.*")
+
+
 def _first_per_url(t):
     """Keep-first on url: each url's row with the smallest (ORDER_KEY,
-    kind, host). On the driver `_take_first(t, "url", ..., 1)`; in Spark a
-    min-struct aggregation, as FRONTIER_COLS — one partial+final hash agg,
-    no sort, cheaper than a row_number window; the order key leads the
-    struct so the lexicographic min IS the first occurrence."""
-    if not isinstance(t, DataFrame):
-        return _take_first(t, "url", [*ORDER_KEY, "kind", "host"], 1)[0]
-    return (
-        t.groupBy("url")
-        .agg(F.min(F.struct(*ORDER_KEY, "kind", "host")).alias("_first"))
-        .select("url", "_first.*")
-        .select(*FRONTIER_COLS)
-    )
+    kind, host), as FRONTIER_COLS."""
+    return _cols(_first_per_key(t, "url", [*ORDER_KEY, "kind", "host"]), FRONTIER_COLS)
 
 
 def _seed_frontier(spec: SiteSpec) -> pa.Table:
@@ -375,9 +348,9 @@ def _take_first(t: pa.Table, run: str, order: list, n) -> tuple[pa.Table, pa.Tab
     """(taken, rest): `t` sorted by (run, *order) and split into the first
     `n` rows of each `run` key and the others. `n` is an int or the name of
     a per-row count column (null counts as 0). The driver form of every
-    first-n-per-key step: the budget-bound selection, keep-first on url,
-    the seen view's latest event per url and the streaming politeness
-    gate."""
+    first-n-per-key step: the budget-bound selection, `_first_per_key`
+    (keep-first on url and the seen view's latest event per url) and the
+    streaming politeness gate."""
     t = t.sort_by([(c, "ascending") for c in [run, *order]])
     key = t.column(run).to_numpy(zero_copy_only=False)
     i = np.arange(len(key))
@@ -427,13 +400,14 @@ def _inject(
     `rows` persisted once."""
     prior = epoch - 1
     new_hosts = _new_hosts(hosts, spec)
+    log = _seen_log(ckpt, prior)  # empty at init
     local = (
         not isinstance(rows, DataFrame)
         and rows.num_rows <= _DRIVER_COMMIT_MAX_ROWS
+        and log.small
         and (
             epoch == 0
             or ck.table_num_rows(ckpt, prior, "frontier") <= _DRIVER_COMMIT_MAX_ROWS
-            and _seen_rows_small(ckpt, prior)
         )
     )
     cached: list[DataFrame] = []
@@ -453,7 +427,7 @@ def _inject(
             if not local:  # read twice: written, and counted by host
                 frontier = frontier.persist()
                 cached.append(frontier)
-            admitted = _split_seen(spark, ckpt, prior, rows, cached)[1]
+            admitted = _split_seen(spark, log, rows, cached)[1]
         tables = {
             "frontier": frontier,
             "seen_new": _seen_event(admitted, "admit_epoch", epoch),
@@ -668,22 +642,28 @@ def _build_partitions(n_rows: int | None) -> int:
 
 def _filter_add_from_df(flt, hashes_df: DataFrame, n_rows: int | None = None) -> None:
     """Distributed filter build, the 10^10-scale path with no driver-side
-    row collection: each partition adds its hashes to an empty partial of
-    `flt`'s geometry (`empty_like`; the closure carries that empty filter,
-    not `flt`'s keys), and the partials are tree-merged into `flt` — a
-    Bloom bitmap OR, or cuckoo fingerprint re-insertion (cuckoo.py merge).
-    Few fat partitions: each yields one partial, so the reduce cost is
-    partitions × partial size, not rows — the count is scaled by the
-    caller's batch size hint (`_build_partitions`)."""
+    row collection: each task adds the Arrow batches of its hash column
+    (mapInArrow, no Python per row) to an empty partial of `flt`'s
+    geometry (`empty_like`; the closure carries that empty filter, not
+    `flt`'s keys) and yields it once, pickled in one binary row; the
+    partials are tree-merged into `flt` — a Bloom bitmap OR, or cuckoo
+    fingerprint re-insertion (cuckoo.py merge). Few fat partitions: each
+    yields one partial, so the reduce cost is partitions × partial size,
+    not rows — the count is scaled by the caller's batch size hint
+    (`_build_partitions`)."""
     empty = type(flt).empty_like(flt)
 
-    def part(rows):
+    def part(batches):
         local = type(empty).empty_like(empty)
-        local.add_many(np.fromiter((r[0] for r in rows), dtype=np.int64))
-        yield local
+        for b in batches:
+            local.add_many(b.column(0).to_numpy())
+        yield pa.record_batch({"partial": [pickle.dumps(local)]})
 
-    rdd = hashes_df.coalesce(_build_partitions(n_rows)).rdd.mapPartitions(part)
-    flt.merge(rdd.treeReduce(lambda a, b: a.merge(b)))
+    partials = hashes_df.coalesce(_build_partitions(n_rows)).mapInArrow(
+        part, "partial binary"
+    )
+    merged = partials.rdd.map(lambda r: pickle.loads(r[0]))
+    flt.merge(merged.treeReduce(lambda a, b: a.merge(b)))
 
 
 # growth trigger for the cuckoo seen-filter: above ~90% of slot capacity,
@@ -706,9 +686,9 @@ def _grow_cuckoo(
 ) -> CuckooFilter:
     """A cuckoo seen-filter of `_grown_m(old_m, n_total)` buckets built from
     the EXACT seen view as of ``upto_epoch`` (whose own tables must already
-    be written), with the url_hash each seen row stores: on the driver when
-    the view's input rows fit `_DRIVER_ADD_MAX_ROWS` (`_seen_view_local`),
-    else by a distributed build over `_seen_view` scaled by ``n_total``.
+    be written), with the url_hash each seen row stores: from the view's
+    driver form when the log is small, else by a distributed build over its
+    Spark form scaled by ``n_total``.
     The one builder of a filter from the seen view, for two events: the
     first expiry of a Bloom crawl (``old_m`` 0) and the growth of a cuckoo
     filter (``old_m`` its bucket count). A cuckoo table cannot be grown
@@ -719,11 +699,12 @@ def _grow_cuckoo(
     force another full rebuild on the very next admission (round-4
     ADVICE)."""
     flt = CuckooFilter.empty(_grown_m(old_m, n_total))
-    if _seen_rows_small(ckpt, upto_epoch):
-        flt.add_many(_seen_view_local(ckpt, upto_epoch).column("url_hash").to_numpy())
+    log = _seen_log(ckpt, upto_epoch)
+    view = _seen_view(spark, log, log.small)
+    if log.small:
+        flt.add_many(view.column("url_hash").to_numpy())
     else:
-        hashes = _seen_view(spark, ckpt, upto_epoch).select("url_hash")
-        _filter_add_from_df(flt, hashes, n_total)
+        _filter_add_from_df(flt, view.select("url_hash"), n_total)
     return flt
 
 
@@ -741,12 +722,11 @@ def _filter_path(ckpt: str, epoch: int) -> str:
 
 
 def _load_seen_filter(path: str):
-    """Load whichever filter the checkpoint stored (the .npz embeds a
-    ``kind`` field; legacy Bloom files have none)."""
-    z = np.load(path)
-    if "kind" in z.files and str(z["kind"]) == "cuckoo":
-        return CuckooFilter.load(path)
-    return BloomFilter.load(path)
+    """Load whichever filter the checkpoint stored, by the .npz's ``kind``
+    field."""
+    with np.load(path) as z:
+        kind = str(z["kind"])
+    return {"bloom": BloomFilter, "cuckoo": CuckooFilter}[kind].load(path)
 
 
 def _seen_filter_udf(flt):
@@ -787,7 +767,7 @@ def _select(
     forms against refsim under 90% skew)."""
     local = hosts.n_frontier <= _DRIVER_COMMIT_MAX_ROWS
     if hosts.n_selected == hosts.n_frontier:
-        if local and hosts.n_selected <= _DRIVER_FETCH_MAX_URLS:
+        if hosts.n_selected <= _DRIVER_FETCH_MAX_URLS:
             selected = _read_frontier_local(ckpt, epoch)
         else:
             selected = _read_frontier(spark, ckpt, epoch)
@@ -908,13 +888,14 @@ def _fetch(
 ) -> int:
     """Fetch the selected rows into the next epoch's fetch_out; returns the
     number of candidate links written. One fetch function (`make_fetcher`)
-    inside one writer (`fetch_out_writer`), two forms: a driver-held
-    selection of at most _DRIVER_FETCH_MAX_URLS rows is fetched and written
-    on the driver, one file per row_type; any other runs through
+    inside one writer (`fetch_out_writer`), two forms, chosen by
+    `n_selected` alone: a selection of at most _DRIVER_FETCH_MAX_URLS rows
+    is fetched and written on the driver (collected first when Spark
+    selected it), one file per row_type; a larger one runs through
     mapInArrow, each task writing its own file per row_type. Either way
     payloads are written exactly once, by the Python code that fetched
     them, and only the per-call link counts come back."""
-    if isinstance(selected, DataFrame) or n_selected > _DRIVER_FETCH_MAX_URLS:
+    if n_selected > _DRIVER_FETCH_MAX_URLS:
         # fetch tasks must be sized by fetch *cost*, not by input bytes: the
         # frontier rows are ~100 B each, so a byte-based scan split would run
         # a million-URL fetch on two cores. Round-robin to 2× task slots —
@@ -924,6 +905,8 @@ def _fetch(
             max(1, -(-n_selected // _MIN_URLS_PER_FETCH_TASK)),
         )
         selected = _to_df(spark, selected).repartition(fetch_par)
+    elif isinstance(selected, DataFrame):
+        selected = selected.toArrow()
     out_dir = ck.table_path(ckpt, epoch + 1, "fetch_out")
     shutil.rmtree(out_dir, ignore_errors=True)
     fetch = fetcher.make_fetcher(spec, epoch, _robots(ckpt))
@@ -935,65 +918,94 @@ def _fetch(
     return pc.sum(counts.column("n_links")).as_py()
 
 
-def _seen_rows_small(ckpt: str, upto_epoch: int) -> bool:
-    """True iff the exact seen view's input rows total ≤
-    `_DRIVER_ADD_MAX_ROWS` (parquet footer counts only — no reads)."""
-    total = 0
-    for e in range(upto_epoch + 1):
-        for t in ("seen_new", "seen_removed"):
-            if os.path.isdir(ck.table_path(ckpt, e, t)):
-                total += ck.table_num_rows(ckpt, e, t)
-                if total > _DRIVER_ADD_MAX_ROWS:
-                    return False
-    return True
+@dataclass
+class _SeenLog:
+    """The seen-log tables of `ckpt` up to `epoch`, as (epoch, table)
+    pairs, and their rows from the parquet footers (`_seen_log`)."""
+
+    ckpt: str
+    epoch: int
+    tables: list
+    n_rows: int
+
+    @property
+    def small(self) -> bool:
+        """The gate of the seen view's driver form: its input rows fit
+        `_DRIVER_ADD_MAX_ROWS`."""
+        return self.n_rows <= _DRIVER_ADD_MAX_ROWS
 
 
-def _seen_view_local(ckpt: str, upto_epoch: int) -> pa.Table:
-    """`_seen_view` (url, url_hash) as a driver-side table (callers gate
-    the size via `_seen_rows_small`): a url is seen iff its latest event in
-    seen_new ∪ seen_removed is an admission, a tombstone winning a tie —
-    the DataFrame view's admit_epoch > max(removed_epoch) rule.
-    `_take_first` keeps each url's latest event."""
-    events = []
-    for name, epoch_col, admitted in (
-        ("seen_new", "admit_epoch", True), ("seen_removed", "removed_epoch", False)
-    ):
-        for e in range(upto_epoch + 1):
-            if os.path.isdir(ck.table_path(ckpt, e, name)):
-                t = ck.read_table_local(
-                    ckpt, e, name, ["url", "url_hash", epoch_col],
-                    _DRIVER_ADD_MAX_ROWS,
-                )
-                # sorted ascending: the latest epoch first, a tombstone
-                # before an admission of the same epoch
-                after = pc.negate(pc.cast(t.column(epoch_col), pa.int64()))
-                events.append(
-                    pa.table(
-                        {
-                            "url": t.column("url"),
-                            "url_hash": t.column("url_hash"),
-                            "after": after,
-                            "admitted": pa.array(np.full(t.num_rows, admitted)),
-                        }
-                    )
-                )
-    latest = _take_first(pa.concat_tables(events), "url", ["after", "admitted"], 1)[0]
-    return latest.filter(latest.column("admitted")).select(["url", "url_hash"])
+def _seen_log(ckpt: str, epoch: int) -> _SeenLog:
+    """The one listing of the seen log: every seen_new and seen_removed
+    table up to `epoch` (zero-fetch epochs write neither) with its footer
+    row count, no data read. A step that needs the seen view lists the log
+    once and takes the view (`_seen_view`) and its size from the listing."""
+    tables = [
+        (e, name)
+        for e in range(epoch + 1)
+        for name in ("seen_new", "seen_removed")
+        if os.path.isdir(ck.table_path(ckpt, e, name))
+    ]
+    n_rows = sum(ck.table_num_rows(ckpt, e, name) for e, name in tables)
+    return _SeenLog(ckpt, epoch, tables, n_rows)
 
 
-def _split_seen(spark: SparkSession, ckpt: str, epoch: int, t, cached: list):
+def _seen_view(spark: SparkSession, log: _SeenLog, local: bool):
+    """The exact seen set (url, url_hash) as of `log.epoch`, read from the
+    tables `log` lists: a pyarrow table when `local` (callers gate it by
+    `log.small`), else a DataFrame over explicit-schema scans. A url is
+    seen iff its latest event is an admission, a tombstone winning a tie,
+    so a TTL'd url is admissible again and a later re-admission stays
+    seen: `_first_per_key` of each url's events ordered by (−epoch,
+    admitted). Without a tombstone each url has exactly one seen_new row,
+    and the view is their union."""
+    parts = []
+    for name, col in (("seen_new", "admit_epoch"), ("seen_removed", "removed_epoch")):
+        epochs = [e for e, n in log.tables if n == name]
+        if not epochs:
+            continue
+        schema = pa.schema(
+            [("url", pa.string()), ("url_hash", pa.int64()), (col, pa.int32())]
+        )
+        admitted = name == "seen_new"
+        if local:
+            t = pa.concat_tables(
+                ck.read_table_local(
+                    log.ckpt, e, name, schema.names, _DRIVER_ADD_MAX_ROWS
+                ).cast(schema)
+                for e in epochs
+            )
+            t = t.set_column(2, "after", pc.negate(t.column(col)))
+            flag = pa.array(np.full(len(t), admitted))
+            parts.append(t.append_column("admitted", flag))
+        else:
+            parts.append(
+                spark.read.schema(from_arrow_schema(schema))
+                .parquet(*(ck.table_path(log.ckpt, e, name) for e in epochs))
+                .select("url", "url_hash", (-F.col(col)).alias("after"))
+                .withColumn("admitted", F.lit(admitted))
+            )
+    if len(parts) == 1:  # no tombstone
+        return _cols(parts[0], ["url", "url_hash"])
+    events = pa.concat_tables(parts) if local else parts[0].unionByName(parts[1])
+    latest = _first_per_key(events, "url", ["after", "admitted"])
+    admitted = latest.column("admitted") if local else "admitted"
+    return _cols(latest.filter(admitted), ["url", "url_hash"])
+
+
+def _split_seen(spark: SparkSession, log: _SeenLog, t, cached: list):
     """(seen, unseen): the rows of `t` whose url is / is not in the seen
-    view as of `epoch`, both plus url_hash — the one exact seen-membership
+    view of `log`, both plus url_hash — the one exact seen-membership
     test. Admission and injection keep the unseen rows, expiry the
-    seen ones. A driver-held `t` (its callers gate the seen view's size by
-    `_seen_rows_small`) is looked up by `pc.index_in` in `_seen_view_local`:
+    seen ones. A driver-held `t` (its callers gate the view by
+    `log.small`) is looked up by `pc.index_in` in the view's driver form:
     the seen rows take the url_hash the view stores (a seen url is never
     re-hashed), and only the unseen ones are hashed.
     For a DataFrame only the rows the epoch's seen-filter cannot rule out
     are joined to the view: semi-joined for `seen`, anti-joined for
     `unseen`, which is persisted."""
     if not isinstance(t, DataFrame):
-        view = _seen_view_local(ckpt, epoch)
+        view = _seen_view(spark, log, True)
         at = pc.index_in(t.column("url"), value_set=view.column("url").combine_chunks())
         seen = pc.is_valid(at)
         hashes = view.column("url_hash").take(at.filter(seen))
@@ -1001,11 +1013,11 @@ def _split_seen(spark: SparkSession, ckpt: str, epoch: int, t, cached: list):
             t.filter(seen).append_column("url_hash", hashes),
             _with_url_hash(t.filter(pc.invert(seen))),
         )
-    maybe = _seen_filter_udf(_load_seen_filter(_filter_path(ckpt, epoch)))
+    maybe = _seen_filter_udf(_load_seen_filter(_filter_path(log.ckpt, log.epoch)))
     cand = _with_url_hash(t).withColumn("_maybe", maybe("url_hash")).persist()
     cached.append(cand)
     suspect = cand.filter(F.col("_maybe")).drop("_maybe")
-    view = _seen_view(spark, ckpt, epoch)
+    view = _seen_view(spark, log, False)
     unseen = (
         cand.filter(~F.col("_maybe"))
         .drop("_maybe")
@@ -1025,7 +1037,8 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
     persisted DataFrame."""
     out_epoch = epoch + 1
     fetch_out = ck.table_path(ckpt, out_epoch, "fetch_out")
-    if n_links <= _DRIVER_COMMIT_MAX_ROWS and _seen_rows_small(ckpt, epoch):
+    log = _seen_log(ckpt, epoch)
+    if n_links <= _DRIVER_COMMIT_MAX_ROWS and log.small:
         # n_links is exact and the epoch admits only when it is > 0, so
         # the link dir exists
         links = pq.read_table(
@@ -1042,7 +1055,7 @@ def _admit(spark: SparkSession, ckpt: str, epoch: int, n_links: int, cached: lis
             .select(*FRONTIER_COLS)
             .withColumn("disc_epoch", F.lit(out_epoch))
         )
-    return _split_seen(spark, ckpt, epoch, _first_per_url(links), cached)[1]
+    return _split_seen(spark, log, _first_per_url(links), cached)[1]
 
 
 class _Phases(dict):
@@ -1081,9 +1094,9 @@ def _commit_epoch(
       replaces it by a cuckoo filter built from the post-expiry seen view
       (`_grow_cuckoo` from 0 buckets), sized for every url admitted so
       far: before that expiry nothing was removed and each admission adds
-      only unseen urls, so the manifests' urls_admitted sum to the seen
-      set the crawl already holds. An expiry that removes nothing leaves
-      the filter as it is.
+      only unseen urls, so the prior seen log's rows are the seen set the
+      crawl already holds. An expiry that removes nothing leaves the
+      filter as it is.
     - seen_new (an admission): its hashes are added, read on the driver up
       to `_DRIVER_ADD_MAX_ROWS` (a distributed build is a full job of
       ~0.5 s fixed latency to hash a few hundred rows), else by a
@@ -1115,10 +1128,7 @@ def _commit_epoch(
                 for b in chunks:
                     flt.delete_many(b.column(0).to_numpy())
         elif n_expired:
-            n_seen = sum(
-                ck.read_manifest(ckpt, e)["urls_admitted"]
-                for e in ck.committed_epochs(ckpt)
-            )
+            n_seen = _seen_log(ckpt, epoch - 1).n_rows
             flt = _grow_cuckoo(spark, ckpt, epoch, 0, n_seen)
     n_admitted = 0 if seen_new is None else ck.table_num_rows(ckpt, epoch, "seen_new")
     if n_admitted:
@@ -1330,10 +1340,11 @@ def expire_seen(spark: SparkSession, ckpt: str, urls) -> int:
     if last is None:
         raise ValueError("expire_seen needs an initialised checkpoint")
     out_epoch = last + 1
+    log = _seen_log(ckpt, last)
     local = (
         not isinstance(urls, DataFrame)
         and urls.num_rows <= _DRIVER_COMMIT_MAX_ROWS
-        and _seen_rows_small(ckpt, last)
+        and log.small
     )
     if local:
         urls = pa.table({"url": pc.unique(urls.column("url")).cast(pa.string())})
@@ -1341,7 +1352,7 @@ def expire_seen(spark: SparkSession, ckpt: str, urls) -> int:
         urls = _to_df(spark, urls).select("url").distinct()
     cached: list[DataFrame] = []
     try:
-        gone = _split_seen(spark, ckpt, last, urls, cached)[0]
+        gone = _split_seen(spark, log, urls, cached)[0]
         for name in ("frontier", "hosts"):
             shutil.copytree(
                 ck.table_path(ckpt, last, name), ck.table_path(ckpt, out_epoch, name)

@@ -18,6 +18,7 @@ SF01 = "/root/testdata/sf0.01"
 def spark():
     s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
     yield s
+    s.stop()
 
 
 @pytest.fixture(scope="session")

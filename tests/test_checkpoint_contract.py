@@ -17,7 +17,6 @@ interface to invariants an Iceberg catalog could honor verbatim, so the
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 
@@ -72,7 +71,7 @@ def _snapshot(root: str) -> dict[str, tuple[int, int]]:
     return out
 
 
-def test_committed_epochs_immutable_as_later_epochs_land(spark):
+def test_committed_epochs_immutable_as_later_epochs_land(spark, tmp_path):
     """The append-only snapshot discipline, end-to-end: run the crawl for a
     few epochs, snapshot every byte under the committed dirs, run the crawl
     to completion in the same checkpoint — every previously-committed file
@@ -90,7 +89,7 @@ def test_committed_epochs_immutable_as_later_epochs_land(spark):
         burst=4.0,
         epoch_seconds=2.0,
     )
-    ckpt = tempfile.mkdtemp(prefix="ckpt_contract_")
+    ckpt = str(tmp_path)
     run_crawl(spark, spec, ckpt, max_epochs=2)
     committed = cp.committed_epochs(ckpt)
     assert committed, "expected at least one committed epoch"

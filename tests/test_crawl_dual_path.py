@@ -12,6 +12,7 @@ the manifests must agree on what was fetched and admitted.
 
 from __future__ import annotations
 
+import ast
 import glob
 import inspect
 import os
@@ -65,6 +66,11 @@ GROWING = SiteSpec(
 # per epoch over three fetching epochs (two budget-bound), each fetched on
 # the driver when local
 STEADY = SiteSpec(n_hosts=3, rate_per_sec=4.0, burst=8.0, epoch_seconds=2.0)
+# open budgets on a small site: a pass takes few epochs, so three fit
+TWICE = SiteSpec(
+    n_seeds=3, n_hosts=2, detail_space=20, max_list_pages=2,
+    rate_per_sec=50.0, burst=50.0,
+)
 
 
 def _crawl(spark, spec, ckpt):
@@ -88,6 +94,12 @@ def _init_tiny_cuckoo(spark, spec, ckpt):
     tiny.add_many(np.sort(seeds.column("url_hash").to_numpy()))
     tiny.save(os.path.join(ck.epoch_dir(ckpt, 0), "bloom.npz"))
     return tiny
+
+
+def _seen_column(spark, ckpt, epoch, column):
+    """One column of the seen view as of `epoch`, in its driver form."""
+    view = C._seen_view(spark, C._seen_log(ckpt, epoch), True)
+    return view.column(column).to_pylist()
 
 
 def _last_filter(ckpt):
@@ -123,6 +135,21 @@ def _partial_expiry_recrawl(spark, spec, ckpt):
     seeds = {sm.seed_url(spec, i) for i in range(spec.n_seeds)}
     n_seeds = len(seeds & set(frontier.column("url").to_pylist()))
     assert 0 < ck.read_manifest(ckpt, epoch)["urls_admitted"] < n_seeds
+    C.run_crawl(spark, spec, ckpt)
+
+
+def _double_expiry_recrawl(spark, spec, ckpt):
+    """Two expiry rounds: every seen url expired, a reseed and the second
+    pass re-admit them, then every other url seen again expired a second
+    time (its events: admitted, removed, re-admitted, removed), a reseed
+    and the third pass."""
+    once = C.run_crawl(spark, spec, ckpt).seen().toArrow()
+    C.expire_seen(spark, ckpt, once)
+    C.reseed(spark, spec, ckpt)
+    urls = sorted(r.url for r in C.run_crawl(spark, spec, ckpt).seen().collect())
+    assert set(urls[::2]) <= set(once.column("url").to_pylist())
+    assert C.expire_seen(spark, ckpt, pa.table({"url": urls[::2]})) == len(urls[::2])
+    C.reseed(spark, spec, ckpt)
     C.run_crawl(spark, spec, ckpt)
 
 
@@ -228,10 +255,11 @@ def _differences(local, spark_only):
         (_growing_then_recrawl, GROWING),
         (_partial_expiry_recrawl, SPEC),
         (_steady_crawl, STEADY),
+        (_double_expiry_recrawl, TWICE),
     ],
     ids=[
         "budget_bound", "fractional_rate", "cuckoo_growth_recrawl",
-        "partial_expiry_recrawl", "steady_state",
+        "partial_expiry_recrawl", "steady_state", "double_expiry_recrawl",
     ],
 )
 def test_driver_and_spark_commits_identical(
@@ -268,6 +296,71 @@ def test_one_commit_path():
     module, commit = inspect.getsource(C), inspect.getsource(C._commit_epoch)
     for call in ("ck.commit_epoch(", ".save(_filter_path("):
         assert module.count(call) == 1 and call in commit, call
+
+
+def _callers(name):
+    """The functions of plans/crawl.py (methods included) that call `name`."""
+    tree = ast.parse(inspect.getsource(C))
+    return {
+        f.name
+        for f in ast.walk(tree)
+        if isinstance(f, ast.FunctionDef)
+        and any(
+            isinstance(c, ast.Call) and getattr(c.func, "id", None) == name
+            for c in ast.walk(f)
+        )
+    }
+
+
+def _walks_epochs(f):
+    """Whether function `f` loops over epochs: over a `range` or the
+    committed epochs."""
+    return any(
+        isinstance(n, (ast.For, ast.comprehension))
+        and isinstance(n.iter, ast.Call)
+        and getattr(n.iter.func, "id", getattr(n.iter.func, "attr", None))
+        in ("range", "committed_epochs")
+        for n in ast.walk(f)
+    )
+
+
+def test_one_seen_view():
+    """The seen view has one source: `_seen_log` is the one function that
+    walks the epochs for seen_new / seen_removed tables, each step that
+    needs the view lists the log once, `_seen_view` builds the view from
+    that listing in both forms (the per-form views, the seen-row counter
+    and the max-removed join are gone), and the latest-event rule is
+    `_first_per_key`, whose two users are keep-first on url and the seen
+    view."""
+    module = inspect.getsource(C)
+    for gone in ("_seen_view_local", "_seen_rows_small", 'F.max("removed_epoch")'):
+        assert gone not in module, gone
+    seen_names = ("seen_new", "seen_removed")
+    walkers = {
+        f.name
+        for f in ast.walk(ast.parse(module))
+        if isinstance(f, ast.FunctionDef)
+        and _walks_epochs(f)
+        and any(n in ast.unparse(f) for n in seen_names)
+    }
+    assert walkers == {"_seen_log"}
+    steps = (C._inject, C._admit, C.expire_seen, C._grow_cuckoo, C.CrawlResult.seen)
+    assert _callers("_seen_log") == {f.__name__ for f in steps} | {"_commit_epoch"}
+    for step in steps:
+        assert inspect.getsource(step).count("_seen_log(") == 1, step.__name__
+    assert _callers("_seen_view") == {"seen", "_grow_cuckoo", "_split_seen"}
+    assert _callers("_first_per_key") == {"_first_per_url", "_seen_view"}
+    assert _callers("_take_first") == {"_first_per_key", "_select_local"}
+
+
+def test_filter_add_runs_no_python_per_row():
+    """The distributed filter add crosses the Python boundary as Arrow
+    batches (mapInArrow), one partial per task: nothing in the module
+    iterates Rows through `.rdd.mapPartitions` or builds an array from
+    them with `np.fromiter`."""
+    module = inspect.getsource(C)
+    assert ".rdd.mapPartitions" not in module and "np.fromiter" not in module
+    assert "mapInArrow(" in inspect.getsource(C._filter_add_from_df)
 
 
 def test_one_filter_update_path():
@@ -371,7 +464,7 @@ def test_seen_filter_follows_expiry(spark, monkeypatch, tmp_path):
     assert saved[0] == saved[1]
     assert calls == []
 
-    seen = sorted(C._seen_view_local(ckpt, noop).column("url").to_pylist())
+    seen = sorted(_seen_column(spark, ckpt, noop, "url"))
     n_admitted = sum(
         ck.read_manifest(ckpt, e)["urls_admitted"] for e in ck.committed_epochs(ckpt)
     )
@@ -383,7 +476,7 @@ def test_seen_filter_follows_expiry(spark, monkeypatch, tmp_path):
         assert isinstance(C._load_seen_filter(C._filter_path(ckpt, e)), BloomFilter)
     flt = _last_filter(ckpt)
     assert isinstance(flt, CuckooFilter) and flt.m == C._grown_m(0, n_admitted)
-    live = C._seen_view_local(ckpt, first).column("url_hash").to_numpy()
+    live = np.array(_seen_column(spark, ckpt, first, "url_hash"), np.int64)
     assert len(live) == len(seen) - len(seen[::2])
     expected = CuckooFilter.empty(flt.m)
     expected.add_many(live)
@@ -406,12 +499,12 @@ def test_driver_split_seen_hashes_only_unseen_rows(spark, monkeypatch, tmp_path)
     ckpt = str(tmp_path)
     C.run_crawl(spark, SPEC, ckpt)
     last = ck.last_committed(ckpt)
-    seen_urls = sorted(C._seen_view_local(ckpt, last).column("url").to_pylist())[:7]
+    seen_urls = sorted(_seen_column(spark, ckpt, last, "url"))[:7]
     new_urls = [f"https://new.test/detail/{i}" for i in range(5)]
     h64, calls = sm.h64, []
     monkeypatch.setattr(sm, "h64", lambda u: calls.append(u) or h64(u))
     seen, unseen = C._split_seen(
-        spark, ckpt, last, pa.table({"url": seen_urls + new_urls}), []
+        spark, C._seen_log(ckpt, last), pa.table({"url": seen_urls + new_urls}), []
     )
     assert sorted(calls) == new_urls
     assert sorted(seen.column("url").to_pylist()) == seen_urls

@@ -202,7 +202,9 @@ def test_saturated_filter_equivalence(spark, sim, monkeypatch, tmp_path):
     bf = BloomFilter.load(path)
     bf.bits[:] = 0xFF
     bf.save(path)
-    for cap in ("_DRIVER_COMMIT_MAX_ROWS", "_DRIVER_ADD_MAX_ROWS"):
+    for cap in (
+        "_DRIVER_COMMIT_MAX_ROWS", "_DRIVER_ADD_MAX_ROWS", "_DRIVER_FETCH_MAX_URLS"
+    ):
         monkeypatch.setattr(crawl_plan, cap, 0)
     res = run_crawl(spark, SPEC, ckpt)
     engine = [tuple(r) for r in res.crawl_order().select(*ORDER_COLS).collect()]

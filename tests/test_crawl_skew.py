@@ -30,8 +30,11 @@ SPEC = SiteSpec(
 )
 
 ORDER_COLS = ["epoch", "host"] + ORDER_KEY + ["kind", "url"]
-# the row caps below which an epoch materialises its tables on the driver
-LOCAL_CAPS = ("_DRIVER_COMMIT_MAX_ROWS", "_DRIVER_ADD_MAX_ROWS")
+# the caps below which an epoch fetches and materialises its tables on
+# the driver
+LOCAL_CAPS = (
+    "_DRIVER_COMMIT_MAX_ROWS", "_DRIVER_ADD_MAX_ROWS", "_DRIVER_FETCH_MAX_URLS"
+)
 
 
 def test_spec_is_actually_skewed():

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import zipfile
 
 import numpy as np
 import pytest
@@ -102,15 +103,18 @@ def test_save_load_roundtrip(tmp_path):
 
 
 def test_kind_field_disambiguates_from_bloom(tmp_path):
+    """Both filters save one uncompressed .npz that names its kind."""
     cf = CuckooFilter(100)
     cf.add_many(_keys(100, seed=9))
-    pc = os.path.join(tmp_path, "c.npz")
-    cf.save(pc)
-    assert str(np.load(pc)["kind"]) == "cuckoo"
     bf = BloomFilter(100)
-    pb = os.path.join(tmp_path, "b.npz")
-    bf.save(pb)
-    assert "kind" not in np.load(pb)  # legacy bloom checkpoints have no kind
+    bf.add_many(_keys(100, seed=9))
+    for name, flt in (("cuckoo", cf), ("bloom", bf)):
+        path = os.path.join(tmp_path, f"{name}.npz")
+        flt.save(path)
+        with np.load(path) as z:
+            assert str(z["kind"]) == name
+        with zipfile.ZipFile(path) as z:
+            assert {i.compress_type for i in z.infolist()} == {zipfile.ZIP_STORED}
 
 
 def test_high_load_factor_build():

@@ -3,8 +3,6 @@ surface — over a small real crawl's fetched table."""
 
 from __future__ import annotations
 
-import tempfile
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -37,8 +35,8 @@ SPEC = SiteSpec(
 
 
 @pytest.fixture(scope="module")
-def fetched(spark):
-    ckpt = tempfile.mkdtemp(prefix="pipe_")
+def fetched(spark, tmp_path_factory):
+    ckpt = str(tmp_path_factory.mktemp("pipe"))
     res = run_crawl(spark, SPEC, ckpt)
     return res.fetched().cache()
 
@@ -67,7 +65,7 @@ def test_report_single_plan(fetched):
     assert any(r["型号"].startswith("KFR-") for r in rows)
 
 
-def test_csv_round_trip(spark, fetched):
+def test_csv_round_trip(spark, fetched, tmp_path):
     """S5: the reference re-reads its own CSV between stages
     (post_processor.py:29). Write the report via the compat sink, read it
     back via the compat source — utf-8-sig BOM present, header not
@@ -75,7 +73,7 @@ def test_csv_round_trip(spark, fetched):
     import os
 
     rep = report_from_records(records_from_fetched(fetched))
-    path = tempfile.mkdtemp(prefix="csv_rt_") + "/report"
+    path = str(tmp_path / "report")
     csv_compat_sink(rep, path)
 
     parts = [n for n in os.listdir(path) if n.startswith("part-") and n.endswith(".csv")]
@@ -91,7 +89,7 @@ def test_csv_round_trip(spark, fetched):
 
     # sentinel contract: a null crosses the sink as the literal string 'N/A'
     holed = spark.createDataFrame([("x", None)], "a string, b string")
-    hpath = tempfile.mkdtemp(prefix="csv_na_") + "/holed"
+    hpath = str(tmp_path / "holed")
     csv_compat_sink(holed, hpath)
     assert csv_compat_source(spark, hpath).first()["b"] == "N/A"
 

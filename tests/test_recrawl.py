@@ -109,9 +109,10 @@ def test_expiry_counts_and_filter_deletes(state, sim, spark):
     hashes = np.array([r.h for r in hashes_df.collect()], dtype=np.int64)
     assert flt.maybe_contains(hashes).mean() < 0.01
     # and the exact seen view is empty at the expiry epoch
-    from gov_procurement_spider_spark.plans.crawl import _seen_view
+    from gov_procurement_spider_spark.plans.crawl import _seen_log, _seen_view
 
-    assert _seen_view(spark, state["ckpt"], state["expiry_epoch"]).count() == 0
+    log = _seen_log(state["ckpt"], state["expiry_epoch"])
+    assert _seen_view(spark, log, False).count() == 0
 
 
 def test_recrawl_reproduces_reference_order(state, sim):
@@ -156,9 +157,9 @@ def test_partial_expiry_keeps_rest_seen(spark, state, sim):
     n = expire_seen(spark, ckpt, spark.createDataFrame([(u,) for u in subset], ["url"]))
     assert n == 5
     now = ck.last_committed(ckpt)
-    from gov_procurement_spider_spark.plans.crawl import _seen_view
+    from gov_procurement_spider_spark.plans.crawl import _seen_log, _seen_view
 
-    seen_now = {r.url for r in _seen_view(spark, ckpt, now).collect()}
+    seen_now = {r.url for r in _seen_view(spark, _seen_log(ckpt, now), False).collect()}
     assert seen_now == set(all_urls) - set(subset)
     flt = _load_seen_filter(os.path.join(ck.epoch_dir(ckpt, now), "bloom.npz"))
     kept_hashes = np.array(
@@ -244,7 +245,7 @@ def test_fresh_cuckoo_sized_below_grow_trigger(spark, monkeypatch, tmp_path):
     monkeypatch.setattr(C, "_grow_cuckoo", lambda *a: calls.append(a[3:]) or grow(*a))
     ckpt = str(tmp_path)
     C.init_steady_frontier(spark, _STEADY_SPEC, ckpt, 3891)
-    url = C._seen_view_local(ckpt, 0).column("url")[:1]
+    url = C._seen_view(spark, C._seen_log(ckpt, 0), True).column("url")[:1]
     assert expire_seen(spark, ckpt, pa.table({"url": url})) == 1
     flt = _load_seen_filter(os.path.join(ck.epoch_dir(ckpt, 1), "bloom.npz"))
     assert calls == [(0, 3891)]
